@@ -13,9 +13,11 @@ so the re-read is pure waste; per-finder timing confirmed the total
 (113.7 ms) is fully accounted for by the zip finders.
 
 :func:`tame_zipimport_caches` replaces ``invalidate_caches`` on each
-*zipimporter instance* with a no-op — directory (``FileFinder``) entries
-are untouched, so files added to the Spark files dir (``addPyFile`` lands
-there) stay visible. Worker processes are reused across tasks
+*zipimporter instance* of a Spark-runtime archive (``pyspark.zip``,
+``py4j-*.zip`` and the jars under a ``jars/`` directory) with a no-op.
+Directory (``FileFinder``) entries and every other archive are untouched,
+so files and zips shipped with ``addPyFile`` (replaced in place or not)
+stay visible to reused workers. Worker processes are reused across tasks
 (``spark.python.worker.reuse`` default), so one call from any task patches
 that worker for the rest of the application: the measured per-task cost
 drops from ~180 ms to ~65 ms for a trivial 1-task mapInPandas round trip.
@@ -28,8 +30,12 @@ of the same kind (the driver never runs ``setup_spark_files``).
 
 from __future__ import annotations
 
+import re
 import sys
 import zipimport
+
+#: archives Spark itself puts on the worker path; immutable while it runs
+_SPARK_ARCHIVE = re.compile(r"(^|/)(pyspark\.zip|py4j-[^/]*\.zip|jars/[^/]*\.jar)$")
 
 
 def _noop_invalidate() -> None:
@@ -37,12 +43,14 @@ def _noop_invalidate() -> None:
 
 
 def tame_zipimport_caches() -> None:
-    """Once per process: make zip-archive finders' cache invalidation a
-    no-op (archives on the worker path never change mid-application; the
+    """Once per process: make Spark-runtime archive finders' cache
+    invalidation a no-op (those archives never change mid-application; the
     per-task re-read of their central directories is the dominant fixed
     cost of every Python stage — see module docstring)."""
     for finder in list(sys.path_importer_cache.values()):
-        if isinstance(finder, zipimport.zipimporter):
+        if isinstance(finder, zipimport.zipimporter) and _SPARK_ARCHIVE.search(
+            finder.archive
+        ):
             try:
                 finder.invalidate_caches = _noop_invalidate
             except Exception:  # noqa: BLE001 — frozen/C variants: skip

@@ -4549,64 +4549,52 @@ def survey_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical 6-step expression tree (small-panel double sums, the
     anova discipline).
 
-    Scale shape: two grouped fact passes (sample cells + population
-    margins); everything else is panel arithmetic — the 6 scalings are
-    15-row joins against 5-row margin rollups."""
+    Scale shape: ONE fact aggregate to the (priority × status) panel —
+    each cell's population count and its sample count — then pure panel
+    arithmetic. Margins are window sums over ``grp``/``st``, the sampling
+    fraction is a partitionless window (2 specs: Σ sample, Σ population),
+    and each of the 6 scalings is ``w · target / Σw over grp|st``, so
+    ``w`` is referenced once per round and the plan stays linear. The
+    panel is bounded by key cardinality (≤ 5 × 3 = 15 cells at any scale),
+    so it is coalesced to one partition right after the aggregate: a
+    single partition satisfies every window's distribution, and no
+    exchange follows the fact shuffle."""
     o = table(spark, sf_dir, "orders")
-    pop = o.select(
-        F.col("o_orderpriority").alias("grp"), F.col("o_orderstatus").alias("st")
+    by_g, by_s, whole = (
+        Window.partitionBy("grp"),
+        Window.partitionBy("st"),
+        Window.partitionBy(),
     )
-    samp = o.filter(F.col("o_orderkey") % 7 < 2).select(
-        F.col("o_orderpriority").alias("grp"), F.col("o_orderstatus").alias("st")
-    )
-    # r16 lineage hygiene (guide §2.4, the kcore/CC pattern): every
-    # broadcast below (rs/cs per round, margins, scale) sits under a
-    # BroadcastExchange, which blocks exchange reuse — without cuts each
-    # one re-derived the FACT aggregation, and the unrolled 6-scaling loop
-    # referenced `w` twice per scaling (2^6 plan copies). Checkpoint the
-    # three fact-sized aggregates once (cells eagerly: consumed by
-    # concurrent broadcast builds) and cut the 15-row `w` per round.
-    cells = (
-        samp.groupBy("grp", "st").agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    tgt_g = pop.groupBy("grp").agg(F.count("*").alias("tg")).localCheckpoint(
-        eager=False
-    )
-    tgt_s = pop.groupBy("st").agg(F.count("*").alias("ts")).localCheckpoint(
-        eager=False
-    )
-    scale = samp.agg(F.count("*").alias("ns")).crossJoin(
-        F.broadcast(pop.agg(F.count("*").alias("np")))
-    ).select((F.col("ns") * F.lit(1.0) / F.col("np")).alias("f"))
-    w = cells.select("grp", "st", (F.col("n") * F.lit(1.0)).alias("w"))
-    for _ in range(3):
-        rs = w.groupBy("grp").agg(F.sum("w").alias("sg"))
-        w = (
-            w.join(F.broadcast(rs), "grp")
-            .join(F.broadcast(tgt_g), "grp")
-            .select(
-                "grp", "st", (F.col("w") * F.col("tg") / F.col("sg")).alias("w")
-            )
+    panel = (
+        o.groupBy(
+            F.col("o_orderpriority").alias("grp"), F.col("o_orderstatus").alias("st")
         )
-        cs = w.groupBy("st").agg(F.sum("w").alias("ss"))
-        w = (
-            w.join(F.broadcast(cs), "st")
-            .join(F.broadcast(tgt_s), "st")
-            .select(
-                "grp", "st", (F.col("w") * F.col("ts") / F.col("ss")).alias("w")
-            )
-            .localCheckpoint(eager=False)
+        .agg(
+            F.count("*").alias("np"),
+            F.count(F.when(F.col("o_orderkey") % 7 < 2, 1)).alias("n"),
         )
-    return (
-        w.join(cells, ["grp", "st"])
-        .crossJoin(F.broadcast(scale))
+        .coalesce(1)
         .select(
             "grp",
             "st",
-            F.col("n").alias("n_sample"),
-            F.round(F.col("w") * F.col("f"), 4).alias("w_scaled_r"),
+            "n",
+            F.sum("np").over(by_g).alias("tg"),
+            F.sum("np").over(by_s).alias("ts"),
+            (
+                F.sum("n").over(whole) * F.lit(1.0) / F.sum("np").over(whole)
+            ).alias("f"),
         )
+        .filter(F.col("n") > 0)
+    )
+    w = panel.withColumn("w", F.col("n") * F.lit(1.0))
+    for _ in range(3):
+        w = w.withColumn("w", F.col("w") * F.col("tg") / F.sum("w").over(by_g))
+        w = w.withColumn("w", F.col("w") * F.col("ts") / F.sum("w").over(by_s))
+    return w.select(
+        "grp",
+        "st",
+        F.col("n").alias("n_sample"),
+        F.round(F.col("w") * F.col("f"), 4).alias("w_scaled_r"),
     )
 
 

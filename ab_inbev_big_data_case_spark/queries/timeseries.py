@@ -2541,27 +2541,42 @@ def esd_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: each round's argmax is the exact integer argmax of
     |n·c − S| (the denominator is round-constant), ties to the earliest
-    day; the reported residual divides exact integers once. Rounds chain
-    by anti-joining the single removed day.
+    day; the reported residual divides exact integers once.
 
     Scale shape: the fact collapses to the calendar-bounded day spine
-    once (lazy-checkpointed); each round is a 1-row stats aggregate
-    broadcast back onto the spine + a 1-row argmax + a broadcast
-    anti-join — dimension-sized work, unrolled, no driver iteration."""
-    d = _daily_revenue(spark, sf_dir)
-    cur = d.select(
-        "day",
-        (F.col("rev").cast("decimal(18,2)") * 100).cast("decimal(38,0)").alias("c"),
-    ).localCheckpoint(eager=False)
-    outs = []
-    for i in (1, 2, 3):
-        stats = cur.agg(
-            F.count("*").alias("n"), F.sum("c").alias("s"), F.sum(F.col("c") * F.col("c")).alias("q")
+    once (~2.4k days per 7 years at any scale), coalesced to one
+    partition; the rounds are ONE chain over that spine that carries the
+    round a day was removed in as a column. Each round takes n/S/Q as
+    conditional partitionless window aggregates over the days still in
+    the series (3 specs) and picks its argmax with a partitionless
+    ``row_number`` (1 spec) — 12 specs over the spine in all, no union of
+    per-round branches, no exchange after the fact shuffle."""
+    whole = Window.partitionBy()
+    cur = (
+        _daily_revenue(spark, sf_dir)
+        .coalesce(1)
+        .select(
+            "day",
+            (F.col("rev").cast("decimal(18,2)") * 100)
+            .cast("decimal(38,0)")
+            .alias("c"),
+            F.lit(None).cast("long").alias("round_i"),
+            F.lit(None).cast("long").alias("n_remaining"),
+            F.lit(None).cast("double").alias("resid"),
         )
-        n, s, q = F.col("n"), F.col("s"), F.col("q")
-        num = F.abs(n * F.col("c") - s)
-        scored = cur.crossJoin(F.broadcast(stats)).select(
-            "day", "c", "n",
+    )
+    alive = F.col("round_i").isNull()
+    c, n, s, q = F.col("c"), F.col("n"), F.col("s"), F.col("q")
+    for i in (1, 2, 3):
+        stats = cur.select(
+            "*",
+            F.count(F.when(alive, 1)).over(whole).alias("n"),
+            F.sum(F.when(alive, c)).over(whole).alias("s"),
+            F.sum(F.when(alive, c * c)).over(whole).alias("q"),
+        )
+        num = F.when(alive, F.abs(n * c - s))
+        scored = stats.select(
+            "*",
             num.alias("num"),
             (
                 num.cast("double")
@@ -2572,28 +2587,24 @@ def esd_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / (n.cast("double") * (n - 1).cast("double"))
                     )
                 )
-            ).alias("resid"),
+            ).alias("resid_i"),
         )
-        win = (
-            scored.orderBy(F.col("num").desc(), F.col("day").asc())
-            .limit(1)
-            .localCheckpoint(eager=False)
+        argmax = Window.orderBy(alive.desc(), F.col("num").desc(), F.col("day").asc())
+        cur = scored.withColumn("pick", F.row_number().over(argmax) == 1).select(
+            "day",
+            "c",
+            *(
+                F.when(F.col("pick"), new).otherwise(F.col(old)).alias(old)
+                for old, new in (
+                    ("round_i", F.lit(i).cast("long")),
+                    ("n_remaining", n),
+                    ("resid", F.col("resid_i")),
+                )
+            ),
         )
-        outs.append(
-            win.select(
-                F.lit(i).cast("long").alias("round_i"),
-                "day",
-                F.col("n").cast("long").alias("n_remaining"),
-                F.round("resid", 6).alias("resid_r"),
-            )
-        )
-        cur = cur.join(
-            win.select(F.col("day").alias("rm")), cur.day == F.col("rm"), "left_anti"
-        ).localCheckpoint(eager=False)
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out
+    return cur.filter(~alive).select(
+        "round_i", "day", "n_remaining", F.round("resid", 6).alias("resid_r")
+    )
 
 
 # Trend/seasonal strength (Wang, Smith & Hyndman 2006; FPP3 §4.5) on the

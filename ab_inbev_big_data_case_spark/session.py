@@ -96,9 +96,14 @@ def _default_local_dir() -> str | None:
     1. ``$SPARK_GRAFT_LOCAL_DIR`` — explicit override (a cluster deployment
        sets SPARK_LOCAL_DIRS to its NVMe array instead, which Spark's
        cluster managers use to override this conf anyway);
-    2. ``/dev/shm`` when writable with > 8 GiB free — RAM-backed scratch,
-       plenty for fixture-scale shuffles (MBs at sf0.1), the local twin of
-       "fast local disks" in the guide's §9 baseline;
+    2. ``/dev/shm/spark_graft_local_<uid>`` when ``/dev/shm`` is writable
+       with > 8 GiB free — RAM-backed scratch, plenty for fixture-scale
+       shuffles (MBs at sf0.1), the local twin of "fast local disks" in the
+       guide's §9 baseline. The uid suffix keeps users on one host out of
+       each other's directory (the first creator would own a shared one).
+       Free space is checked only here, at session start: runs whose
+       shuffles or spills may reach GBs should set
+       ``SPARK_GRAFT_LOCAL_DIR`` to a disk path;
     3. ``None`` — keep Spark's default (java.io.tmpdir).
     """
     override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
@@ -108,7 +113,7 @@ def _default_local_dir() -> str | None:
         if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
             st = os.statvfs("/dev/shm")
             if st.f_bavail * st.f_frsize > 8 * 1024**3:
-                return "/dev/shm/spark_graft_local"
+                return f"/dev/shm/spark_graft_local_{os.getuid()}"
     except OSError:
         pass
     return None

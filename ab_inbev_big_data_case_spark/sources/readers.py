@@ -119,8 +119,37 @@ def const_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
+#: (path, size, mtime_ns, nanosAsLong) -> the schema Spark inferred for it
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _read_pinned(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version and reads with it pinned afterwards (the module policy).
+    Inference runs a Spark job on every read; a pinned read plans with no
+    job at all. A rewritten file has a new size or mtime, so
+    it is inferred again and a changed schema surfaces at analysis, never
+    as silently null columns. Directories are inferred on every read."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (
+        path,
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table from a scale-factor directory.
+    """Load one fixture table from a scale-factor directory, with its
+    schema pinned after the first read (see ``_read_pinned``).
 
     The ``events`` fixture stores ``ts`` as parquet TIMESTAMP(NANOS), which
     Spark's vectorized reader rejects; read it as long nanos
@@ -131,7 +160,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_pinned(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # integer `div`, not `/`: epoch-nanos exceed double's 53-bit
@@ -146,7 +175,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # (same boundary rule as ``streaming.jobs._event_time_legal``).
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return _read_pinned(spark, path)
 
 
 def load_tables(

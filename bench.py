@@ -606,10 +606,16 @@ def main() -> None:
         # scaling run followed it. Keep a per-core-count copy too (plus the
         # head medians), so a later anomaly can be adjudicated per query
         # after the fact. Additions-only: the printed JSON line and
-        # BENCH_AB.json are unchanged.
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        # BENCH_AB.json are unchanged. The label is the session's resolved
+        # parallelism, not the env knob, so a run on a host whose core
+        # count differs from the knob's default is filed under its own.
+        cpus = spark.sparkContext.defaultParallelism
         with open(os.path.join(REPO, f"BENCH_AB_{cpus}c.json"), "w") as f:
-            json.dump({**ab, "head_queries": timings}, f, indent=1)
+            json.dump(
+                {**ab, "default_parallelism": cpus, "head_queries": timings},
+                f,
+                indent=1,
+            )
         ab = {
             k: ab[k]
             for k in (

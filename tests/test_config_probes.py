@@ -67,6 +67,34 @@ def test_heap_respects_cgroup_limit_when_below_host(monkeypatch, tmp_path):
     assert S._default_heap_gb() == 2  # half of the 4 GiB cap, not host/2
 
 
+@pytest.mark.parametrize(
+    ("writable", "free_gib", "expect_tmpfs"),
+    [(True, 16, True), (True, 4, False), (False, 16, False)],
+)
+def test_local_dir_tmpfs_is_per_user_and_space_checked(
+    monkeypatch, writable, free_gib, expect_tmpfs
+):
+    """The /dev/shm scratch default carries the uid, so two
+    users on one host never share (or fight over) one directory; a
+    read-only or nearly full tmpfs falls back to Spark's default."""
+    from types import SimpleNamespace
+
+    from ab_inbev_big_data_case_spark import session as S
+
+    monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR", raising=False)
+    monkeypatch.setattr("os.path.isdir", lambda p: p == "/dev/shm")
+    monkeypatch.setattr("os.access", lambda p, mode: writable)
+    monkeypatch.setattr(
+        "os.statvfs",
+        lambda p: SimpleNamespace(f_bavail=free_gib * 1024**2, f_frsize=1024),
+    )
+    monkeypatch.setattr("os.getuid", lambda: 4242)
+    got = S._default_local_dir()
+    assert got == ("/dev/shm/spark_graft_local_4242" if expect_tmpfs else None)
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/data/scratch")
+    assert S._default_local_dir() == "/data/scratch"
+
+
 def test_stream_upsert_app_id_is_required():
     """ADVICE r7: a shared literal default app_id would let two queries
     upserting one table shadow each other's batch watermarks."""

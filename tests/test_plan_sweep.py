@@ -39,6 +39,7 @@ load_all()
 PARTITIONLESS_ALLOWED = {
     "abc_pareto_class": 1,          # pruned local-survivor rank
     "bradley_terry_strengths": 7,   # 25-row nation strength table, per-round Σ normalize (mlstats.py:4908)
+    "survey_raking_ipf": 2,         # 15-cell (priority × status) panel: Σ sample + Σ population for the sampling fraction
     "cramers_v_matrix": 3,          # ≤25×5 contingency-cell tables, one order-less N per pair (distmetrics.py:2572)
     "hits_hub_authority": 7,        # 25-node score table, per-round max-normalize (warehouse.py:1661)
     "markov_attribution_removal": 1,  # ≤7-channel removal-effect table Σ normalize (analytics.py:2323)
@@ -52,6 +53,7 @@ PARTITIONLESS_ALLOWED = {
     "cvm_two_sample": 2,            # 16-row bucket-carry spine (2 counts)
     "cusum_changepoint": 1,         # daily spine cumsum
     "error_rate_changepoint": 4,    # daily spine prefix stats
+    "esd_outlier_stats": 12,        # daily spine: 3 rounds × (n/S/Q over remaining days + argmax row_number)
     "forecast_method_bakeoff": 5,   # day-spine index + 28-row holdout windows
     "gains_chart_deciles": 5,       # ≤10-row carry + decile cumsum/total spines
     "gini_concentration": 1,        # bounded decile spine

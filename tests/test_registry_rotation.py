@@ -209,6 +209,15 @@ def test_changed_since_checked_detects_live_edits():
             f"unchanged greens inside the window while changed/never-"
             f"checked names wait: {sorted(squatters)}"
         )
+        # never-checked names outrank changed greens; the changed greens
+        # take every slot the never-checked ones leave over
+        cap = len(registry._CHECK_FIRST)
+        n_never = min(len(never_checked), cap)
+        assert len(window & never_checked) == n_never
+        assert len(window & changed_green) == min(len(changed_green), cap - n_never), (
+            f"changed greens left outside the window's free slots: "
+            f"{sorted(changed_green - window)[:10]}"
+        )
 
 
 def test_query_hash_tracks_helper_symbol_content(monkeypatch):
