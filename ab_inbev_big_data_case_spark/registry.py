@@ -10,6 +10,7 @@ computed column is aliased identically in the Spark plan and the oracle SQL
 
 from __future__ import annotations
 
+import ast
 import glob
 import hashlib
 import importlib
@@ -57,10 +58,11 @@ _QUERY_MODULES = [
 # Since round 9 the window is DERIVED from the evidence files themselves:
 # ``load_all()`` reads every ``CORRECTNESS_r*.json`` at the repo root and
 # orders the registry by evidence age — names whose latest driver row is
-# red or missing come first (in ``_STAGED_NEXT`` backlog order), then
-# checked names oldest-round-first. The landmine is structurally
-# impossible: as soon as a round's CORRECTNESS file lands in the repo, the
-# next ``load_all()`` demotes its greens and promotes the stalest backlog.
+# red or missing come first, then checked names oldest-round-first (see
+# ``_derive_order``); ties keep registration order, so no hand-kept backlog
+# list is needed. The landmine is structurally impossible: as soon as a
+# round's CORRECTNESS file lands in the repo, the next ``load_all()``
+# demotes its greens and promotes the stalest backlog.
 _WINDOW_SIZE = 50
 
 # Derived head of the registration order; filled by ``load_all()``. Kept as
@@ -111,113 +113,26 @@ def _evidence_rounds(repo_root: str = _REPO_ROOT) -> dict[str, int]:
 def _derive_order(
     registered: list[str],
     evidence: dict[str, int],
-    staged: list[str],
     changed: frozenset[str] = frozenset(),
 ) -> list[str]:
     """Deterministic registry order, three buckets (VERDICT r11 item 1):
 
-    0. never/red-checked (staged backlog order, then registration order),
+    0. never/red-checked,
     1. CHANGED since their last driver check — green evidence, but the
        implementation-or-oracle content hash no longer matches the hash
        recorded when that evidence was produced (``QUERY_HASHES.json``), so
        the green is describing code that no longer exists,
-    2. unchanged greens, oldest-evidence-round first (same tie-break).
-    """
-    staged_pos = {n: i for i, n in enumerate(staged)}
-    reg_pos = {n: i for i, n in enumerate(registered)}
-    offset = len(staged)
+    2. unchanged greens.
 
-    def key(name: str) -> tuple[int, int, int]:
+    Within a bucket names go oldest-evidence-round first; ties keep their
+    order in ``registered`` (the sort is stable).
+    """
+
+    def key(name: str) -> tuple[int, int]:
         ev = evidence.get(name, -1)
-        bucket = 0 if ev == -1 else (1 if name in changed else 2)
-        backlog = staged_pos.get(name, offset + reg_pos[name])
-        return (bucket, ev, backlog)
+        return (0 if ev == -1 else (1 if name in changed else 2), ev)
 
     return sorted(registered, key=key)
-
-# Backlog PRIORITY ORDER for never-driver-checked names (the derived
-# rotation above consumes this): oldest additions first — 28 round-7
-# additions (xml_scan … ngram_coverage_curve), then the 21 round-8
-# additions (periodogram_peaks … stratified_ate), then the 19 r1-only
-# stale greens (these ARE green in CORRECTNESS_r01.json, so the derivation
-# ranks them by that old evidence, behind every never-checked name, ahead
-# of every fresher green — listed here only to pin their relative order).
-# New never-checked registrations (round 9+) are APPENDED as they land.
-_STAGED_NEXT = [
-    "xml_scan",
-    "deltalite_optimize_compaction",
-    "bitemporal_as_of",
-    "kruskal_wallis_test",
-    "isotonic_calibration_pava",
-    "quantile_regression_grid",
-    "chow_test",
-    "nelson_aalen_hazard",
-    "mood_median_test",
-    "friedman_test",
-    "jonckheere_terpstra",
-    "direct_standardization",
-    "mh_pooled_odds_ratio",
-    "survey_raking_ipf",
-    "abtest_srm_check",
-    "split_conformal_coverage",
-    "loo_source_influence",
-    "kfold_cv_mae",
-    "token_budget_pack",
-    "granger_f_lite",
-    "dtw_weekly_profiles",
-    "cmh_test",
-    "energy_distance_two_sample",
-    "wasserstein1_distance",
-    "qq_plot_deciles",
-    "cvm_two_sample",
-    "hurst_rs_lite",
-    "ngram_coverage_curve",
-    # --- round-8 additions (never driver-checked; each verified locally at
-    # sf0.001/0.01/0.1 at registration time) — behind the 28 r7 names so the
-    # round-9 window takes the OLDEST backlog first; the tail spills into
-    # round 10 with the stale greens below ---
-    "periodogram_peaks",
-    "bollinger_bands",
-    "anderson_darling_two_sample",
-    "hodges_lehmann_shift",
-    "hits_hub_authority",
-    "bullwhip_ratio",
-    "nb_classifier_eval",
-    "bradley_terry_strengths",
-    "lsh_band_sweep",
-    "markov_attribution_removal",
-    "paasche_fisher_price_index",
-    "herfindahl_index",
-    "newey_west_variance",
-    "esd_outlier_stats",
-    "event_study_coefficients",
-    "rdd_local_linear",
-    "theil_atkinson_inequality",
-    "betweenness_centrality",
-    "burrows_delta_stylometry",
-    "seasonal_strength",
-    "stratified_ate",
-    # --- r1-only stale greens (re-check after the never-checked drain) ---
-    "window_lag_lead",
-    "window_running",
-    "window_rank",
-    "window_ntile",
-    "window_range_frame",
-    "window_first_last",
-    "join_left_outer",
-    "join_full_outer",
-    "join_cross",
-    "join_multikey",
-    "pivot_agg",
-    "histogram_bucket",
-    "topk_global",
-    "salted_agg",
-    "dedup_latest",
-    "argmax_agg",
-    "join_semi",
-    "join_anti",
-    "window_topk_group",
-]
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -311,6 +226,21 @@ def _module_file_hash(dotted: str) -> str | None:
     return h
 
 
+def _segmenter(text: str) -> Callable[[ast.AST], str]:
+    """``ast.get_source_segment(text, node)`` for many nodes of one text.
+    The stdlib call re-splits the whole text on every call, which is
+    quadratic over a module's top-level nodes; this finds the line starts
+    once. AST column offsets count UTF-8 bytes, so slicing is in bytes."""
+    data = text.encode()
+    starts = [0] + [m.end() for m in re.finditer(rb"\r\n?|\n", data)]
+
+    def segment(node: ast.AST) -> str:
+        lo = starts[node.lineno - 1] + node.col_offset
+        return data[lo : starts[node.end_lineno - 1] + node.end_col_offset].decode()
+
+    return segment
+
+
 # module -> {"defs": {name: source_segment}, "imports": {local: (module, orig|None)}}
 _module_info_cache: dict[str, dict] = {}
 
@@ -319,7 +249,6 @@ def _module_info(module: str) -> dict:
     info = _module_info_cache.get(module)
     if info is not None:
         return info
-    import ast
 
     info = {"defs": {}, "imports": {}}
     path = os.path.join(_REPO_ROOT, *module.split(".")) + ".py"
@@ -329,11 +258,12 @@ def _module_info(module: str) -> dict:
     except (OSError, SyntaxError):
         _module_info_cache[module] = info
         return info
+    segment = _segmenter(text)
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            info["defs"][node.name] = ast.get_source_segment(text, node) or ""
+            info["defs"][node.name] = segment(node)
         elif isinstance(node, ast.Assign):
-            seg = ast.get_source_segment(text, node) or ""
+            seg = segment(node)
             for t in node.targets:
                 if isinstance(t, ast.Name):
                     info["defs"][t.id] = seg
@@ -391,7 +321,6 @@ def _fn_engine_deps(fn) -> list[tuple[str, str | None]]:
     ``from pkg.x import y`` statements (AST of the function source) plus
     module-top imports of its defining module whose local name appears in
     the function body."""
-    import ast
     import textwrap
 
     try:
@@ -470,11 +399,8 @@ def load_all() -> None:
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
 
-    missing = [n for n in _STAGED_NEXT if n not in QUERIES]
-    if missing:
-        raise RuntimeError(f"_STAGED_NEXT names not registered: {missing}")
     ordered = _derive_order(
-        list(QUERIES), _evidence_rounds(), _STAGED_NEXT, changed_since_checked()
+        list(QUERIES), _evidence_rounds(), changed_since_checked()
     )
     _CHECK_FIRST[:] = ordered[:_WINDOW_SIZE]
     for reg in (QUERIES, ORACLE):

@@ -119,6 +119,13 @@ def _default_local_dir() -> str | None:
     return None
 
 
+def _default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, else one task thread per CPU this
+    process may run on (its affinity mask, which honours taskset/cpusets)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "ab_inbev_big_data_case_spark",
     master: str | None = None,
@@ -127,12 +134,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env var, default 32)
-    so the bench harness and tests share one sizing knob.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the bench
+    harness and tests share one sizing knob; with the env var unset it is
+    ``local[<usable CPUs>]`` (see ``_default_master``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
+        master or _default_master()
     )
     conf = dict(_DEFAULTS)
     # Local mode runs every executor thread inside the DRIVER JVM, whose

@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
+sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may
+run on); prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -101,44 +102,12 @@ HEADLINE = [
     "hilbert_pruning_audit",      # Hilbert tile-pruning effectiveness (r15)
 ]
 
-#: Known-bounded partitionless window specs per headline plan. Every entry
-#: is a spine the plan tests pin to a constant row count (deciles, carry
-#: spines, replicate grids) — see tests/test_plans.py. The audit below
-#: fails LOUDLY if any headline plan grows a spec beyond its pin, so a new
-#: partitionless window can't hide in known-bounded noise (VERDICT r5 nit a).
-EXPECTED_PARTITIONLESS = {
-    "zorder_layout_extents": 1,   # 16-row extent spine (test_plans.py)
-    "abc_pareto_class": 1,        # pruned local-survivor rank
-    "gini_concentration": 1,      # bounded decile spine
-    "matrix_profile_daily": 16,   # calendar-day pair spine ×2 join sides + 2 ranks
-    "kruskal_wallis_test": 1,     # 16-row bucket-carry spine (two-level rank)
-    "markov_attribution_removal": 1,  # ≤7-channel removal table Σ normalize
-                                      # (r10: heuristic now sees ORDER-less specs)
-}
-
-
-def _n_partitionless_windows(plan: str) -> int:
-    # Same heuristic as tests/test_plan_sweep.py (r10-widened): a
-    # windowspecdefinition whose first argument carries a sort direction
-    # has no partitionBy, and an ORDER-less empty-partition spec's first
-    # argument is the frame itself.
-    import re
-
-    return sum(
-        1
-        for m in re.finditer(r"windowspecdefinition\(([^,]+),", plan)
-        if " ASC" in m.group(1)
-        or " DESC" in m.group(1)
-        or m.group(1).startswith("specifiedwindowframe(")
-    )
-
-
 def _quiet_bounded_spine_warnings(spark) -> None:
     """Raise WindowExec's log level to ERROR for this JVM: every
-    partitionless window in the headline set is a pinned bounded spine
-    (EXPECTED_PARTITIONLESS + tests/test_plans.py), so the per-execution
-    WARN spam is pure noise here — the plan audit below is the tripwire
-    that actually catches a NEW partitionless window."""
+    partitionless window in the registry is a pinned bounded spine, so the
+    per-execution WARN spam is pure noise here. The tripwire that catches
+    a NEW partitionless window is tests/test_plan_sweep.py, which checks
+    every registered plan against its ``PARTITIONLESS_ALLOWED`` pin."""
     try:
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -335,27 +304,6 @@ def main() -> None:
     load_all()
     spark = get_spark("bench")
     _quiet_bounded_spine_warnings(spark)
-
-    # Plan audit BEFORE timing: count partitionless window specs per
-    # headline plan and fail loudly on any spec not covered by the
-    # EXPECTED_PARTITIONLESS pins — the WindowExec log noise is silenced
-    # above, so this is the only tripwire and it must be explicit.
-    unexpected = []
-    for name in HEADLINE:
-        df = QUERIES[name](spark, sf_dir)
-        n = _n_partitionless_windows(df._jdf.queryExecution().executedPlan().toString())
-        allowed = EXPECTED_PARTITIONLESS.get(name, 0)
-        if n > allowed:
-            unexpected.append(f"{name}: {n} partitionless windows (pinned {allowed})")
-    if unexpected:
-        print("PLAN AUDIT FAILURE: " + "; ".join(unexpected), file=sys.stderr)
-    else:
-        pinned = sum(EXPECTED_PARTITIONLESS.values())
-        print(
-            f"plan audit OK: {pinned} bounded-spine partitionless window specs "
-            f"across {len(HEADLINE)} headline plans, all pinned",
-            file=sys.stderr,
-        )
 
     arm = _start_pinned_arm()
     # The handle is kept separately from the degrade flag so close() always

@@ -1,7 +1,9 @@
 import os
 import sys
+from typing import NamedTuple
 
 import pytest
+from pyspark.sql.types import StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -19,3 +21,34 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class BuiltQuery(NamedTuple):
+    """What building one registered query left behind: its executed-plan
+    text and output schema, or the build error."""
+
+    plan: str | None
+    schema: StructType | None
+    error: str | None
+
+
+@pytest.fixture(scope="session")
+def built_registry(spark, sf_dir):
+    """Every registered query built once at ``sf_dir``, name -> BuiltQuery.
+
+    Only strings and schemas are kept, never the DataFrames, so nothing a
+    query checkpointed while building stays pinned for the session. Tests
+    that need the whole registry's plans or schemas read them from here
+    instead of building the registry again."""
+    from ab_inbev_big_data_case_spark.registry import QUERIES, load_all
+
+    load_all()
+    built = {}
+    for name, fn in QUERIES.items():
+        try:
+            df = fn(spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            built[name] = BuiltQuery(plan, df.schema, None)
+        except Exception as ex:
+            built[name] = BuiltQuery(None, None, f"{type(ex).__name__}: {ex}"[:500])
+    return built

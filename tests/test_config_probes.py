@@ -95,6 +95,18 @@ def test_local_dir_tmpfs_is_per_user_and_space_checked(
     assert S._default_local_dir() == "/data/scratch"
 
 
+def test_default_master_follows_usable_cpus(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset the master gets one task thread per CPU
+    the process may run on; the env var still wins when set."""
+    from ab_inbev_big_data_case_spark import session as S
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr("os.sched_getaffinity", lambda pid: {0, 2, 5})
+    assert S._default_master() == "local[3]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert S._default_master() == "local[32]"
+
+
 def test_stream_upsert_app_id_is_required():
     """ADVICE r7: a shared literal default app_id would let two queries
     upserting one table shadow each other's batch watermarks."""

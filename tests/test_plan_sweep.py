@@ -12,7 +12,9 @@ name. The partitionless allowlist below is the exhaustive audited set; each
 entry is a window over a documented BOUNDED spine (calendar days, fixed
 bins, decile/replicate grids, pruned local survivors — see SCALE.md and the
 queries' own docstrings), so its row count is independent of fact-table
-scale.
+scale. The plans come from the session's one registry build
+(``built_registry`` in conftest.py), which the decimal-output lint in
+tests/test_round14_ops.py reads too.
 
 KNOWN BLIND SPOT (ADVICE r14): the sweep reads the plan of the RETURNED
 DataFrame, so stages executed behind an EAGER ``localCheckpoint`` (e.g.
@@ -29,9 +31,7 @@ import re
 
 import pytest
 
-from ab_inbev_big_data_case_spark.registry import QUERIES, load_all
-
-load_all()
+from plan_shapes import n_partitionless
 
 #: name -> max partitionless window specs, every entry a documented
 #: bounded-spine window (audited r6; grow this ONLY with a docstring
@@ -111,28 +111,16 @@ PARTITIONLESS_ALLOWED = {
 }
 
 
-def _n_partitionless(plan: str) -> int:
-    # a windowspecdefinition whose FIRST argument carries a sort direction
-    # has no partitionBy (same heuristic as test_plans.py / bench.py).
-    # VERDICT r9 item 3: ALSO count ORDER-less empty-partition specs —
-    # e.g. F.sum(x).over(Window.partitionBy()) — whose first argument is
-    # the frame itself (``specifiedwindowframe(...)``), previously
-    # invisible to the sweep.
-    return sum(
-        1
-        for m in re.finditer(r"windowspecdefinition\(([^,]+),", plan)
-        if " ASC" in m.group(1)
-        or " DESC" in m.group(1)
-        or m.group(1).startswith("specifiedwindowframe(")
-    )
-
-
 @pytest.fixture(scope="module")
-def all_plans(spark, sf_dir):
-    return {
-        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        for name, fn in QUERIES.items()
-    }
+def all_plans(built_registry):
+    return {n: b.plan for n, b in built_registry.items() if b.error is None}
+
+
+def test_every_query_builds(built_registry):
+    """Every registered query builds at the test SF; the sweeps below read
+    only the plans that did, so a build error must fail here by name."""
+    failed = {n: b.error for n, b in built_registry.items() if b.error is not None}
+    assert failed == {}
 
 
 def test_no_cartesian_product_anywhere(all_plans):
@@ -149,7 +137,7 @@ def test_partitionless_windows_all_pinned(all_plans):
     offenders = {
         n: f"{got} partitionless specs (pinned {PARTITIONLESS_ALLOWED.get(n, 0)})"
         for n, p in all_plans.items()
-        if (got := _n_partitionless(p)) > PARTITIONLESS_ALLOWED.get(n, 0)
+        if (got := n_partitionless(p)) > PARTITIONLESS_ALLOWED.get(n, 0)
     }
     assert offenders == {}
 
@@ -176,7 +164,7 @@ def test_ccf_all_shifts_in_one_window_node(all_plans):
     """All 14 lead/lag shifted columns must come out of ONE Window exec over
     the daily spine — 14 specs, one physical node, one sort."""
     plan = all_plans["ccf_lead_lag"]
-    assert _n_partitionless(plan) == 14
+    assert n_partitionless(plan) == 14
     window_nodes = re.findall(r"^\s*(?:[:+\-|\s]*)Window ", plan, re.M)
     assert len(window_nodes) == 1
     assert all(
@@ -198,4 +186,4 @@ def test_cohort_ltv_cumsum_is_cohort_partitioned(all_plans):
     attribute (no sort direction)."""
     plan = all_plans["cohort_ltv_curve"]
     assert "windowspecdefinition" in plan  # the cumsum exists
-    assert _n_partitionless(plan) == 0
+    assert n_partitionless(plan) == 0

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.registry import QUERIES, load_all
 from ab_inbev_big_data_case_spark.sources.readers import table
+from plan_shapes import n_partitionless
 
 load_all()
 
@@ -262,27 +263,13 @@ def test_zorder_key_is_codegen(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def _n_partitionless_windows(plan: str) -> int:
-    """Count window specs with NO partitionBy: in the physical plan text a
-    windowspecdefinition lists partition columns first (bare attrs), then
-    ordering columns (attr ASC/DESC ...) — so a spec whose FIRST argument
-    carries a sort direction runs on a single partition."""
-    import re
-
-    n = 0
-    for m in re.finditer(r"windowspecdefinition\(([^,]+),", plan):
-        if " ASC" in m.group(1) or " DESC" in m.group(1):
-            n += 1
-    return n
-
-
 def test_zorder_extents_rank_is_distributed(spark, sf_dir):
     """The tile split must NOT be a global-sort ntile: the rank window
     partitions by the range-partition id, and no partitionless Window
     (single-partition WindowExec) appears anywhere in the plan."""
     plan = _plan(QUERIES["zorder_layout_extents"](spark, sf_dir))
     assert "ntile" not in plan
-    assert _n_partitionless_windows(plan) == 0
+    assert n_partitionless(plan) == 0
     assert "__pid" in plan  # the partitioned local row_number
 
 
@@ -292,7 +279,7 @@ def test_skyline_two_pass_shape(spark, sf_dir):
     already-pruned local survivors may run partitionless — exactly one
     such spec, and the bucketed pass must exist."""
     plan = _plan(QUERIES["skyline_2d"](spark, sf_dir))
-    assert _n_partitionless_windows(plan) == 1
+    assert n_partitionless(plan) == 1
     assert "bkt" in plan  # the partitioned local pass
 
 
@@ -302,7 +289,7 @@ def test_sweepline_two_level_cumsum(spark, sf_dir):
     over the tiny bucket-hour spine — exactly one partitionless spec, and
     at least one partitioned full-data window."""
     plan = _plan(QUERIES["concurrent_sessions"](spark, sf_dir))
-    assert _n_partitionless_windows(plan) == 1
+    assert n_partitionless(plan) == 1
     assert "bucket_hour" in plan
 
 
@@ -310,7 +297,7 @@ def test_attribution_window_partitioned_by_user(spark, sf_dir):
     """Last-touch attribution is one per-user window — never a global
     sort."""
     plan = _plan(QUERIES["attribution_last_touch"](spark, sf_dir))
-    assert _n_partitionless_windows(plan) == 0
+    assert n_partitionless(plan) == 0
 
 
 def test_sparse_topk_no_cartesian(spark, sf_dir):
@@ -395,7 +382,7 @@ def test_pq_argmin_is_aggregate_not_window(spark, sf_dir):
     plan = _plan(QUERIES["pq_codes"](spark, sf_dir))
     assert "partial_min" in plan
     assert "BroadcastHashJoin" in plan
-    assert _n_partitionless_windows(plan) == 0
+    assert n_partitionless(plan) == 0
 
 
 def test_random_projection_is_narrow(spark, sf_dir):
@@ -509,7 +496,7 @@ def test_abc_two_level_cumsum(spark, sf_dir):
     percentile bucket; only the 16-row bucket-total carry spine runs
     partitionless — exactly one such spec."""
     plan = _plan(QUERIES["abc_pareto_class"](spark, sf_dir))
-    assert _n_partitionless_windows(plan) == 1
+    assert n_partitionless(plan) == 1
     assert "bucket" in plan
 
 
@@ -518,7 +505,7 @@ def test_item_cosine_window_partitioned_by_item(spark, sf_dir):
     count joins stay equi-joins (item-cardinality sides — no broadcast
     of an unbounded table)."""
     plan = _plan(QUERIES["item_item_cosine"](spark, sf_dir))
-    assert _n_partitionless_windows(plan) == 0
+    assert n_partitionless(plan) == 0
     assert "CartesianProduct" not in plan
 
 
@@ -527,7 +514,7 @@ def test_lpa_rounds_have_no_global_window(spark, sf_dir):
     window anywhere; label tables join as shuffles, not broadcasts of
     node-cardinality state."""
     plan = _plan(QUERIES["label_propagation_communities"](spark, sf_dir))
-    assert _n_partitionless_windows(plan) == 0
+    assert n_partitionless(plan) == 0
 
 
 def test_simhash_pairs_candidates_are_equi_join(spark, sf_dir):
@@ -544,7 +531,7 @@ def test_leaderboard_rank_is_group_limited(spark, sf_dir):
     part spine is never fully sorted-and-materialized per window."""
     plan = _plan(QUERIES["leaderboard_rank_shift"](spark, sf_dir))
     assert "WindowGroupLimit" in plan
-    assert _n_partitionless_windows(plan) == 0
+    assert n_partitionless(plan) == 0
 
 
 def test_gini_two_level_rank(spark, sf_dir):
@@ -553,7 +540,7 @@ def test_gini_two_level_rank(spark, sf_dir):
     bucket-count carry spine (the abc_pareto_class decomposition run in
     reverse), never a flat full-data row_number."""
     plan = _plan(QUERIES["gini_concentration"](spark, sf_dir))
-    assert _n_partitionless_windows(plan) == 1
+    assert n_partitionless(plan) == 1
     assert "bucket" in plan
 
 
@@ -570,7 +557,7 @@ def test_winnowing_selection_is_grouped_min(spark, sf_dir):
     grouped min — no window function (and so no partitionless window)
     anywhere in the plan."""
     plan = _plan(QUERIES["winnowing_fingerprints"](spark, sf_dir))
-    assert _n_partitionless_windows(plan) == 0
+    assert n_partitionless(plan) == 0
     assert "CartesianProduct" not in plan
 
 

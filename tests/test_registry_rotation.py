@@ -140,7 +140,7 @@ def test_future_evidence_demotes_window(tmp_path):
     next_round = max(ev.values(), default=0) + 1
     for n in window:
         ev[n] = next_round
-    reordered = registry._derive_order(order, ev, registry._STAGED_NEXT)
+    reordered = registry._derive_order(order, ev)
     new_window = reordered[: registry._WINDOW_SIZE]
     assert not set(new_window) & set(window) or all(
         n in ev for n in reordered
@@ -166,10 +166,22 @@ def test_changed_name_outranks_stale_greens():
     order = registry._derive_order(
         ["fresh_green", "stale_green", "changed_green", "never_q"],
         ev,
-        [],
         changed=frozenset({"changed_green"}),
     )
     assert order == ["never_q", "changed_green", "stale_green", "fresh_green"]
+
+
+def test_ties_keep_registration_order():
+    """Names in one bucket with the same evidence round come out in the
+    order they were registered, in every bucket; no hand-kept list
+    reorders them."""
+    ev = {"g2": 5, "c2": 9, "n2": -1, "g1": 5, "c1": 9, "n1": -1, "old": 3}
+    order = registry._derive_order(
+        ["g2", "c2", "n2", "g1", "c1", "n1", "old"],
+        ev,
+        changed=frozenset({"c1", "c2"}),
+    )
+    assert order == ["n2", "n1", "c2", "c1", "old", "g2", "g1"]
 
 
 def test_changed_since_checked_detects_live_edits():
@@ -237,3 +249,39 @@ def test_query_hash_tracks_helper_symbol_content(monkeypatch):
     monkeypatch.setitem(registry._symbol_hash_cache, key, "0" * 64)
     h1 = registry.query_hash(name)
     assert h0 != h1
+
+
+def test_segmenter_matches_get_source_segment(monkeypatch):
+    """``_module_info`` slices each top-level def and assign out of its
+    module by node offsets, with line starts found once per module; every
+    slice of every package module must equal ``ast.get_source_segment``.
+    The offsets count UTF-8 bytes and the modules hold non-ASCII text
+    (×, Σ, →), so some slices must contain it."""
+    import ast
+    import functools
+    import glob
+    import os
+
+    if hasattr(ast, "_splitlines_no_ff"):
+        # The stdlib re-splits the whole text on every call; memoizing that
+        # pure split leaves the reference unchanged and the test fast.
+        monkeypatch.setattr(
+            ast, "_splitlines_no_ff", functools.lru_cache(maxsize=1)(ast._splitlines_no_ff)
+        )
+    kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Assign)
+    n = n_non_ascii = 0
+    pkg = os.path.join(registry._REPO_ROOT, registry._PKG)
+    # plus a text whose nodes END on non-ASCII lines, with CRLF line ends
+    texts = [("<crlf>", 'X = "Σ→×"\r\ndef f():\r\n    return "×"  # Σ\r\nY = 1\r\n')]
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            texts.append((path, f.read()))
+    for path, text in texts:
+        segment = registry._segmenter(text)
+        for node in ast.parse(text).body:
+            if isinstance(node, kinds):
+                got = segment(node)
+                assert got == ast.get_source_segment(text, node), (path, node.lineno)
+                n += 1
+                n_non_ascii += not got.isascii()
+    assert n > 1000 and n_non_ascii > 0, (n, n_non_ascii)

@@ -9,7 +9,6 @@ the driver fails (the round-3 HUGEINT playbook, extended one type over).
 
 import importlib.util
 import os
-import sys
 
 import pytest
 
@@ -49,22 +48,18 @@ def test_decimal_gate_allows_scaled_decimal_precedent(spark):
     assert co.decimal_problems(df, ["exact_clipped_sum"], ["DECIMAL(29,2)"]) == []
 
 
-def test_no_registered_query_outputs_scale0_decimal(spark, sf_dir):
+def test_no_registered_query_outputs_scale0_decimal(built_registry):
     """Plan-level sweep: no registered query may output a scale-0 decimal
     column (driver-hash-unsafe). Schemas only — nothing executes."""
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as e
     from pyspark.sql.types import DecimalType
 
-    bad = []
-    for name, fn in e.queries().items():
-        try:
-            sdf = fn(spark, sf_dir)
-        except Exception:
-            continue  # build errors are other tests' business
-        for f in sdf.schema.fields:
-            if isinstance(f.dataType, DecimalType) and f.dataType.scale == 0:
-                bad.append(f"{name}.{f.name}:{f.dataType.simpleString()}")
+    bad = [
+        f"{name}.{f.name}:{f.dataType.simpleString()}"
+        for name, b in built_registry.items()
+        if b.schema is not None  # build errors: test_plan_sweep's business
+        for f in b.schema.fields
+        if isinstance(f.dataType, DecimalType) and f.dataType.scale == 0
+    ]
     assert not bad, bad
 
 

@@ -3,7 +3,9 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet fixtures, then compares row count, column-name
 set, and an order-insensitive value multiset (floats compared after
-round-trip normalization). Use while iterating:
+round-trip normalization). All queries run in one Spark session, so a
+full sweep also checks that the whole registry fits one JVM. Use while
+iterating:
 
     python tools/check_oracle.py                 # all queries @ sf0.01
     python tools/check_oracle.py --sf sf0.001 q1 q2
@@ -190,22 +192,7 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     n_pass = n_fail = n_rows_only = 0
-    for i, name in enumerate(names):
-        # Long gate runs accumulate JVM state (generated codegen classes,
-        # broadcast refs, plan caches) across hundreds of queries; at ~270
-        # the driver JVM dies (measured twice: Py4JJavaError then
-        # ConnectionRefusedError fallout for the tail of a full run, and
-        # unpersist+clearCache every 25 queries did NOT prevent it). A
-        # full session restart every 100 queries is the only reliable
-        # ceiling — per-query results are independent, so this changes
-        # nothing but memory. The DRIVER's gate checks 50 queries/round
-        # and never needs this; it exists for local full-registry sweeps.
-        if i and i % 100 == 0:
-            try:
-                spark.stop()
-            except Exception:
-                pass
-            spark = get_spark("check_oracle")
+    for name in names:
         t0 = time.time()
         try:
             sdf = qs[name](spark, sf_dir)

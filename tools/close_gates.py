@@ -99,7 +99,6 @@ def main() -> int:
         "oracles": n_oracles,
         "rows_only": n_queries - n_oracles,
         "check_first": len(registry._CHECK_FIRST),
-        "staged_next": len(registry._STAGED_NEXT),
         "expected": args.expect_queries,
         # VERDICT r11 item 1: every changed-since-last-driver-check name
         # must be inside the upcoming driver window, or the close is red
