@@ -512,37 +512,6 @@ def simhash(
     return votes.select(F.col(id_col), F.expr(packed).alias("simhash"))
 
 
-def dup_clusters(pairs: DataFrame, rounds: int = 3) -> DataFrame:
-    """Duplicate clusters from candidate pairs: min-label propagation,
-    ``rounds`` fixed iterations → (doc_id, cluster_id) with cluster_id = the
-    smallest doc id reachable within ``rounds`` hops.
-
-    Near-dup pair lists are transitive in intent (A≈B, B≈C ⇒ one cluster);
-    keeping only non-id2 docs (the pairwise shortcut) over-drops. Label
-    propagation assigns every member its component's canonical id. Each
-    round is one equi-join + min-aggregate (both shuffle on the vertex key,
-    and consecutive rounds reuse that partitioning). Fixed unrolling keeps
-    the computation oracle-expressible; near-dup components are
-    short-diameter in practice, and a production deployment raising
-    ``rounds`` (or alternating large-star/small-star to converge in
-    O(log n) rounds) changes only the loop count, not the shape.
-    """
-    fwd = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    rev = pairs.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
-    edges = fwd.unionByName(rev)
-    verts = edges.select(F.col("src").alias("v")).distinct()
-    loops = verts.select(F.col("v").alias("src"), F.col("v").alias("dst"))
-    edges = edges.unionByName(loops)
-    lab = verts.select("v", F.col("v").alias("lab"))
-    for _ in range(rounds):
-        lab = (
-            edges.join(lab.withColumnRenamed("v", "src"), "src")
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.min("lab").alias("lab"))
-        )
-    return lab.select(F.col("v").alias("doc_id"), F.col("lab").alias("cluster_id"))
-
-
 def chunk_dup_stats(
     df: DataFrame, id_col: str, text_col: str, chunk_len: int = 8
 ) -> DataFrame:

@@ -587,7 +587,7 @@ def kmeans_rounds(
     the corpus itself, then ``n_rounds`` of assign → elementwise-mean
     recompute, all as one unrolled lineage — no driver-side iteration or
     collect, the same fixed-round pattern as min-label connected
-    components (llm/dedup.py:dup_clusters).
+    components (operators/graph.py:connected_components).
 
     Returns (assignments, centroids): assignments (vec_id, cell_id) from
     the FINAL round's argmax against the last recomputed centroids;

@@ -17,7 +17,6 @@ from ab_inbev_big_data_case_spark.functions.text import shingles, token_hash64, 
 from ab_inbev_big_data_case_spark.llm.dedup import (
     LSH_MAX_BUCKET_OCCUPANCY,
     chunk_dup_stats,
-    dup_clusters,
     exact_dedup_stats,
     lsh_band_buckets_wide,
     lsh_candidate_pairs,
@@ -56,6 +55,10 @@ from ab_inbev_big_data_case_spark.llm.textstats import (
 )
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
+from ab_inbev_big_data_case_spark.operators.graph import (
+    connected_components,
+    connected_components_sql,
+)
 from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
 
 # ---------------------------------------------------------------- SQL bits
@@ -1217,33 +1220,34 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dup_clusters_cc",
-    oracle=f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+# ------------------------------------------ duplicate cluster components
+
+# Union-form rounds of connected_components over the LSH near-dup graph.
+# Rounds to the fixpoint: sf0.001 2, sf0.01 1, sf0.1 5 (measured in DuckDB
+# on the fixtures; test_cc_fixture_certificates pins them at 0 unconverged).
+_CC_ROUNDS = 5
+
+
+def _lsh_cc_sql() -> str:
+    """Oracle twin of ``_cc_labels``: the minhash_lsh_pairs CTEs as the
+    edge list ``prs``, all documents as nodes, then the
+    ``connected_components_sql`` chain (``cc_labels``, ``cc_unconverged``)."""
+    return f"""{_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
+    prs AS MATERIALIZED (
+        SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
         FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
+          ON a.band = b.band AND a.band_sig = b.band_sig
+         AND a.doc_id < b.doc_id
     ),
-    edges AS (
-        SELECT id1 AS src, id2 AS dst FROM pairs
-        UNION ALL SELECT id2, id1 FROM pairs
-    ),
-    verts AS (SELECT DISTINCT src AS v FROM edges),
-    e2 AS (SELECT src, dst FROM edges UNION ALL SELECT v, v FROM verts),
-    l0 AS (SELECT v, v AS lab FROM verts),
-    l1 AS (SELECT e.dst AS v, min(l.lab) AS lab FROM e2 e JOIN l0 l ON l.v = e.src GROUP BY 1),
-    l2 AS (SELECT e.dst AS v, min(l.lab) AS lab FROM e2 e JOIN l1 l ON l.v = e.src GROUP BY 1),
-    l3 AS (SELECT e.dst AS v, min(l.lab) AS lab FROM e2 e JOIN l2 l ON l.v = e.src GROUP BY 1)
-    SELECT v AS doc_id, lab AS cluster_id FROM l3
-    """,
-)
-def dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clusters via 3-round min-label propagation over the LSH
-    candidate-pair graph (iterative-algorithm surface): every near-dup
-    group member gets its component's canonical (minimum) doc id, fixing
-    the pairwise keep-rule's over-dropping on transitive chains."""
+    docs AS (SELECT doc_id AS v FROM documents),
+    {connected_components_sql("docs", "prs", _CC_ROUNDS)}"""
+
+
+def _cc_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``connected_components`` over the LSH near-dup graph with every
+    document as a node: (labels(v, lab), n_unconverged). The one CC
+    engine of ``dup_clusters_cc``, ``duplicate_cluster_components`` and
+    ``dedup_canonical_keep_list``."""
     d = table(spark, sf_dir, "documents")
     sig = minhash_signatures_wide(shingle_set(d, "doc_id", "text", 3), "doc_id", 8)
     pairs = lsh_candidate_pairs(
@@ -1251,7 +1255,37 @@ def dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         max_bucket_occupancy=LSH_MAX_BUCKET_OCCUPANCY,
     )
-    return dup_clusters(pairs, rounds=3)
+    return connected_components(
+        d.select(F.col("doc_id").alias("v")),
+        pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst")),
+        _CC_ROUNDS,
+    )
+
+
+@register(
+    "dup_clusters_cc",
+    oracle=f"""
+    WITH {_lsh_cc_sql()}
+    SELECT v AS doc_id, lab AS cluster_id FROM cc_labels
+    WHERE v IN (SELECT src FROM prs UNION ALL SELECT dst FROM prs)
+    """,
+)
+def dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicate clusters over the LSH candidate-pair graph: every document
+    that has a pair, labelled with its component's canonical (minimum) doc
+    id by ``connected_components`` (``_cc_labels``), fixing the pairwise
+    keep-rule's over-dropping on transitive chains. A document has a pair
+    exactly when its converged component has two or more members."""
+    labels, _ = _cc_labels(spark, sf_dir)
+    return (
+        labels.select(
+            F.col("v").alias("doc_id"),
+            F.col("lab").alias("cluster_id"),
+            F.count(F.lit(1)).over(Window.partitionBy("lab")).alias("size"),
+        )
+        .filter(F.col("size") > 1)
+        .drop("size")
+    )
 
 
 @register(
@@ -6738,112 +6772,14 @@ def burrows_delta_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ duplicate cluster components
-
-_CC_ROUNDS = 4
-
-
-def _cc_core_ctes() -> tuple[str, str]:
-    """Chained-CTE mirror of the Spark CC loop: identical edge set (the
-    minhash_lsh_pairs CTEs), identical K rounds of min-label relax +
-    pointer-jump compress. Returns (WITH-body, final-labels-CTE-name) so
-    the histogram and keep-list oracles share one generator."""
-
-    def relax(src: str, dst: str) -> str:
-        return f"""{dst} AS MATERIALIZED (
-        SELECT n.v, least(n.l, coalesce(min(nb.lu), n.l)) AS l
-        FROM {src} n
-        LEFT JOIN (SELECT e.v, lu.l AS lu
-                   FROM bidir e JOIN {src} lu ON lu.v = e.u) nb
-          ON nb.v = n.v
-        GROUP BY n.v, n.l
-    )"""
-
-    rounds = []
-    cur = "l0"
-    for i in range(1, _CC_ROUNDS + 1):
-        rounds.append(relax(cur, f"r{i}"))
-        rounds.append(
-            f"l{i} AS MATERIALIZED (SELECT a.v, b.l FROM r{i} a JOIN r{i} b ON a.l = b.v)"
-        )
-        cur = f"l{i}"
-    body = f"""{_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    prs AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    bidir AS MATERIALIZED (SELECT id1 AS u, id2 AS v FROM prs
-              UNION ALL SELECT id2, id1 FROM prs),
-    l0 AS MATERIALIZED (SELECT doc_id AS v, doc_id AS l FROM documents),
-    {", ".join(rounds)}"""
-    return body, cur
-
-
 def _cc_oracle_sql() -> str:
-    body, cur = _cc_core_ctes()
     return f"""
-    WITH {body},
-    chk AS MATERIALIZED (
-        SELECT n.v, n.l, least(n.l, coalesce(min(nb.lu), n.l)) AS l2
-        FROM {cur} n
-        LEFT JOIN (SELECT e.v, lu.l AS lu
-                   FROM bidir e JOIN {cur} lu ON lu.v = e.u) nb
-          ON nb.v = n.v
-        GROUP BY n.v, n.l
-    ),
-    unc AS (SELECT sum((l2 <> l)::INT)::BIGINT AS n_unconverged FROM chk),
-    sizes AS (SELECT l, count(*) AS cluster_size FROM {cur} GROUP BY l)
+    WITH {_lsh_cc_sql()},
+    sizes AS (SELECT lab, count(*) AS cluster_size FROM cc_labels GROUP BY lab)
     SELECT cluster_size, count(*)::BIGINT AS n_clusters, u.n_unconverged
-    FROM sizes CROSS JOIN unc u
+    FROM sizes CROSS JOIN cc_unconverged u
     GROUP BY 1, 3
 """
-
-
-def _cc_labels(spark: SparkSession, sf_dir: str):
-    """Shared CC engine: (bidirectional edge set, converged min-labels)
-    for the LSH near-dup graph — the loop both ``duplicate_cluster_components``
-    and ``dedup_canonical_keep_list`` run (see the former's docstring for
-    the algorithm and scale notes)."""
-    d = table(spark, sf_dir, "documents")
-    sig = minhash_signatures_wide(shingle_set(d, "doc_id", "text", 3), "doc_id", 8)
-    pairs = lsh_candidate_pairs(
-        lsh_band_buckets_wide(sig, "doc_id", 8, 2),
-        "doc_id",
-        max_bucket_occupancy=LSH_MAX_BUCKET_OCCUPANCY,
-    )
-    edges = (
-        pairs.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
-        .unionAll(pairs.select(F.col("id2").alias("u"), F.col("id1").alias("v")))
-        .localCheckpoint(eager=False)
-    )
-    labels = d.select(F.col("doc_id").alias("v"), F.col("doc_id").alias("l"))
-
-    def relax(lbl: DataFrame) -> DataFrame:
-        nbr = (
-            edges.join(
-                lbl.select(F.col("v").alias("u"), F.col("l").alias("lu")), "u"
-            )
-            .groupBy("v")
-            .agg(F.min("lu").alias("lnbr"))
-        )
-        return lbl.join(nbr, "v", "left").select(
-            "v",
-            F.least(F.col("l"), F.coalesce(F.col("lnbr"), F.col("l"))).alias("l"),
-        )
-
-    for _ in range(_CC_ROUNDS):
-        labels = relax(labels)
-        compressed = labels.select(
-            F.col("v").alias("lv"), F.col("l").alias("ll")
-        )
-        labels = (
-            labels.join(compressed, labels["l"] == compressed["lv"])
-            .select("v", F.col("ll").alias("l"))
-            .localCheckpoint(eager=False)
-        )
-    return edges, labels
 
 
 @register("duplicate_cluster_components", oracle=_cc_oracle_sql())
@@ -6855,45 +6791,19 @@ def duplicate_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster {A,B,C}). Output is the cluster-size histogram plus a
     convergence certificate.
 
-    Algorithm: K = 4 unrolled rounds of min-label propagation, each round
-    an edge RELAX (l(v) ← min over neighbors, one shuffle on node id)
-    followed by a pointer-jump COMPRESS (l(v) ← l(l(v)), one shuffle on
-    label) — the alternating-star family (Kiveris et al. 2014, 'CC in
-    MapReduce and beyond'); compress doubles reach per round, so 4 rounds
-    cover diameter ≫ any LSH dup-cluster. Convergence is CERTIFIED, not
-    assumed: one extra relax counts nodes that would still change
-    (``n_unconverged`` — relax-stability implies labels are exactly the
-    per-component min doc_id, so 0 is a complete certificate; both engines
-    compute it from the same final state).
+    Algorithm: ``connected_components`` (``operators/graph.py``) over
+    every document, ``_CC_ROUNDS`` rounds; its ``n_unconverged`` certificate
+    is emitted as a column, so a truncated run shows in the output.
 
-    Exactness: labels are doc_ids (integers); min/least over integers;
-    the histogram is integer counts — no floats anywhere.
+    Exactness: labels are doc_ids (integers); min over integers; the
+    histogram is integer counts — no floats anywhere.
 
     Scale shape: edges come from the capped LSH buckets (never all-pairs);
-    labels are a doc-dimension-sized table; each round is 2 keyed shuffles
-    with the label table lazily checkpointed so the unrolled plan stays
-    K-linear (the HITS/warehouse pattern). At 100 TB the same loop runs
-    with persisted label state per round."""
-    edges, labels = _cc_labels(spark, sf_dir)
-    chk = (
-        labels.join(
-            edges.join(
-                labels.select(F.col("v").alias("u"), F.col("l").alias("lu")), "u"
-            )
-            .groupBy("v")
-            .agg(F.min("lu").alias("lnbr")),
-            "v",
-            "left",
-        )
-        .select(
-            "l",
-            F.least(F.col("l"), F.coalesce(F.col("lnbr"), F.col("l"))).alias("l2"),
-        )
-    )
-    unc = chk.agg(
-        F.sum((F.col("l2") != F.col("l")).cast("long")).alias("n_unconverged")
-    )
-    sizes = labels.groupBy("l").agg(F.count("*").alias("cluster_size"))
+    labels are a doc-dimension-sized table; the primitive's rounds are
+    keyed shuffles over it with periodic lineage cuts. At 100 TB the same
+    loop runs with persisted label state per round."""
+    labels, unc = _cc_labels(spark, sf_dir)
+    sizes = labels.groupBy("lab").agg(F.count("*").alias("cluster_size"))
     return (
         sizes.groupBy("cluster_size")
         .agg(F.count("*").alias("n_clusters"))
@@ -6903,12 +6813,11 @@ def duplicate_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _keep_list_sql() -> str:
-    body, cur = _cc_core_ctes()
     return f"""
-    WITH {body},
+    WITH {_lsh_cc_sql()},
     lab AS MATERIALIZED (
-        SELECT l.v AS doc_id, l.l AS cluster_id, d.n_chars
-        FROM {cur} l JOIN documents d ON d.doc_id = l.v
+        SELECT l.v AS doc_id, l.lab AS cluster_id, d.n_chars
+        FROM cc_labels l JOIN documents d ON d.doc_id = l.v
     ),
     canon AS (
         SELECT cluster_id,
@@ -6925,8 +6834,8 @@ def _keep_list_sql() -> str:
 @register("dedup_canonical_keep_list", oracle=_keep_list_sql())
 def dedup_canonical_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ACTIONABLE end of the dedup pipeline: a per-document keep/drop
-    decision. Clusters come from the shared CC engine (``_cc_labels`` —
-    see ``duplicate_cluster_components``); within each cluster the
+    decision. Clusters come from the shared CC engine (``_cc_labels``,
+    ``connected_components`` over the LSH graph); within each cluster the
     canonical is the LONGEST document (keep the most complete copy, the
     standard corpus-dedup rule), ties broken by min doc_id.
 
@@ -6940,15 +6849,15 @@ def dedup_canonical_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chars ≳ 9.2·10^8 (a ~900 MB document), picking a wrong canonical
     with no error.
 
-    Scale shape: the CC loop's cost (see its docstring) plus one
+    Scale shape: the CC loop's cost plus one
     doc-dimension join and one keyed argmax — nothing new scales with
     fact rows. Output is doc-dimension-sized (one decision per document),
     the shape a downstream filter join consumes."""
-    _, labels = _cc_labels(spark, sf_dir)
+    labels, _ = _cc_labels(spark, sf_dir)
     d = table(spark, sf_dir, "documents")
     lab = labels.join(
         d.select("doc_id", "n_chars"), labels["v"] == d["doc_id"]
-    ).select("doc_id", F.col("l").alias("cluster_id"), "n_chars")
+    ).select("doc_id", F.col("lab").alias("cluster_id"), "n_chars")
     canon = lab.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size"),
         F.min(

@@ -29,6 +29,10 @@ from ab_inbev_big_data_case_spark.llm.dedup import (
     shingle_set,
 )
 from ab_inbev_big_data_case_spark.llm.similarity import kmeans_rounds
+from ab_inbev_big_data_case_spark.operators.graph import (
+    connected_components,
+    connected_components_sql,
+)
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
 
@@ -2794,7 +2798,11 @@ _DBSCAN_EPS = 20      # milli-units: 0.02 in embedding space
 _DBSCAN_MINPTS = 5
 _DBSCAN_SUB = 14      # subcell width floor(eps/sqrt(2)): in-subcell dist <= eps
 _DBSCAN_REP_CAP = 16  # witness reps per subcell; never binds below sf1
-_DBSCAN_ROUNDS = 16   # hash-to-min rounds; fixture worst case is 12
+# Union-form rounds of connected_components over the subcell graph. Rounds
+# to the fixpoint: sf0.001 8, sf0.01 11, sf0.1 11 (measured in DuckDB on the
+# fixtures; test_cc_fixture_certificates pins them at 0 unconverged); 16
+# leaves headroom for longer subcell chains.
+_DBSCAN_ROUNDS = 16
 
 # 21-subcell neighborhood: |dq| <= eps=20 implies subcell delta <= 2, and the
 # (±2,±2) corners are provably out of range (min dist 2·14−13=15 per axis →
@@ -2808,9 +2816,9 @@ _DBSCAN_OFF = [
 
 
 def _dbscan_oracle_sql() -> str:
-    """Subcell DBSCAN with an unrolled hash-to-min CC over subcell nodes
-    (all CTEs materialized — the power_iteration lesson: DuckDB otherwise
-    inlines the chain into exponentially many scans)."""
+    """Subcell DBSCAN with ``connected_components_sql`` over the subcell
+    nodes (all CTEs materialized — the power_iteration lesson: DuckDB
+    otherwise inlines the chain into exponentially many scans)."""
     e2, mp, sub, cap = (
         _DBSCAN_EPS * _DBSCAN_EPS,
         _DBSCAN_MINPTS,
@@ -2876,36 +2884,21 @@ def _dbscan_oracle_sql() -> str:
         JOIN reps b ON b.sx = a.sx + off.dx AND b.sy = a.sy + off.dy
         JOIN node na ON na.sx = a.sx AND na.sy = a.sy
         JOIN node nb ON nb.sx = b.sx AND nb.sy = b.sy
-        WHERE NOT (off.dx = 0 AND off.dy = 0)
+        WHERE NOT (off.dx = 0 AND off.dy = 0) AND na.nid < nb.nid
           AND (a.qx - b.qx) * (a.qx - b.qx)
               + (a.qy - b.qy) * (a.qy - b.qy) <= {e2}
         GROUP BY 1, 2
     )""",
-        """l0 AS MATERIALIZED (SELECT nid AS v, nid AS lab FROM node)""",
+        "cc_nodes AS (SELECT nid AS v FROM node)",
+        connected_components_sql("cc_nodes", "sedge", _DBSCAN_ROUNDS),
     ]
-    for k in range(_DBSCAN_ROUNDS + 1):  # +1 certification round
-        ctes.append(
-            f"""l{k + 1} AS MATERIALIZED (
-        SELECT v, min(lab) AS lab FROM (
-            SELECT e.dst AS v, l.lab
-            FROM sedge e JOIN l{k} l ON l.v = e.src
-            UNION ALL
-            SELECT a.v, b.lab FROM l{k} a JOIN l{k} b ON b.v = a.lab
-        ) GROUP BY 1
-    )"""
-        )
-    lf, lc = f"l{_DBSCAN_ROUNDS}", f"l{_DBSCAN_ROUNDS + 1}"
     return f"""
     WITH {",".join(ctes)},
-    cert AS (
-        SELECT CASE WHEN count(*) = 0 THEN 1 ELSE 0 END AS converged
-        FROM {lf} a JOIN {lc} b ON b.v = a.v AND b.lab <> a.lab
-    ),
     core_lab AS MATERIALIZED (
         SELECT c.vec_id, c.qx, c.qy, c.sx, c.sy, l.lab
         FROM core c
         JOIN node n ON n.sx = c.sx AND n.sy = c.sy
-        JOIN {lf} l ON l.v = n.nid
+        JOIN cc_labels l ON l.v = n.nid
     ),
     border AS MATERIALIZED (
         SELECT f.vec_id, min(cl.lab) AS lab
@@ -2934,8 +2927,9 @@ def _dbscan_oracle_sql() -> str:
         LEFT JOIN border b ON b.vec_id = p.vec_id
         WHERE c.vec_id IS NULL AND b.vec_id IS NULL
     )
-    SELECT c.cluster_id, c.n_core, c.n_border, n.n_noise, t.converged
-    FROM counts c CROSS JOIN noise n CROSS JOIN cert t
+    SELECT c.cluster_id, c.n_core, c.n_border, n.n_noise,
+           CASE WHEN t.n_unconverged = 0 THEN 1 ELSE 0 END AS converged
+    FROM counts c CROSS JOIN noise n CROSS JOIN cc_unconverged t
     ORDER BY c.cluster_id
     """
 
@@ -2961,10 +2955,10 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
       results are bit-identical to textbook DBSCAN (the referee test
       proves it), while at saturation the witness cost is
       O(cap²·subcells), never O(occ²);
-    - components via HASH-TO-MIN label propagation (neighbor-min ∪
-      label-of-label, O(log diameter) rounds, 16 unrolled) with a
-      CONVERGED certificate re-propagated in-output (the ktruss
-      fixed-point discipline); border points adopt the minimum
+    - components via ``connected_components`` over the subcell graph
+      (``_DBSCAN_ROUNDS`` rounds), whose certificate is emitted as
+      ``converged`` (the ktruss fixed-point discipline); border points
+      adopt the minimum
       neighboring core label (deterministic where textbook DBSCAN is
       arrival-order-dependent); noise is the remainder.
 
@@ -2977,9 +2971,9 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one fact pass to quantized points; one subcell-key agg;
     fringe-only degree join (O(N)); rep-capped witness join
-    (O(subcells·cap²)); CC rounds are subcell-table-sized with lineage
-    cut per round. At 100 TB the subcell grid is the same partitioner a
-    spatial bucketing would persist."""
+    (O(subcells·cap²)); CC rounds are subcell-table-sized. At 100 TB the
+    subcell grid is the same partitioner a spatial bucketing would
+    persist."""
     e = table(spark, sf_dir, "embeddings")
     eps2 = _DBSCAN_EPS * _DBSCAN_EPS
     mp, sub, cap = _DBSCAN_MINPTS, _DBSCAN_SUB, _DBSCAN_REP_CAP
@@ -3069,55 +3063,15 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ["jx", "jy"],
         )
+        .filter(F.col("src") < F.col("dst"))
         .select("src", "dst")
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    lab = node.select(
-        F.col("nid").alias("v"), F.col("nid").alias("lab")
-    ).localCheckpoint(eager=False)
-
-    def propagate(l, cut: bool = True):
-        # ONE join per round (r16, VERDICT r15 item 3; guide §2.4): the
-        # old relax + two-sided pointer jump was two joins, but BOTH
-        # probed the same `l` keyed by v — nb_min = sedge ⋈ l on
-        # (src = v) emitting (dst, lab[src]); lol = l ⋈ l on (lab[v] = v)
-        # emitting (v, lab[lab[v]]). Union the LEFT sides into one keyed
-        # relation and probe `l` once:
-        #   (k=src,  v=dst)  ⋈ l.k → (dst, lab[src])      — the edge relax
-        #   (k=lab[v], v=v)  ⋈ l.k → (v,   lab[lab[v]])   — the pointer jump
-        # Row-for-row the same multiset as the two-join form (l.v is unique
-        # in both, so join multiplicity is 1 per left row; an absent key
-        # drops the row under either formulation), so the grouped min is
-        # identical. One exchange/probe per round instead of two, and each
-        # round now references its input 2× instead of 3× (lineage segments
-        # stay ≤ 2² wide under the stride-2 cuts below, was ≤ 3²).
-        contrib = sedge.select(
-            F.col("src").alias("k"), F.col("dst").alias("v")
-        ).unionByName(l.select(F.col("lab").alias("k"), F.col("v").alias("v")))
-        out = (
-            contrib.join(
-                l.select(F.col("v").alias("k"), F.col("lab")), "k"
-            )
-            .groupBy("v")
-            .agg(F.min("lab").alias("lab"))
-        )
-        # Stride-2 lineage cuts: cutting every round costs a Catalyst
-        # planning pass per checkpoint call (measured r15: ~0.15-0.2 s each
-        # of pure planning/bookkeeping on a 737-row table); cutting every
-        # SECOND round halves the boundary count while the uncut segment
-        # stays ≤ 2² wide.
-        return out.localCheckpoint(eager=False) if cut else out
-
-    for r in range(_DBSCAN_ROUNDS):
-        lab = propagate(lab, cut=(r % 2 == 1))
-    lab_cert = propagate(lab)
-    cert = (
-        lab.join(
-            lab_cert.select(F.col("v"), F.col("lab").alias("lab2")), "v"
-        )
-        .filter(F.col("lab") != F.col("lab2"))
-        .agg(F.when(F.count("*") == 0, 1).otherwise(0).alias("converged"))
+    lab, unc = connected_components(
+        node.select(F.col("nid").alias("v")), sedge, _DBSCAN_ROUNDS
+    )
+    cert = unc.select(
+        F.when(F.col("n_unconverged") == 0, 1).otherwise(0).alias("converged")
     )
     core_lab = core.join(node, ["sx", "sy"]).join(
         lab.select(F.col("v").alias("nid"), "lab"), "nid"

@@ -86,37 +86,18 @@ def _default_heap_gb() -> int:
 
 
 def _default_local_dir() -> str | None:
-    """Shuffle/spill scratch on the fastest local medium (guide §2.1: local
-    disk bandwidth for shuffle files can be the tighter limit — here it IS
-    the limit: thread dumps of a trivial 32-task shuffle stage on this
-    host's virtio ext4 showed task threads in FileOutputStream.open0 /
-    write / mmap / delete natives, and moving spark.local.dir to tmpfs
-    halved the whole stage, 0.34 s → 0.17 s, r16 probe). Resolution order:
+    """Shuffle/spill scratch: ``$SPARK_GRAFT_LOCAL_DIR`` when set, else
+    ``None`` (Spark's default, java.io.tmpdir; cluster managers override
+    it with SPARK_LOCAL_DIRS).
 
-    1. ``$SPARK_GRAFT_LOCAL_DIR`` — explicit override (a cluster deployment
-       sets SPARK_LOCAL_DIRS to its NVMe array instead, which Spark's
-       cluster managers use to override this conf anyway);
-    2. ``/dev/shm/spark_graft_local_<uid>`` when ``/dev/shm`` is writable
-       with > 8 GiB free — RAM-backed scratch, plenty for fixture-scale
-       shuffles (MBs at sf0.1), the local twin of "fast local disks" in the
-       guide's §9 baseline. The uid suffix keeps users on one host out of
-       each other's directory (the first creator would own a shared one).
-       Free space is checked only here, at session start: runs whose
-       shuffles or spills may reach GBs should set
-       ``SPARK_GRAFT_LOCAL_DIR`` to a disk path;
-    3. ``None`` — keep Spark's default (java.io.tmpdir).
+    Local disk bandwidth for shuffle files can be the tighter limit (guide
+    §2.1: on a virtio ext4 host, moving a trivial 32-task shuffle stage's
+    scratch to tmpfs halved it, 0.34 s → 0.17 s). Pointing the variable at
+    a tmpfs such as ``/dev/shm`` is an explicit opt-in and never the
+    default: RAM-backed scratch competes with the heap, and a shuffle or
+    spill that outgrows it fails the job with ENOSPC mid-run.
     """
-    override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if override:
-        return override
-    try:
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-            st = os.statvfs("/dev/shm")
-            if st.f_bavail * st.f_frsize > 8 * 1024**3:
-                return f"/dev/shm/spark_graft_local_{os.getuid()}"
-    except OSError:
-        pass
-    return None
+    return os.environ.get("SPARK_GRAFT_LOCAL_DIR") or None
 
 
 def _default_master() -> str:
@@ -154,7 +135,7 @@ def get_spark(
         "spark.driver.memory",
         os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{_default_heap_gb()}g"),
     )
-    # Shuffle scratch on fast storage (see _default_local_dir). Only applies
+    # Shuffle scratch override (see _default_local_dir). Only applies
     # before the first JVM start, like the heap sizing above.
     local_dir = _default_local_dir()
     if local_dir is not None:

@@ -247,18 +247,6 @@ def test_embedding_near_dup_keeps_canonicals(spark, sf_dir):
     assert len(kept) < len(all_ids)  # fixture has cosine>=0.25 bucket pairs
 
 
-def test_dup_clusters_transitive_chain(spark):
-    """A-B and B-C pairs must collapse into one cluster labeled min id,
-    and disconnected pairs keep separate labels."""
-    from ab_inbev_big_data_case_spark.llm.dedup import dup_clusters
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id1 long, id2 long"
-    )
-    got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs, rounds=3).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
 def test_sequence_packing_invariants(spark, sf_dir):
     """Packing conserves tokens, bins are contiguous from 0 per lang, and
     every bin except possibly the last starts inside its 512-token slot."""

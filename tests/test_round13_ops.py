@@ -53,8 +53,8 @@ def test_dbscan_converged_certificate_short_chain(spark):
 def test_dbscan_round_budget_overflow_surfaces_not_mislabels(spark):
     """VERDICT r12 item 4: past the round budget's reach the engine must
     SAY so, not silently fragment one cluster into several with
-    converged=1. The propagate rule (neighbor-min UNION label-of-label)
-    was simulated exactly on path graphs and VALIDATED against the
+    converged=1. The union-form round of ``connected_components``
+    (neighbor-min UNION label-of-label) was simulated exactly on path graphs and VALIDATED against the
     engine: a 30k-subcell path reaches fixed point exactly AT the 17th
     (certificate) propagation, so the engine correctly reports
     converged=1 for it (observed); a path needs >= ~50k nodes before

@@ -1,13 +1,21 @@
-"""Unit tests: warehouse-maintenance operators (profile, SCD2, PageRank)
-on tiny literal DataFrames — exact expected outputs plus the structural
-invariants each operator promises (SURVEY.md §5.2)."""
+"""Unit tests: warehouse-maintenance operators (profile, SCD2, PageRank,
+connected components) on tiny literal DataFrames — exact expected outputs
+plus the structural invariants each operator promises (SURVEY.md §5.2)."""
 
 import math
+import os
+import random
 
+import duckdb
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ab_inbev_big_data_case_spark.operators.graph import pagerank
+from ab_inbev_big_data_case_spark.operators.graph import (
+    connected_components,
+    connected_components_sql,
+    pagerank,
+)
 from ab_inbev_big_data_case_spark.operators.relational import build_scd2, profile
 from ab_inbev_big_data_case_spark.registry import QUERIES, load_all
 from ab_inbev_big_data_case_spark.sources.readers import table
@@ -91,6 +99,108 @@ def test_pagerank_uniform_cycle_is_uniform(spark):
     ranks = [r["rank"] for r in pagerank(edges, n_iter=4).collect()]
     # per-round rounding to 8 decimals truncates 1/3 — allow that quantum
     assert all(math.isclose(r, 1 / 3, abs_tol=1e-7) for r in ranks)
+
+
+def _cc(spark, nodes, edges, rounds):
+    """Spark ``connected_components`` on literal lists:
+    (sorted (v, lab) rows, n_unconverged)."""
+    n = spark.createDataFrame([(v,) for v in nodes], "v long")
+    e = spark.createDataFrame(edges, "src long, dst long")
+    labels, unc = connected_components(n, e, rounds)
+    return (
+        sorted((r["v"], r["lab"]) for r in labels.collect()),
+        unc.collect()[0]["n_unconverged"],
+    )
+
+
+def _cc_sql(nodes, edges, rounds):
+    """``connected_components_sql`` in DuckDB on the same lists."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE nodes (v BIGINT)")
+    con.execute("CREATE TABLE edges (src BIGINT, dst BIGINT)")
+    con.executemany("INSERT INTO nodes VALUES (?)", [(v,) for v in nodes])
+    con.executemany("INSERT INTO edges VALUES (?, ?)", edges)
+    body = connected_components_sql("nodes", "edges", rounds)
+    labels = sorted(con.execute(f"WITH {body} SELECT v, lab FROM cc_labels").fetchall())
+    (unc,) = con.execute(f"WITH {body} SELECT * FROM cc_unconverged").fetchone()
+    return labels, unc
+
+
+def _component_min(nodes, edges):
+    """Pure-Python union-find: node -> minimum node id of its component."""
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in nodes}
+
+
+def test_connected_components_transitive_chain(spark):
+    """A-B and B-C pairs must collapse into one cluster labeled min id,
+    and disconnected pairs keep separate labels."""
+    pairs = [(1, 2), (2, 3), (10, 11)]
+    got, _ = _cc(spark, [1, 2, 3, 10, 11], pairs, rounds=3)
+    assert dict(got) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+@pytest.mark.parametrize("seed", [7, 11, 19])
+def test_connected_components_match_union_find_and_sql_twin(spark, seed):
+    """Seeded random ~50-node graphs: labels are the component minimum,
+    isolated nodes keep their own id, the certificate is 0, and the DuckDB
+    twin returns the identical labels and certificate."""
+    rng = random.Random(seed)
+    nodes = rng.sample(range(1000), 50)
+    edges = [tuple(rng.sample(nodes, 2)) for _ in range(30)]
+    want = _component_min(nodes, edges)
+    got, unc = _cc(spark, nodes, edges, rounds=10)
+    assert got == sorted(want.items()) and unc == 0
+    isolated = set(nodes) - {x for e in edges for x in e}
+    assert isolated and all(dict(got)[v] == v for v in isolated)
+    assert _cc_sql(nodes, edges, rounds=10) == (got, unc)
+
+
+def test_connected_components_certificate_flags_truncation(spark):
+    """A 40-node path is beyond what 3 rounds can cover: the certificate
+    counts the nodes still moving, and the SQL twin stops at the same
+    (unconverged) labels. Round 3 is the first where the pointer jump
+    reaches further than the edge relax alone."""
+    nodes = list(range(40))
+    edges = [(i, i + 1) for i in range(39)]
+    got, unc = _cc(spark, nodes, edges, rounds=3)
+    assert unc > 0
+    assert {lab for _, lab in got} != {0}
+    assert _cc_sql(nodes, edges, rounds=3) == (got, unc)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_cc_fixture_certificates(sf_dir, sf):
+    """The round constants reach the fixpoint on every fixture: the DuckDB
+    oracles of the LSH graph (``_CC_ROUNDS``) and the DBSCAN subcell graph
+    (``_DBSCAN_ROUNDS``) both certify 0 unconverged nodes."""
+    from ab_inbev_big_data_case_spark.registry import ORACLE
+
+    sf_dir = os.path.join(os.path.dirname(sf_dir), sf)
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"no fixture at {sf_dir}")
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    unc = con.execute(
+        f"SELECT DISTINCT n_unconverged FROM ({ORACLE['duplicate_cluster_components']})"
+    ).fetchall()
+    converged = con.execute(
+        f"SELECT DISTINCT converged FROM ({ORACLE['dbscan_grid_clusters']})"
+    ).fetchall()
+    assert (unc, converged) == ([(0,)], [(1,)])
 
 
 def test_ivm_join_delta_terms_nonempty(spark, sf_dir):
