@@ -67,24 +67,42 @@ def test_heap_respects_cgroup_limit_when_below_host(monkeypatch, tmp_path):
     assert S._default_heap_gb() == 2  # half of the 4 GiB cap, not host/2
 
 
-def test_local_dir_never_defaults_to_tmpfs(monkeypatch):
-    """Without SPARK_GRAFT_LOCAL_DIR the scratch stays Spark's default,
-    even on a host with a large writable /dev/shm; the override still
-    wins when set."""
+@pytest.mark.parametrize(
+    ("writable", "free_gib", "tmpfs_usable"),
+    [(True, 16, True), (True, 4, False), (False, 16, False)],
+)
+def test_local_dir_tmpfs_is_per_user_and_space_checked(
+    monkeypatch, writable, free_gib, tmpfs_usable
+):
+    """Without SPARK_GRAFT_LOCAL_DIR the scratch stays Spark's default in
+    every /dev/shm state, a roomy writable one included, and /dev/shm is
+    not probed. A per-user tmpfs directory is reached only by naming it in
+    SPARK_GRAFT_LOCAL_DIR, and the override wins as given."""
     from types import SimpleNamespace
 
     from ab_inbev_big_data_case_spark import session as S
 
+    probed = []
+
+    def fake_statvfs(p):
+        probed.append(p)
+        return SimpleNamespace(f_bavail=free_gib * 1024**2, f_frsize=1024)
+
+    def fake_access(p, mode):
+        probed.append(p)
+        return writable
+
     monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR", raising=False)
-    monkeypatch.setattr("os.path.isdir", lambda p: True)
-    monkeypatch.setattr("os.access", lambda p, mode: True)
-    monkeypatch.setattr(
-        "os.statvfs",
-        lambda p: SimpleNamespace(f_bavail=64 * 1024**2, f_frsize=1024),
-    )
+    monkeypatch.setattr("os.path.isdir", lambda p: p == "/dev/shm")
+    monkeypatch.setattr("os.access", fake_access)
+    monkeypatch.setattr("os.statvfs", fake_statvfs)
+    monkeypatch.setattr("os.getuid", lambda: 4242)
+    assert tmpfs_usable == (writable and free_gib > 8)
     assert S._default_local_dir() is None
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/data/scratch")
-    assert S._default_local_dir() == "/data/scratch"
+    for override in ("/dev/shm/spark_graft_local_4242", "/data/scratch"):
+        monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", override)
+        assert S._default_local_dir() == override
+    assert probed == []
 
 
 def test_default_master_follows_usable_cpus(monkeypatch):
