@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 from ab_inbev_big_data_case_spark.operators.partitioning import spread
 from ab_inbev_big_data_case_spark.functions.text import (
     HASH_MOD,
@@ -584,10 +585,13 @@ def prefix_filter_jaccard_pairs(
     """
     from ab_inbev_big_data_case_spark.functions.text import tokens
 
-    toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
-    ).localCheckpoint(eager=False)  # 4 consumers: dfreq, ranked, sizes, tsets
+    toks = cut(
+        df.select(
+            F.col(id_col).alias("__id"),
+            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
+        ),
+        "prefix_filter_jaccard_pairs.toks",
+    )  # 4 consumers: dfreq, ranked, sizes, tsets
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("__df"))
     w = Window.partitionBy("__id").orderBy("__df", "tok")
     sizes = toks.groupBy("__id").agg(F.count("*").alias("__sz"))

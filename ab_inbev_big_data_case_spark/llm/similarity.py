@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.operators.partitioning import spread
 from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 
 def _dot(a, b):
@@ -973,7 +974,7 @@ def sparse_tfidf_topk(
     from ab_inbev_big_data_case_spark.functions.text import shingles, tokens
     from ab_inbev_big_data_case_spark.operators.partitioning import spread
 
-    grams = (
+    grams = cut(
         spread(df).select(
             F.col(id_col).alias("doc"),
             F.explode(shingles(tokens(F.col(text_col)), n)).alias("__g"),
@@ -984,21 +985,13 @@ def sparse_tfidf_topk(
         # and a collision would surface as an oracle mismatch, not silence
         .select("doc", F.xxhash64("__g").alias("gram"))
         .groupBy("doc", "gram")
-        .agg(F.count("*").alias("cnt"))
+        .agg(F.count("*").alias("cnt")),
         # grams feeds both the idf aggregate and the weight join; w below
         # feeds three consumers (norms, query postings, corpus postings).
-        # Without materialization Spark re-derives the tokenize→shingle→
-        # count pipeline once PER consumer (~5 corpus scans, 46 exchanges
-        # measured) — at 100 TB this seam is the inverted-index layer
-        # write. EAGER (r16, VERDICT item 6): this is the one fact-sized
-        # checkpoint in the file whose consumers run as CONCURRENT stages
-        # of one job (idf, norms, qw, corpus postings under AQE, plus the
-        # nq BroadcastExchange on its own driver thread) — a lazy cut lets
-        # those subtrees race to materialize it and compute the shingle
-        # pipeline twice. Eager is a materialize-then-fanout barrier;
-        # interleaved A/B measured wall-neutral (1.562 s eager vs 1.596 s
-        # lazy median at sf0.1). Same rationale as dbscan's `sc`.
-        .localCheckpoint(eager=True)
+        # Uncut, the tokenize→shingle→count pipeline runs once PER consumer
+        # (~5 corpus scans, 46 exchanges measured) — at 100 TB this seam
+        # is the inverted-index layer write.
+        "sparse_tfidf_topk.grams",
     )
     idf = grams.groupBy("gram").agg(
         (F.lit(idf_scale) / F.count("*")).cast("long").alias("idfq"),

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 
 def pagerank(
@@ -129,12 +130,12 @@ def connected_components(
     minimum node id. Nothing is collected; the caller decides whether to
     emit or act on the certificate. Isolated nodes keep their own id."""
     back = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    sym = edges.select("src", "dst").unionAll(back).localCheckpoint(eager=False)
+    sym = cut(edges.select("src", "dst").unionAll(back), "connected_components.sym")
     lab = nodes.select("v", F.col("v").alias("lab"))
     for r in range(1, rounds + 1):
         lab = _cc_round(sym, lab)
         if r % _CUT_STRIDE == 0:
-            lab = lab.localCheckpoint(eager=False)
+            lab = cut(lab, "connected_components.lab")
     n_unconverged = (
         lab.join(_cc_round(sym, lab).withColumnRenamed("lab", "lab2"), "v")
         .filter(F.col("lab") != F.col("lab2"))

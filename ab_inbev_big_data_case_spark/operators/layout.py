@@ -22,6 +22,7 @@ from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 
 def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
@@ -114,12 +115,11 @@ def file_extent_stats(
         "__lrn",
         F.row_number().over(Window.partitionBy("__pid").orderBy(*order_cols)),
     )
-    # lazy checkpoint: three consumers (the tile join, the per-partition
-    # counts, the total) would otherwise each re-derive `local` from the
-    # source scan — 8 scans of the fact table in the physical plan. One
-    # materialization shared by all consumers; at 100 TB this seam is a
-    # layer write (same pattern as quality_bucket_mix's scored table).
-    local = local.localCheckpoint(eager=False)
+    # three consumers (the tile join, the per-partition counts, the total)
+    # would otherwise each re-derive `local` from the source scan — 8 scans
+    # of the fact table in the physical plan; at 100 TB this seam is a
+    # layer write
+    local = cut(local, "file_extent_stats.local")
     counts = local.groupBy("__pid").agg(F.count("*").alias("__n"))
     # prefix sum over the n_parts-row spine WITHOUT any window (not even a
     # tiny-spine partitionless one, so the bench stays WARN-free): a

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, load_tables
 from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 
 def _sql(spark: SparkSession, sf_dir: str, tables: tuple[str, ...], sql: str) -> DataFrame:
@@ -809,7 +810,7 @@ def time_bucket_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one grouped scan of events collapses 100 TB to
     types x hours rows; the spine, bounds, and type list all derive from that
-    small aggregate (lazy localCheckpoint so its three consumers don't
+    small aggregate (cut, so its three consumers don't
     re-scan events); the LOCF window runs over the already-small densified
     grid. Sums accumulate in exact DECIMAL then round — engine-stable and
     partial-agg-order-independent."""
@@ -819,7 +820,7 @@ def time_bucket_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ab_inbev_big_data_case_spark.sources.readers import table
 
     e = table(spark, sf_dir, "events")
-    agg = (
+    agg = cut(
         e.groupBy(
             "event_type", F.date_trunc("hour", "ts").alias("bucket")
         )
@@ -828,8 +829,8 @@ def time_bucket_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
             .cast("double")
             .alias("sum_value"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "time_bucket_gapfill.agg",
     )
     bounds = agg.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
     hours = bounds.select(
@@ -1477,14 +1478,14 @@ def gapfill_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     e = table(spark, sf_dir, "events")
-    agg = (
+    agg = cut(
         e.groupBy("event_type", F.date_trunc("hour", "ts").alias("bucket"))
         .agg(
             F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
             .cast("double")
             .alias("sum_value")
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "gapfill_linear_interp.agg",
     )
     bounds = agg.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
     hours = bounds.select(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 _LCM16 = 720720  # lcm(1..16): 720720/deg is exact for every allowed basket size
 _MAX_BASKET = 16
@@ -61,20 +62,19 @@ def resource_allocation_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     RA(p1,p2) = Σ over shared orders o of 1/|basket(o)|, accumulated as
     exact integers via the lcm(1..16) fixed-point weight.
     """
-    # EAGER checkpoint on the distinct edge backbone (r16): it feeds three
-    # consumers (the basket-degree aggregate, both pair-join sides) and the
-    # degree side sits under a BroadcastExchange, which blocks exchange
-    # reuse — stage profiling showed the scan+distinct pipeline computed
-    # TWICE per run; eager also bars the concurrent-subtree double-compute
-    # race (the sparse_tfidf/dbscan rationale). Width-pinning the pair
-    # stage was tried and measured WORSE (AQE local-read remaps a pinned
-    # exchange under the broadcast join; forcing width via a repartitioned
-    # checkpoint added more wall than the 1.5 s CPU it spread — rejected).
-    e = (
+    # the distinct edge backbone feeds three consumers (the basket-degree
+    # aggregate, both pair-join sides) and the degree side sits under a
+    # BroadcastExchange, which blocks exchange reuse — stage profiling
+    # showed the scan+distinct pipeline computed TWICE per run uncut.
+    # Width-pinning the pair stage was tried and measured WORSE (AQE
+    # local-read remaps a pinned exchange under the broadcast join; forcing
+    # width via a repartitioned checkpoint added more wall than the 1.5 s
+    # CPU it spread — rejected).
+    e = cut(
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "resource_allocation_links.e",
     )
     w = (
         e.groupBy("o")
@@ -164,11 +164,13 @@ def adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-cap baskets never fan out (≤120 pairs/order), partial+final
     aggregate on (p1,p2), top-100 TakeOrderedAndProject on the exact
     integer score with (p1, p2) tie-break."""
-    # eager checkpoint: same three-consumer backbone dedupe as
-    # resource_allocation_links (scan+distinct ran twice per run)
-    e = table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct().localCheckpoint(eager=True)
+    # same three-consumer backbone as resource_allocation_links
+    e = cut(
+        table(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+        ).distinct(),
+        "adamic_adar_links.e",
+    )
     wq = F.lit(None)
     for d, wt in _AA_W.items():
         wq = F.when(F.col("deg") == d, wt).otherwise(wq)
@@ -251,17 +253,12 @@ def jaccard_neighbor_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("deg") >= 2) & (F.col("deg") <= _MAX_BASKET))
         .select("o")
     )
-    # eager checkpoint: ec feeds the degree aggregate (broadcast side —
-    # blocks exchange reuse) and both pair-join sides; same backbone
-    # dedupe as resource_allocation_links
-    ec = e.join(ok, "o").localCheckpoint(eager=True)
-    # checkpoint the dimension-sized degree table so the TWO broadcast
-    # attachments below don't each recompute the lineitem scan + basket
-    # filter (the warehouse.py HITS pattern)
-    deg = (
-        ec.groupBy("p")
-        .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=False)
+    # ec feeds the degree aggregate (broadcast side — blocks exchange
+    # reuse) and both pair-join sides, as in resource_allocation_links
+    ec = cut(e.join(ok, "o"), "jaccard_neighbor_links.ec")
+    # the dimension-sized degree table feeds TWO broadcast attachments
+    deg = cut(
+        ec.groupBy("p").agg(F.count("*").alias("d")), "jaccard_neighbor_links.deg"
     )
     a = ec.select("o", F.col("p").alias("p1"))
     b = ec.select("o", F.col("p").alias("p2"))
@@ -384,24 +381,23 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("deg") >= 2) & (F.col("deg") <= _MAX_BASKET))
         .select("o")
     )
-    # eager checkpoint: ec feeds both self-join sides of the pair build;
-    # dedupes the scan+distinct+basket-filter pipeline (backbone pattern)
-    ec = e.join(ok, "o").localCheckpoint(eager=True)
-    ed = (
+    # ec feeds both self-join sides of the pair build
+    ec = cut(e.join(ok, "o"), "triangle_count_copurchase.ec")
+    ed = cut(
         ec.alias("a")
         .join(ec.alias("b"), F.expr("a.o = b.o AND a.p < b.p"))
         .groupBy(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
         .agg(F.count("*").alias("ns"))
         .filter(F.col("ns") >= 2)
-        .select("p1", "p2")
-        .localCheckpoint(eager=False)
+        .select("p1", "p2"),
+        "triangle_count_copurchase.ed",
     )
-    deg = (
+    deg = cut(
         ed.select(F.col("p1").alias("p"))
         .unionAll(ed.select(F.col("p2").alias("p")))
         .groupBy("p")
-        .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=False)
+        .agg(F.count("*").alias("d")),
+        "triangle_count_copurchase.deg",
     )
     j = (
         ed.join(F.broadcast(deg.select(F.col("p").alias("p1"), F.col("d").alias("d1"))), "p1")
@@ -410,10 +406,13 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     fwd = (F.col("d1") < F.col("d2")) | (
         (F.col("d1") == F.col("d2")) & (F.col("p1") < F.col("p2"))
     )
-    orient = j.select(
-        F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("u"),
-        F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("v"),
-    ).localCheckpoint(eager=False)
+    orient = cut(
+        j.select(
+            F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("u"),
+            F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("v"),
+        ),
+        "triangle_count_copurchase.orient",
+    )
     o1 = orient.select(F.col("u").alias("w_u"), F.col("v").alias("w_v"))
     o2 = orient.select(F.col("u").alias("x_u"), F.col("v").alias("x_v"))
     o3 = orient.select(F.col("u").alias("c_u"), F.col("v").alias("c_v"))
@@ -548,10 +547,13 @@ def _triangle_edges(ed: DataFrame) -> DataFrame:
     fwd = (F.col("d1") < F.col("d2")) | (
         (F.col("d1") == F.col("d2")) & (F.col("p1") < F.col("p2"))
     )
-    orient = j.select(
-        F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("u"),
-        F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("v"),
-    ).localCheckpoint(eager=False)
+    orient = cut(
+        j.select(
+            F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("u"),
+            F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("v"),
+        ),
+        "_triangle_edges.orient",
+    )
     o1 = orient.select(F.col("u").alias("w_u"), F.col("v").alias("w_v"))
     o2 = orient.select(F.col("u").alias("x_u"), F.col("v").alias("x_v"))
     o3 = orient.select(F.col("u").alias("c_u"), F.col("v").alias("c_v"))
@@ -617,9 +619,8 @@ def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out, repeat-co-occurrence backbone); the wedge join runs once,
     each round is then linear in the (shrinking) triangle list, and the
     edge set only shrinks. Triangle state is what the old per-round wedge
-    join materialized as its intermediate anyway, now checkpointed once;
-    lazy localCheckpoint per round keeps the unrolled plan K-linear (the
-    CC/HITS pattern)."""
+    join materialized as its intermediate anyway, now cut once; each
+    round's state is cut too, so the unrolled plan stays K-linear."""
     e = table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     ).distinct()
@@ -629,17 +630,16 @@ def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("deg") >= 2) & (F.col("deg") <= _MAX_BASKET))
         .select("o")
     )
-    # eager checkpoint: ec feeds both self-join sides of the pair build;
-    # dedupes the scan+distinct+basket-filter pipeline (backbone pattern)
-    ec = e.join(ok, "o").localCheckpoint(eager=True)
-    ed = (
+    # ec feeds both self-join sides of the pair build
+    ec = cut(e.join(ok, "o"), "ktruss_edges.ec")
+    ed = cut(
         ec.alias("a")
         .join(ec.alias("b"), F.expr("a.o = b.o AND a.p < b.p"))
         .groupBy(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
         .agg(F.count("*").alias("ns"))
         .filter(F.col("ns") >= 2)
-        .select("p1", "p2")
-        .localCheckpoint(eager=False)
+        .select("p1", "p2"),
+        "ktruss_edges.ed",
     )
     n_initial = ed.agg(F.count("*").cast("long").alias("n_edges_initial"))
     # Triangles enumerated ONCE (r16, VERDICT r15 item 4; guide §2.4). Loop
@@ -652,17 +652,17 @@ def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # against that (small, shrinking) dead set on each of its 3 edge slots
     # instead of re-running the m^1.5 wedge enumeration — per-round support
     # integers are identical by the invariant, hence so is every ed_r.
-    tri = _triangle_edges(ed).localCheckpoint(eager=False)
+    tri = cut(_triangle_edges(ed), "ktruss_edges.tri")
     for _ in range(_KTRUSS_ROUNDS):
-        supp = _support_from(tri).localCheckpoint(eager=False)
-        ed = (
+        supp = cut(_support_from(tri), "ktruss_edges.supp")
+        ed = cut(
             ed.join(supp, ["p1", "p2"])
             .filter(F.col("s") >= _KTRUSS_K - 2)
-            .select("p1", "p2")
-            .localCheckpoint(eager=False)
+            .select("p1", "p2"),
+            "ktruss_edges.ed",
         )
         dead = supp.filter(F.col("s") < _KTRUSS_K - 2).select("p1", "p2")
-        tri = (
+        tri = cut(
             tri.join(
                 dead.select(F.col("p1").alias("e1x"), F.col("p2").alias("e1y")),
                 ["e1x", "e1y"],
@@ -677,8 +677,8 @@ def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dead.select(F.col("p1").alias("e3x"), F.col("p2").alias("e3y")),
                 ["e3x", "e3y"],
                 "left_anti",
-            )
-            .localCheckpoint(eager=False)
+            ),
+            "ktruss_edges.tri",
         )
     supp_final = _support_from(tri)
     survivors = (

@@ -60,6 +60,7 @@ from ab_inbev_big_data_case_spark.operators.graph import (
     connected_components_sql,
 )
 from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 # ---------------------------------------------------------------- SQL bits
 
@@ -1702,16 +1703,15 @@ def quality_bucket_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     tf = toks.groupBy("tok").agg(F.count("*").alias("n"))
     tot = tf.agg(F.sum("n").cast("double").alias("n_total"))
-    scored = (
+    # scored feeds two consumers (percentile bounds + bucket labeling);
+    # uncut, the whole tokenize→TF→score pipeline runs per consumer (~6
+    # documents scans). At 100 TB this seam is a layer write.
+    scored = cut(
         toks.join(F.broadcast(tf), "tok")
         .crossJoin(F.broadcast(tot))
         .groupBy("doc_id")
-        .agg(F.round(F.avg(-F.log(F.col("n") / F.col("n_total"))), 4).alias("s"))
-        # scored feeds two consumers (percentile bounds + bucket labeling);
-        # without materialization Spark recomputes the whole tokenize→TF→score
-        # pipeline per consumer (~6 documents scans). Lazy localCheckpoint
-        # computes it once per action; at 100 TB this seam is a layer write.
-        .localCheckpoint(eager=False)
+        .agg(F.round(F.avg(-F.log(F.col("n") / F.col("n_total"))), 4).alias("s")),
+        "quality_bucket_mix.scored",
     )
     bounds = scored.agg(
         F.round(F.expr("percentile(s, 0.33)"), 4).alias("q33"),
@@ -2072,9 +2072,8 @@ def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``llm/sketches.py``); the lone float op is one constant/int64 division.
     The exact count here is verification-only — the 100 TB deployment keeps
     just the 256-register sketch, merged across partitions by max."""
-    # items feeds both the sketch and the verification count — checkpoint so
-    # the distinct-shingle pipeline runs once, not twice
-    items = _shingles4(spark, sf_dir).localCheckpoint(eager=False)
+    # items feeds both the sketch and the verification count
+    items = cut(_shingles4(spark, sf_dir), "hll_distinct.items")
     est = hll_estimate(hll_registers(items, "item", p=8), p=8)
     exact = items.agg(F.count("*").alias("exact_n"))
     return (
@@ -2147,10 +2146,10 @@ def bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bloom guarantee; driver-checked here). At 100 TB this is join pruning:
     broadcast the 4096-word fingerprint of the small side and drop fact
     rows that can't match before the shuffle."""
-    # build feeds the filter construction AND the exact-membership join —
-    # checkpoint so the shingle pipeline runs once per side
-    build = _shingles4(spark, sf_dir, F.col("doc_id") % 2 == 0).localCheckpoint(
-        eager=False
+    # build feeds the filter construction AND the exact-membership join
+    build = cut(
+        _shingles4(spark, sf_dir, F.col("doc_id") % 2 == 0),
+        "bloom_filter_probe.build",
     )
     cand = _shingles4(spark, sf_dir, F.col("doc_id") % 2 == 1)
     bloom = bloom_build(build, "item", _BLOOM_K, _BLOOM_WORDS, _BLOOM_BPW)
@@ -2391,15 +2390,18 @@ def hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = table(spark, sf_dir, "events")
-    items = e.select(
-        F.to_date("ts").alias("day"),
-        F.concat(
-            F.lit("u"),
-            F.col("user_id").cast("string"),
-            F.lit(":"),
-            F.to_date("ts").cast("string"),
-        ).alias("item"),
-    ).distinct().localCheckpoint(eager=False)
+    items = cut(
+        e.select(
+            F.to_date("ts").alias("day"),
+            F.concat(
+                F.lit("u"),
+                F.col("user_id").cast("string"),
+                F.lit(":"),
+                F.to_date("ts").cast("string"),
+            ).alias("item"),
+        ).distinct(),
+        "hll_rolling_distinct.items",
+    )
     regs = hll_registers_grouped(items, "item", ["day"], p=5)
     spine = items.select("day").distinct()
     win = (
@@ -2533,21 +2535,16 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.size(F.array_distinct(toks)) * 10 >= F.size(toks) * 3)
     )
     w_exact = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
-    exact = (
+    # shared by the shingle layer AND the final `clean` join: without the
+    # cut, the second consumer re-ran the scan + the gate's
+    # array_distinct(split(text)) + the sha256 dedup window
+    exact = cut(
         gate.withColumn("__rn", F.row_number().over(w_exact))
         .filter(F.col("__rn") == 1)
-        .select("doc_id", "lang", F.size(toks).alias("n_toks"), "text")
-        # shared by the shingle layer AND the final `clean` join: without
-        # the cut, the second consumer re-ran the scan + the gate's
-        # array_distinct(split(text)) + the sha256 dedup window. Lazy, not
-        # eager: a 5×-interleaved A/B measured eager barriers here at
-        # +1.1 s wall (3.46 vs 2.32 median at sf0.1) for no local gain —
-        # concurrent first-use can duplicate a lazy cut's compute, but the
-        # duplicated subtree is one cached-scan pass, far cheaper than two
-        # blocking jobs.
-        .localCheckpoint(eager=False)
+        .select("doc_id", "lang", F.size(toks).alias("n_toks"), "text"),
+        "curation_pipeline_e2e.exact",
     )
-    sh = shingle_set(exact, "doc_id", "text", 3).localCheckpoint(eager=False)
+    sh = cut(shingle_set(exact, "doc_id", "text", 3), "curation_pipeline_e2e.sh")
     sig = minhash_signatures_wide(sh, "doc_id", 8)
     # occupancy cap 64 (r12): bucket occupancy grows ~linearly in corpus
     # size once content density saturates, so UNCAPPED pair fan-out is
@@ -3791,12 +3788,11 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as two DataFrame joins."""
     d = table(spark, sf_dir, "documents")
     # the signature feeds three consumers (banding + both verify sides);
-    # lazy localCheckpoint computes the 60-vote aggregate once, not 3x
-    # (measured 4.7 s -> ~2 s at sf0.1 in the headline bench)
-    sig = (
+    # cutting it measured 4.7 s -> ~2 s at sf0.1 in the headline bench
+    sig = cut(
         simhash(d, "doc_id", "text", 60, shingle_n=3)
-        .withColumnRenamed("simhash", "s")
-        .localCheckpoint(eager=False)
+        .withColumnRenamed("simhash", "s"),
+        "simhash_hamming_pairs.sig",
     )
     bands = sig.select(
         "doc_id",
@@ -6713,7 +6709,6 @@ def burrows_delta_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("c").desc(), F.col("w").asc())
         .limit(20)
         .select("w")
-        .localCheckpoint(eager=False)
     )
     stot = tok.groupBy("source").agg(F.count("*").alias("nt"))
     swc = tok.join(F.broadcast(topw), "w").groupBy("source", "w").agg(
@@ -7030,20 +7025,20 @@ def power_iteration_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = table(spark, sf_dir, "embeddings")
-    # localCheckpoint: the gram is re-joined 14 times — cutting its lineage
-    # once keeps the fact pass out of every downstream stage. The loop
-    # itself stays ONE lazy plan: each iteration references w and v exactly
-    # once (the sup-norm via an unpartitioned window over the 64-row w, not
-    # a separate agg + crossJoin), so the tree grows LINEARLY in depth and
+    # the gram is re-joined 14 times: one cut keeps the fact pass out of
+    # every downstream stage. The loop itself stays ONE lazy plan: each
+    # iteration references w and v exactly once (the sup-norm via an
+    # unpartitioned window over the 64-row w, not a separate agg +
+    # crossJoin), so the tree grows LINEARLY in depth and
     # the 12 iterations run as one job instead of 12 eagerly-checkpointed
     # jobs (which cost ~2x wall at sf0.1 — the r13→r14 recovery; the
-    # per-iteration checkpoints were the regression, not the decimal
-    # carrier, which times identically to long here).
-    gram = (
+    # per-iteration cuts were the regression, not the decimal carrier,
+    # which times identically to long here).
+    gram = cut(
         gram_matrix_fixed_point(e, "embedding", dim=_PI_DIM, scale=_PI_SCALE)
         .select("i", "j", F.col("gram_q").alias("g"))
-        .coalesce(1)
-        .localCheckpoint(eager=True)
+        .coalesce(1),
+        "power_iteration_top_eigen.gram",
     )
     d38 = "decimal(38,0)"
     w_all = Window.partitionBy()
@@ -7070,7 +7065,7 @@ def power_iteration_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One lineage cut before the panel fans out into rq/den/loadings (v is
     # referenced 4 times below — without the cut the 12-deep loop tree
     # would be re-analyzed and potentially re-executed per reference).
-    v = v.localCheckpoint(eager=True)
+    v = cut(v, "power_iteration_top_eigen.v")
     rq = (
         gram.join(v.select(F.col("i"), F.col("vq").alias("va")), "i")
         .join(
@@ -7494,9 +7489,8 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline uses; no pairwise work anywhere. Docs with < 3 tokens have
     no shingles and are absent by definition in both engines."""
     d = table(spark, sf_dir, "documents")
-    # shared by the first-appearance aggregate AND the per-doc join: one
-    # shingling pass, not two (lazy checkpoint, the flagship's pattern)
-    sh = shingle_set(d, "doc_id", "text", 3).localCheckpoint(eager=False)
+    # shared by the first-appearance aggregate AND the per-doc join
+    sh = cut(shingle_set(d, "doc_id", "text", 3), "ngram_novelty_score.sh")
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = (F.col("first_doc") == F.col("doc_id")).cast("int")
     return (
@@ -7579,12 +7573,14 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed sum — inverted-index cost, never corpus×vocabulary."""
     d = table(spark, sf_dir, "documents")
     # the token layer feeds doc-lengths AND term frequencies (and lengths
-    # feed stats + the score join): checkpoint lazily so the corpus text is
-    # exploded once, not once per consumer (the flagship's shingle-layer
-    # pattern — at 100 TB this is the difference between 1 and 4 passes)
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).localCheckpoint(eager=False)
+    # feed stats + the score join): at 100 TB the cut is the difference
+    # between 1 and 4 passes over the corpus text
+    toks = cut(
+        d.select(
+            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
+        ),
+        "bm25_doc_scores.toks",
+    )
     dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.agg(
         F.count("*").alias("n_docs"),

@@ -35,6 +35,7 @@ from ab_inbev_big_data_case_spark.operators.graph import (
 )
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 _H64 = "('0x' || substr(sha256({x}), 1, 15))::BIGINT"
 
@@ -142,15 +143,15 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     # token array materialized in its own projection (inlining the split
     # into the shingle lambda re-splits the text once per F.get — measured
-    # 10x on the sf1 explode), then one lazy checkpoint so the three
-    # consumers (bigram tf, prefix tf, score join) share one explode pass
+    # 10x on the sf1 explode); the three consumers of the explode (bigram
+    # tf, prefix tf, score join) share one cut
     toked = d.select("doc_id", tokens(F.col("text")).alias("toks"))
-    bg = (
+    bg = cut(
         toked.select(
             "doc_id", F.explode(shingles(F.col("toks"), 2)).alias("bigram")
         )
-        .withColumn("pre", F.substring_index("bigram", " ", 1))
-        .localCheckpoint(eager=False)
+        .withColumn("pre", F.substring_index("bigram", " ", 1)),
+        "bigram_lm_score.bg",
     )
     btab = bg.groupBy("bigram").agg(F.count("*").alias("n_big"))
     ptab = bg.groupBy("pre").agg(F.count("*").alias("n_pre"))
@@ -237,9 +238,12 @@ def kneser_ney_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary grows with the corpus, AQE decides)."""
     d = table(spark, sf_dir, "documents")
     toked = d.select("doc_id", tokens(F.col("text")).alias("toks"))
-    bg = toked.select(
-        "doc_id", F.explode(shingles(F.col("toks"), 2)).alias("bigram")
-    ).localCheckpoint(eager=False)
+    bg = cut(
+        toked.select(
+            "doc_id", F.explode(shingles(F.col("toks"), 2)).alias("bigram")
+        ),
+        "kneser_ney_bigram_score.bg",
+    )
     # every count the KN formula needs is keyed by the bigram TYPE: n_pre
     # = Σ n_big over the prefix, N₁₊(v·)/N₁₊(·w) = type counts per
     # prefix/continuation. So the per-type probability assembles entirely
@@ -516,25 +520,24 @@ def backoff_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail, typically >50% of the table) never enter the model."""
     d = table(spark, sf_dir, "documents")
     # token array in its own projection (inline split re-evaluates per
-    # F.get in the shingle lambda — the measured 10x), lazy checkpoint so
-    # the pruned-bigram table and the score join share one explode pass
+    # F.get in the shingle lambda — the measured 10x); the pruned-bigram
+    # table and the score join share the cut explode
     toked = d.select("doc_id", tokens(F.col("text")).alias("toks"))
-    bg = (
+    bg = cut(
         toked.select(
             "doc_id", F.explode(shingles(F.col("toks"), 2)).alias("bigram")
         )
         .withColumn("pre", F.substring_index("bigram", " ", 1))
-        .withColumn("w2", F.substring_index("bigram", " ", -1))
-        .localCheckpoint(eager=False)
+        .withColumn("w2", F.substring_index("bigram", " ", -1)),
+        "backoff_lm_score.bg",
     )
     toks1 = d.select(F.explode(F.split("text", " ")).alias("tok"))
     # the unigram vocabulary feeds THREE consumers (prefix counts, word
-    # counts, token total): without a seam each reference re-derives the
-    # token explode — checkpoint once, scan thrice
-    uc = (
+    # counts, token total)
+    uc = cut(
         toks1.groupBy("tok")
-        .agg(F.count("*").alias("n_u"))
-        .localCheckpoint(eager=False)
+        .agg(F.count("*").alias("n_u")),
+        "backoff_lm_score.uc",
     )
     # token total = Σ unigram counts — read off the tiny vocabulary table
     # instead of a second pass over the token stream
@@ -2977,27 +2980,26 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     eps2 = _DBSCAN_EPS * _DBSCAN_EPS
     mp, sub, cap = _DBSCAN_MINPTS, _DBSCAN_SUB, _DBSCAN_REP_CAP
-    sc = e.select(
-        "vec_id",
-        F.floor(F.get("embedding", 0).cast("double") * 1000 + 0.5)
-        .cast("long")
-        .alias("qx"),
-        F.floor(F.get("embedding", 1).cast("double") * 1000 + 0.5)
-        .cast("long")
-        .alias("qy"),
-    ).select(
-        "vec_id",
-        "qx",
-        "qy",
-        F.floor(F.col("qx").cast("double") / sub).cast("long").alias("sx"),
-        F.floor(F.col("qy").cast("double") / sub).cast("long").alias("sy"),
-        # EAGER on purpose (alone among this query's checkpoints): sc is the
-        # fact-sized table with 5 downstream consumers; eager guarantees the
-        # scan+quantize runs exactly once, where a lazy cut lets concurrent
-        # subtrees of the single final job race to compute it. Everything
-        # downstream is subcell-bounded and checkpoints lazily so the CC
-        # loop stays one job instead of 17 (the power_iteration r14 lesson).
-    ).localCheckpoint(eager=True)
+    # sc is the fact-sized table with 5 downstream consumers; everything
+    # after it is subcell-bounded
+    sc = cut(
+        e.select(
+            "vec_id",
+            F.floor(F.get("embedding", 0).cast("double") * 1000 + 0.5)
+            .cast("long")
+            .alias("qx"),
+            F.floor(F.get("embedding", 1).cast("double") * 1000 + 0.5)
+            .cast("long")
+            .alias("qy"),
+        ).select(
+            "vec_id",
+            "qx",
+            "qy",
+            F.floor(F.col("qx").cast("double") / sub).cast("long").alias("sx"),
+            F.floor(F.col("qy").cast("double") / sub).cast("long").alias("sy"),
+        ),
+        "dbscan_grid_clusters.sc",
+    )
     occ = sc.groupBy("sx", "sy").agg(F.count("*").alias("occ"))
     off = const_df(spark, _DBSCAN_OFF, "dx int, dy int")
     fringe = sc.join(occ.filter(F.col("occ") < mp), ["sx", "sy"]).select(
@@ -3028,16 +3030,16 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     certified = sc.join(occ.filter(F.col("occ") >= mp), ["sx", "sy"]).select(
         "vec_id", "qx", "qy", "sx", "sy"
     )
-    core = certified.unionByName(fringe_core).localCheckpoint(eager=False)
+    core = cut(certified.unionByName(fringe_core), "dbscan_grid_clusters.core")
     wrep = Window.partitionBy("sx", "sy").orderBy(
         token_hash64(F.concat(F.lit("dbscan:"), F.col("vec_id").cast("string"))),
         "vec_id",
     )
-    reps = (
+    reps = cut(
         core.select("*", F.row_number().over(wrep).alias("rk"))
         .filter(F.col("rk") <= cap)
-        .drop("rk")
-        .localCheckpoint(eager=False)
+        .drop("rk"),
+        "dbscan_grid_clusters.reps",
     )
     node = core.groupBy("sx", "sy").agg(F.min("vec_id").alias("nid"))
     repb = reps.select(
@@ -3083,15 +3085,14 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sy").alias("jy"),
         "lab",
     )
-    # Anti-join against the CHECKPOINTED core, not fringe_core: fringe and
+    # Anti-join against the cut core, not fringe_core: fringe and
     # certified are disjoint by construction (occ < mp vs occ >= mp), so
     # fringe ∖ core ≡ fringe ∖ fringe_core — but fringe_core's fringe-degree
     # join is the single most expensive subtree here, and referencing it
-    # uncheckpointed re-ran it per consumer (measured: three ~6 s 32-task
-    # stages at sf0.1, one per consumer — guide §2.4 remove repeated
-    # passes). border itself feeds TWO consumers (counts, noise), so cut
-    # its lineage once, lazily, keeping everything one job.
-    border = (
+    # uncut re-ran it per consumer (measured: three ~6 s 32-task stages
+    # at sf0.1, one per consumer — guide §2.4 remove repeated passes).
+    # border itself feeds TWO consumers (counts, noise).
+    border = cut(
         fringe.join(core.select("vec_id"), "vec_id", "left_anti")
         .crossJoin(F.broadcast(off))
         .withColumn("jx", F.col("sx") + F.col("dx"))
@@ -3099,8 +3100,8 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(clb, ["jx", "jy"])
         .filter(within)
         .groupBy("vec_id")
-        .agg(F.min("lab").alias("lab"))
-        .localCheckpoint(eager=False)
+        .agg(F.min("lab").alias("lab")),
+        "dbscan_grid_clusters.border",
     )
     counts = (
         core_lab.select("lab", F.lit(True).alias("is_core"))

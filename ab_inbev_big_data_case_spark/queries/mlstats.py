@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, load_tables, table
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 
 def _sql(spark: SparkSession, sf_dir: str, tables: tuple[str, ...], sql: str) -> DataFrame:
@@ -3176,27 +3177,25 @@ def sssp_bounded_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = li.select("l_orderkey", "l_partkey").distinct()
     a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
     b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
-    # eager checkpoint on the edge backbone (r16): two consumers (wsym,
-    # seed) and four unrolled relaxation rounds otherwise re-derive the
-    # scan→distinct→pair-join→agg pipeline per reference (the kcore /
-    # linkpred-backbone lesson, guide §2.4)
-    e = (
+    # the edge backbone has two consumers (wsym, seed), and four unrolled
+    # relaxation rounds would otherwise re-derive the
+    # scan→distinct→pair-join→agg pipeline per reference
+    e = cut(
         a.join(b, "l_orderkey")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
-        .filter(F.col("n_co") >= 2)
-        .localCheckpoint(eager=True)
+        .filter(F.col("n_co") >= 2),
+        "sssp_bounded_hops.e",
     )
     w_expr = F.when(F.col("n_co") >= 100, 1).otherwise(101 - F.col("n_co"))
-    # one materialized copy of the symmetric weighted edges shared by all
-    # relaxation rounds (lazy: consumed inside the single final job)
-    wsym = (
+    # the symmetric weighted edges are shared by all relaxation rounds
+    wsym = cut(
         e.select("u", "v", w_expr.alias("w"))
         .unionAll(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"), w_expr.alias("w"))
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "sssp_bounded_hops.wsym",
     )
     seed = e.agg(F.min("u").alias("v")).select("v", F.lit(0).alias("d"))
     d = seed
@@ -3210,14 +3209,12 @@ def sssp_bounded_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col(f"{dl}.d") + F.col(f"{wl}.w")).alias("d"),
             )
         )
-        d = (
+        d = cut(
             d.select("v", "d")
             .unionAll(relaxed)
             .groupBy("v")
-            .agg(F.min("d").alias("d"))
-            # each round references its input twice (carry + relax) —
-            # lazy cut keeps the unrolled plan K-linear (the CC pattern)
-            .localCheckpoint(eager=False)
+            .agg(F.min("d").alias("d")),
+            "sssp_bounded_hops.d",  # each round references d twice
         )
     return (
         d.orderBy("d", "v")
@@ -4627,13 +4624,15 @@ def abtest_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream results are void.
 
     Scale shape: ONE distinct-user aggregate to a 2-row panel — the panel
-    is lazily checkpointed so the total, the chi-square sum, and the
-    output rows share a single fact scan (three consumers would otherwise
-    each re-plan the distinct)."""
+    is cut so the total, the chi-square sum, and the output rows share a
+    single fact scan."""
     e = table(spark, sf_dir, "events")
-    arms = e.groupBy((F.col("user_id") % 2).alias("arm")).agg(
-        F.countDistinct("user_id").alias("n")
-    ).localCheckpoint(eager=False)
+    arms = cut(
+        e.groupBy((F.col("user_id") % 2).alias("arm")).agg(
+            F.countDistinct("user_id").alias("n")
+        ),
+        "abtest_srm_check.arms",
+    )
     t = arms.agg(F.sum("n").alias("nt"))
     bt = arms.crossJoin(F.broadcast(t))
     exp = F.col("nt") / 2.0
@@ -4886,7 +4885,7 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,6)")).alias("rev"))
     )
     a, b = wk.alias("a"), wk.alias("b")
-    duels = (
+    duels = cut(  # bounded ≤600-row duel dim, reused 3×
         a.join(
             b,
             (F.col("a.w") == F.col("b.w")) & (F.col("a.nat") != F.col("b.nat")),
@@ -4899,11 +4898,12 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.col("a.rev") != F.col("b.rev"), 1).otherwise(0)
             ).alias("n"),
-        )
-        .localCheckpoint(eager=False)  # bounded ≤600-row duel dim, reused 3×
+        ),
+        "bradley_terry_strengths.duels",
     )
-    wtot = duels.groupBy("i").agg(F.sum("wins").alias("wi")).localCheckpoint(
-        eager=False
+    wtot = cut(
+        duels.groupBy("i").agg(F.sum("wins").alias("wi")),
+        "bradley_terry_strengths.wtot",
     )
     kdf = wtot.agg(F.count("*").alias("k"))
     p = wtot.crossJoin(F.broadcast(kdf)).select(

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 #: per-part revenue in exact integer cents (shared by the ABC oracle)
 _PART_REV_SQL = """
@@ -318,23 +319,22 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     items = li.select("l_orderkey", "l_partkey").distinct()
     a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
     b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
-    # r16 lineage hygiene (guide §2.4, the sssp/linkpred backbone lesson):
     # the edge backbone and its symmetrization feed multiple consumers
     # (labels + both LPA rounds + degree/modularity terms, some under
-    # BroadcastExchange which blocks exchange reuse) — checkpoint each
-    # once: eager on the fact-sized backbone, lazy inside the final job.
-    e = (
+    # BroadcastExchange which blocks exchange reuse)
+    e = cut(
         a.join(b, "l_orderkey")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
+        .select("u", "v"),
+        "label_propagation_communities.e",
     )
-    sym = e.unionAll(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
+    sym = cut(
+        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+        "label_propagation_communities.sym",
+    )
     labels = sym.select(F.col("u").alias("node")).distinct().withColumn(
         "lab", F.col("node")
     )
@@ -420,23 +420,22 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = li.select("l_orderkey", "l_partkey").distinct()
     a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
     b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
-    # r16 lineage hygiene (guide §2.4, the sssp/linkpred backbone lesson):
     # the edge backbone and its symmetrization feed multiple consumers
     # (labels + both LPA rounds + degree/modularity terms, some under
-    # BroadcastExchange which blocks exchange reuse) — checkpoint each
-    # once: eager on the fact-sized backbone, lazy inside the final job.
-    e = (
+    # BroadcastExchange which blocks exchange reuse)
+    e = cut(
         a.join(b, "l_orderkey")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
+        .select("u", "v"),
+        "community_modularity.e",
     )
-    sym = e.unionAll(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
+    sym = cut(
+        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+        "community_modularity.sym",
+    )
     labels = sym.select(F.col("u").alias("node")).distinct().withColumn(
         "lab", F.col("node")
     )
@@ -456,7 +455,7 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # three consumers (cdeg, la, lb) each re-derive two LPA rounds
     # (window over the whole graph) without this cut
-    l2 = lpa_round(lpa_round(labels)).localCheckpoint(eager=False)
+    l2 = cut(lpa_round(lpa_round(labels)), "community_modularity.l2")
     m = e.agg(F.count("*").alias("n_edges"))
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
     cdeg = (
@@ -765,15 +764,15 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_co") >= 2)
         .select("u", "v")
     )
-    # Lazy checkpoint per round (the CC/ktruss discipline, previously
-    # missing HERE): every round is referenced 3× by the next peel (degree
+    # One cut per round: every round is referenced 3× by the next peel (degree
     # agg + two semi-joins) AND once more by its own stats branch, so the
     # uncut 4-branch union re-derived the basket pair fan-out and peel
     # chain per branch (only Exchange reuse kept it from exploding —
     # measured 8.7 s median at sf0.1, 2.6 s with the cuts).
-    sym = e.unionAll(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
+    sym = cut(
+        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+        "kcore_peeling.sym",
+    )
 
     def peel(cur: DataFrame) -> DataFrame:
         surv = (
@@ -788,7 +787,7 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rounds = [sym]
     for _ in range(3):
-        rounds.append(peel(rounds[-1]).localCheckpoint(eager=False))
+        rounds.append(cut(peel(rounds[-1]), "kcore_peeling.state"))
     stats = [
         g.agg(
             F.lit(i).cast("long").alias("round"),

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
+from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 #: ANSI daily-revenue spine shared by every oracle in this module
 #: (matches :func:`_daily_revenue` column-for-column).
@@ -1690,7 +1691,7 @@ def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("x")
     )
-    daily = daily.localCheckpoint(eager=False)  # probe + spine share one scan
+    daily = cut(daily, "matrix_profile_daily.daily")  # probe + spine share one scan
     rng = daily.agg((F.max("x") - F.min("x")).alias("m")).first()["m"] or 0
     long_safe = 7 * rng * rng < (1 << 63)  # Python ints: no overflow here
     w = Window.orderBy("d")
@@ -2146,14 +2147,12 @@ def hurst_rs_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("x")
     )
-    daily = daily.localCheckpoint(eager=False)  # count probe + spine share
+    daily = cut(daily, "hurst_rs_lite.daily")  # count probe + spine share
     n_days = daily.count()
     w = Window.orderBy("d")
-    # checkpoint ABOVE the spine row_number: blk feeds three consumers and
-    # would otherwise re-plan the daily window per branch
-    idx = daily.select("x", F.row_number().over(w).alias("i")).localCheckpoint(
-        eager=False
-    )
+    # cut ABOVE the spine row_number: blk feeds three consumers and would
+    # otherwise re-plan the daily window per branch
+    idx = cut(daily.select("x", F.row_number().over(w).alias("i")), "hurst_rs_lite.idx")
     scales = const_df(spark, [(s,) for s in _HURST_SCALES], "s INT")
     blk = (
         idx.crossJoin(F.broadcast(scales))
@@ -3036,7 +3035,6 @@ def binary_segmentation_changepoints(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .orderBy(F.col("stat").desc(), "cp_day")
         .limit(1)
-        .localCheckpoint(eager=False)
     )
     seg = c.crossJoin(F.broadcast(cp1.select("cp_day"))).select(
         "day",
@@ -3201,10 +3199,6 @@ def sample_entropy_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(x div r AS LONG)").alias("b"),
             "r",
         )
-        # t feeds BOTH sides of the bucket join: without materialization the
-        # day-spine windows (and the fact aggregate above them) would run
-        # twice in one plan
-        .localCheckpoint(eager=False)
     )
     fan = t.select(
         "i", "x", "xn", "r", F.explode(F.expr("array(b - 1, b, b + 1)")).alias("key")
@@ -3562,13 +3556,13 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the shared one-shuffle daily collapse."""
     d = _daily_revenue(spark, sf_dir)
     base = d.agg(F.min("day").alias("d0"))
-    pts = (
+    pts = cut(
         d.crossJoin(F.broadcast(base))
         .select(
             F.datediff(F.col("day"), F.col("d0")).cast("long").alias("x"),
             F.round(F.col("rev") * 100, 0).cast("long").alias("y"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "theil_sen_trend.pts",
     )
     par = spark.sparkContext.defaultParallelism
     a, b = pts.repartition(par).alias("a"), pts.alias("b")
@@ -3589,17 +3583,18 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global_rank = offset(pid) + rank_in(pid) — exact for any boundary
     # placement, identical tie-breaks (sl, dy, dx), and the 2.9M-row sort
     # runs on every core instead of one.
-    # localCheckpoint: the two-level rank depends on BOTH consumers of
+    # cut: the two-level rank depends on BOTH consumers of
     # `slopes` (the per-pid counts and the per-pid window) observing the
     # same spark_partition_id assignment. Exchange reuse currently
     # guarantees that, but spark_partition_id is documented
     # nondeterministic and nothing pinned the subtree against double
     # execution under AQE replanning or task retry (ADVICE r15) — cut the
     # lineage so the pid-stamped partitioning is materialized once.
-    slopes = prs.select("dy", "dx", sl.alias("sl")).repartitionByRange(
-        par, F.col("sl"), F.col("dy"), F.col("dx")
-    ).select("*", F.spark_partition_id().alias("__pid")).localCheckpoint(
-        eager=False
+    slopes = cut(
+        prs.select("dy", "dx", sl.alias("sl")).repartitionByRange(
+            par, F.col("sl"), F.col("dy"), F.col("dx")
+        ).select("*", F.spark_partition_id().alias("__pid")),
+        "theil_sen_trend.slopes",
     )
     pc = slopes.groupBy("__pid").agg(F.count("*").alias("__n"))
     w_off = Window.orderBy("__pid").rowsBetween(

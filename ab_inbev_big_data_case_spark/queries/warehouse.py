@@ -21,6 +21,7 @@ from ..operators.graph import pagerank
 from ..operators.relational import build_scd2, profile
 from ..registry import register
 from ..sources.readers import const_df, load_tables, table
+from ..operators.lineage import cut
 
 
 def _union_profile(col: str, numeric: bool) -> str:
@@ -1635,24 +1636,26 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-normalizer is a broadcast 1-row aggregate. At 100 TB the fact scan
     dominates; iteration cost is dimension-sized."""
     load_tables(spark, sf_dir, ("orders", "customer", "lineitem", "supplier"))
-    edges = spark.sql(
-        """
-        SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
-        FROM orders o
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        """
-    ).localCheckpoint(eager=False)
-    # the lazy-checkpoint seam (zorder_layout_extents precedent): edges and
-    # nodes appear in all 4 unrolled rounds — without truncation the
+    edges = cut(
+        spark.sql(
+            """
+            SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
+            FROM orders o
+            JOIN customer c ON o.o_custkey = c.c_custkey
+            JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+            JOIN supplier s ON l.l_suppkey = s.s_suppkey
+            """
+        ),
+        "hits_hub_authority.edges",
+    )
+    # edges and nodes appear in all 4 unrolled rounds — without truncation the
     # ANALYZED plan carries ~9 copies of the 4-table join and analysis
     # alone costs seconds; as LogicalRDD leaves the rounds are dim-sized
-    nodes = (
+    nodes = cut(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "hits_hub_authority.nodes",
     )
 
     def norm(scores: DataFrame, col: str) -> DataFrame:
@@ -1773,11 +1776,11 @@ def betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize to DECIMAL(38,12) so the triple sum is order-independent.
 
     Scale shape: the fact collapses to the ≤25×25 distinct-edge dim ONCE;
-    all powers/joins run on dimension-bounded tables (lazy-checkpointed so
-    the unrolled plan stays leaf-rooted). At 100 TB the fact scan
+    all powers/joins run on dimension-bounded cut tables, so the unrolled
+    plan stays leaf-rooted. At 100 TB the fact scan
     dominates; the centrality math is constant-size."""
     load_tables(spark, sf_dir, ("orders", "customer", "lineitem", "supplier"))
-    edges = (
+    edges = cut(
         spark.sql(
             """
         SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
@@ -1787,8 +1790,8 @@ def betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         WHERE c.c_nationkey <> s.s_nationkey
         """
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "betweenness_centrality.edges",
     )
     p = edges.select("src", "dst", F.lit(1).cast("decimal(38,0)").alias("c"))
     layers = [p.select("src", "dst", F.lit(1).alias("d"), "c")]
@@ -1804,19 +1807,19 @@ def betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     lay = layers[0]
     for x in layers[1:]:
         lay = lay.unionAll(x)
-    lay = lay.localCheckpoint(eager=False)
+    lay = cut(lay, "betweenness_centrality.lay")
     sp = lay.groupBy("src", "dst").agg(F.min("d").alias("d"))
-    sigma = (
+    sigma = cut(
         lay.join(sp, ["src", "dst", "d"])
         .groupBy("src", "dst", "d")
-        .agg(F.max("c").alias("sigma"))
-        .localCheckpoint(eager=False)
+        .agg(F.max("c").alias("sigma")),
+        "betweenness_centrality.sigma",
     )
-    nodes = (
+    nodes = cut(
         edges.select(F.col("src").alias("v"))
         .union(edges.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "betweenness_centrality.nodes",
     )
     st, sv, vt = sigma.alias("st"), sigma.alias("sv"), sigma.alias("vt")
     triples = (
@@ -1915,9 +1918,8 @@ def harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to ``betweenness_centrality`` — the fact
     collapses ONCE to the ≤25×25 distinct-edge dim, the hop unroll and
-    the centrality sum run on dimension-bounded tables (lazy-checkpointed
-    so the unrolled plan stays leaf-rooted). At 100 TB the fact scan is
-    the cost; the graph math is constant-size."""
+    the centrality sum run on dimension-bounded tables. At 100 TB the
+    fact scan is the cost; the graph math is constant-size."""
     load_tables(spark, sf_dir, ("orders", "customer", "lineitem", "supplier"))
     edges = spark.sql(
         """
@@ -1928,7 +1930,7 @@ def harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         WHERE c.c_nationkey <> s.s_nationkey
         """
-    ).localCheckpoint(eager=False)
+    )
     p = edges
     layers = [p.select("src", "dst", F.lit(1).alias("d"))]
     for k in range(2, _HARMONIC_HOPS + 1):

@@ -119,7 +119,8 @@ def const_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
-#: (path, size, mtime_ns, nanosAsLong) -> the schema Spark inferred for it
+#: (path, size, mtime_ns) -> the schema Spark inferred for it, always under
+#: ``nanosAsLong=true`` (``table`` sets it before every read)
 _SCHEMAS: dict[tuple, T.StructType] = {}
 
 
@@ -133,12 +134,7 @@ def _read_pinned(spark: SparkSession, path: str) -> DataFrame:
     if not os.path.isfile(path):
         return spark.read.parquet(path)
     st = os.stat(path)
-    key = (
-        path,
-        st.st_size,
-        st.st_mtime_ns,
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
-    )
+    key = (path, st.st_size, st.st_mtime_ns)
     schema = _SCHEMAS.get(key)
     if schema is None:
         df = spark.read.parquet(path)
@@ -155,11 +151,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Spark's vectorized reader rejects; read it as long nanos
     (``spark.sql.legacy.parquet.nanosAsLong``) and convert to a microsecond
     TimestampType (lossless here — fixture values are µs-granular, matching
-    what the DuckDB oracle sees).
+    what the DuckDB oracle sees). The setting is made on every read, not
+    only for ``events``, so a table's pinned schema never depends on
+    whether ``events`` was read before it.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read_pinned(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -1,6 +1,7 @@
 import os
 import sys
 import uuid
+from itertools import takewhile
 from typing import NamedTuple
 
 import pytest
@@ -37,15 +38,39 @@ def jobs_fired(spark, build) -> tuple[int, object]:
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
+def actions_fired(spark, build) -> tuple[tuple[str, ...], object]:
+    """(descriptions of the construction actions ``build()`` ran, its
+    result). A construction action is a SQL execution the build started
+    that ran at least one job: a ``cut()`` (described ``cut:<label>``) or a
+    driver action (described by its call site). AQE submits a varying
+    number of stage jobs per execution, so actions, unlike jobs, count the
+    same on every build. Schema inference runs a job outside any SQL
+    execution and is not an action (``jobs_fired`` sees it)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = store.executionsList()  # oldest first
+    last = before.last().executionId() if before.nonEmpty() else -1
+    out = build()
+    bus.waitUntilEmpty()
+    after = store.executionsList()
+    newest_first = (after.apply(i) for i in reversed(range(after.size())))
+    new = list(takewhile(lambda e: e.executionId() > last, newest_first))
+    return tuple(e.description() for e in reversed(new) if not e.jobs().isEmpty()), out
+
+
 class BuiltQuery(NamedTuple):
     """What building one registered query left behind: its executed-plan
-    text and output schema, or the build error, and the Spark jobs the
-    build (the query call, not the plan string) ran."""
+    text and output schema, or the build error; the construction actions
+    the build (the query call, not the plan string) ran; and the pre-cut
+    plan of every ``cut()`` it made, which the returned plan shows only as
+    a ``Scan ExistingRDD``."""
 
     plan: str | None
     schema: StructType | None
     error: str | None
-    jobs: int
+    actions: tuple[str, ...]
+    cut_plans: tuple[str, ...]
 
 
 @pytest.fixture(scope="session")
@@ -53,13 +78,13 @@ def built_registry(spark, sf_dir):
     """Every registered query built once at ``sf_dir``, name -> BuiltQuery.
 
     Only strings and schemas are kept, never the DataFrames, so nothing a
-    query checkpointed while building stays pinned for the session. Tests
-    that need the whole registry's plans or schemas read them from here
-    instead of building the registry again.
+    query cut while building stays pinned for the session. Tests that need
+    the whole registry's plans or schemas read them from here instead of
+    building the registry again.
 
-    Every fixture table is read once first, so each query's job count
-    leaves out the one-time schema inference of the tables it reads and
-    does not depend on build order."""
+    Every fixture table is read once first, so no build pays a table's
+    one-time schema inference."""
+    from ab_inbev_big_data_case_spark.operators.lineage import recording
     from ab_inbev_big_data_case_spark.registry import QUERIES, load_all
     from ab_inbev_big_data_case_spark.sources.readers import table
 
@@ -69,12 +94,13 @@ def built_registry(spark, sf_dir):
             table(spark, sf_dir, f.removesuffix(".parquet"))
     built = {}
     for name, fn in QUERIES.items():
-        jobs = 0
+        actions, cut_plans = (), []
         try:
-            jobs, df = jobs_fired(spark, lambda: fn(spark, sf_dir))
+            with recording(lambda _label, plan: cut_plans.append(plan)):
+                actions, df = actions_fired(spark, lambda: fn(spark, sf_dir))
             plan = df._jdf.queryExecution().executedPlan().toString()
-            built[name] = BuiltQuery(plan, df.schema, None, jobs)
+            built[name] = BuiltQuery(plan, df.schema, None, actions, tuple(cut_plans))
         except Exception as ex:
             err = f"{type(ex).__name__}: {ex}"[:500]
-            built[name] = BuiltQuery(None, None, err, jobs)
+            built[name] = BuiltQuery(None, None, err, actions, tuple(cut_plans))
     return built

@@ -1,15 +1,19 @@
-"""Building a query must not run Spark jobs.
+"""Building a query should not run Spark jobs.
 
 Construction (the Python call that returns the DataFrame) is planning
-only; jobs belong to the action. Two things used to fire jobs at build
-time: lineage cuts (``localCheckpoint`` runs its upstream shuffle stages
-as soon as it is called under AQE) and Parquet schema inference on every
-``readers.table`` read. Each test counts the jobs in its own job group
-through ``statusTracker()``. Queries that still cut lineage while building
-are held at or below their ceilings in ``CONSTRUCTION_JOBS_ALLOWED``.
+only; jobs belong to the action. Two things still run work at build time:
+lineage cuts (``operators.lineage.cut`` runs its upstream shuffle stages as
+soon as it is planned under AQE) and driver-side probes such as
+``.first()``. Each is one construction action, a SQL execution that runs
+jobs (``conftest.actions_fired``); the number of stage jobs AQE submits for
+one action varies between builds, the number of actions does not.
+``CONSTRUCTION_ACTIONS`` pins every query's count exactly. Parquet schema
+inference is a job outside any SQL execution; its tests count jobs.
 """
 
 from __future__ import annotations
+
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -17,89 +21,82 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from ab_inbev_big_data_case_spark.registry import QUERIES, load_all
+from ab_inbev_big_data_case_spark.sources import readers
 from ab_inbev_big_data_case_spark.sources.readers import table
 from conftest import jobs_fired
 
 load_all()
 
-#: name -> most construction jobs its build may fire at sf0.001, after every
+#: name -> construction actions its build runs at sf0.001, after every
 #: fixture table has been read once (``built_registry``); an unlisted query
-#: must fire none. Ceilings are the largest count over three full registry
-#: builds at local[4] (counts that vary between builds are noted); the CC
-#: queries carry the counts of ``operators/graph.connected_components``.
-CONSTRUCTION_JOBS_ALLOWED = {
-    "abtest_srm_check": 2,
-    "adamic_adar_links": 2,
+#: runs none. Exact, and the same over fresh-JVM builds: a pin moves only
+#: with the code, and both a new action and a removed one fail the gate.
+CONSTRUCTION_ACTIONS = {
+    "abtest_srm_check": 1,
+    "adamic_adar_links": 1,
     "ann_hubness_audit": 1,
     "ann_recall_eval": 1,
     "backoff_lm_score": 1,
-    "betweenness_centrality": 15,  # 14/15/14
-    "binary_segmentation_changepoints": 4,
-    "bloom_filter_probe": 2,
-    "bradley_terry_strengths": 5,
-    "burrows_delta_stylometry": 1,
-    "cluster_purity_eval": 3,
-    "community_modularity": 10,
+    "betweenness_centrality": 4,
+    "bloom_filter_probe": 1,
+    "bradley_terry_strengths": 2,
+    "cluster_purity_eval": 2,
+    "community_modularity": 2,
     "contrastive_negative_sampling": 1,
     "cosine_topk": 1,
     "curation_pipeline_e2e": 2,
-    "dbscan_grid_clusters": 76,  # connected_components
-    "dedup_canonical_keep_list": 18,  # 17/18/17; connected_components
-    "dedup_paths_agreement": 2,
-    "deltalite_change_data_feed": 12,
-    "deltalite_merge_time_travel": 6,
-    "deltalite_optimize_compaction": 4,
-    "dup_clusters_cc": 17,  # connected_components
-    "dup_span_coverage": 1,
-    "duplicate_cluster_components": 18,  # 17/17/18; connected_components
-    "embedding_similarity_histogram": 1,
+    "dbscan_grid_clusters": 12,
+    "dedup_canonical_keep_list": 3,
+    "dedup_paths_agreement": 1,
+    "deltalite_change_data_feed": 7,
+    "deltalite_merge_time_travel": 3,
+    "deltalite_optimize_compaction": 2,
+    "dup_clusters_cc": 3,
+    "duplicate_cluster_components": 3,
     "err_at_k_eval": 1,
     "gapfill_linear_interp": 1,
-    "harmonic_centrality": 4,
-    "hilbert_layout_extents": 5,
-    "hilbert_pruning_audit": 5,
-    "hits_hub_authority": 5,
-    "hll_distinct": 2,
+    "hilbert_layout_extents": 1,
+    "hilbert_pruning_audit": 1,
+    "hits_hub_authority": 2,
+    "hll_distinct": 1,
     "hll_rolling_distinct": 1,
-    "hurst_rs_lite": 4,
+    "hurst_rs_lite": 3,
     "intrinsic_dimension_twonn": 1,
-    "ivf_balance_report": 6,
-    "ivf_cells": 3,
-    "ivf_nprobe_sweep": 6,
-    "ivf_recall_eval": 4,
-    "ivf_search": 3,
-    "ivf_search_capped": 4,
-    "jaccard_neighbor_links": 5,
-    "kcore_peeling": 15,
+    "ivf_balance_report": 4,
+    "ivf_cells": 2,
+    "ivf_nprobe_sweep": 5,
+    "ivf_recall_eval": 3,
+    "ivf_search": 2,
+    "ivf_search_capped": 3,
+    "jaccard_neighbor_links": 2,
+    "kcore_peeling": 4,
     "knn_label_accuracy": 1,
-    "ktruss_edges": 48,
-    "label_propagation_communities": 4,
+    "ktruss_edges": 19,
+    "label_propagation_communities": 1,
     "map_at_k_eval": 1,
-    "matrix_profile_daily": 3,
+    "matrix_profile_daily": 2,
     "matryoshka_truncation_eval": 2,
-    "mcnemar_dedup_paths": 2,
+    "mcnemar_dedup_paths": 1,
     "mmr_rerank": 1,
     "mrr_eval": 1,
     "mutual_nearest_neighbors": 1,
     "ndcg_eval": 1,
-    "neyman_allocation": 1,
     "ngram_novelty_score": 1,
-    "power_iteration_top_eigen": 7,
-    "quality_bucket_mix": 5,
-    "resource_allocation_links": 2,
-    "rrf_fusion_eval": 4,
-    "rrf_hybrid_search": 3,
-    "sample_entropy_daily": 4,
-    "semdedup_corpus": 3,
+    "power_iteration_top_eigen": 2,
+    "quality_bucket_mix": 1,
+    "resource_allocation_links": 1,
+    "rrf_fusion_eval": 3,
+    "rrf_hybrid_search": 2,
+    "semdedup_corpus": 2,
     "sign_hamming_ann": 1,
-    "simhash_hamming_pairs": 2,
-    "sparse_cosine_topk": 3,
-    "sssp_bounded_hops": 19,
-    "theil_sen_trend": 7,
+    "simhash_hamming_pairs": 1,
+    "sparse_cosine_topk": 1,
+    "sssp_bounded_hops": 5,
+    "theil_sen_trend": 2,
     "time_bucket_gapfill": 1,
-    "triangle_count_copurchase": 8,
-    "zorder_layout_extents": 5,
-    "zorder_pruning_audit": 5,
+    "triangle_count_copurchase": 4,
+    "zorder_layout_extents": 1,
+    "zorder_pruning_audit": 1,
 }
 
 
@@ -130,12 +127,31 @@ def test_table_schema_inferred_once_and_again_after_rewrite(spark, tmp_path):
         df.select("a")
 
 
-def test_construction_jobs_within_ceilings(built_registry):
-    """No query fires more construction jobs than its ceiling: a new lineage
-    cut, an eager checkpoint or a driver-side probe in a build shows here."""
-    over = {
-        n: f"{b.jobs} jobs (allowed {CONSTRUCTION_JOBS_ALLOWED.get(n, 0)})"
-        for n, b in built_registry.items()
-        if b.jobs > CONSTRUCTION_JOBS_ALLOWED.get(n, 0)
+def test_fixture_table_schemas_pinned_regardless_of_read_order(spark, sf_dir):
+    """Once every fixture table has been read, in sorted order from an
+    empty memo, reading any of them again infers nothing: the pinned
+    schema does not depend on whether ``events`` (which needs
+    ``nanosAsLong``) was read before it."""
+    readers._SCHEMAS.clear()
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    names = sorted(
+        f.removesuffix(".parquet") for f in os.listdir(sf_dir) if f.endswith(".parquet")
+    )
+    for name in names:
+        table(spark, sf_dir, name)
+    again = {name: jobs_fired(spark, lambda: table(spark, sf_dir, name))[0] for name in names}
+    assert again == dict.fromkeys(names, 0)
+
+
+def test_construction_actions_match_pins(built_registry):
+    """Every query runs exactly its pinned number of construction actions:
+    a new cut or driver-side probe in a build shows here, and so does a
+    removed one (lower its pin). The message lists each action's
+    description (``cut:<label>`` or the probe's call site)."""
+    off = {
+        n: f"{len(built_registry[n].actions)} actions (pinned "
+        f"{CONSTRUCTION_ACTIONS.get(n, 0)}): {list(built_registry[n].actions)}"
+        for n in built_registry
+        if len(built_registry[n].actions) != CONSTRUCTION_ACTIONS.get(n, 0)
     }
-    assert not over, over
+    assert not off, off

@@ -1,9 +1,12 @@
-"""Operator-level tests: as-of join, range join, writers' small-file
-hygiene, sort/set-op properties."""
+"""Operator-level tests: as-of join, range join, lineage cuts, writers'
+small-file hygiene, sort/set-op properties."""
+
+import uuid
 
 from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.operators.joins import asof_join, range_join
+from ab_inbev_big_data_case_spark.operators.lineage import cut, recording
 
 
 def test_asof_join_exact_semantics(spark):
@@ -49,6 +52,51 @@ def test_range_join_buckets(spark):
     out = range_join(fact, ranges, "v", "lo", "hi")
     got = {r["id"]: r["label"] for r in out.collect()}
     assert got == {1: "lo", 2: "hi", 3: "hi"}
+
+
+def test_cut_labels_its_jobs_and_restores_the_callers_properties(spark):
+    """The stage jobs a lazy cut runs under AQE carry ``cut:<label>``; the
+    caller's job group and description are back in place afterwards."""
+    sc = spark.sparkContext
+    group = f"caller:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "caller description")
+    try:
+        agg = spark.range(200).groupBy((F.col("id") % 7).alias("k")).count()
+        out = cut(agg, "unit")
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        cut_jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert out.count() == 7
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descs = {store.job(j).description().get() for j in cut_jobs}
+    assert len(cut_jobs) >= 1 and descs == {"cut:unit"}
+
+
+def test_cut_hands_the_pre_cut_plan_to_the_recorder(spark):
+    """Under ``recording`` a cut reports its label and the plan it hides:
+    a CartesianProduct upstream of the cut is in the recorded plan and not
+    in the returned DataFrame's plan, which only scans the cut RDD."""
+    a = spark.range(3).withColumnRenamed("id", "a")
+    b = spark.range(4).withColumnRenamed("id", "b")
+    seen = []
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        with recording(lambda label, plan: seen.append((label, plan))):
+            out = cut(a.crossJoin(b), "planted")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    [(label, plan)] = seen
+    assert label == "planted" and "CartesianProduct" in plan
+    returned = out._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in returned and "ExistingRDD" in returned
+    assert out.count() == 12
+    cut(a, "unrecorded")  # outside the block nothing is handed over
+    assert len(seen) == 1
 
 
 def test_partitioned_writer_single_file_per_partition(spark, tmp_path):

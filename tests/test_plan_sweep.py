@@ -14,15 +14,11 @@ bins, decile/replicate grids, pruned local survivors — see SCALE.md and the
 queries' own docstrings), so its row count is independent of fact-table
 scale. The plans come from the session's one registry build
 (``built_registry`` in conftest.py), which the decimal-output lint in
-tests/test_round14_ops.py reads too.
-
-KNOWN BLIND SPOT (ADVICE r14): the sweep reads the plan of the RETURNED
-DataFrame, so stages executed behind an EAGER ``localCheckpoint`` (e.g.
-``power_iteration_top_eigen``'s 64-row max-abs normalize windows,
-queries/llm.py) are invisible to it — their plans ran before the sweep
-looks. Today's only such site is bounded at 64 rows; any future eager
-checkpoint that hides an unbounded window must add its own plan pin here
-or in tests/test_plans.py at introduction time.
+tests/test_round14_ops.py reads too. The two registry-wide sweeps read the
+returned plan AND the pre-cut plan of every ``cut()`` the build made, so a
+shape hidden behind a lineage cut (where the returned plan shows only
+``Scan ExistingRDD``) is swept like any other; a window inside a cut loop
+counts once per round.
 """
 
 from __future__ import annotations
@@ -108,12 +104,24 @@ PARTITIONLESS_ALLOWED = {
     "window_ntile": 1,              # global ntile is the operator semantic
     "woe_iv_binning": 1,            # cent-value spine cumsum
     "zipf_fit": 1,                  # capped vocab rank spine
+    "binary_segmentation_changepoints": 3,  # day-spine CUSUM, re-listed per consumer of the split day
+    "hurst_rs_lite": 1,             # daily-spine row index, behind its cut
+    "power_iteration_top_eigen": 12,  # sup-norm over the 64-row iterate, one per round (12 rounds)
+    "sample_entropy_daily": 4,      # day-spine row index + next-day lead, re-listed per bucket-join side
 }
 
 
 @pytest.fixture(scope="module")
 def all_plans(built_registry):
     return {n: b.plan for n, b in built_registry.items() if b.error is None}
+
+
+@pytest.fixture(scope="module")
+def swept_plans(built_registry):
+    """name -> the returned plan followed by every pre-cut plan."""
+    return {
+        n: [b.plan, *b.cut_plans] for n, b in built_registry.items() if b.error is None
+    }
 
 
 def test_every_query_builds(built_registry):
@@ -123,21 +131,24 @@ def test_every_query_builds(built_registry):
     assert failed == {}
 
 
-def test_no_cartesian_product_anywhere(all_plans):
-    """Zero CartesianProduct nodes across the whole registry: every join in
-    every query has equi-keys or a bounded broadcast side."""
-    offenders = [n for n, p in all_plans.items() if "CartesianProduct" in p]
+def test_no_cartesian_product_anywhere(swept_plans):
+    """Zero CartesianProduct nodes across the whole registry, behind cuts
+    too: every join in every query has equi-keys or a bounded broadcast
+    side."""
+    offenders = [
+        n for n, plans in swept_plans.items() if any("CartesianProduct" in p for p in plans)
+    ]
     assert offenders == []
 
 
-def test_partitionless_windows_all_pinned(all_plans):
-    """Every partitionless window spec in the registry is on the audited
-    bounded-spine allowlist; any query exceeding its pin (or a new query
-    introducing one) fails by name."""
+def test_partitionless_windows_all_pinned(swept_plans):
+    """Every partitionless window spec in the registry, behind cuts too, is
+    on the audited bounded-spine allowlist; any query exceeding its pin (or
+    a new query introducing one) fails by name."""
     offenders = {
         n: f"{got} partitionless specs (pinned {PARTITIONLESS_ALLOWED.get(n, 0)})"
-        for n, p in all_plans.items()
-        if (got := n_partitionless(p)) > PARTITIONLESS_ALLOWED.get(n, 0)
+        for n, plans in swept_plans.items()
+        if (got := sum(map(n_partitionless, plans))) > PARTITIONLESS_ALLOWED.get(n, 0)
     }
     assert offenders == {}
 

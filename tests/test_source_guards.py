@@ -10,10 +10,13 @@ fails in CI, not in review):
    applyInPandas).
 3. No ``.toPandas()`` anywhere in the package (driver materialization).
 4. RDD access only at the audited partition-count probe.
+5. Every lineage cut goes through ``operators.lineage.cut``: no
+   ``localCheckpoint`` call anywhere else.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -98,3 +101,19 @@ def test_rdd_access_only_at_audited_probe():
         if n > allowed:
             offenders[_rel(path)] = f"{n} .rdd sites (allowed {allowed})"
     assert offenders == {}, offenders
+
+
+def test_no_local_checkpoint_outside_lineage():
+    """``cut()`` is the one lazy-cut policy; a hand-written
+    ``localCheckpoint`` call (eager or lazy) anywhere else bypasses its
+    job labelling and the plan sweep's view behind the cut."""
+    offenders = [
+        f"{_rel(path)}:{node.lineno}"
+        for path in _py_files()
+        if _rel(path) != "operators/lineage.py"
+        for node in ast.walk(ast.parse(open(path, encoding="utf-8").read()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
+    assert offenders == []
