@@ -14,6 +14,8 @@ No custom execution layer: every operator declares a logical plan via the
 DataFrame/SQL API and lets Catalyst + Tungsten pick the physical strategy.
 """
 
+# applies the Python-worker patch in any process that loads engine code
+import ab_inbev_big_data_case_spark.operators.pyworker  # noqa: F401
 from ab_inbev_big_data_case_spark.session import get_spark
 
 __all__ = ["get_spark"]

@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.operators.partitioning import spread
-from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
 
 
 def attach_binary_payload(
@@ -91,7 +90,6 @@ def decode_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         import io
 
         from PIL import Image
@@ -128,7 +126,6 @@ def decode_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 def _fake_decode_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Deterministic byte-level 'decode': stands in for a real decoder while
     exercising the Arrow batch path end-to-end."""
-    tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
     for pdf in batches:
         payloads = pdf["payload"]
         yield pd.DataFrame(
@@ -303,7 +300,6 @@ def extract_media_metadata(
     blob, output (id, fmt, width, height)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         for pdf in batches:
             metas = [sniff_media(p) for p in pdf[payload_col]]
             yield pd.DataFrame(
@@ -428,7 +424,6 @@ def decode_pixel_features(
     ``binaryFile`` splits."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         for pdf in batches:
             out = {
                 id_col: [], "fmt": [], "width": [], "height": [],

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.operators.partitioning import spread
-from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 
@@ -143,7 +142,6 @@ def cosine_pairs(
     bc = queries.sparkSession.sparkContext.broadcast((qids, qm, qn))
 
     def score(batches):
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         b_qids, b_qm, b_qn = bc.value
         kk, d = b_qm.shape
         for pdf in batches:
@@ -527,7 +525,6 @@ def ivf_assign(
     bc = sc.broadcast((ids, cmat, cn))
 
     def score(batches):
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
         b_ids, b_c, b_cn = bc.value
@@ -853,7 +850,6 @@ def semdedup_cells(
     thr = float(threshold)
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         n = len(pdf)
         empty = pd.DataFrame({"vec_id": pdf["vec_id"].iloc[:0]})
         if n < 2 or (cap is not None and n > cap):
@@ -905,7 +901,6 @@ def gram_matrix_fixed_point(
     import pandas as pd  # noqa: PLC0415 — worker-side import
 
     def partials(batches):
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         import numpy as np
 
         acc = np.zeros((dim, dim), dtype=np.int64)

@@ -12,46 +12,42 @@ zip central directory on every call, and the worker's
 so the re-read is pure waste; per-finder timing confirmed the total
 (113.7 ms) is fully accounted for by the zip finders.
 
-:func:`tame_zipimport_caches` replaces ``invalidate_caches`` on each
-*zipimporter instance* of a Spark-runtime archive (``pyspark.zip``,
-``py4j-*.zip`` and the jars under a ``jars/`` directory) with a no-op.
-Directory (``FileFinder``) entries and every other archive are untouched,
-so files and zips shipped with ``addPyFile`` (replaced in place or not)
-stay visible to reused workers. Worker processes are reused across tasks
-(``spark.python.worker.reuse`` default), so one call from any task patches
-that worker for the rest of the application: the measured per-task cost
-drops from ~180 ms to ~65 ms for a trivial 1-task mapInPandas round trip.
+Importing this module replaces the class method
+``zipimport.zipimporter.invalidate_caches`` with one that skips the re-read
+for Spark-runtime archives (``pyspark.zip``, ``py4j-*.zip`` and the jars
+under a ``jars/`` directory). Directory (``FileFinder``) entries and every
+other archive still invalidate, so files and zips shipped with
+``addPyFile`` (replaced in place or not) stay visible to reused workers.
+A class patch also covers zipimporters created after the import. The
+measured per-task cost drops from ~180 ms to ~65 ms for a trivial 1-task
+mapInPandas round trip.
 
-Call it at the top of every worker-side function (mapInPandas /
-mapInArrow / applyInPandas bodies). It is idempotent and costs
-microseconds once patched. On the driver it is a harmless no-op-ish patch
-of the same kind (the driver never runs ``setup_spark_files``).
+Worker functions carry no setup code: the package ``__init__`` imports
+this module, and ``session.get_spark`` sets ``spark.python.daemon.module``
+to the package, whose ``__main__`` runs PySpark's daemon. Every Python
+worker of such a session forks from an already patched daemon. Importing
+the module again (or reloading it) wraps the method once.
 """
 
 from __future__ import annotations
 
 import re
-import sys
 import zipimport
 
 #: archives Spark itself puts on the worker path; immutable while it runs
 _SPARK_ARCHIVE = re.compile(r"(^|/)(pyspark\.zip|py4j-[^/]*\.zip|jars/[^/]*\.jar)$")
 
 
-def _noop_invalidate() -> None:
-    return None
+def _skip_spark_archives() -> None:
+    invalidate = zipimport.zipimporter.invalidate_caches
+    if invalidate.__module__ == __name__:  # already wrapped
+        return
+
+    def invalidate_caches(self):
+        if not _SPARK_ARCHIVE.search(self.archive):
+            invalidate(self)
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-def tame_zipimport_caches() -> None:
-    """Once per process: make Spark-runtime archive finders' cache
-    invalidation a no-op (those archives never change mid-application; the
-    per-task re-read of their central directories is the dominant fixed
-    cost of every Python stage — see module docstring)."""
-    for finder in list(sys.path_importer_cache.values()):
-        if isinstance(finder, zipimport.zipimporter) and _SPARK_ARCHIVE.search(
-            finder.archive
-        ):
-            try:
-                finder.invalidate_caches = _noop_invalidate
-            except Exception:  # noqa: BLE001 — frozen/C variants: skip
-                pass
+_skip_spark_archives()

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, load_tables
-from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 
@@ -2404,7 +2403,6 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     def _absorb(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         rows = sorted(
             zip(pdf["src"], pdf["dst"], pdf["q"]), key=lambda r: (r[0], r[1])
         )

@@ -59,7 +59,6 @@ from ab_inbev_big_data_case_spark.operators.graph import (
     connected_components,
     connected_components_sql,
 )
-from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 # ---------------------------------------------------------------- SQL bits
@@ -714,7 +713,6 @@ def media_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def synthesize(batches):
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         for pdf in batches:
             payloads = []
             for did in pdf["doc_id"]:
@@ -815,7 +813,6 @@ def multimodal_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def synthesize(batches):
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         for pdf in batches:
             payloads = []
             for did in pdf["doc_id"]:
@@ -6208,7 +6205,6 @@ def ahash_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def synth_hash(batches):
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         for pdf in batches:
             out = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
             for did in pdf["doc_id"]:
@@ -6501,7 +6497,6 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def synth_and_extract(batches):
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         for pdf in batches:
             out = []
             for did in pdf["doc_id"]:

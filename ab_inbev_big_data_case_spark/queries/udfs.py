@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
-from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
 
 
 @register(
@@ -104,7 +103,6 @@ def grouped_map_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     halfway points often."""
 
     def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         total = pdf["l_quantity"].sum()
         return pd.DataFrame(
             {

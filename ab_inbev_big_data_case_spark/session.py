@@ -12,6 +12,11 @@ The reference creates its session through the AWS Glue runtime
 - **shuffle.partitions sized to the local machine** for tests; a real
   cluster deployment overrides this (AQE coalescing makes the initial
   number much less critical).
+- **Python workers fork from the engine's daemon**
+  (``spark.python.daemon.module``): the package ``__main__`` runs PySpark's
+  daemon after the package import has applied the worker patch
+  (``operators/pyworker.py``), so every worker is patched before its first
+  task. The package must be importable from the JVM's cwd or PYTHONPATH.
 """
 
 from __future__ import annotations
@@ -44,6 +49,7 @@ _DEFAULTS = {
     # so bypass NEVER fires there — this also makes the local bench
     # exercise the same writer production runs.
     "spark.shuffle.sort.bypassMergeThreshold": "1",
+    "spark.python.daemon.module": "ab_inbev_big_data_case_spark",
 }
 
 

@@ -28,7 +28,6 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
 
 FetchPage = Callable[[int], list[dict]]
 
@@ -72,21 +71,21 @@ def ingest_pages_distributed(
     fetch_page: FetchPage,
     schema: T.StructType,
     n_pages: int,
-    parallelism: int = 32,
 ) -> DataFrame:
     """Distributed pagination: each executor partition fetches a span of
-    pages. The fetcher is shipped via closure serialization; one Arrow batch
-    per page keeps memory bounded regardless of total volume."""
+    pages, one partition per task slot (never more than pages). The fetcher
+    is shipped via closure serialization; one Arrow batch per page keeps
+    memory bounded regardless of total volume."""
     field_names = [f.name for f in schema.fields]
 
     def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         for pdf in batches:
             for page in pdf["page"].tolist():
                 recs = fetch_page(int(page))
                 if recs:
                     yield pd.DataFrame.from_records(recs, columns=field_names)
 
+    parallelism = min(n_pages, spark.sparkContext.defaultParallelism)
     pages = spark.range(1, n_pages + 1, numPartitions=parallelism).withColumnRenamed(
         "id", "page"
     )

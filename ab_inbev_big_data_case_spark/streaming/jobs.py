@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from ab_inbev_big_data_case_spark.operators.pyworker import tame_zipimport_caches
 
 
 def _event_time_legal(dt: T.DataType) -> T.DataType:
@@ -102,7 +101,6 @@ def running_count_per_key(
     state_schema = T.StructType([T.StructField("count", T.LongType())])
 
     def update(key, pdf_iter, state: GroupState):
-        tame_zipimport_caches()  # §4 per-task fixed cost: operators/pyworker.py
         n = sum(len(pdf) for pdf in pdf_iter)
         total = (state.get[0] if state.exists else 0) + n
         state.update((total,))

@@ -119,7 +119,7 @@ def test_rest_ingest_distributed(spark):
 
     fetch = _make_fake_fetcher()
     schema = T.StructType.fromDDL(BREWERY_SCHEMA)
-    df = ingest_pages_distributed(spark, fetch, schema, n_pages=5, parallelism=4)
+    df = ingest_pages_distributed(spark, fetch, schema, n_pages=5)
     assert df.count() == 6  # pages 4-5 empty
     # same content as the driver-side path
     a = sorted(r["id"] for r in df.collect())

@@ -1,104 +1,117 @@
-"""tame_zipimport_caches: the per-task zipimport invalidation no-op (r16).
+"""The import-time zipimport patch (operators/pyworker.py).
 
-The optimization patches live zipimporter INSTANCES in
-sys.path_importer_cache so pyspark.worker's per-task
-``importlib.invalidate_caches()`` stops re-reading immutable archive
-directories (measured 112-159 ms per Python task — see
-operators/pyworker.py). These tests pin the mechanism without a Spark
-session: instance-level patch, idempotence, directory finders and
-user-shipped zips untouched, and imports from a patched archive still
-working. Archives are named like the Spark-runtime ones (``pyspark.zip``,
-``py4j-*.zip``, ``jars/*.jar``), the only ones the patch touches.
+Importing the engine replaces ``zipimport.zipimporter.invalidate_caches``
+so pyspark.worker's per-task ``importlib.invalidate_caches()`` stops
+re-reading immutable Spark-runtime archives (measured 112-159 ms per
+Python task). These tests pin what the patch does to imports: a module
+added to a runtime archive after its first read stays invisible, while
+user archives and directories still pick new files up. The Spark case
+pins that every Python worker of a ``get_spark`` session runs patched,
+even one whose function references no engine code.
 """
 
 from __future__ import annotations
 
 import importlib
-import os
 import sys
+import uuid
 import zipfile
 import zipimport
 
-from ab_inbev_big_data_case_spark.operators.pyworker import (
-    _noop_invalidate,
-    tame_zipimport_caches,
+import pandas as pd
+import pytest
+
+from ab_inbev_big_data_case_spark.operators import pyworker
+
+
+def _module_names():
+    tag = uuid.uuid4().hex
+    return f"pw_first_{tag}", f"pw_second_{tag}"
+
+
+@pytest.mark.parametrize(
+    "archive_name, sees_new_module",
+    [
+        ("pyspark.zip", False),
+        ("py4j-0.10.9.9-src.zip", False),
+        ("jars/spark-core_2.13-4.1.2.jar", False),
+        ("deps.zip", True),
+        ("userjars/tools.jar", True),
+    ],
 )
-
-
-def _make_zip(tmp_path, name="pyspark.zip"):
-    zpath = os.path.join(str(tmp_path), name)
-    os.makedirs(os.path.dirname(zpath), exist_ok=True)
-    with zipfile.ZipFile(zpath, "w") as z:
-        z.writestr("tz_probe_mod.py", "VALUE = 41\n")
-    return zpath
-
-
-def test_patches_zipimporter_instances(tmp_path):
-    zpath = _make_zip(tmp_path)
-    finder = zipimport.zipimporter(zpath)
-    sys.path_importer_cache[zpath] = finder
+def test_archive_invalidation(tmp_path, archive_name, sees_new_module):
+    """Spark-runtime archives keep their directory across invalidation; an
+    archive shipped with ``addPyFile`` may be replaced in place, so it is
+    re-read like any other."""
+    archive = tmp_path / archive_name
+    archive.parent.mkdir(parents=True, exist_ok=True)
+    first, second = _module_names()
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{first}.py", "VALUE = 1\n")
+    sys.path.insert(0, str(archive))
     try:
-        assert finder.invalidate_caches is not _noop_invalidate
-        tame_zipimport_caches()
-        assert finder.invalidate_caches is _noop_invalidate
-        # importlib.invalidate_caches() now skips the archive re-read and
-        # must not raise
+        assert importlib.import_module(first).VALUE == 1
+        with zipfile.ZipFile(archive, "a") as z:
+            z.writestr(f"{second}.py", "VALUE = 2\n")
         importlib.invalidate_caches()
+        if sees_new_module:
+            assert importlib.import_module(second).VALUE == 2
+        else:
+            with pytest.raises(ModuleNotFoundError):
+                importlib.import_module(second)
     finally:
-        del sys.path_importer_cache[zpath]
+        sys.path.remove(str(archive))
+        sys.path_importer_cache.pop(str(archive), None)
+        for name in (first, second):
+            sys.modules.pop(name, None)
 
 
-def test_idempotent_and_import_still_works(tmp_path):
-    zpath = _make_zip(tmp_path, "py4j-0.10.9.9-src.zip")
-    sys.path.insert(0, zpath)
+def test_directory_finder_sees_new_file(tmp_path):
+    """``addPyFile`` lands files in the Spark files directory; reused
+    workers must keep seeing new ones."""
+    first, second = _module_names()
+    (tmp_path / f"{first}.py").write_text("VALUE = 1\n")
+    sys.path.insert(0, str(tmp_path))
     try:
-        import tz_probe_mod  # noqa: F401 — resolves via the zip finder
-
-        assert tz_probe_mod.VALUE == 41
-        tame_zipimport_caches()
-        tame_zipimport_caches()  # second call is a cheap no-op walk
-        finder = sys.path_importer_cache.get(zpath)
-        assert finder is not None
-        assert finder.invalidate_caches is _noop_invalidate
-        # the patched finder still serves imports
-        importlib.reload(tz_probe_mod)
-        assert tz_probe_mod.VALUE == 41
+        assert importlib.import_module(first).VALUE == 1
+        (tmp_path / f"{second}.py").write_text("VALUE = 2\n")
+        importlib.invalidate_caches()
+        assert importlib.import_module(second).VALUE == 2
     finally:
-        sys.path.remove(zpath)
-        sys.modules.pop("tz_probe_mod", None)
-        sys.path_importer_cache.pop(zpath, None)
+        sys.path.remove(str(tmp_path))
+        sys.path_importer_cache.pop(str(tmp_path), None)
+        for name in (first, second):
+            sys.modules.pop(name, None)
 
 
-def test_directory_finders_untouched(tmp_path):
-    d = str(tmp_path)
-    importlib.invalidate_caches()
-    finder = importlib.machinery.FileFinder(d)
-    sys.path_importer_cache[d] = finder
-    try:
-        before = finder.invalidate_caches
-        tame_zipimport_caches()
-        # FileFinder (directory) invalidation must stay intact: addPyFile
-        # lands new files in the Spark files DIRECTORY, which must remain
-        # visible to reused workers
-        assert sys.path_importer_cache[d].invalidate_caches == before
-    finally:
-        del sys.path_importer_cache[d]
+def test_reimport_wraps_once():
+    patched = zipimport.zipimporter.invalidate_caches
+    assert patched.__module__ == pyworker.__name__
+    importlib.reload(pyworker)
+    assert zipimport.zipimporter.invalidate_caches is patched
 
 
-def test_user_shipped_zips_still_invalidate(tmp_path):
-    """Only Spark-runtime archives are patched. A zip shipped
-    with ``addPyFile`` may be replaced in place, so its finder keeps its
-    own invalidation; a jar under ``jars/`` is runtime and is patched."""
-    user = _make_zip(tmp_path, "deps.zip")
-    shipped_jar = _make_zip(tmp_path, "userjars/tools.jar")
-    runtime_jar = _make_zip(tmp_path, "jars/spark-core_2.13-4.1.2.jar")
-    finders = {p: zipimport.zipimporter(p) for p in (user, shipped_jar, runtime_jar)}
-    sys.path_importer_cache.update(finders)
-    try:
-        tame_zipimport_caches()
-        assert finders[user].invalidate_caches is not _noop_invalidate
-        assert finders[shipped_jar].invalidate_caches is not _noop_invalidate
-        assert finders[runtime_jar].invalidate_caches is _noop_invalidate
-    finally:
-        for p in finders:
-            del sys.path_importer_cache[p]
+def test_every_python_worker_is_patched(spark):
+    """A function pickled by value imports no engine module in the worker,
+    so only the daemon the worker forked from can have patched it."""
+
+    def report(batches):
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {
+                "invalidate_module": [zipimport.zipimporter.invalidate_caches.__module__],
+                "daemon": [sys.modules["__main__"].__spec__.name],
+            }
+        )
+
+    n = spark.sparkContext.defaultParallelism
+    rows = (
+        spark.range(0, n, numPartitions=n)
+        .mapInPandas(report, "invalidate_module string, daemon string")
+        .collect()
+    )
+    assert len(rows) == n
+    assert {tuple(r) for r in rows} == {
+        (pyworker.__name__, "ab_inbev_big_data_case_spark.__main__")
+    }
