@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.operators.graph import basket_pairs
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 from ab_inbev_big_data_case_spark.operators.partitioning import spread
 from ab_inbev_big_data_case_spark.functions.text import (
@@ -172,47 +173,26 @@ def pairs_within_groups(
 ) -> DataFrame:
     """Distinct (id1, id2) pairs (id1 < id2) co-occurring in any group.
 
-    Formulated as ONE aggregation (collect occupants per group, emit the
-    sorted-id combinations with an array lambda) rather than a group-key
-    self-join: the self-join materializes the upstream pipeline that
-    produced ``df`` TWICE (Spark can't reuse a subtree that sits under a
-    BroadcastExchange), doubling the dominant cost. Group occupancy must be
-    small (LSH buckets are, by construction); pair fan-out is occupancy²
-    either way, but here a degenerate hot group also concentrates in one
-    row — pass ``max_group_size`` to drop such groups outright (a bucket
-    with thousands of occupants carries boilerplate, not near-dup signal).
+    The groups are the baskets of ``operators.graph.basket_pairs`` (one
+    aggregation, no group-key self-join, so the upstream that produced
+    ``df`` is computed once). Group occupancy must be small (LSH buckets
+    are, by construction); pair fan-out is occupancy² and a degenerate
+    hot group concentrates in one row — pass ``max_group_size`` to drop
+    such groups outright (a bucket with thousands of occupants carries
+    boilerplate, not near-dup signal).
 
     What the cap bounds: the QUADRATIC pair fan-out — the actual OOM/runtime
     vector at 100 TB. Collection state stays LINEAR in group size (the
-    occupant list of a mega-group is buffered once before the size filter
+    occupant set of a mega-group is buffered once before the size filter
     drops it: ~8 MB per million ids — survivable where occupancy² is not).
     Callers needing bounded collection state too must pre-filter via a
     separate count aggregate, at the price of running the upstream pipeline
     twice (no subtree reuse under BroadcastExchange).
     """
-    occupants = (
-        df.groupBy(*group_cols)
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    if max_group_size is not None:
-        occupants = occupants.filter(F.size("ids") <= max_group_size)
-    n = F.size("ids")
-    combos = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, n - 1),
-                lambda j: F.struct(
-                    F.get(F.col("ids"), i).alias("id1"),
-                    F.get(F.col("ids"), j).alias("id2"),
-                ),
-            ),
-        )
-    )
+    grouped = df.withColumn("__group", F.struct(*group_cols))
     return (
-        occupants.select(F.explode(combos).alias("p"))
-        .select(F.col("p.id1").alias("id1"), F.col("p.id2").alias("id2"))
+        basket_pairs(grouped, "__group", id_col, max_group_size)
+        .select(F.col("u").alias("id1"), F.col("v").alias("id2"))
         .distinct()
     )
 

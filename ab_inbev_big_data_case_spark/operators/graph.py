@@ -7,10 +7,17 @@ aggregation — the same shape GraphX/Pregel lowers to. Rounds are FIXED
 (plan-time unrolled): no driver-side data iteration, no collect; the whole
 k-round computation is one lazy plan.
 
-``connected_components`` is the one label-propagation loop of the engine
-(every duplicate-cluster and DBSCAN query calls it), and
-``connected_components_sql`` is its DuckDB twin, so an oracle cannot drift
-from the engine.
+Three primitives own the graph idioms the queries share, and each has a
+DuckDB twin that emits WITH-clause CTEs, so an oracle cannot drift from
+the engine:
+
+- ``basket_pairs`` / ``basket_pairs_sql``: the item pairs that share a
+  basket (the co-purchase graph's edges are the pairs of at least two
+  baskets; link scores weight them per basket);
+- ``triangles`` / ``triangles_sql`` (with ``triangle_support``): every
+  triangle of an edge set, enumerated once by degree order;
+- ``connected_components`` / ``connected_components_sql``: the one
+  label-propagation loop (every duplicate-cluster and DBSCAN query).
 
 At 100 TB: pre-partition ``edges`` by ``src`` (bucketing) so the per-round
 state join reuses the exchange; for high iteration counts, cut the state's
@@ -81,6 +88,147 @@ def pagerank(
             )
         )
     return ranks
+
+
+def basket_pairs(
+    df: DataFrame, basket_col: str, item_col: str, max_basket: int | None = None
+) -> DataFrame:
+    """Item pairs that share a basket: one row ``(basket_col, u, v, n)`` per
+    basket and pair of its distinct items ``u < v``, where ``n`` is the
+    basket's number of distinct items. Rows with a null basket or item drop
+    out; a basket of more than ``max_basket`` distinct items emits nothing.
+
+    One aggregation, no self-join: each basket's items are collected once
+    and its combinations come from an array lambda, so ``df`` is shuffled
+    once and no join runs. Fan-out is n(n-1)/2 rows per basket;
+    ``max_basket`` bounds it where baskets are not small by construction.
+    The collected set is linear in the basket size, so a dropped
+    mega-basket is buffered once.
+    """
+    baskets = (
+        df.filter(F.col(basket_col).isNotNull())
+        .groupBy(basket_col)
+        .agg(F.sort_array(F.collect_set(item_col)).alias("items"))
+        .withColumn("n", F.size("items"))
+        .filter(F.col("n") >= 2)
+    )
+    if max_basket is not None:
+        baskets = baskets.filter(F.col("n") <= max_basket)
+    # each item x pairs with the items after it; the lambda variables carry
+    # the set's non-null elements, so u and v are non-nullable and Catalyst
+    # infers no IsNotNull filter above the pairs (such a filter stops at the
+    # Generate and differs per consumer, which defeats exchange reuse)
+    combos = F.flatten(
+        F.transform(
+            "items",
+            lambda x, i: F.transform(
+                F.slice("items", i + 2, F.col("n")),
+                lambda y: F.struct(x.alias("u"), y.alias("v")),
+            ),
+        )
+    )
+    return baskets.select(basket_col, F.inline(combos), "n")
+
+
+def basket_pairs_sql(max_basket: int | None = None) -> str:
+    """DuckDB twin of ``basket_pairs(lineitem, "l_orderkey", "l_partkey",
+    max_basket)``, the order baskets every co-purchase oracle pairs: a
+    WITH-clause body that defines ``basket_pairs(l_orderkey, u, v, n)``
+    (and its helper CTE ``bp_items``)."""
+    cap = "" if max_basket is None else f" AND n <= {max_basket}"
+    return f"""bp_items AS (
+        SELECT * FROM (
+            SELECT l_orderkey, l_partkey AS item,
+                   count(*) OVER (PARTITION BY l_orderkey) AS n
+            FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+                  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL)
+        ) WHERE n >= 2{cap}
+    ),
+    basket_pairs AS (
+        SELECT a.l_orderkey, a.item AS u, b.item AS v, a.n
+        FROM bp_items a
+        JOIN bp_items b ON b.l_orderkey = a.l_orderkey AND b.item > a.item
+    )"""
+
+
+def triangles(edges: DataFrame) -> DataFrame:
+    """Every triangle of ``edges`` once, as its three edges
+    ``(u1, v1, u2, v2, u3, v3)``, each edge with ``u < v``.
+
+    ``edges`` holds undirected edges ``(u, v)``, ``u < v``, each once.
+    Each edge points from its (degree, id)-smaller endpoint to the larger;
+    the order is total, so a triangle is exactly one wedge a→b→c whose
+    closing edge a→c also points forward. Out-degrees under this order are
+    O(√m) on any graph, so the wedge join is the m^1.5 enumeration
+    (Chiba–Nishizeki); under plain id order one hub's wedges grow with its
+    degree squared. Nothing is cut: a caller that reads the triangles more
+    than once cuts them."""
+    deg = (
+        edges.select(F.col("u").alias("p"))
+        .unionAll(edges.select(F.col("v").alias("p")))
+        .groupBy("p")
+        .agg(F.count("*").alias("d"))
+    )
+    j = edges.join(
+        F.broadcast(deg.select(F.col("p").alias("u"), F.col("d").alias("du"))), "u"
+    ).join(F.broadcast(deg.select(F.col("p").alias("v"), F.col("d").alias("dv"))), "v")
+    fwd = F.col("du") <= F.col("dv")  # u < v: (du, u) < (dv, v) iff du <= dv
+    ab = j.select(
+        F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
+        F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
+    )
+    bc = ab.select(F.col("a").alias("b"), F.col("b").alias("c"))
+    ac = ab.select("a", F.col("b").alias("c"))
+    tri = ab.join(bc, "b").join(ac, ["a", "c"], "left_semi")
+    return tri.select(
+        F.least("a", "b").alias("u1"), F.greatest("a", "b").alias("v1"),
+        F.least("b", "c").alias("u2"), F.greatest("b", "c").alias("v2"),
+        F.least("a", "c").alias("u3"), F.greatest("a", "c").alias("v3"),
+    )
+
+
+def triangle_support(tri: DataFrame) -> DataFrame:
+    """Per-edge triangle support ``(u, v, s)`` of a ``triangles`` table:
+    each triangle credits its three edges. An edge in no triangle has no
+    row. ``tri`` is read once."""
+    edges = F.array(
+        *(F.struct(F.col(f"u{k}").alias("u"), F.col(f"v{k}").alias("v")) for k in "123")
+    )
+    return tri.select(F.inline(edges)).groupBy("u", "v").agg(F.count("*").alias("s"))
+
+
+def triangles_sql(edges_cte: str) -> str:
+    """DuckDB twin of ``triangles`` and ``triangle_support``: a WITH-clause
+    body over the CTE ``edges_cte(u, v)`` that defines
+    ``<edges_cte>_tri(u1, v1, u2, v2, u3, v3)`` and
+    ``<edges_cte>_support(u, v, s)``, with helper CTEs ``<edges_cte>_deg``
+    and ``<edges_cte>_orient``. The names carry the edge CTE's name, so one
+    query can enumerate several edge sets."""
+    e = edges_cte
+    return f"""{e}_deg AS MATERIALIZED (
+        SELECT p, count(*) AS d FROM (SELECT u AS p FROM {e} UNION ALL SELECT v FROM {e})
+        GROUP BY 1
+    ),
+    {e}_orient AS MATERIALIZED (
+        SELECT CASE WHEN du.d <= dv.d THEN x.u ELSE x.v END AS a,
+               CASE WHEN du.d <= dv.d THEN x.v ELSE x.u END AS b
+        FROM {e} x JOIN {e}_deg du ON du.p = x.u JOIN {e}_deg dv ON dv.p = x.v
+    ),
+    {e}_tri AS (
+        SELECT least(ab.a, ab.b) AS u1, greatest(ab.a, ab.b) AS v1,
+               least(ab.b, bc.b) AS u2, greatest(ab.b, bc.b) AS v2,
+               least(ab.a, bc.b) AS u3, greatest(ab.a, bc.b) AS v3
+        FROM {e}_orient ab
+        JOIN {e}_orient bc ON bc.a = ab.b
+        JOIN {e}_orient ac ON ac.a = ab.a AND ac.b = bc.b
+    ),
+    {e}_support AS (
+        SELECT u, v, count(*) AS s FROM (
+            SELECT u1 AS u, v1 AS v FROM {e}_tri
+            UNION ALL SELECT u2, v2 FROM {e}_tri
+            UNION ALL SELECT u3, v3 FROM {e}_tri
+        ) GROUP BY 1, 2
+    )"""
 
 
 # Union-form rounds between lineage cuts of the label table. A round

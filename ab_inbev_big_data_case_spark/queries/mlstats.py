@@ -19,6 +19,13 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, load_tables, table
+from ab_inbev_big_data_case_spark.operators.graph import (
+    basket_pairs,
+    basket_pairs_sql,
+    triangle_support,
+    triangles,
+    triangles_sql,
+)
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 
@@ -455,15 +462,11 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "market_basket_pairs",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    oracle=f"""
+    WITH {basket_pairs_sql()},
     tot AS (SELECT count(DISTINCT l_orderkey) AS n_ord FROM lineitem),
     pairs AS (
-        SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS n_co
-        FROM items a
-        JOIN items b ON a.l_orderkey = b.l_orderkey
-                    AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
+        SELECT u AS p1, v AS p2, count(*) AS n_co FROM basket_pairs GROUP BY 1, 2
     )
     SELECT p1, p2, n_co, round(n_co * 1.0 / t.n_ord, 6) AS support_r
     FROM pairs CROSS JOIN tot t
@@ -474,24 +477,20 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket 2-itemset mining: top co-occurring part pairs across
     orders with their support — the candidate-generation step of
-    Apriori/FP-growth expressed as one within-basket self-join + count.
+    Apriori/FP-growth expressed as one basket-pair build + count.
 
-    Scale shape: the self-join fans out per BASKET (order), not per
+    Scale shape: the pair build fans out per BASKET (order), not per
     corpus: k items in a basket emit k(k-1)/2 pairs, and TPC-H baskets
     are ≤7 lines, so fan-out is bounded per key by the data model (a
     general-baskets deployment caps or samples mega-baskets first — the
-    same guard as ``pairs_within_groups.max_group_size``). The pair count
+    ``basket_pairs`` ``max_basket`` guard). The pair count
     is a partial+final aggregate on (p1, p2), the order total is a
     broadcast 1-row aggregate, and the top-20 is TakeOrderedAndProject."""
     li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("p1"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("p2"))
     tot = li.agg(F.countDistinct("l_orderkey").cast("double").alias("n_ord"))
     return (
-        a.join(b, "l_orderkey")
-        .filter(F.col("p1") < F.col("p2"))
-        .groupBy("p1", "p2")
+        basket_pairs(li, "l_orderkey", "l_partkey")
+        .groupBy(F.col("u").alias("p1"), F.col("v").alias("p2"))
         .agg(F.count("*").alias("n_co"))
         .crossJoin(F.broadcast(tot))
         .select(
@@ -507,62 +506,34 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "triangle_count",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    oracle=f"""
+    WITH {basket_pairs_sql()},
     edges AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a
-        JOIN items b ON a.l_orderkey = b.l_orderkey
-                    AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= 2
+        SELECT u, v FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
     ),
-    tri AS (
-        SELECT count(*) AS n_triangles
-        FROM edges e1
-        JOIN edges e2 ON e2.u = e1.v
-        JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
-    )
-    SELECT t.n_triangles,
+    {triangles_sql("edges")}
+    SELECT (SELECT count(*) FROM edges_tri) AS n_triangles,
            (SELECT count(*) FROM edges) AS n_edges,
            (SELECT count(DISTINCT u) + count(DISTINCT v)
               FROM edges) AS deg_endpoints
-    FROM tri t
     """,
 )
 def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the co-purchase graph (parts bought together
-    in ≥2 orders): wedges e1=(u,v), e2=(v,w) closed by e3=(u,w). Edges are
-    kept in canonical u<v orientation, so every triangle is counted exactly
-    once — the standard compact-forward formulation.
+    in ≥2 orders), each triangle once.
 
     Scale shape: the support-≥2 threshold is the edge-sparsifier (the
-    co-purchase graph below it is boilerplate-dense), and the wedge join
-    fans out per shared VERTEX, not per graph — the production guard for
-    power-law graphs is degree-ordered direction (point edges from the
-    lower-degree endpoint) which bounds per-vertex wedges by √|E|; with
-    the canonical orientation on this graph the wedge count is already
-    edge-sparse. All three legs are plain equi-joins AQE can reorder."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
+    co-purchase graph below it is boilerplate-dense); ``triangles``
+    enumerates by degree order, which bounds the wedge join by m^1.5 on
+    power-law graphs."""
     edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
         .select("u", "v")
     )
-    e1 = edges
-    e2 = edges.select(F.col("u").alias("v"), F.col("v").alias("w"))
-    e3 = edges.select(F.col("u").alias("u"), F.col("v").alias("w"))
-    tri = (
-        e1.join(e2, "v")
-        .join(e3, ["u", "w"], "left_semi")
-        .agg(F.count("*").alias("n_triangles"))
-    )
+    tri = triangles(edges).agg(F.count("*").alias("n_triangles"))
     stats = edges.agg(
         F.count("*").alias("n_edges"),
         (F.countDistinct("u") + F.countDistinct("v")).alias("deg_endpoints"),
@@ -572,15 +543,10 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KHOP_SQL = """
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+_KHOP_SQL = f"""
+    WITH {basket_pairs_sql()},
     e AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a
-        JOIN items b ON a.l_orderkey = b.l_orderkey
-                    AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= 2
+        SELECT u, v FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
     ),
     sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
     seed AS (SELECT min(u) AS s FROM e),
@@ -614,13 +580,8 @@ def khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row aggregate. Distincts bound each frontier by |V|, the
     monotone-cumulative union makes the count non-decreasing in k (pinned
     by pytest)."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
     e = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
@@ -1750,23 +1711,13 @@ def group_sequential_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- global clustering coefficient
 
-_CLUSTCOEF_SQL = """
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+_CLUSTCOEF_SQL = f"""
+    WITH {basket_pairs_sql()},
     e AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a
-        JOIN items b ON a.l_orderkey = b.l_orderkey
-                    AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= 2
+        SELECT u, v FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
     ),
-    tri AS (
-        SELECT count(*) AS n_tri
-        FROM e e1
-        JOIN e e2 ON e2.u = e1.v
-        WHERE EXISTS (SELECT 1 FROM e e3
-                      WHERE e3.u = e1.u AND e3.v = e2.v)
-    ),
+    {triangles_sql("e")},
+    tri AS (SELECT count(*) AS n_tri FROM e_tri),
     deg AS (
         SELECT u AS node, count(*) AS d FROM (
             SELECT u, v FROM e UNION ALL SELECT v, u FROM e
@@ -1786,30 +1737,17 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     its degree sequence requires; read beside ``graph_assortativity``
     and ``triangle_count`` (whose closed-wedge count this normalizes).
 
-    Scale shape: triangles via the compact-forward wedge join + semi-
-    join closure (the ``triangle_count`` plan); wedge count needs NO
-    join at all — Σd(d−1)/2 over the degree table, one grouped count
-    plus a 1-row aggregate of exact integers."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
+    Scale shape: triangles from ``triangles`` (the ``triangle_count``
+    plan); wedge count needs NO join at all — Σd(d−1)/2 over the degree
+    table, one grouped count plus a 1-row aggregate of exact integers."""
     e = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
         .select("u", "v")
     )
-    e1 = e
-    e2 = e.select(F.col("u").alias("v"), F.col("v").alias("w"))
-    e3 = e.select(F.col("u").alias("u"), F.col("v").alias("w"))
-    tri = (
-        e1.join(e2, "v")
-        .join(e3, ["u", "w"], "left_semi")
-        .agg(F.count("*").alias("n_tri"))
-    )
+    tri = triangles(e).agg(F.count("*").alias("n_tri"))
     sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
     w = deg.agg(
@@ -2436,31 +2374,14 @@ def covariate_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- edge triangle support
 
-_TRUSS_SQL = """
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+_TRUSS_SQL = f"""
+    WITH {basket_pairs_sql()},
     edges AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a
-        JOIN items b ON a.l_orderkey = b.l_orderkey
-                    AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= 2
+        SELECT u, v FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
     ),
-    tri AS (
-        SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        FROM edges e1
-        JOIN edges e2 ON e2.u = e1.v
-        JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
-    ),
-    sup AS (
-        SELECT u, v, count(*) AS n_tri FROM (
-            SELECT a AS u, b AS v FROM tri
-            UNION ALL SELECT b AS u, c AS v FROM tri
-            UNION ALL SELECT a AS u, c AS v FROM tri
-        ) GROUP BY 1, 2
-    )
-    SELECT e.u, e.v, coalesce(s.n_tri, 0) AS support
-    FROM edges e LEFT JOIN sup s USING (u, v)
+    {triangles_sql("edges")}
+    SELECT e.u, e.v, coalesce(s.s, 0) AS support
+    FROM edges e LEFT JOIN edges_support s USING (u, v)
     ORDER BY support DESC, e.u, e.v
     LIMIT 20
 """
@@ -2475,36 +2396,20 @@ def edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     cliquey neighborhoods versus isolated pairings.
 
     Scale shape: same canonical u<v edge list and support-≥2 sparsifier
-    as ``triangle_count``; the closing leg is an INNER equi-join (the
-    triangle tuple is needed, not just its existence), each triangle
-    explodes into exactly 3 edge tallies, and the top-20 is
-    TakeOrderedAndProject with a full (support, u, v) tie-break."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
+    as ``triangle_count``; ``triangle_support`` credits each triangle's 3
+    edges, and the top-20 is TakeOrderedAndProject with a full
+    (support, u, v) tie-break."""
     edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
         .select("u", "v")
     )
-    e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    e3 = edges.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])
-    sup = (
-        tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-        .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n_tri"))
-    )
+    sup = triangle_support(triangles(edges))
     return (
         edges.join(sup, ["u", "v"], "left")
-        .select("u", "v", F.coalesce("n_tri", F.lit(0)).alias("support"))
+        .select("u", "v", F.coalesce("s", F.lit(0)).alias("support"))
         .orderBy(F.col("support").desc(), "u", "v")
         .limit(20)
     )
@@ -3114,15 +3019,10 @@ def ridge_regression_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- weighted SSSP (bounded hops)
 
-_SSSP_SQL = """
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+_SSSP_SQL = f"""
+    WITH {basket_pairs_sql()},
     e AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v, count(*) AS n_co
-        FROM items a
-        JOIN items b ON a.l_orderkey = b.l_orderkey
-                    AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= 2
+        SELECT u, v, count(*) AS n_co FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
     ),
     wsym AS (
         SELECT u, v, CASE WHEN n_co >= 100 THEN 1 ELSE 101 - n_co END AS w
@@ -3173,16 +3073,11 @@ def sssp_bounded_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed min (map-side combinable); no driver iteration, no collect.
     Frontier size is bounded by |V|; a production variant switches to
     iterate-until-fixpoint with an early-exit count check per round."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
     # the edge backbone has two consumers (wsym, seed), and four unrolled
-    # relaxation rounds would otherwise re-derive the
-    # scan→distinct→pair-join→agg pipeline per reference
+    # relaxation rounds would otherwise re-derive the pair build and its
+    # aggregate per reference
     e = cut(
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2),

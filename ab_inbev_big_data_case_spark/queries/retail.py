@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
+from ab_inbev_big_data_case_spark.operators.graph import basket_pairs, basket_pairs_sql
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 #: per-part revenue in exact integer cents (shared by the ABC oracle)
@@ -167,22 +168,11 @@ def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: canonical support-≥2 co-purchase edges with co-count (shared with the
-#: triangle/k-hop family in ``queries/mlstats.py``)
-_EDGES_SQL = """
-    items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v, count(*) AS n_co
-        FROM items a
-        JOIN items b ON a.l_orderkey = b.l_orderkey
-                    AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= 2
-    )
-"""
-
 _ITEM_COSINE_SQL = f"""
-    WITH {_EDGES_SQL},
+    WITH {basket_pairs_sql()},
+    e AS (
+        SELECT u, v, count(*) AS n_co FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
+    ),
     cnt AS (
         SELECT l_partkey, count(DISTINCT l_orderkey) AS n_ord
         FROM lineitem GROUP BY 1
@@ -225,12 +215,8 @@ def item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rounded to 6 before ranking (ties then break on raw co-count and
     neighbor id), so FP dust cannot reorder neighbors."""
     li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
     e = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(li, "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
@@ -282,7 +268,10 @@ _LPA_ROUND_SQL = """
 
 _LPA_SQL = (
     f"""
-    WITH {_EDGES_SQL},
+    WITH {basket_pairs_sql()},
+    e AS (
+        SELECT u, v, count(*) AS n_co FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
+    ),
     sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
     l0 AS (SELECT DISTINCT u AS node, u AS lab FROM sym),
     """
@@ -315,16 +304,11 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     into the lineage — no driver iteration, state is one label per node.
     The (count desc, label asc) tiebreak makes every round — hence the
     final partition — deterministic in both engines."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
     # the edge backbone and its symmetrization feed multiple consumers
     # (labels + both LPA rounds + degree/modularity terms, some under
     # BroadcastExchange which blocks exchange reuse)
     e = cut(
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
@@ -363,7 +347,10 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
 
 _MODULARITY_SQL = (
     f"""
-    WITH {_EDGES_SQL},
+    WITH {basket_pairs_sql()},
+    e AS (
+        SELECT u, v, count(*) AS n_co FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
+    ),
     sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
     l0 AS (SELECT DISTINCT u AS node, u AS lab FROM sym),
     """
@@ -416,16 +403,11 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree sums ride the community key; m is a broadcast 1-row
     aggregate. All counts are exact integers, Q contributions round at
     6."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
     # the edge backbone and its symmetrization feed multiple consumers
     # (labels + both LPA rounds + degree/modularity terms, some under
     # BroadcastExchange which blocks exchange reuse)
     e = cut(
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
@@ -501,7 +483,10 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ASSORT_SQL = f"""
-    WITH {_EDGES_SQL},
+    WITH {basket_pairs_sql()},
+    e AS (
+        SELECT u, v, count(*) AS n_co FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
+    ),
     sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
     deg AS (SELECT u AS node, count(*) AS d FROM sym GROUP BY 1)
     SELECT count(*) AS n_edge_ends,
@@ -524,13 +509,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment aggregate (sums of d, d², d·d' — the same machinery as
     ``corr_matrix``). Symmetrization makes the correlation well-defined
     (each edge contributes both orientations)."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
     e = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
@@ -715,7 +695,10 @@ _KCORE_ROUND_SQL = """
 
 _KCORE_SQL = (
     f"""
-    WITH {_EDGES_SQL},
+    WITH {basket_pairs_sql()},
+    e AS (
+        SELECT u, v, count(*) AS n_co FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
+    ),
     sym0 AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
     """
     + _KCORE_ROUND_SQL.format(cur="sym0", nxt="sym1")
@@ -752,13 +735,8 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unrolled-rounds pattern with monotone shrinking state; no
     driver iteration. Counts are exact integers; the symmetrized list
     is halved for the undirected edge count."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
     e = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)
@@ -766,7 +744,7 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # One cut per round: every round is referenced 3× by the next peel (degree
     # agg + two semi-joins) AND once more by its own stats branch, so the
-    # uncut 4-branch union re-derived the basket pair fan-out and peel
+    # uncut 4-branch union re-derived the basket pair build and peel
     # chain per branch (only Exchange reuse kept it from exploding —
     # measured 8.7 s median at sf0.1, 2.6 s with the cuts).
     sym = cut(
@@ -807,7 +785,10 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LIFT_TOP = 20
 
 _LIFT_SQL = f"""
-    WITH {_EDGES_SQL},
+    WITH {basket_pairs_sql()},
+    e AS (
+        SELECT u, v, count(*) AS n_co FROM basket_pairs GROUP BY 1, 2 HAVING count(*) >= 2
+    ),
     cnt AS (
         SELECT l_partkey, count(DISTINCT l_orderkey) AS n_ord
         FROM lineitem GROUP BY 1
@@ -852,14 +833,8 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     division; top-20 by ROUNDED lift with (antecedent, consequent)
     tiebreak is TakeOrderedAndProject."""
     li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
     e = (
-        items.select("l_orderkey", F.col("l_partkey").alias("u"))
-        .join(
-            items.select("l_orderkey", F.col("l_partkey").alias("v")),
-            "l_orderkey",
-        )
-        .filter(F.col("u") < F.col("v"))
+        basket_pairs(li, "l_orderkey", "l_partkey")
         .groupBy("u", "v")
         .agg(F.count("*").alias("n_co"))
         .filter(F.col("n_co") >= 2)

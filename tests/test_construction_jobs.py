@@ -33,7 +33,6 @@ load_all()
 #: with the code, and both a new action and a removed one fail the gate.
 CONSTRUCTION_ACTIONS = {
     "abtest_srm_check": 1,
-    "adamic_adar_links": 1,
     "ann_hubness_audit": 1,
     "ann_recall_eval": 1,
     "backoff_lm_score": 1,
@@ -68,10 +67,9 @@ CONSTRUCTION_ACTIONS = {
     "ivf_recall_eval": 3,
     "ivf_search": 2,
     "ivf_search_capped": 3,
-    "jaccard_neighbor_links": 2,
     "kcore_peeling": 4,
     "knn_label_accuracy": 1,
-    "ktruss_edges": 19,
+    "ktruss_edges": 17,
     "label_propagation_communities": 1,
     "map_at_k_eval": 1,
     "matrix_profile_daily": 2,
@@ -84,7 +82,6 @@ CONSTRUCTION_ACTIONS = {
     "ngram_novelty_score": 1,
     "power_iteration_top_eigen": 2,
     "quality_bucket_mix": 1,
-    "resource_allocation_links": 1,
     "rrf_fusion_eval": 3,
     "rrf_hybrid_search": 2,
     "semdedup_corpus": 2,
@@ -94,7 +91,7 @@ CONSTRUCTION_ACTIONS = {
     "sssp_bounded_hops": 5,
     "theil_sen_trend": 2,
     "time_bucket_gapfill": 1,
-    "triangle_count_copurchase": 4,
+    "triangle_count_copurchase": 1,
     "zorder_layout_extents": 1,
     "zorder_pruning_audit": 1,
 }

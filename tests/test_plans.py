@@ -445,12 +445,27 @@ def test_cusum_argmax_is_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
+def _joins(node, depth=0):
+    """(condition SQL, number of Joins on the path down to it) for every
+    Join node of a Catalyst plan."""
+    here = node.nodeName() == "Join"
+    out = [(node.condition().get().sql(), depth + 1)] if here else []
+    kids = node.children()
+    for i in range(kids.size()):
+        out += _joins(kids.apply(i), depth + here)
+    return out
+
+
 def test_khop_no_driver_iteration_three_hop_joins(spark, sf_dir):
-    """Unrolled BFS: the plan contains the three frontier joins (no
-    collect-based loop shortens it)."""
+    """Unrolled BFS: every join of the plan is a frontier join (the seed
+    hop ``u = s`` or a later hop ``u = f``; the edge build joins nothing),
+    and the hop-3 frontier join sits on the hop-2 one, which sits on the
+    seed join (no collect-based loop shortens the chain)."""
     df = QUERIES["khop_reachability"](spark, sf_dir)
-    logical = df._jdf.queryExecution().analyzed().toString()
-    assert logical.count("Join") >= 6  # 3 hops × (frontier join + edge build)
+    joins = _joins(df._jdf.queryExecution().analyzed())
+    assert {cond for cond, _ in joins} == {"(u = s)", "(u = f)"}
+    assert max(depth for _, depth in joins) == 3
+    assert {cond for cond, depth in joins if depth == 3} == {"(u = s)"}
 
 
 def test_interval_overlap_no_partitionless_window(spark, sf_dir):

@@ -202,14 +202,19 @@ def test_ktruss_is_subgraph_and_certified(spark, sf_dir):
 
 
 def test_ktruss_every_edge_supported(spark, sf_dir):
-    """Recompute the truss independently and verify the DEFINING property:
-    every surviving edge closes >= k-2 triangles among survivors."""
+    """Recompute the truss independently, with a from-scratch triangle
+    enumeration of the surviving edges every round, and verify the
+    DEFINING property: every surviving edge closes >= k-2 triangles among
+    survivors."""
+    from ab_inbev_big_data_case_spark.operators.graph import triangle_support, triangles
     from ab_inbev_big_data_case_spark.queries.linkpred import (
         _KTRUSS_K,
         _KTRUSS_ROUNDS,
         _MAX_BASKET,
-        _edge_support,
     )
+
+    def support(ed):
+        return triangle_support(triangles(ed))
 
     e = table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
@@ -224,18 +229,17 @@ def test_ktruss_every_edge_supported(spark, sf_dir):
     ed = (
         ec.alias("a")
         .join(ec.alias("b"), F.expr("a.o = b.o AND a.p < b.p"))
-        .groupBy(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
+        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
         .agg(F.count("*").alias("ns"))
         .filter(F.col("ns") >= 2)
-        .select("p1", "p2")
+        .select("u", "v")
         .localCheckpoint(eager=False)
     )
     for _ in range(_KTRUSS_ROUNDS):
-        supp = _edge_support(ed)
         ed = (
-            ed.join(supp, ["p1", "p2"])
+            ed.join(support(ed), ["u", "v"])
             .filter(F.col("s") >= _KTRUSS_K - 2)
-            .select("p1", "p2")
+            .select("u", "v")
             .localCheckpoint(eager=False)
         )
     n_edges = ed.count()
@@ -243,7 +247,7 @@ def test_ktruss_every_edge_supported(spark, sf_dir):
     assert n_edges == want["n_edges_truss"]
     if n_edges:
         weak = (
-            ed.join(_edge_support(ed), ["p1", "p2"], "left")
+            ed.join(support(ed), ["u", "v"], "left")
             .filter(
                 F.coalesce(F.col("s"), F.lit(0)) < _KTRUSS_K - 2
             )

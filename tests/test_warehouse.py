@@ -2,9 +2,11 @@
 connected components) on tiny literal DataFrames — exact expected outputs
 plus the structural invariants each operator promises (SURVEY.md §5.2)."""
 
+import itertools
 import math
 import os
 import random
+from collections import Counter
 
 import duckdb
 import pytest
@@ -12,9 +14,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.operators.graph import (
+    basket_pairs,
+    basket_pairs_sql,
     connected_components,
     connected_components_sql,
     pagerank,
+    triangle_support,
+    triangles,
+    triangles_sql,
 )
 from ab_inbev_big_data_case_spark.operators.relational import build_scd2, profile
 from ab_inbev_big_data_case_spark.registry import QUERIES, load_all
@@ -201,6 +208,101 @@ def test_cc_fixture_certificates(sf_dir, sf):
         f"SELECT DISTINCT converged FROM ({ORACLE['dbscan_grid_clusters']})"
     ).fetchall()
     assert (unc, converged) == ([(0,)], [(1,)])
+
+
+def _basket_rows(seed):
+    """Seeded (basket, item) rows: 40 baskets of 1-8 draws over 30 items
+    (repeats included), baskets of 16 and 17 distinct items, and rows with
+    a null basket or a null item."""
+    rng = random.Random(seed)
+    rows = [(b, rng.randrange(30)) for b in range(40) for _ in range(rng.randint(1, 8))]
+    rows += [(98, i) for i in range(100, 116)] + [(99, i) for i in range(17)]
+    rows += [(None, 1), (None, 2), (5, None), (99, None)]
+    return rows
+
+
+def _basket_pairs_brute(rows, max_basket):
+    baskets = {}
+    for b, i in rows:
+        if b is not None and i is not None:
+            baskets.setdefault(b, set()).add(i)
+    return sorted(
+        (b, u, v, len(items))
+        for b, items in baskets.items()
+        if max_basket is None or len(items) <= max_basket
+        for u, v in itertools.combinations(sorted(items), 2)
+    )
+
+
+@pytest.mark.parametrize("max_basket", [16, None])
+@pytest.mark.parametrize("seed", [3, 5])
+def test_basket_pairs_match_brute_force_and_sql_twin(spark, seed, max_basket):
+    """One row per basket and distinct item pair u < v with the basket's
+    distinct-item count; null keys drop out, the 16-item basket always
+    pairs and the 17-item one only without a cap; the DuckDB twin returns
+    the same rows."""
+    rows = _basket_rows(seed)
+    want = _basket_pairs_brute(rows, max_basket)
+    assert {16, 17} & {n for *_, n in want} == ({16} if max_basket else {16, 17})
+    df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    got = basket_pairs(df, "l_orderkey", "l_partkey", max_basket).collect()
+    assert sorted(tuple(r) for r in got) == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE lineitem (l_orderkey BIGINT, l_partkey BIGINT)")
+    con.executemany("INSERT INTO lineitem VALUES (?, ?)", rows)
+    sql = f"WITH {basket_pairs_sql(max_basket)} SELECT l_orderkey, u, v, n FROM basket_pairs"
+    assert sorted(con.execute(sql).fetchall()) == want
+
+
+def _graph(name):
+    """Canonical (u < v) edge lists: seeded random graphs, and a hub graph
+    (a star on node 0 joined to a clique that contains it, plus a few
+    leaf-leaf edges) where the smallest id has the largest degree."""
+    if name == "hub":
+        edges = {(0, leaf) for leaf in range(10, 50)}
+        edges |= set(itertools.combinations(range(5), 2))
+        edges |= {(10, 11), (11, 12), (10, 12), (20, 21)}
+    else:
+        rng = random.Random(name)
+        edges = {tuple(sorted(rng.sample(range(25), 2))) for _ in range(90)}
+    return sorted(edges)
+
+
+def _triangles_brute(edges):
+    """Each triangle as its sorted list of 3 canonical edges, from
+    ``itertools.combinations`` over the nodes."""
+    es = set(edges)
+    nodes = sorted({x for e in edges for x in e})
+    return sorted(
+        sorted([(a, b), (b, c), (a, c)])
+        for a, b, c in itertools.combinations(nodes, 3)
+        if {(a, b), (b, c), (a, c)} <= es
+    )
+
+
+@pytest.mark.parametrize("graph", [7, 11, "hub"])
+def test_triangles_match_brute_force_and_sql_twin(spark, graph):
+    """``triangles`` emits every triangle exactly once with its 3 canonical
+    edges, ``triangle_support`` counts each edge's triangles, and the DuckDB
+    twin returns the same triangles and supports."""
+    edges = _graph(graph)
+    want = _triangles_brute(edges)
+    want_support = sorted((u, v, s) for (u, v), s in Counter(e for t in want for e in t).items())
+    assert want
+
+    def as_edges(rows):
+        return sorted(sorted([(r[0], r[1]), (r[2], r[3]), (r[4], r[5])]) for r in rows)
+
+    tri = triangles(spark.createDataFrame(edges, "u long, v long"))
+    assert tri.columns == ["u1", "v1", "u2", "v2", "u3", "v3"]
+    assert as_edges(tri.collect()) == want
+    assert sorted(tuple(r) for r in triangle_support(tri).collect()) == want_support
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (u BIGINT, v BIGINT)")
+    con.executemany("INSERT INTO e VALUES (?, ?)", edges)
+    body = triangles_sql("e")
+    assert as_edges(con.execute(f"WITH {body} SELECT * FROM e_tri").fetchall()) == want
+    assert sorted(con.execute(f"WITH {body} SELECT * FROM e_support").fetchall()) == want_support
 
 
 def test_ivm_join_delta_terms_nonempty(spark, sf_dir):
