@@ -151,6 +151,19 @@ def basket_pairs_sql(max_basket: int | None = None) -> str:
     )"""
 
 
+def degrees(edges: DataFrame) -> DataFrame:
+    """Degree ``(p, d)`` of every node of the undirected edges ``(u, v)``,
+    each edge once. ``triangles`` orders by it; a caller that also needs
+    degrees (wedge or node counts) calls this on the same ``edges``, so
+    the two derivations are one plan that exchange reuse shares."""
+    return (
+        edges.select(F.col("u").alias("p"))
+        .unionAll(edges.select(F.col("v").alias("p")))
+        .groupBy("p")
+        .agg(F.count("*").alias("d"))
+    )
+
+
 def triangles(edges: DataFrame) -> DataFrame:
     """Every triangle of ``edges`` once, as its three edges
     ``(u1, v1, u2, v2, u3, v3)``, each edge with ``u < v``.
@@ -163,12 +176,7 @@ def triangles(edges: DataFrame) -> DataFrame:
     (Chiba–Nishizeki); under plain id order one hub's wedges grow with its
     degree squared. Nothing is cut: a caller that reads the triangles more
     than once cuts them."""
-    deg = (
-        edges.select(F.col("u").alias("p"))
-        .unionAll(edges.select(F.col("v").alias("p")))
-        .groupBy("p")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = degrees(edges)
     j = edges.join(
         F.broadcast(deg.select(F.col("p").alias("u"), F.col("d").alias("du"))), "u"
     ).join(F.broadcast(deg.select(F.col("p").alias("v"), F.col("d").alias("dv"))), "v")

@@ -1,4 +1,5 @@
-"""Core row-level operators: filter, project, enrich, dedup, casts.
+"""Core row-level operators: filter, project, enrich, dedup, casts, and the
+global running sums of :func:`prefix_sums`.
 
 Reference parity (SURVEY.md §2.1):
 
@@ -55,6 +56,81 @@ def dedup_deterministic(
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+#: key buckets of :func:`prefix_sums`, so the carry spine has ≤ 16 rows
+_PREFIX_BUCKETS = 16
+
+
+def prefix_sums(
+    df: DataFrame,
+    key: str,
+    tiebreak: Sequence[str],
+    sums: dict[str, Column],
+    descending: bool = False,
+) -> DataFrame:
+    """Global running sums over the total order ``(key [desc], *tiebreak)``
+    without a partitionless window over ``df``.
+
+    Returns ``df`` plus two columns per ``name -> expr`` of ``sums``:
+    ``name``, the running sum of ``expr`` over every row up to and
+    including this one, and ``name_total``, the sum over all rows. A rank
+    is ``{"rk": F.lit(1)}``; an exclusive sum is ``name - expr``. Both are
+    exact for integer and decimal sums (a float sum would depend on the
+    addition order). ``key`` is integral, and ``(key, *tiebreak)`` must be
+    unique per row, or tied rows' sums depend on the window's row order.
+
+    Two-level prefix sum (Blelloch's block scan plus carry): the key range
+    is cut into 16 equal-width buckets, numbered in the sort direction so
+    equal keys share a bucket. A window partitioned by bucket sums within
+    each bucket, and one window over the ≤ 16-row bucket-total spine adds
+    the carry of all earlier buckets. Only the spine window is
+    partitionless. Key skew only unbalances the bucket sizes, never a sum.
+
+    The buckets come from the exact ``[min, max]`` of the key, not from
+    ``percentile_approx``: a GK sketch's partial merges depend on
+    scheduling order, so the local pass and the carry spine, two
+    evaluations of the same subtree, could bucket differently. The
+    totals ride the same broadcast 1-row aggregate as the bounds, so they
+    cost no window and no further pass over ``df``. Nothing runs here: no
+    Spark job, no cut."""
+    bucket = "__prefix_bucket"
+    bounds = df.agg(
+        F.min(key).alias("__prefix_lo"),
+        F.max(key).alias("__prefix_hi"),
+        *(F.sum(e).alias(f"{n}_total") for n, e in sums.items()),
+    )
+    offset = f"__prefix_hi - {key}" if descending else f"{key} - __prefix_lo"
+    bucketed = df.crossJoin(F.broadcast(bounds)).withColumn(
+        bucket,
+        F.expr(f"({offset}) DIV ((__prefix_hi - __prefix_lo) DIV {_PREFIX_BUCKETS} + 1)"),
+    )
+    order = F.col(key).desc() if descending else F.col(key)
+    w_local = (
+        Window.partitionBy(bucket)
+        .orderBy(order, *tiebreak)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = bucketed.select("*", *(F.sum(e).over(w_local).alias(n) for n, e in sums.items()))
+    spine = bucketed.groupBy(bucket).agg(
+        *(F.sum(e).alias(f"__bucket_{n}") for n, e in sums.items())
+    )
+    w_carry = Window.orderBy(bucket).rowsBetween(Window.unboundedPreceding, -1)
+    carry = spine.select(
+        bucket,
+        *(
+            F.coalesce(F.sum(f"__bucket_{n}").over(w_carry), F.lit(0)).alias(f"__carry_{n}")
+            for n in sums
+        ),
+    )
+    return local.join(F.broadcast(carry), bucket).select(
+        *df.columns,
+        *(
+            c
+            for n in sums
+            for c in ((F.col(n) + F.col(f"__carry_{n}")).alias(n), f"{n}_total")
+        ),
     )
 
 

@@ -21,10 +21,10 @@ Scale posture (shared design rules of this repo):
   different float-summation orders cannot diverge the result — scalar
   double arithmetic happens only on the final 1-row (or per-group-row)
   moments.
-- Global ranks (Gini) use the two-level prefix-sum decomposition
-  (percentile-boundary buckets + per-bucket window + 16-row carry spine —
-  the ``abc_pareto_class`` pattern): customers are fact-sized, so a flat
-  ``row_number`` over a partitionless window would single-task 100 TB.
+- Global ranks and running sums over fact-sized spines (Gini, Lorenz,
+  energy, W1, QQ, CvM) come from ``operators.relational.prefix_sums``:
+  a flat partitionless window over customers or distinct cents would
+  single-task 100 TB.
 - ECDF walks (KS, AUC) run on VALUE-DOMAIN-BOUNDED spines: distinct doc
   lengths / cent-quantized scores are capped by the value domain, not the
   row count (the histogram-spine exception documented in
@@ -44,51 +44,21 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.operators.relational import prefix_sums
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
 
 # ------------------------------------------------------ Gini concentration
 
-_GINI_BUCKETS = 16
 
-
-def _custrev_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer revenue cents with the GLOBAL ascending rank
-    (rev_c, o_custkey) attached via the two-level decomposition: 16
-    equal-WIDTH value buckets from the exact [min,max] cents (broadcast
-    1-row bounds; ties share a bucket, bucket monotone in rev_c, and —
-    unlike percentile_approx boundaries — byte-identical on every
-    re-evaluation of the shared subtree: GK-sketch partial merges are
-    scheduling-order-sensitive, so the local rank and the carry spine
-    could land on DIFFERENT bucketings), ``row_number`` windowed WITHIN
-    each bucket, and a 16-row bucket-count carry spine — equal to a flat
-    partitionless ``row_number`` without ever single-tasking the customer
-    spine. Value skew only unbalances bucket sizes, never correctness.
-    Shared by ``gini_concentration`` and ``lorenz_curve_points``."""
+def _custrev(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-customer revenue cents ``rev_c``, shared by
+    ``gini_concentration`` and ``lorenz_curve_points``."""
     o = table(spark, sf_dir, "orders")
-    prev = o.groupBy("o_custkey").agg(
+    return o.groupBy("o_custkey").agg(
         (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
         .cast("long")
         .alias("rev_c")
-    )
-    bounds = prev.agg(F.min("rev_c").alias("lo"), F.max("rev_c").alias("hi"))
-    bucketed = prev.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket",
-        F.expr(f"(rev_c - lo) DIV ((hi - lo) DIV {_GINI_BUCKETS} + 1)"),
-    )
-    w_local = Window.partitionBy("bucket").orderBy("rev_c", "o_custkey")
-    local = bucketed.withColumn("lrank", F.row_number().over(w_local))
-    w_spine = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # 16-row bucket spine: bounded by the bucket count, not the data
-    spine = (
-        bucketed.groupBy("bucket")
-        .agg(F.count("*").alias("bn"))
-        .withColumn("carry", F.coalesce(F.sum("bn").over(w_spine), F.lit(0)))
-        .select("bucket", "carry")
-    )
-    return local.join(F.broadcast(spine), "bucket").withColumn(
-        "grank", F.col("carry") + F.col("lrank")
     )
 
 
@@ -127,18 +97,15 @@ def gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-number concentration summary behind ``abc_pareto_class``'s
     three buckets.
 
-    Scale shape: the global ascending rank is TWO-LEVEL (the
-    ``abc_pareto_class`` decomposition run in the opposite direction) —
-    16 value-range buckets from percentile boundaries (broadcast 1-row
-    array; bucket = #boundaries strictly BELOW the cents value, so ties
-    share a bucket), ``row_number`` windowed WITHIN each bucket, and a
-    16-row bucket-count spine supplying the rank carry. Σ i·xᵢ is
-    tie-permutation invariant (equal x ⇒ equal contribution under any
-    rank swap), so bucket boundaries cannot change the result. The rank
-    product accumulates in DECIMAL(38,0) (rank ~1e10 × cents ~1e9
-    overflows BIGINT at 100 TB); the final ratio is scalar double
-    arithmetic on the 1-row moments, identical in both engines."""
-    ranked = _custrev_ranked(spark, sf_dir)
+    Scale shape: the global ascending rank is ``prefix_sums``'s. Σ i·xᵢ
+    is tie-permutation invariant (equal x ⇒ equal contribution under any
+    rank swap). The rank product accumulates in DECIMAL(38,0) (rank
+    ~1e10 × cents ~1e9 overflows BIGINT at 100 TB); the final ratio is
+    scalar double arithmetic on the 1-row moments, identical in both
+    engines."""
+    ranked = prefix_sums(
+        _custrev(spark, sf_dir), "rev_c", ["o_custkey"], {"grank": F.lit(1)}
+    )
     s = ranked.agg(
         F.count("*").alias("n"),
         F.sum("rev_c").cast("long").alias("tot_c"),
@@ -991,24 +958,16 @@ def lorenz_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-decile share is the "how broad is the base" read; the top
     decile is ``abc_pareto_class``'s A-class seen from below).
 
-    Scale shape: reuses the shared two-level global rank
-    (``_custrev_ranked`` — bucket-partitioned row_number + 16-row carry
-    spine, never a flat partitionless window over customers); the
-    decile id is scalar arithmetic on (rank, broadcast n); the
-    cumulative walk runs on the fixed 10-row decile spine. Shares
-    divide exact integer cents once per output row."""
-    ranked = _custrev_ranked(spark, sf_dir)
-    tot = ranked.agg(
-        F.count("*").alias("n"), F.sum("rev_c").alias("tot_c")
-    )
+    Scale shape: ``gini_concentration``'s global rank (``prefix_sums``);
+    the decile id is scalar arithmetic on (rank, customer count); the
+    cumulative walk runs on the fixed 10-row decile spine. Shares divide
+    exact integer cents once per output row."""
+    prev = _custrev(spark, sf_dir)
+    tot = prev.agg(F.sum("rev_c").alias("tot_c"))
     dec = (
-        ranked.crossJoin(F.broadcast(tot))
-        .select(
-            F.expr("(grank - 1) * 10 div n").alias("decile"),
-            "rev_c",
-            "tot_c",
-        )
-        .groupBy("decile")
+        prefix_sums(prev, "rev_c", ["o_custkey"], {"grank": F.lit(1)})
+        .crossJoin(F.broadcast(tot))
+        .groupBy(F.expr("(grank - 1) * 10 div grank_total").alias("decile"))
         .agg(
             F.count("*").alias("n_customers"),
             F.sum("rev_c").alias("dec_c"),
@@ -1253,8 +1212,8 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity (2·below + ties + 1, always an integer) over the distinct
     |diff| spine; W⁺ and the tie sum stay integer until the one z
     expression. The rank spine here is user-population-sized, so the
-    PRODUCTION version of this map is the two-level bucket decomposition
-    (``gains_chart_deciles``); with the audit-sized pair panel this
+    PRODUCTION version of this map is ``operators.relational.prefix_sums``
+    (as in ``gains_chart_deciles``); with the audit-sized pair panel this
     single-spine window is the honest plan and is allowlisted as such.
     """
     e = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
@@ -1748,9 +1707,8 @@ def energy_distance_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0)); the three means are one double division each.
 
     Scale shape: one fact pass to the shared distinct-cents spine, the
-    TWO-LEVEL equal-width-bucket prefix of four running quantities
-    (counts and value-sums per sample — only the 16-row carry spine is
-    partitionless), a 1-row totals broadcast, one final aggregate."""
+    ``prefix_sums`` of four running quantities (counts and value-sums per
+    sample) with their totals, one final aggregate."""
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
     )
@@ -1764,63 +1722,23 @@ def energy_distance_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
     )
     d38 = "decimal(38,0)"
-    bounds = cells.agg(
-        F.min("x_c").alias("lo"),
-        F.max("x_c").alias("hi"),
-        F.sum("cx").cast(d38).alias("nx"),
-        F.sum("cy").cast(d38).alias("ny"),
-        F.sum(F.col("x_c").cast(d38) * F.col("cx")).alias("sx"),
-        F.sum(F.col("x_c").cast(d38) * F.col("cy")).alias("sy"),
+    cx, cy = F.col("cx").cast(d38), F.col("cy").cast(d38)
+    xc = F.col("x_c").cast(d38)
+    ps = prefix_sums(
+        cells, "x_c", [], {"cxle": cx, "cyle": cy, "sxle": xc * cx, "syle": xc * cy}
     )
-    bucketed = cells.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(x_c - lo) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy("x_c")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    zero = F.lit(0).cast(d38)
-    local = bucketed.select(
-        "*",
-        F.coalesce(F.sum(F.col("cx").cast(d38)).over(w_local), zero).alias("cxlt_l"),
-        F.coalesce(F.sum(F.col("cy").cast(d38)).over(w_local), zero).alias("cylt_l"),
-        F.coalesce(
-            F.sum((F.col("x_c").cast(d38) * F.col("cx"))).over(w_local), zero
-        ).alias("sxlt_l"),
-        F.coalesce(
-            F.sum((F.col("x_c").cast(d38) * F.col("cy"))).over(w_local), zero
-        ).alias("sylt_l"),
-    )
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        bucketed.groupBy("bucket")
-        .agg(
-            F.sum(F.col("cx").cast(d38)).alias("bcx"),
-            F.sum(F.col("cy").cast(d38)).alias("bcy"),
-            F.sum(F.col("x_c").cast(d38) * F.col("cx")).alias("bsx"),
-            F.sum(F.col("x_c").cast(d38) * F.col("cy")).alias("bsy"),
-        )
-        .select(
-            "bucket",
-            F.coalesce(F.sum("bcx").over(w_spine), zero).alias("cxlt_c"),
-            F.coalesce(F.sum("bcy").over(w_spine), zero).alias("cylt_c"),
-            F.coalesce(F.sum("bsx").over(w_spine), zero).alias("sxlt_c"),
-            F.coalesce(F.sum("bsy").over(w_spine), zero).alias("sylt_c"),
-        )
-    )
-    walk = local.join(F.broadcast(carry), "bucket").select(
+    walk = ps.select(
         "x_c",
         "cx",
         "cy",
-        "nx",
-        "ny",
-        "sx",
-        "sy",
-        (F.col("cxlt_l") + F.col("cxlt_c")).alias("cxlt"),
-        (F.col("cylt_l") + F.col("cylt_c")).alias("cylt"),
-        (F.col("sxlt_l") + F.col("sxlt_c")).alias("sxlt"),
-        (F.col("sylt_l") + F.col("sylt_c")).alias("sylt"),
+        F.col("cxle_total").alias("nx"),
+        F.col("cyle_total").alias("ny"),
+        F.col("sxle_total").alias("sx"),
+        F.col("syle_total").alias("sy"),
+        (F.col("cxle") - cx).alias("cxlt"),
+        (F.col("cyle") - cy).alias("cylt"),
+        (F.col("sxle") - xc * cx).alias("sxlt"),
+        (F.col("syle") - xc * cy).alias("sylt"),
     )
     vc = F.col("x_c").cast(d38)
 
@@ -1907,14 +1825,16 @@ def wasserstein1_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual cost of morphing one distribution into the other, in dollars
     (complements ``ks_two_sample``'s sup-norm and
     ``energy_distance_two_sample``). The integrand is kept integer:
-    |cnt_le_x·n_y − cnt_le_y·n_x| avoids the CDF ratios entirely; ONE
+    Dᵢ = cnt_le_x·n_y − cnt_le_y·n_x avoids the CDF ratios entirely; ONE
     double division at the end.
 
-    Scale shape: the spine prefix counts use the two-level equal-width
-    bucket decomposition; the next-value gap is a lead WITHIN each bucket
-    plus a 16-row broadcast of each bucket's first value to patch the
-    boundaries — the 16-row carry/boundary spines are the only
-    partitionless pieces."""
+    The next-value gap needs no ``lead``: since D₀ = D_m = 0, Abel
+    summation turns Σᵢ |Dᵢ|·(vᵢ₊₁ − vᵢ) into Σᵢ vᵢ·(|Dᵢ₋₁| − |Dᵢ|), and
+    Dᵢ₋₁ comes from the exclusive counts at vᵢ. The oracle keeps the
+    ``lead`` form.
+
+    Scale shape: one fact pass to the value spine, the ``prefix_sums`` of
+    the two counts with their totals, one final aggregate."""
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
     )
@@ -1928,62 +1848,15 @@ def wasserstein1_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
     )
     d38 = "decimal(38,0)"
-    bounds = cells.agg(
-        F.min("x_c").alias("lo"),
-        F.max("x_c").alias("hi"),
-        F.sum("cx").cast(d38).alias("nx"),
-        F.sum("cy").cast(d38).alias("ny"),
-    )
-    bucketed = cells.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(x_c - lo) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_cum = (
-        Window.partitionBy("bucket")
-        .orderBy("x_c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_lead = Window.partitionBy("bucket").orderBy("x_c")
-    zero = F.lit(0).cast(d38)
-    local = bucketed.select(
-        "*",
-        F.sum(F.col("cx").cast(d38)).over(w_cum).alias("cxle_l"),
-        F.sum(F.col("cy").cast(d38)).over(w_cum).alias("cyle_l"),
-        F.lead("x_c").over(w_lead).alias("x_next_l"),
-    )
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    # per-bucket totals for the carry + each bucket's FIRST value to patch
-    # the lead at bucket boundaries (the next value after a bucket's last
-    # row is the next non-empty bucket's minimum)
-    w_next = Window.orderBy("bucket").rowsBetween(1, Window.unboundedFollowing)
-    spine = (
-        bucketed.groupBy("bucket")
-        .agg(
-            F.sum(F.col("cx").cast(d38)).alias("bcx"),
-            F.sum(F.col("cy").cast(d38)).alias("bcy"),
-            F.min("x_c").alias("bmin"),
-        )
-        .select(
-            "bucket",
-            F.coalesce(F.sum("bcx").over(w_spine), zero).alias("cxle_c"),
-            F.coalesce(F.sum("bcy").over(w_spine), zero).alias("cyle_c"),
-            F.min("bmin").over(w_next).alias("next_bucket_min"),
-        )
-    )
-    walk = local.join(F.broadcast(spine), "bucket").select(
-        "x_c",
-        "nx",
-        "ny",
-        (F.col("cxle_l") + F.col("cxle_c")).alias("cxle"),
-        (F.col("cyle_l") + F.col("cyle_c")).alias("cyle"),
-        F.coalesce(F.col("x_next_l"), F.col("next_bucket_min")).alias("x_next"),
-    )
-    s = walk.filter(F.col("x_next").isNotNull()).agg(
-        F.sum(
-            (F.col("x_next") - F.col("x_c")).cast(d38)
-            * F.abs(F.col("cxle") * F.col("ny") - F.col("cyle") * F.col("nx"))
-        ).alias("num"),
-        F.max("nx").alias("nx"),
-        F.max("ny").alias("ny"),
+    cx, cy = F.col("cx").cast(d38), F.col("cy").cast(d38)
+    ps = prefix_sums(cells, "x_c", [], {"cxle": cx, "cyle": cy})
+    nx, ny = F.col("cxle_total"), F.col("cyle_total")
+    d_le = F.col("cxle") * ny - F.col("cyle") * nx
+    d_lt = (F.col("cxle") - cx) * ny - (F.col("cyle") - cy) * nx
+    s = ps.agg(
+        F.sum(F.col("x_c").cast(d38) * (F.abs(d_lt) - F.abs(d_le))).alias("num"),
+        F.max(nx).alias("nx"),
+        F.max(ny).alias("ny"),
     )
     nxd, nyd = F.col("nx").cast("double"), F.col("ny").cast("double")
     return s.select(
@@ -2044,7 +1917,7 @@ def qq_plot_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     float percentile anywhere, the split-conformal discipline).
 
     Scale shape: one fact pass to the pivoted two-count value spine, the
-    two-level equal-width-bucket prefix, a 9-row broadcast quantile grid
+    ``prefix_sums`` of both counts, a 9-row broadcast quantile grid
     joined against the spine with a min-aggregate — nothing per-row."""
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
@@ -2058,41 +1931,14 @@ def qq_plot_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = v.groupBy("x_c").agg(
         F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
     )
-    bounds = cells.agg(
-        F.min("x_c").alias("lo"),
-        F.max("x_c").alias("hi"),
-        F.sum("cx").alias("nx"),
-        F.sum("cy").alias("ny"),
-    )
-    bucketed = cells.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(x_c - lo) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_cum = (
-        Window.partitionBy("bucket")
-        .orderBy("x_c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed.select(
-        "*",
-        F.sum("cx").over(w_cum).alias("cxle_l"),
-        F.sum("cy").over(w_cum).alias("cyle_l"),
-    )
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        bucketed.groupBy("bucket")
-        .agg(F.sum("cx").alias("bcx"), F.sum("cy").alias("bcy"))
-        .select(
-            "bucket",
-            F.coalesce(F.sum("bcx").over(w_spine), F.lit(0)).alias("cxle_c"),
-            F.coalesce(F.sum("bcy").over(w_spine), F.lit(0)).alias("cyle_c"),
-        )
-    )
-    walk = local.join(F.broadcast(carry), "bucket").select(
+    walk = prefix_sums(
+        cells, "x_c", [], {"cxle": F.col("cx"), "cyle": F.col("cy")}
+    ).select(
         "x_c",
-        "nx",
-        "ny",
-        (F.col("cxle_l") + F.col("cxle_c")).alias("cxle"),
-        (F.col("cyle_l") + F.col("cyle_c")).alias("cyle"),
+        F.col("cxle_total").alias("nx"),
+        F.col("cyle_total").alias("ny"),
+        "cxle",
+        "cyle",
     )
     qs = spark.range(1, 10).select(F.col("id").alias("q"))
     return (
@@ -2164,8 +2010,8 @@ def cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing floats until the single terminal division.
 
     Scale shape: one fact pass to the pivoted two-count value spine, the
-    two-level equal-width-bucket prefix (16-row carry spine only), one
-    final aggregate."""
+    ``prefix_sums`` of both counts with their totals, one final
+    aggregate."""
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
     )
@@ -2179,51 +2025,15 @@ def cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
     )
     d38 = "decimal(38,0)"
-    bounds = cells.agg(
-        F.min("x_c").alias("lo"),
-        F.max("x_c").alias("hi"),
-        F.sum("cx").cast(d38).alias("nx"),
-        F.sum("cy").cast(d38).alias("ny"),
+    ps = prefix_sums(
+        cells, "x_c", [], {"cxle": F.col("cx").cast(d38), "cyle": F.col("cy").cast(d38)}
     )
-    bucketed = cells.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(x_c - lo) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_cum = (
-        Window.partitionBy("bucket")
-        .orderBy("x_c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed.select(
-        "*",
-        F.sum(F.col("cx").cast(d38)).over(w_cum).alias("cxle_l"),
-        F.sum(F.col("cy").cast(d38)).over(w_cum).alias("cyle_l"),
-    )
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    zero = F.lit(0).cast(d38)
-    carry = (
-        bucketed.groupBy("bucket")
-        .agg(
-            F.sum(F.col("cx").cast(d38)).alias("bcx"),
-            F.sum(F.col("cy").cast(d38)).alias("bcy"),
-        )
-        .select(
-            "bucket",
-            F.coalesce(F.sum("bcx").over(w_spine), zero).alias("cxle_c"),
-            F.coalesce(F.sum("bcy").over(w_spine), zero).alias("cyle_c"),
-        )
-    )
-    diff = (F.col("cxle_l") + F.col("cxle_c")) * F.col("ny") - (
-        F.col("cyle_l") + F.col("cyle_c")
-    ) * F.col("nx")
-    s = (
-        local.join(F.broadcast(carry), "bucket")
-        .agg(
-            F.sum(
-                (F.col("cx") + F.col("cy")).cast(d38) * diff * diff
-            ).alias("num"),
-            F.max("nx").alias("nx"),
-            F.max("ny").alias("ny"),
-        )
+    nx, ny = F.col("cxle_total"), F.col("cyle_total")
+    diff = F.col("cxle") * ny - F.col("cyle") * nx
+    s = ps.agg(
+        F.sum((F.col("cx") + F.col("cy")).cast(d38) * diff * diff).alias("num"),
+        F.max(nx).alias("nx"),
+        F.max(ny).alias("ny"),
     )
     nxd, nyd = F.col("nx").cast("double"), F.col("ny").cast("double")
     return s.select(

@@ -30,6 +30,7 @@ from ab_inbev_big_data_case_spark.sources.readers import table
 from ab_inbev_big_data_case_spark.operators.graph import (
     basket_pairs,
     basket_pairs_sql,
+    degrees,
     triangle_support,
     triangles,
     triangles_sql,
@@ -267,7 +268,8 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: basket-capped pair aggregation (≤120 pairs/order, one
     shuffle) → HAVING ≥2 prunes to the repeat backbone → the triangle
-    wedge join; wedges and nodes are one aggregate of the degree table.
+    wedge join; wedges and nodes are one aggregate of the ``degrees``
+    table the triangle order derives too.
     No cartesian, no windows."""
     # the backbone feeds the degree table, both sides of the triangle
     # orientation and the edge count, several under a BroadcastExchange
@@ -281,15 +283,9 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v"),
         "triangle_count_copurchase.ed",
     )
-    nodes = (
-        ed.select(F.col("u").alias("p"))
-        .unionAll(ed.select(F.col("v").alias("p")))
-        .groupBy("p")
-        .agg(F.count("*").alias("d"))
-        .agg(
-            F.count("*").cast("long").alias("n_nodes"),
-            F.sum(F.expr("d * (d - 1) div 2")).cast("long").alias("n_wedges"),
-        )
+    nodes = degrees(ed).agg(
+        F.count("*").cast("long").alias("n_nodes"),
+        F.sum(F.expr("d * (d - 1) div 2")).cast("long").alias("n_wedges"),
     )
     n_edges = ed.agg(F.count("*").cast("long").alias("n_edges"))
     tri = triangles(ed).agg(F.count("*").cast("long").alias("n_triangles"))

@@ -33,6 +33,7 @@ from ab_inbev_big_data_case_spark.operators.graph import (
     connected_components,
     connected_components_sql,
 )
+from ab_inbev_big_data_case_spark.operators.relational import prefix_sums
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
 from ab_inbev_big_data_case_spark.operators.lineage import cut
@@ -2631,11 +2632,9 @@ def token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ((distinct_tokens·10⁶) DIV tokens; ties by doc_id), so
     selection is engine-reproducible.
 
-    Scale shape: the global (q desc, doc_id) rank AND the running token
-    total both use the TWO-LEVEL equal-width-bucket decomposition over
-    the BOUNDED quality domain (q ∈ 0..10⁶): bucket-local cumsum windows
-    plus a 16-row token-carry spine — no per-row global window anywhere;
-    the budget is a 1-row broadcast."""
+    Scale shape: the running token total down the (q desc, doc_id) order
+    and the corpus total come from ``prefix_sums``; the budget is
+    scalar arithmetic on that total."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -2648,35 +2647,9 @@ def token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         "toks",
         F.expr("(rich * 1000000) DIV toks").alias("q"),
     )
-    bounds = scored.agg(
-        F.min("q").alias("lo"),
-        F.max("q").alias("hi"),
-        F.expr("sum(toks) DIV 10").alias("budget"),
-    )
-    # bucket 0 holds the HIGHEST quality (rank order is q desc)
-    bucketed = scored.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(hi - q) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("q").desc(), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed.withColumn("cumtok_local", F.sum("toks").over(w_local))
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        bucketed.groupBy("bucket")
-        .agg(F.sum("toks").alias("btok"))
-        .withColumn("carry", F.coalesce(F.sum("btok").over(w_spine), F.lit(0)))
-        .select("bucket", "carry")
-    )
-    sel = (
-        local.join(F.broadcast(carry), "bucket")
-        .withColumn("cumtok", F.col("cumtok_local") + F.col("carry"))
-        .withColumn(
-            "sel", (F.col("cumtok") <= F.col("budget")).cast("int")
-        )
-    )
+    sel = prefix_sums(
+        scored, "q", ["doc_id"], {"cumtok": F.col("toks")}, descending=True
+    ).withColumn("sel", F.expr("cumtok <= cumtok_total DIV 10").cast("int"))
     return sel.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("sel").alias("n_sel"),
@@ -2727,52 +2700,22 @@ def ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     negligible"), the applied face of ``zipf_fit``/``heaps_law_fit``.
 
     Scale shape: one explode+count pass to the type-frequency table; the
-    global (count desc, token) rank AND the cumulative mass use the
-    TWO-LEVEL decomposition over the bounded COUNT-value domain
-    (equal-width count buckets, bucket-local windows, 16-row carry
-    spine); the three K cuts are a broadcast 3-row grid. All integer
-    until the terminal coverage ratios."""
+    global (count desc, token) rank, the cumulative mass and both totals
+    come from ``prefix_sums``; the three K cuts are a broadcast 3-row
+    grid. All integer until the terminal coverage ratios."""
     d = table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(F.split("text", " ")).alias("g"))
         .groupBy("g")
         .agg(F.count("*").alias("c"))
     )
-    bounds = freq.agg(
-        F.min("c").alias("lo"),
-        F.max("c").alias("hi"),
-        F.sum("c").alias("mass"),
-        F.count("*").alias("n_types"),
-    )
-    # bucket 0 = highest counts (rank order is c desc, g asc)
-    bucketed = freq.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(hi - c) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("c").desc(), "g")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed.select(
-        "*",
-        F.count("*").over(w_local).alias("lrk"),
-        F.sum("c").over(w_local).alias("lmass"),
-    )
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        bucketed.groupBy("bucket")
-        .agg(F.count("*").alias("bn"), F.sum("c").alias("bmass"))
-        .select(
-            "bucket",
-            F.coalesce(F.sum("bn").over(w_spine), F.lit(0)).alias("rk_c"),
-            F.coalesce(F.sum("bmass").over(w_spine), F.lit(0)).alias("mass_c"),
-        )
-    )
-    ranked = local.join(F.broadcast(carry), "bucket").select(
-        "n_types",
-        "mass",
-        (F.col("lrk") + F.col("rk_c")).alias("rk"),
-        (F.col("lmass") + F.col("mass_c")).alias("mass_le"),
+    ranked = prefix_sums(
+        freq, "c", ["g"], {"rk": F.lit(1), "mass_le": F.col("c")}, descending=True
+    ).select(
+        F.col("rk_total").alias("n_types"),
+        F.col("mass_le_total").alias("mass"),
+        "rk",
+        "mass_le",
     )
     ks = const_df(spark, [(k,) for k in _COVERAGE_KS], "k INT")
     return (

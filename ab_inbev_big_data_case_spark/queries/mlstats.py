@@ -17,11 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.operators.relational import prefix_sums
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, load_tables, table
 from ab_inbev_big_data_case_spark.operators.graph import (
     basket_pairs,
     basket_pairs_sql,
+    degrees,
     triangle_support,
     triangles,
     triangles_sql,
@@ -1738,8 +1740,9 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``triangle_count`` (whose closed-wedge count this normalizes).
 
     Scale shape: triangles from ``triangles`` (the ``triangle_count``
-    plan); wedge count needs NO join at all — Σd(d−1)/2 over the degree
-    table, one grouped count plus a 1-row aggregate of exact integers."""
+    plan); wedge count needs NO join at all — Σd(d−1)/2 over the
+    ``degrees`` table the triangle order already derives, a 1-row
+    aggregate of exact integers."""
     e = (
         basket_pairs(table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
         .groupBy("u", "v")
@@ -1748,9 +1751,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
     )
     tri = triangles(e).agg(F.count("*").alias("n_tri"))
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
-    w = deg.agg(
+    w = degrees(e).agg(
         F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("n_wedges")
     )
     return tri.crossJoin(F.broadcast(w)).select(
@@ -3173,18 +3174,9 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the entropy/JSD family); no float is ever summed across rows.
 
     Scale shape: the cent-value spine is the ORDER-TOTAL domain (~10⁷
-    distinct values at 100 TB), so the prefix count is TWO-LEVEL (the
-    abc_pareto_class discipline): 16 equal-WIDTH value-range buckets from
-    the exact [min,max] cents (equal cents ⇒ equal bucket, bucket monotone
-    in x_c, and — unlike percentile_approx boundaries — byte-identical on
-    every re-evaluation of the shared subtree: the GK sketch's partial
-    merges are scheduling-order-sensitive, which at sf0.1 put the local
-    cumsum and the carry spine on DIFFERENT bucketings), a window
-    partitioned BY BUCKET for the local cumsum, and a 16-row bucket-total
-    spine for the carry — the only partitionless window, bounded by the
-    bucket count, not the data. The grand total rides the same broadcast
-    1-row aggregate. Provably equal to the oracle's flat cumsum because
-    counts are exact longs and addition is associative."""
+    distinct values at 100 TB), so the prefix count and its total N come
+    from ``prefix_sums``, exactly the oracle's flat cumsum because counts
+    are exact longs."""
     o = table(spark, sf_dir, "orders")
     v = o.select(
         (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
@@ -3193,44 +3185,15 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("bad"),
     )
     cells = v.groupBy("x_c").agg(F.count("*").alias("c"), F.sum("bad").alias("cb"))
-    # nt/bt (grand totals) ride the same broadcast 1-row aggregate as the
-    # bucket bounds: bin totals are cell totals, so no second pass over
-    # the binned subtree is ever planned.
-    bounds = cells.agg(
-        F.min("x_c").alias("lo"),
-        F.max("x_c").alias("hi"),
-        F.sum("c").alias("nt"),
-        F.sum("cb").alias("bt"),
-    )
-    bucketed = cells.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(x_c - lo) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy("x_c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed.withColumn(
-        "cnt_lt_local", F.sum("c").over(w_local) - F.col("c")
-    )
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    spine = (
-        bucketed.groupBy("bucket")
-        .agg(F.sum("c").alias("bucket_c"))
-        .withColumn("carry", F.coalesce(F.sum("bucket_c").over(w_spine), F.lit(0)))
-        .select("bucket", "carry")
-    )
-    walk = local.join(F.broadcast(spine), "bucket").withColumn(
-        "cnt_lt", F.col("cnt_lt_local") + F.col("carry")
-    )
+    walk = prefix_sums(cells, "x_c", [], {"cnt_le": F.col("c")})
     binned = walk.groupBy(
-        F.expr("(cnt_lt * 10) DIV nt").cast("long").alias("bin")
+        F.expr("((cnt_le - c) * 10) DIV cnt_le_total").cast("long").alias("bin")
     ).agg(
         F.sum("c").alias("n"),
         F.sum("cb").alias("n_bad"),
-        F.first("nt").alias("nt"),
-        F.first("bt").alias("bt"),
+        F.first("cnt_le_total").alias("nt"),
     )
+    binned = binned.crossJoin(F.broadcast(cells.agg(F.sum("cb").alias("bt"))))
     good_share = (F.col("n") - F.col("n_bad")) * 1.0 / (F.col("nt") - F.col("bt"))
     bad_share = F.col("n_bad") * 1.0 / F.col("bt")
     woe = F.log(
@@ -3307,11 +3270,9 @@ def kruskal_wallis_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic over identical expression trees (the anova_two_way
     discipline).
 
-    Scale shape: ranks come from the TWO-LEVEL prefix count over the
-    order-cents value spine (equal-width buckets from exact broadcast
-    [min,max] — the woe_iv_binning discipline, deterministic across
-    subtree re-evaluations), so there is no global per-row rank; the
-    only partitionless window is the 16-row bucket-carry spine."""
+    Scale shape: ranks and N come from the ``prefix_sums`` count over the
+    order-cents value spine, so there is no global per-row rank; the tie
+    sum Σ(c³−c) is one 1-row aggregate of the same spine."""
     o = table(spark, sf_dir, "orders")
     v = o.select(
         (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
@@ -3321,39 +3282,13 @@ def kruskal_wallis_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells_gv = v.groupBy("x_c", "grp").agg(F.count("*").alias("cg"))
     cells = cells_gv.groupBy("x_c").agg(F.sum("cg").alias("c"))
-    bounds = cells.agg(
-        F.min("x_c").alias("lo"),
-        F.max("x_c").alias("hi"),
-        F.sum("c").alias("n"),
-        F.sum(
-            F.col("c").cast("decimal(12,0)")
-            * F.col("c").cast("decimal(12,0)")
-            * F.col("c").cast("decimal(12,0)")
-            - F.col("c").cast("decimal(12,0)")
-        ).alias("tsum"),
-    )
-    bucketed = cells.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(x_c - lo) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy("x_c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed.withColumn("cnt_lt_local", F.sum("c").over(w_local) - F.col("c"))
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    spine = (
-        bucketed.groupBy("bucket")
-        .agg(F.sum("c").alias("bucket_c"))
-        .withColumn("carry", F.coalesce(F.sum("bucket_c").over(w_spine), F.lit(0)))
-        .select("bucket", "carry")
-    )
-    walk = local.join(F.broadcast(spine), "bucket").select(
+    c12 = F.col("c").cast("decimal(12,0)")
+    ties = cells.agg(F.sum(c12 * c12 * c12 - c12).alias("tsum"))
+    walk = prefix_sums(cells, "x_c", [], {"cnt_le": F.col("c")}).select(
         "x_c",
         "c",
-        "n",
-        "tsum",
-        (F.col("cnt_lt_local") + F.col("carry")).alias("cnt_lt"),
+        F.col("cnt_le_total").alias("n"),
+        (F.col("cnt_le") - F.col("c")).alias("cnt_lt"),
     )
     rg = (
         cells_gv.join(walk, "x_c")
@@ -3365,7 +3300,6 @@ def kruskal_wallis_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (2 * F.col("cnt_lt") + F.col("c") + 1)
             ).alias("r2"),
             F.first("n").alias("n"),
-            F.first("tsum").alias("tsum"),
         )
     )
     s = rg.agg(
@@ -3374,8 +3308,7 @@ def kruskal_wallis_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r2").cast("double") * F.col("r2").cast("double") / F.col("n_g")
         ).alias("sr"),
         F.first("n").alias("n"),
-        F.first("tsum").alias("tsum"),
-    )
+    ).crossJoin(F.broadcast(ties))
     nd = F.col("n").cast("double")
     h = F.lit(3.0) / (nd * (F.col("n") + 1)) * F.col("sr") - 3 * (F.col("n") + 1)
     c_tie = F.lit(1.0) - F.col("tsum").cast("double") / (nd * F.col("n") * F.col("n") - F.col("n"))
@@ -3867,10 +3800,9 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi-square terms are doubles from exact longs on the 5-row panel.
 
     Scale shape: one shuffle groups the fact to the distinct-cents spine;
-    the cumulative count uses the TWO-LEVEL equal-width-bucket
-    decomposition (the woe_iv_binning discipline — only the 16-row
-    bucket-carry spine is partitionless), and the above/below counts are
-    ONE conditional-sum pass with the 1-row median broadcast."""
+    the cumulative count and N come from ``prefix_sums``, and the
+    above/below counts are ONE conditional-sum pass with the 1-row median
+    broadcast."""
     o = table(spark, sf_dir, "orders")
     v = o.select(
         (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
@@ -3879,27 +3811,8 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("grp"),
     )
     spine = v.groupBy("x_c").agg(F.count("*").alias("c"))
-    bounds = spine.agg(
-        F.min("x_c").alias("lo"), F.max("x_c").alias("hi"), F.sum("c").alias("n")
-    )
-    bucketed = spine.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(x_c - lo) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy("x_c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed.withColumn("cnt_le_local", F.sum("c").over(w_local))
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        bucketed.groupBy("bucket")
-        .agg(F.sum("c").alias("bucket_c"))
-        .withColumn("carry", F.coalesce(F.sum("bucket_c").over(w_spine), F.lit(0)))
-        .select("bucket", "carry")
-    )
-    cum = local.join(F.broadcast(carry), "bucket").select(
-        "x_c", "n", (F.col("cnt_le_local") + F.col("carry")).alias("cnt_le")
+    cum = prefix_sums(spine, "x_c", [], {"cnt_le": F.col("c")}).withColumnRenamed(
+        "cnt_le_total", "n"
     )
     med = (
         cum.filter(F.col("cnt_le") * 2 >= F.col("n"))
@@ -4121,8 +4034,8 @@ def jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     terminal double division.
 
     Scale shape: one fact pass to the pivoted 5-count value spine, the
-    two-level equal-width-bucket prefix of the five counts (16-row carry
-    spine only), one 10-expression aggregate, a 10-row explode."""
+    ``prefix_sums`` of the five counts, one 10-expression aggregate, a
+    10-row explode."""
     o = table(spark, sf_dir, "orders")
     v = o.select(
         (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
@@ -4136,42 +4049,11 @@ def jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(5)
         ]
     )
-    bounds = cells.agg(F.min("x_c").alias("lo"), F.max("x_c").alias("hi"))
-    bucketed = cells.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(x_c - lo) DIV ((hi - lo) DIV 16 + 1)")
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy("x_c")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = bucketed.select(
-        "*",
-        *[
-            F.coalesce(F.sum(f"c{i}").over(w_local), F.lit(0)).alias(f"c{i}lt_l")
-            for i in range(5)
-        ],
-    )
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        bucketed.groupBy("bucket")
-        .agg(*[F.sum(f"c{i}").alias(f"b{i}") for i in range(5)])
-        .select(
-            "bucket",
-            *[
-                F.coalesce(F.sum(f"b{i}").over(w_spine), F.lit(0)).alias(
-                    f"c{i}lt_c"
-                )
-                for i in range(5)
-            ],
-        )
-    )
-    walk = local.join(F.broadcast(carry), "bucket").select(
+    walk = prefix_sums(
+        cells, "x_c", [], {f"c{i}le": F.col(f"c{i}") for i in range(5)}
+    ).select(
         *[F.col(f"c{i}") for i in range(5)],
-        *[
-            (F.col(f"c{i}lt_l") + F.col(f"c{i}lt_c")).alias(f"c{i}lt")
-            for i in range(5)
-        ],
+        *[(F.col(f"c{i}le") - F.col(f"c{i}")).alias(f"c{i}lt") for i in range(5)],
     )
     d38 = "decimal(38,0)"
     sums = walk.agg(

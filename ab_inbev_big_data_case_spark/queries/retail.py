@@ -11,15 +11,11 @@ which product clusters move as one (communities).
 Scale posture:
 
 - ``abc_pareto_class`` needs a cumulative revenue share down the
-  revenue-ranked part spine. Parts are NOT dimension-bounded at 100 TB
-  (TPC-H part grows 200k rows per SF), so the global prefix sum is
-  decomposed two-level exactly like the sweep-line cumsum
-  (``queries/mlstats.py``): percentile boundaries split the spine into
-  value-range buckets (broadcast 1-row array, same trick as RFM's
-  boundary join), the running sum is windowed WITHIN each bucket, and only
-  the 16-row bucket-total spine takes a partitionless window. Bucket
-  boundaries affect execution layout only — the composed result is
-  bit-identical to the plain prefix sum the DuckDB oracle runs, because
+  revenue-ranked part spine, and the gains and Qini charts a global rank
+  of users. Parts and users are NOT dimension-bounded at 100 TB (TPC-H
+  part grows 200k rows per SF), so the running sums and ranks come from
+  ``operators.relational.prefix_sums``, never a flat partitionless window.
+  The result equals the plain prefix sum the DuckDB oracle runs, because
   revenue is summed in exact integer cents.
 - ``item_item_cosine`` fans out per BASKET (k ≤ 7 lineitems per TPC-H
   order ⇒ ≤ 21 pairs), never corpus²; per-item neighbor ranking is a
@@ -42,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.operators.relational import prefix_sums
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
 from ab_inbev_big_data_case_spark.operators.graph import basket_pairs, basket_pairs_sql
@@ -84,8 +81,6 @@ _ABC_SQL = f"""
     FROM classed GROUP BY 1
 """
 
-_ABC_BUCKETS = 16
-
 
 @register("abc_pareto_class", oracle=_ABC_SQL)
 def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,20 +89,10 @@ def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     else C; output is the 3-row class summary (part count + revenue
     share).
 
-    Scale shape: the prefix sum over the revenue-ranked part spine is
-    TWO-LEVEL — 16 equal-width value buckets from the exact [min,max]
-    cents (broadcast 1-row bounds; equal revenues always share a bucket,
-    bucket order is consistent with the global (rev desc, partkey) order,
-    and — unlike the percentile_approx boundaries this first shipped
-    with — byte-identical on every re-evaluation of the shared subtree:
-    GK-sketch partial merges are scheduling-order-sensitive, so the local
-    cumsum and the carry spine could land on DIFFERENT bucketings), a
-    window partitioned BY BUCKET for the local cumsum, and a 16-row
-    bucket-total spine for the carry (the only partitionless window —
-    bounded by the bucket count, not the data). Result is provably equal
-    to the oracle's flat window because cents are exact integers and
-    addition is associative; the class test runs in DECIMAL(38,0) so
-    100 TB totals cannot overflow."""
+    Scale shape: the running revenue down the (rev desc, partkey) order
+    is ``prefix_sums``'s, exactly the oracle's flat window because cents
+    are exact integers; the class test runs in DECIMAL(38,0) so 100 TB
+    totals cannot overflow."""
     li = table(spark, sf_dir, "lineitem")
     prev = li.groupBy("l_partkey").agg(
         (
@@ -124,38 +109,11 @@ def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("rev_c")
     )
-    bounds = prev.agg(
-        F.min("rev_c").alias("lo"),
-        F.max("rev_c").alias("hi"),
-        F.sum("rev_c").alias("total_c"),
-    )
-    # bucket 0 holds the highest revenues; equal rev_c ⇒ equal bucket
-    bucketed = prev.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket",
-        F.expr(f"(hi - rev_c) DIV ((hi - lo) DIV {_ABC_BUCKETS} + 1)"),
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("rev_c").desc(), "l_partkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed.withColumn("cum_local", F.sum("rev_c").over(w_local))
-    # 16-row bucket spine: carry = total cents of all higher-revenue buckets
-    w_spine = (
-        Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    spine = (
-        bucketed.groupBy("bucket")
-        .agg(F.sum("rev_c").alias("bucket_c"))
-        .withColumn("carry", F.coalesce(F.sum("bucket_c").over(w_spine), F.lit(0)))
-        .select("bucket", "carry")
-    )
-    cum = local.join(F.broadcast(spine), "bucket").withColumn(
-        "cum_c", F.col("cum_local") + F.col("carry")
+    cum = prefix_sums(
+        prev, "rev_c", ["l_partkey"], {"cum_c": F.col("rev_c")}, descending=True
     )
     cum_d = F.col("cum_c").cast("decimal(38,0)") * 100
-    tot_d = F.col("total_c").cast("decimal(38,0)")
+    tot_d = F.col("cum_c_total").cast("decimal(38,0)")
     classed = cum.withColumn(
         "abc_class",
         F.when(cum_d <= tot_d * 80, "A")
@@ -164,7 +122,7 @@ def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return classed.groupBy("abc_class").agg(
         F.count("*").alias("n_parts"),
-        F.round(F.sum("rev_c") / F.first("total_c"), 6).alias("rev_share_r"),
+        F.round(F.sum("rev_c") / F.first("cum_c_total"), 6).alias("rev_share_r"),
     )
 
 
@@ -1331,11 +1289,8 @@ def gains_chart_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     captured plus the lift over random targeting — the standard
     model-targeting evaluation curve.
 
-    Scale shape: the global DESCENDING rank uses the two-level
-    decomposition (``gini_concentration``'s pattern — approx percentile
-    bounds pick a bucket, an exact rank window runs WITHIN each bucket,
-    and a ≤10-row carry spine stitches global offsets; bound accuracy
-    affects only load balance, never the exact rank). The decile cumsum
+    Scale shape: the global DESCENDING rank is n + 1 minus
+    ``prefix_sums``'s ascending (score, user_id) rank. The decile cumsum
     is a 10-row bounded-spine window. Ties break on (score, user_id)
     identically in both engines, so decile membership is exact."""
     e = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
@@ -1363,35 +1318,10 @@ def gains_chart_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_pre") > 0)
         .drop("n_pre")
     )
-    # equal-width value buckets from exact [min,max]: deterministic across
-    # re-evaluations of the shared subtree (percentile_approx is not — its
-    # GK partial merges are scheduling-order-sensitive), monotone in
-    # score_c, ties share a bucket; skew only unbalances bucket sizes.
-    bounds = u.agg(F.min("score_c").alias("lo"), F.max("score_c").alias("hi"))
-    bucketed = u.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(score_c - lo) DIV ((hi - lo) DIV 10 + 1)")
-    )
-    w_local = Window.partitionBy("bucket").orderBy("score_c", "user_id")
-    ranked_local = bucketed.select(
-        "bucket", "score_c", "user_id", "buyer",
-        F.row_number().over(w_local).alias("rn"),
-    )
-    spine = ranked_local.groupBy("bucket").agg(F.count("*").alias("bn"))
-    w_spine = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # ≤10-row carry spine
-    offsets = spine.select(
-        "bucket", F.coalesce(F.sum("bn").over(w_spine), F.lit(0)).alias("off")
-    )
-    tot = u.agg(F.count("*").alias("n"))
-    ranked = (
-        ranked_local.join(F.broadcast(offsets), "bucket")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "buyer",
-            (F.col("n") - (F.col("off") + F.col("rn")) + 1).alias("desc_rank"),
-            "n",
-        )
+    ranked = prefix_sums(u, "score_c", ["user_id"], {"rk": F.lit(1)}).select(
+        "buyer",
+        (F.col("rk_total") - F.col("rk") + 1).alias("desc_rank"),
+        F.col("rk_total").alias("n"),
     )
     d = ranked.groupBy(
         (F.expr("((desc_rank - 1) * 10) div n") + 1).alias("decile")
@@ -1481,11 +1411,10 @@ def qini_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     a score can rank buyers perfectly yet have zero UPLIFT if control
     users convert identically.
 
-    Scale shape: identical two-level exact global descending rank as the
-    gains chart (percentile buckets + in-bucket window + carry spine),
-    arm-conditional aggregates on the decile grain, and ≤10-row
-    cumulative windows. All counts exact integers; two final divisions
-    per decile row."""
+    Scale shape: the gains chart's exact global descending rank
+    (``prefix_sums``), arm-conditional aggregates on the decile grain,
+    and ≤10-row cumulative windows. All counts exact integers; two final
+    divisions per decile row."""
     e = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     split = F.lit("2024-01-16").cast("timestamp")
     u = (
@@ -1511,34 +1440,11 @@ def qini_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_pre") > 0)
         .drop("n_pre")
     )
-    # equal-width value buckets from exact [min,max]: deterministic across
-    # re-evaluations of the shared subtree (percentile_approx is not — its
-    # GK partial merges are scheduling-order-sensitive), monotone in
-    # score_c, ties share a bucket; skew only unbalances bucket sizes.
-    bounds = u.agg(F.min("score_c").alias("lo"), F.max("score_c").alias("hi"))
-    bucketed = u.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket", F.expr("(score_c - lo) DIV ((hi - lo) DIV 10 + 1)")
-    )
-    w_local = Window.partitionBy("bucket").orderBy("score_c", "user_id")
-    rl = bucketed.select(
-        "bucket", "score_c", "user_id", "arm", "buyer",
-        F.row_number().over(w_local).alias("rn"),
-    )
-    spine = rl.groupBy("bucket").agg(F.count("*").alias("bn"))
-    w_spine = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = spine.select(
-        "bucket", F.coalesce(F.sum("bn").over(w_spine), F.lit(0)).alias("off")
-    )
-    tot = u.agg(F.count("*").alias("n"))
-    ranked = (
-        rl.join(F.broadcast(offsets), "bucket")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "arm",
-            "buyer",
-            (F.col("n") - (F.col("off") + F.col("rn")) + 1).alias("desc_rank"),
-            "n",
-        )
+    ranked = prefix_sums(u, "score_c", ["user_id"], {"rk": F.lit(1)}).select(
+        "arm",
+        "buyer",
+        (F.col("rk_total") - F.col("rk") + 1).alias("desc_rank"),
+        F.col("rk_total").alias("n"),
     )
     d = ranked.groupBy(
         (F.expr("((desc_rank - 1) * 10) div n") + 1).alias("decile")

@@ -3575,11 +3575,13 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("b.x") - F.col("a.x")).alias("dx"),
     )
     sl = F.col("dy") * F.lit(1.0) / F.col("dx")
-    # TWO-LEVEL exact median selection (the gini/abc_pareto global-rank
-    # pattern) instead of row_number over one partitionless window: range-
-    # partition the days² pair set by the full sort key so partitions are
-    # globally ordered, rank WITHIN partitions in parallel, and add each
-    # partition's prefix-count offset (a ≤ defaultParallelism-row window).
+    # TWO-LEVEL exact median selection instead of row_number over one
+    # partitionless window. The key is a double slope, so this offsets
+    # range partitions rather than ``prefix_sums``'s integer key buckets:
+    # range-partition the days² pair set by the full sort key so
+    # partitions are globally ordered, rank WITHIN partitions in parallel,
+    # and add each partition's prefix-count offset (a ≤
+    # defaultParallelism-row window).
     # global_rank = offset(pid) + rank_in(pid) — exact for any boundary
     # placement, identical tie-breaks (sl, dy, dx), and the 2.9M-row sort
     # runs on every core instead of one.

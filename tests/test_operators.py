@@ -1,12 +1,17 @@
-"""Operator-level tests: as-of join, range join, lineage cuts, writers'
-small-file hygiene, sort/set-op properties."""
+"""Operator-level tests: as-of join, range join, lineage cuts, global
+prefix sums, writers' small-file hygiene, sort/set-op properties."""
 
+import random
 import uuid
+from decimal import Decimal
 
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.operators.joins import asof_join, range_join
 from ab_inbev_big_data_case_spark.operators.lineage import cut, recording
+from ab_inbev_big_data_case_spark.operators.relational import prefix_sums
 
 
 def test_asof_join_exact_semantics(spark):
@@ -52,6 +57,45 @@ def test_range_join_buckets(spark):
     out = range_join(fact, ranges, "v", "lo", "hi")
     got = {r["id"]: r["label"] for r in out.collect()}
     assert got == {1: "lo", 2: "hi", 3: "hi"}
+
+
+def _prefix_rows(kind: str) -> list[tuple]:
+    """(k, t, c, v) rows: key, unique tiebreak, a count, a decimal."""
+    rng = random.Random(20261019)
+    if kind == "mixed":  # duplicate and negative keys, tiebreak decides
+        keys = [rng.randint(-40, 40) for _ in range(300)]
+    elif kind == "one_value":  # hi == lo
+        keys = [-3] * 25
+    else:
+        keys = [-7]
+    return [
+        (k, t, rng.randint(0, 9), Decimal(rng.randint(-10**25, 10**25)))
+        for t, k in enumerate(keys)
+    ]
+
+
+@pytest.mark.parametrize("descending", [False, True], ids=["asc", "desc"])
+@pytest.mark.parametrize("kind", ["mixed", "one_value", "single_row"])
+def test_prefix_sums_match_a_flat_running_sum(spark, kind, descending):
+    """Each running sum equals a flat window over the whole order
+    ``(k [desc], t)``, each total a plain aggregate, for a long count, a
+    decimal(38,0) sum and a rank, with the flat window's types."""
+    df = spark.createDataFrame(
+        _prefix_rows(kind), "k long, t long, c long, v decimal(38,0)"
+    )
+    sums = {"cnt": F.col("c"), "amt": F.col("v"), "rk": F.lit(1)}
+    got = prefix_sums(df, "k", ["t"], sums, descending=descending)
+
+    order = F.col("k").desc() if descending else F.col("k")
+    w = Window.orderBy(order, "t").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    flat = df.select("t", *(F.sum(e).over(w).alias(n) for n, e in sums.items()))
+    totals = df.agg(*(F.sum(e).alias(f"{n}_total") for n, e in sums.items()))
+    want = flat.crossJoin(totals)
+
+    cols = ["t", *(c for n in sums for c in (n, f"{n}_total"))]
+    assert got.columns == [*df.columns, *cols[1:]]
+    assert dict(got.select(cols).dtypes) == dict(want.select(cols).dtypes)
+    assert sorted(got.select(cols).collect()) == sorted(want.select(cols).collect())
 
 
 def test_cut_labels_its_jobs_and_restores_the_callers_properties(spark):

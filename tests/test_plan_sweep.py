@@ -33,7 +33,7 @@ from plan_shapes import n_partitionless
 #: bounded-spine window (audited r6; grow this ONLY with a docstring
 #: justification in the query).
 PARTITIONLESS_ALLOWED = {
-    "abc_pareto_class": 1,          # pruned local-survivor rank
+    "abc_pareto_class": 1,          # prefix_sums 16-row carry spine (running revenue)
     "bradley_terry_strengths": 7,   # 25-row nation strength table, per-round Σ normalize (mlstats.py:4908)
     "survey_raking_ipf": 2,         # 15-cell (priority × status) panel: Σ sample + Σ population for the sampling fraction
     "cramers_v_matrix": 3,          # ≤25×5 contingency-cell tables, one order-less N per pair (distmetrics.py:2572)
@@ -51,8 +51,8 @@ PARTITIONLESS_ALLOWED = {
     "error_rate_changepoint": 4,    # daily spine prefix stats
     "esd_outlier_stats": 12,        # daily spine: 3 rounds × (n/S/Q over remaining days + argmax row_number)
     "forecast_method_bakeoff": 5,   # day-spine index + 28-row holdout windows
-    "gains_chart_deciles": 5,       # ≤10-row carry + decile cumsum/total spines
-    "gini_concentration": 1,        # bounded decile spine
+    "gains_chart_deciles": 5,       # 16-row carry + decile cumsum/total spines
+    "gini_concentration": 1,        # prefix_sums 16-row carry spine (rank)
     "global_sort": 1,               # explicit total-order contract
     "granger_f_lite": 2,            # daily-spine lag pair (calendar-bounded)
     "ransac_line_fit": 1,           # daily-spine hash-rank seed pick (r12; calendar-bounded)
@@ -73,7 +73,7 @@ PARTITIONLESS_ALLOWED = {
     "kruskal_wallis_test": 1,       # 16-row bucket-carry spine (two-level rank)
     "ks_two_sample": 6,             # pooled grouped-value spine
     "logrank_test": 2,              # KM day-spine descending at-risk cumsums
-    "lorenz_curve_points": 2,       # decile spine
+    "lorenz_curve_points": 2,       # 16-row carry spine (rank) + decile spine
     "mann_kendall_theil_sen": 4,    # daily spine pairwise stats
     "matrix_profile_daily": 16,     # day-spine window build ×2 join sides + 2 ranks
     "max_drawdown_daily": 6,        # day-spine running max, reused per branch
@@ -82,7 +82,7 @@ PARTITIONLESS_ALLOWED = {
     "mood_median_test": 2,          # 16-row bucket-carry spine (median branch)
     "ngram_coverage_curve": 2,      # 16-row count-carry spine (rank + mass)
     "energy_distance_two_sample": 4,  # 16-row carry spine, 4 prefix quantities
-    "wasserstein1_distance": 3,     # 16-row carry (2 counts) + boundary-min spine
+    "wasserstein1_distance": 2,     # 16-row carry spine (2 counts)
     "jonckheere_terpstra": 4,       # 16-row carry spine, 5-group prefix counts
     "pacf_lags": 3,                 # daily spine lag triplet
     "page_hinkley_drift": 6,        # day-spine prefix sums ×3 + row_number + order-less Σ/count (r9 docstring "Scale shape")
@@ -98,11 +98,11 @@ PARTITIONLESS_ALLOWED = {
     "spc_control_chart": 1,         # day-spine gaps-and-islands row_number
     "spearman_corr_lengths": 2,    # two value-domain rank spines
     "sprt_sequential_test": 3,      # day-spine LLR cumsum + the unordered crossing-min itself (r10 sweep counts it)
-    "token_budget_pack": 1,         # 16-row token-carry spine (two-level rank)
+    "token_budget_pack": 1,         # 16-row token-carry spine (running tokens)
     "ts_decomposition": 2,          # daily spine
     "wilcoxon_signed_rank": 1,      # |diff| rank spine (audit-panel sized)
     "window_ntile": 1,              # global ntile is the operator semantic
-    "woe_iv_binning": 1,            # cent-value spine cumsum
+    "woe_iv_binning": 1,            # 16-row carry spine (prefix count)
     "zipf_fit": 1,                  # capped vocab rank spine
     "binary_segmentation_changepoints": 3,  # day-spine CUSUM, re-listed per consumer of the split day
     "hurst_rs_lite": 1,             # daily-spine row index, behind its cut

@@ -505,16 +505,6 @@ def test_null_safe_join_stays_hash_join(spark, sf_dir):
     assert ("HashJoin" in plan) or ("SortMergeJoin" in plan)
 
 
-def test_abc_two_level_cumsum(spark, sf_dir):
-    """abc_pareto_class decomposes the revenue-ranked prefix sum like
-    sweep-line: the full-data cumsum window is PARTITIONED by the
-    percentile bucket; only the 16-row bucket-total carry spine runs
-    partitionless — exactly one such spec."""
-    plan = _plan(QUERIES["abc_pareto_class"](spark, sf_dir))
-    assert n_partitionless(plan) == 1
-    assert "bucket" in plan
-
-
 def test_item_cosine_window_partitioned_by_item(spark, sf_dir):
     """Per-item neighbor ranking must never be a global sort, and the
     count joins stay equi-joins (item-cardinality sides — no broadcast
@@ -549,14 +539,38 @@ def test_leaderboard_rank_is_group_limited(spark, sf_dir):
     assert n_partitionless(plan) == 0
 
 
-def test_gini_two_level_rank(spark, sf_dir):
-    """gini_concentration's global ascending rank must be bucket-
-    partitioned with exactly one partitionless spec — the 16-row
-    bucket-count carry spine (the abc_pareto_class decomposition run in
-    reverse), never a flat full-data row_number."""
-    plan = _plan(QUERIES["gini_concentration"](spark, sf_dir))
-    assert n_partitionless(plan) == 1
+#: the queries whose global running sum or rank is ``prefix_sums``, with
+#: the partitionless window specs each plans in all: one carry window per
+#: running sum (listed once per plan branch that reads it), plus the
+#: query's own bounded decile-spine windows.
+PREFIX_SUM_QUERIES = {
+    "abc_pareto_class": 1,
+    "gini_concentration": 1,
+    "lorenz_curve_points": 2,
+    "energy_distance_two_sample": 4,
+    "wasserstein1_distance": 2,
+    "qq_plot_deciles": 2,
+    "cvm_two_sample": 2,
+    "woe_iv_binning": 1,
+    "kruskal_wallis_test": 1,
+    "mood_median_test": 2,
+    "jonckheere_terpstra": 4,
+    "gains_chart_deciles": 5,
+    "qini_curve_deciles": 5,
+    "token_budget_pack": 1,
+    "ngram_coverage_curve": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(PREFIX_SUM_QUERIES))
+def test_global_prefix_sums_are_bucket_partitioned(spark, sf_dir, name):
+    """A global running sum or rank is bucket-partitioned: the full-data
+    window is partitioned by the key bucket, and only the ≤ 16-row
+    bucket carry spine (plus the query's own decile spine) runs
+    partitionless — never a flat full-data window."""
+    plan = _plan(QUERIES[name](spark, sf_dir))
     assert "bucket" in plan
+    assert n_partitionless(plan) == PREFIX_SUM_QUERIES[name]
 
 
 def test_jsd_pair_join_no_cartesian(spark, sf_dir):

@@ -12,6 +12,9 @@ fails in CI, not in review):
 4. RDD access only at the audited partition-count probe.
 5. Every lineage cut goes through ``operators.lineage.cut``: no
    ``localCheckpoint`` call anywhere else.
+6. Every global running sum or rank goes through
+   ``operators.relational.prefix_sums``: the equal-width key-bucket
+   expression ``DIV ((hi - lo) DIV`` appears nowhere else.
 """
 
 from __future__ import annotations
@@ -117,3 +120,16 @@ def test_no_local_checkpoint_outside_lineage():
         and node.func.attr == "localCheckpoint"
     ]
     assert offenders == []
+
+
+def test_key_buckets_only_in_prefix_sums():
+    """``prefix_sums`` is the one two-level prefix sum; a hand-written
+    equal-width bucket expression elsewhere is a second copy of its
+    bucket-and-carry spine."""
+    bucket_expr = r"DIV\s*\(\(\s*\w*hi\s*-\s*\w*lo\s*\)\s*DIV"
+    sites = {
+        _rel(path): n
+        for path in _py_files()
+        if (n := _count_code_occurrences(path, bucket_expr))
+    }
+    assert sites == {"operators/relational.py": 1}
