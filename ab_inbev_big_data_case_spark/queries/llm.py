@@ -1,7 +1,7 @@
 """LLM-data-pipeline harness queries (SURVEY.md §2.2 "LLM-data-pipeline
 operators"): dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard),
-similarity search (brute-force + LSH ANN), text analysis, multimodal
-plumbing.
+similarity search (brute-force + LSH ANN + IVF ANN), text analysis,
+multimodal plumbing.
 
 Every hash-based oracle mirrors the engine's portable sha256 hash
 (``functions.text``): ``('0x' || substr(sha256(x),1,15))::BIGINT`` ≡
@@ -32,14 +32,30 @@ from ab_inbev_big_data_case_spark.llm.multimodal import (
     extract_media_metadata,
 )
 from ab_inbev_big_data_case_spark.llm.similarity import (
+    AUDIT_QUERY_SQL,
+    _BUCKET_SQL,
+    _CAP_MOD_SQL,
+    _DOT,
+    _IVF_ASSIGN_SQL,
+    _NLIST_CAP,
+    _NORM,
+    _SQRT_MOD_SQL,
+    _ivf_assign_sql,
     ann_lsh_search,
+    audit_query,
     quantize_int8,
     capped_centroid_modulus,
     cosine_topk,
+    cosine_topk_sql,
     embedding_near_dup,
     hyperplane_buckets,
     ivf_assign,
+    ivf_candidates,
+    ivf_candidates_sql,
     ivf_search,
+    lsh_ranked_sql,
+    recall_at_k,
+    recall_at_k_sql,
     sqrt_centroid_modulus,
     with_l2_norm,
 )
@@ -496,38 +512,60 @@ def tfidf_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------- similarity search
 
-_DOT = """(SELECT sum(a * b) FROM (SELECT unnest({x})::DOUBLE AS a, unnest({y})::DOUBLE AS b) z)"""
-_NORM = """sqrt((SELECT sum(a * a) FROM (SELECT unnest({x})::DOUBLE AS a) z{tag}))"""
+
+def _exact_topk(e: DataFrame, k: int) -> DataFrame:
+    """The audit sample's exact cosine top-k: (query_id, cand_id, cosine,
+    rank). Twin: ``cosine_topk_sql``."""
+    q = e.filter(audit_query(F.col("vec_id")))
+    return cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", k)
+
+
+def _lsh_topk(e: DataFrame, k: int) -> DataFrame:
+    """The audit sample's LSH top-k (4 tables × 4 planes, no cosine floor):
+    (query_id, cand_id, cosine, rk), bucket-mates ranked by (cosine desc,
+    cand_id). Twin: ``lsh_ranked_sql`` (callers keep ``rk <= k``)."""
+    lsh = ann_lsh_search(
+        e, "vec_id", "embedding", query_filter=audit_query,
+        n_planes=4, n_tables=4, min_cosine=-1.0, dim=64,
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc_nulls_last(), F.col("cand_id")
+    )
+    return lsh.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
+def _ivf_topk(e: DataFrame, modulus: int, k: int) -> DataFrame:
+    """The audit sample's IVF top-k, 2 probes, centroids the ids divisible
+    by ``modulus``: (query_id, cand_id, cosine, rank). Twin:
+    ``_ivf_topk_sql``."""
+    return ivf_search(
+        e, "vec_id", "embedding", query_filter=audit_query,
+        centroid_filter=lambda vid: vid % modulus == 0, n_probe=2, k=k,
+    )
+
+
+def _ivf_topk_sql(cte: str, k: int, mod_sql: str) -> str:
+    """Twin of :func:`_ivf_topk`: ``<cte>(query_id, cand_id, cosine, rk)``."""
+    return f"""{ivf_candidates_sql(cte + '_cand', 2, mod_sql)},
+    {cte} AS (
+        SELECT * FROM (
+            SELECT query_id, cand_id, cosine, row_number() OVER (
+                PARTITION BY query_id ORDER BY cosine DESC NULLS LAST, cand_id) AS rk
+            FROM {cte}_cand
+        ) WHERE rk <= {k}
+    )"""
 
 
 @register(
     "cosine_topk",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 500),
-    c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings),
-    pairs AS (
-        SELECT qid AS query_id, cid AS cand_id,
-               round({_DOT.format(x='qv', y='cv')} /
-                     ({_NORM.format(x='qv', tag='q')} * {_NORM.format(x='cv', tag='c')}),
-                     3) AS cosine
-        FROM q, c WHERE cid != qid
-    )
-    SELECT query_id, cand_id, cosine, rank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine DESC NULLS LAST, cand_id) AS rank
-        FROM pairs
-    ) WHERE rank <= 5
+    WITH {cosine_topk_sql('exact', 5)}
+    SELECT query_id, cand_id, cosine, rk AS rank FROM exact
     """,
 )
 def cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for the query subset (vec_id % 50 = 0 AND vec_id < 500).
-
-    Cosine is quantized to 3 decimals before ranking (tie-broken by cand_id)
-    so the ordering is FP-implementation-independent.
-    """
-    e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    return cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
+    """Brute-force cosine top-5 for the audit query sample."""
+    return _exact_topk(table(spark, sf_dir, "embeddings"), 5)
 
 
 @register(
@@ -553,35 +591,6 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Multi-table LSH: 4 tables × 4 planes; global plane index g = tbl*4 + il.
-# Coefficients are sha256-derived in Python (llm.similarity.lsh_hyperplane)
-# and inlined as one flat 16×64 literal so Spark and DuckDB share them.
-from ab_inbev_big_data_case_spark.llm.similarity import lsh_hyperplane  # noqa: E402
-
-_PLANES_FLAT = "[" + ",".join(
-    str(lsh_hyperplane(g, j)) for g in range(16) for j in range(64)
-) + "]"
-
-_BUCKET_SQL = f"""
-    planes AS (
-        SELECT (r // 64) AS g, (r % 64) AS j, ({_PLANES_FLAT})[r + 1] AS h
-        FROM range(1024) t(r)
-    ),
-    proj AS (
-        SELECT e.vec_id, p.g // 4 AS tbl, p.g % 4 AS il,
-               sum(e.embedding[p.j + 1]::DOUBLE * p.h::DOUBLE) AS proj
-        FROM embeddings e CROSS JOIN planes p
-        GROUP BY 1, 2, 3
-    ),
-    buckets AS (
-        SELECT vec_id, tbl,
-               sum(CASE WHEN proj > 0 THEN (1::BIGINT << il::INT) ELSE 0 END)::BIGINT AS bucket
-        FROM proj
-        GROUP BY 1, 2
-    )
-"""
-
-
 @register(
     "ann_lsh_buckets",
     oracle=f"""
@@ -602,23 +611,8 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_lsh_search",
     oracle=f"""
-    WITH {_BUCKET_SQL},
-    qb AS (SELECT vec_id AS query_id, tbl, bucket FROM buckets WHERE vec_id % 50 = 0 AND vec_id < 500),
-    pairs AS (
-        SELECT DISTINCT qb.query_id, cb.vec_id AS cand_id
-        FROM qb JOIN buckets cb USING (tbl, bucket)
-        WHERE cb.vec_id != qb.query_id
-    ),
-    sims AS (
-        SELECT p.query_id, p.cand_id,
-               round({_DOT.format(x='q.embedding', y='c.embedding')} /
-                     ({_NORM.format(x='q.embedding', tag='q')} *
-                      {_NORM.format(x='c.embedding', tag='c')}), 3) AS cosine
-        FROM pairs p
-        JOIN embeddings q ON q.vec_id = p.query_id
-        JOIN embeddings c ON c.vec_id = p.cand_id
-    )
-    SELECT query_id, cand_id, cosine FROM sims WHERE cosine >= 0.1
+    WITH {lsh_ranked_sql('lsh')}
+    SELECT query_id, cand_id, cosine FROM lsh WHERE cosine >= 0.1
     """,
 )
 def ann_lsh_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -630,7 +624,7 @@ def ann_lsh_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         e,
         "vec_id",
         "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
+        query_filter=audit_query,
         n_planes=4,
         n_tables=4,
         min_cosine=0.1,
@@ -948,42 +942,6 @@ def corpus_curation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ IVF ANN + embedding dedup
 
-# IVF coarse quantizer shared CTEs: centroids are a deterministic corpus
-# subset sized by the √N rule — modulus m = floor(√N) selects K ≈ N/√N = √N
-# centroids (FAISS's nlist ≈ √N guidance). K must NOT be a fixed fraction
-# of N: the r6 sf1 scale curve measured the old `% 29` rule (K ∝ N) at
-# 47× wall-clock for 10× data — the brute nearest-centroid assignment is
-# N×K work, so K ∝ N makes it quadratic; K = √N balances assignment and
-# within-cell verification at N^1.5 (both sides of the IVF trade).
-# Assignment = argmax rounded cosine, ties to the smaller cell id. The
-# oracle states the argmax as a row_number window; the Spark side computes
-# the same thing as a struct-max aggregate (map-side combinable — see
-# llm.similarity.ivf_assign).
-_SQRT_MOD_SQL = (
-    "(SELECT greatest(1, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM embeddings)"
-)
-_IVF_ASSIGN_SQL = f"""
-    cents AS (
-        SELECT vec_id AS cell_id, embedding AS cv FROM embeddings
-        WHERE vec_id % {_SQRT_MOD_SQL} = 0
-    ),
-    scored AS (
-        SELECT e.vec_id, c.cell_id,
-               round({_DOT.format(x='e.embedding', y='c.cv')} /
-                     ({_NORM.format(x='e.embedding', tag='a')} *
-                      {_NORM.format(x='c.cv', tag='b')}), 3) AS cos
-        FROM embeddings e CROSS JOIN cents c
-    ),
-    assign AS (
-        SELECT vec_id, cell_id FROM (
-            SELECT vec_id, cell_id, row_number() OVER (
-                PARTITION BY vec_id ORDER BY cos DESC NULLS LAST, cell_id) AS rn
-            FROM scored
-        ) WHERE rn = 1
-    )
-"""
-
-
 @register(
     "ivf_cells",
     oracle=f"""
@@ -997,7 +955,7 @@ def ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest centroid (broadcast K centroids, one narrow corpus pass, struct-
     max argmax). The inverted-file partitioning step of IVF ANN."""
     e = table(spark, sf_dir, "embeddings")
-    _m = sqrt_centroid_modulus(e)
+    _m = sqrt_centroid_modulus(e.count())
     assign = ivf_assign(e, "vec_id", "embedding", lambda vid, m=_m: vid % m == 0)
     return assign.groupBy("cell_id").agg(F.count("*").alias("n_vecs"))
 
@@ -1005,56 +963,16 @@ def ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ivf_search",
     oracle=f"""
-    WITH {_IVF_ASSIGN_SQL},
-    q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT q.query_id, c.cell_id, row_number() OVER (
-                PARTITION BY q.query_id ORDER BY
-                round({_DOT.format(x='q.qv', y='c.cv')} /
-                      ({_NORM.format(x='q.qv', tag='p')} *
-                       {_NORM.format(x='c.cv', tag='q')}), 3) DESC NULLS LAST,
-                c.cell_id) AS rn
-            FROM q CROSS JOIN cents c
-        ) WHERE rn <= 2
-    ),
-    cand AS (
-        SELECT DISTINCT p.query_id, a.vec_id AS cand_id
-        FROM probes p JOIN assign a USING (cell_id)
-        WHERE a.vec_id != p.query_id
-    ),
-    sims AS (
-        SELECT cd.query_id, cd.cand_id,
-               round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                     ({_NORM.format(x='x.embedding', tag='x')} *
-                      {_NORM.format(x='y.embedding', tag='y')}), 3) AS cosine
-        FROM cand cd
-        JOIN embeddings x ON x.vec_id = cd.query_id
-        JOIN embeddings y ON y.vec_id = cd.cand_id
-    )
-    SELECT query_id, cand_id, cosine, rank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine DESC NULLS LAST, cand_id) AS rank
-        FROM sims
-    ) WHERE rank <= 5
+    WITH {_ivf_topk_sql('ivfk', 5, _SQRT_MOD_SQL)}
+    SELECT query_id, cand_id, cosine, rk AS rank FROM ivfk
     """,
 )
 def ivf_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN search: each query (vec_id % 50 = 0 AND vec_id < 500) probes its 2 nearest
-    cells and ranks only vectors assigned there — the inverted-file scale
-    path beside the hyperplane-LSH one (`ann_lsh_search`)."""
+    """IVF ANN search: each audit query probes its 2 nearest cells and
+    ranks only vectors assigned there — the inverted-file scale path beside
+    the hyperplane-LSH one (`ann_lsh_search`)."""
     e = table(spark, sf_dir, "embeddings")
-    _m = sqrt_centroid_modulus(e)
-    return ivf_search(
-        e,
-        "vec_id",
-        "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        centroid_filter=lambda vid, m=_m: vid % m == 0,
-        n_probe=2,
-        k=5,
-    )
+    return _ivf_topk(e, sqrt_centroid_modulus(e.count()), 5)
 
 
 @register(
@@ -1792,7 +1710,7 @@ def semdedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ab_inbev_big_data_case_spark.llm.similarity import semdedup_cells
 
     e = table(spark, sf_dir, "embeddings")
-    _m = sqrt_centroid_modulus(e)
+    _m = sqrt_centroid_modulus(e.count())
     return semdedup_cells(
         e, "vec_id", "embedding", threshold=0.25,
         centroid_filter=lambda vid, m=_m: vid % m == 0,
@@ -2647,49 +2565,9 @@ def conversation_threading(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------- ANN recall audit
 
 _ANN_RECALL_SQL = f"""
-    WITH {_BUCKET_SQL},
-    q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT qid AS query_id, cand_id FROM (
-            SELECT q.qid, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.qid
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='q')} *
-                              {_NORM.format(x='c.embedding', tag='c')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.qid
-        ) WHERE rk <= 5
-    ),
-    qb AS (SELECT vec_id AS query_id, tbl, bucket FROM buckets
-           WHERE vec_id % 50 = 0 AND vec_id < 500),
-    cand AS (
-        SELECT DISTINCT qb.query_id, cb.vec_id AS cand_id
-        FROM qb JOIN buckets cb USING (tbl, bucket)
-        WHERE cb.vec_id != qb.query_id
-    ),
-    annk AS (
-        SELECT query_id, cand_id FROM (
-            SELECT p.query_id, p.cand_id,
-                   row_number() OVER (
-                       PARTITION BY p.query_id
-                       ORDER BY round({_DOT.format(x='eq.embedding', y='ec.embedding')} /
-                             ({_NORM.format(x='eq.embedding', tag='q')} *
-                              {_NORM.format(x='ec.embedding', tag='c')}), 3)
-                             DESC NULLS LAST, p.cand_id) AS rk
-            FROM cand p
-            JOIN embeddings eq ON eq.vec_id = p.query_id
-            JOIN embeddings ec ON ec.vec_id = p.cand_id
-        ) WHERE rk <= 5
-    )
-    SELECT e.query_id,
-           count(*) AS n_exact,
-           count(a.cand_id) AS n_hits,
-           round(count(a.cand_id) * 1.0 / count(*), 4) AS recall_r
-    FROM exact e
-    LEFT JOIN annk a ON a.query_id = e.query_id AND a.cand_id = e.cand_id
-    GROUP BY e.query_id
+    WITH {cosine_topk_sql('exact', 5)}, {lsh_ranked_sql('lsh')},
+    annk AS (SELECT * FROM lsh WHERE rk <= 5)
+    {recall_at_k_sql('exact', 'annk')}
 """
 
 
@@ -2701,135 +2579,33 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the within-tolerance approx aggregates: the approximation ships
     WITH its measured quality, not a promise).
 
-    Both rankings quantize cosine to 3 decimals with cand_id tiebreaks, so
-    the top-5 SETS are FP-implementation-independent and the recall is
-    exact arithmetic. Scale shape: the exact side is the declared
-    brute-force baseline over the bounded query subset (broadcast query
-    side); the ANN side ranks only bucket-mates — at 100 TB the audit runs
-    on a sampled query set exactly like this one."""
+    Scale shape: the exact side is the declared brute-force baseline over
+    the bounded query subset (broadcast query side); the ANN side ranks
+    only bucket-mates — at 100 TB the audit runs on a sampled query set
+    exactly like this one."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
-    cand = ann_lsh_search(
-        e,
-        "vec_id",
-        "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        n_planes=4,
-        n_tables=4,
-        min_cosine=-1.0,  # recall audit ranks ALL bucket-mates, no floor
-        dim=64,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc_nulls_last(), F.col("cand_id")
-    )
-    annk = (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "cand_id", F.lit(1).alias("hit"))
-    )
-    return (
-        exact.select("query_id", "cand_id")
-        .join(annk, ["query_id", "cand_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_exact"),
-            F.count("hit").alias("n_hits"),
-            F.round(F.count("hit") / F.count("*"), 4).alias("recall_r"),
-        )
-    )
+    return recall_at_k(_exact_topk(e, 5), _lsh_topk(e, 5))
 
 
-_IVF_RECALL_SQL = f"""
-    WITH {_IVF_ASSIGN_SQL},
-    q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT query_id, cand_id FROM (
-            SELECT q.query_id, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='a')} *
-                              {_NORM.format(x='c.embedding', tag='b')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.query_id
-        ) WHERE rk <= 5
-    ),
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT q.query_id, c.cell_id, row_number() OVER (
-                PARTITION BY q.query_id ORDER BY
-                round({_DOT.format(x='q.qv', y='c.cv')} /
-                      ({_NORM.format(x='q.qv', tag='p')} *
-                       {_NORM.format(x='c.cv', tag='q')}), 3) DESC NULLS LAST,
-                c.cell_id) AS rn
-            FROM q CROSS JOIN cents c
-        ) WHERE rn <= 2
-    ),
-    cand AS (
-        SELECT DISTINCT p.query_id, a.vec_id AS cand_id
-        FROM probes p JOIN assign a USING (cell_id)
-        WHERE a.vec_id != p.query_id
-    ),
-    ivfk AS (
-        SELECT query_id, cand_id FROM (
-            SELECT cd.query_id, cd.cand_id,
-                   row_number() OVER (
-                       PARTITION BY cd.query_id
-                       ORDER BY round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                             ({_NORM.format(x='x.embedding', tag='x')} *
-                              {_NORM.format(x='y.embedding', tag='y')}), 3)
-                             DESC NULLS LAST, cd.cand_id) AS rk
-            FROM cand cd
-            JOIN embeddings x ON x.vec_id = cd.query_id
-            JOIN embeddings y ON y.vec_id = cd.cand_id
-        ) WHERE rk <= 5
-    )
-    SELECT e.query_id,
-           count(*) AS n_exact,
-           count(i.cand_id) AS n_hits,
-           round(count(i.cand_id) * 1.0 / count(*), 4) AS recall_r
-    FROM exact e
-    LEFT JOIN ivfk i ON i.query_id = e.query_id AND i.cand_id = e.cand_id
-    GROUP BY e.query_id
+def _ivf_recall_sql(mod_sql: str) -> str:
+    """Recall@5 of the audit's IVF top-5 against the exact top-5, for the
+    centroid modulus ``mod_sql``."""
+    return f"""
+    WITH {cosine_topk_sql('exact', 5)}, {_ivf_topk_sql('ivfk', 5, mod_sql)}
+    {recall_at_k_sql('exact', 'ivfk')}
 """
 
 
-@register("ivf_recall_eval", oracle=_IVF_RECALL_SQL)
+@register("ivf_recall_eval", oracle=_ivf_recall_sql(_SQRT_MOD_SQL))
 def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the IVF n_probe=2 search against the exact brute cosine
     ranking — the inverted-file sibling of ``ann_recall_eval``, closing
     the audit pair over both published ANN scale paths (tuning n_probe /
     the centroid rule trades this measured recall against candidate
-    volume; the audit is what makes that trade visible).
-
-    Same FP-independence contract: both rankings quantize cosine to 3
-    decimals with cand_id tiebreaks; recall is exact arithmetic over the
-    resulting sets."""
+    volume; the audit is what makes that trade visible)."""
     e = table(spark, sf_dir, "embeddings")
-    _m = sqrt_centroid_modulus(e)
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
-    ivfk = ivf_search(
-        e,
-        "vec_id",
-        "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        centroid_filter=lambda vid, m=_m: vid % m == 0,
-        n_probe=2,
-        k=5,
-    ).select("query_id", "cand_id", F.lit(1).alias("hit"))
-    return (
-        exact.select("query_id", "cand_id")
-        .join(ivfk, ["query_id", "cand_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_exact"),
-            F.count("hit").alias("n_hits"),
-            F.round(F.count("hit") / F.count("*"), 4).alias("recall_r"),
-        )
-    )
+    m = sqrt_centroid_modulus(e.count())
+    return recall_at_k(_exact_topk(e, 5), _ivf_topk(e, m, 5))
 
 
 # ------------------------------------------- split leakage audit
@@ -3085,65 +2861,14 @@ def log_odds_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RRF_K = 60
 
-_RRF_SQL = f"""
-    WITH {_BUCKET_SQL}, {_IVF_ASSIGN_SQL},
-    q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    qb AS (SELECT vec_id AS query_id, tbl, bucket FROM buckets
-           WHERE vec_id % 50 = 0 AND vec_id < 500),
-    lsh_cand AS (
-        SELECT DISTINCT qb.query_id, cb.vec_id AS cand_id
-        FROM qb JOIN buckets cb USING (tbl, bucket)
-        WHERE cb.vec_id != qb.query_id
-    ),
-    lsh_rank AS (
-        SELECT query_id, cand_id, rk FROM (
-            SELECT p.query_id, p.cand_id,
-                   row_number() OVER (
-                       PARTITION BY p.query_id
-                       ORDER BY round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                             ({_NORM.format(x='x.embedding', tag='a')} *
-                              {_NORM.format(x='y.embedding', tag='b')}), 3)
-                             DESC NULLS LAST, p.cand_id) AS rk
-            FROM lsh_cand p
-            JOIN embeddings x ON x.vec_id = p.query_id
-            JOIN embeddings y ON y.vec_id = p.cand_id
-        ) WHERE rk <= 10
-    ),
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT q.query_id, c.cell_id, row_number() OVER (
-                PARTITION BY q.query_id ORDER BY
-                round({_DOT.format(x='q.qv', y='c.cv')} /
-                      ({_NORM.format(x='q.qv', tag='p')} *
-                       {_NORM.format(x='c.cv', tag='q')}), 3) DESC NULLS LAST,
-                c.cell_id) AS rn
-            FROM q CROSS JOIN cents c
-        ) WHERE rn <= 2
-    ),
-    ivf_cand AS (
-        SELECT DISTINCT p.query_id, a.vec_id AS cand_id
-        FROM probes p JOIN assign a USING (cell_id)
-        WHERE a.vec_id != p.query_id
-    ),
-    ivf_rank AS (
-        SELECT query_id, cand_id, rk FROM (
-            SELECT cd.query_id, cd.cand_id,
-                   row_number() OVER (
-                       PARTITION BY cd.query_id
-                       ORDER BY round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                             ({_NORM.format(x='x.embedding', tag='c')} *
-                              {_NORM.format(x='y.embedding', tag='d')}), 3)
-                             DESC NULLS LAST, cd.cand_id) AS rk
-            FROM ivf_cand cd
-            JOIN embeddings x ON x.vec_id = cd.query_id
-            JOIN embeddings y ON y.vec_id = cd.cand_id
-        ) WHERE rk <= 10
-    ),
+_RRF_HYBRID_SQL = f"""
+    WITH {lsh_ranked_sql('lsh')}, {_ivf_topk_sql('ivfk', 10, _SQRT_MOD_SQL)},
     fused AS (
         SELECT query_id, cand_id,
                sum(1.0 / ({_RRF_K} + rk)) AS rrf
-        FROM (SELECT * FROM lsh_rank UNION ALL SELECT * FROM ivf_rank)
+        FROM (SELECT query_id, cand_id, rk FROM lsh WHERE rk <= 10
+              UNION ALL
+              SELECT query_id, cand_id, rk FROM ivfk)
         GROUP BY 1, 2
     )
     SELECT query_id, cand_id, rrf_r, fused_rank FROM (
@@ -3156,7 +2881,7 @@ _RRF_SQL = f"""
 """
 
 
-@register("rrf_hybrid_search", oracle=_RRF_SQL)
+@register("rrf_hybrid_search", oracle=_RRF_HYBRID_SQL)
 def rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (k=60) of the two published ANN indexes —
     hyperplane-LSH and IVF top-10 lists merge into one ranking per query
@@ -3170,31 +2895,9 @@ def rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand) and a per-query rank window — all bounded by the top-10 lists.
     RRF scores quantize at 6 with cand_id tiebreaks before ranking."""
     e = table(spark, sf_dir, "embeddings")
-    _m = sqrt_centroid_modulus(e)
-    lsh = ann_lsh_search(
-        e, "vec_id", "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        n_planes=4, n_tables=4, min_cosine=-1.0, dim=64,
-    )
-    ivf = ivf_search(
-        e, "vec_id", "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        centroid_filter=lambda vid, m=_m: vid % m == 0,
-        n_probe=2, k=10,
-    ).select("query_id", "cand_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc_nulls_last(), F.col("cand_id")
-    )
-    lsh10 = (
-        lsh.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .select("query_id", "cand_id", "rk")
-    )
-    ivf10 = (
-        ivf.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .select("query_id", "cand_id", "rk")
-    )
+    m = sqrt_centroid_modulus(e.count())
+    lsh10 = _lsh_topk(e, 10).select("query_id", "cand_id", "rk")
+    ivf10 = _ivf_topk(e, m, 10).select("query_id", "cand_id", F.col("rank").alias("rk"))
     fused = (
         lsh10.unionAll(ivf10)
         .groupBy("query_id", "cand_id")
@@ -3215,54 +2918,20 @@ def rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------- nDCG ranking
 
 _NDCG_SQL = f"""
-    WITH {_BUCKET_SQL}, {_IVF_ASSIGN_SQL},
-    q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT query_id, cand_id, rk AS exact_rank FROM (
-            SELECT q.query_id, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='a')} *
-                              {_NORM.format(x='c.embedding', tag='b')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.query_id
-        ) WHERE rk <= 5
-    ),
-    qb AS (SELECT vec_id AS query_id, tbl, bucket FROM buckets
-           WHERE vec_id % 50 = 0 AND vec_id < 500),
-    lsh_cand AS (
-        SELECT DISTINCT qb.query_id, cb.vec_id AS cand_id
-        FROM qb JOIN buckets cb USING (tbl, bucket)
-        WHERE cb.vec_id != qb.query_id
-    ),
-    annk AS (
-        SELECT query_id, cand_id, rk FROM (
-            SELECT p.query_id, p.cand_id,
-                   row_number() OVER (
-                       PARTITION BY p.query_id
-                       ORDER BY round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                             ({_NORM.format(x='x.embedding', tag='c')} *
-                              {_NORM.format(x='y.embedding', tag='d')}), 3)
-                             DESC NULLS LAST, p.cand_id) AS rk
-            FROM lsh_cand p
-            JOIN embeddings x ON x.vec_id = p.query_id
-            JOIN embeddings y ON y.vec_id = p.cand_id
-        ) WHERE rk <= 5
-    ),
+    WITH {cosine_topk_sql('exact', 5)}, {lsh_ranked_sql('lsh')},
     dcg AS (
         SELECT a.query_id,
-               sum(coalesce(pow(2, 6 - e.exact_rank) - 1, 0)
+               sum(coalesce(pow(2, 6 - e.rk) - 1, 0)
                    / ln(a.rk + 1)) AS dcg
-        FROM annk a
+        FROM lsh a
         LEFT JOIN exact e ON e.query_id = a.query_id
                          AND e.cand_id = a.cand_id
+        WHERE a.rk <= 5
         GROUP BY 1
     ),
     idcg AS (
         SELECT query_id,
-               sum((pow(2, 6 - exact_rank) - 1) / ln(exact_rank + 1)) AS idcg
+               sum((pow(2, 6 - rk) - 1) / ln(rk + 1)) AS idcg
         FROM exact GROUP BY 1
     )
     SELECT i.query_id,
@@ -3286,23 +2955,10 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both rankings are the published bounded pipelines; the
     metric itself is two grouped sums on O(queries·5) rows."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(
-        q, e, "vec_id", "vec_id", "embedding", "embedding", 5
-    ).select("query_id", "cand_id", F.col("rank").alias("exact_rank"))
-    lsh = ann_lsh_search(
-        e, "vec_id", "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        n_planes=4, n_tables=4, min_cosine=-1.0, dim=64,
+    exact = _exact_topk(e, 5).select(
+        "query_id", "cand_id", F.col("rank").alias("exact_rank")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc_nulls_last(), F.col("cand_id")
-    )
-    annk = (
-        lsh.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "cand_id", "rk")
-    )
+    annk = _lsh_topk(e, 5)
     gain = F.coalesce(
         F.pow(F.lit(2.0), 6 - F.col("exact_rank")) - 1, F.lit(0.0)
     )
@@ -3342,49 +2998,15 @@ _ERR_CASE = "CASE rk " + " ".join(
 ) + " END"
 
 _ERR_SQL = f"""
-    WITH {_BUCKET_SQL},
-    q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT query_id, cand_id, rk AS exact_rank FROM (
-            SELECT q.query_id, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='a')} *
-                              {_NORM.format(x='c.embedding', tag='b')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.query_id
-        ) WHERE rk <= 5
-    ),
-    qb AS (SELECT vec_id AS query_id, tbl, bucket FROM buckets
-           WHERE vec_id % 50 = 0 AND vec_id < 500),
-    lsh_cand AS (
-        SELECT DISTINCT qb.query_id, cb.vec_id AS cand_id
-        FROM qb JOIN buckets cb USING (tbl, bucket)
-        WHERE cb.vec_id != qb.query_id
-    ),
-    annk AS (
-        SELECT query_id, cand_id, rk FROM (
-            SELECT p.query_id, p.cand_id,
-                   row_number() OVER (
-                       PARTITION BY p.query_id
-                       ORDER BY round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                             ({_NORM.format(x='x.embedding', tag='c')} *
-                              {_NORM.format(x='y.embedding', tag='d')}), 3)
-                             DESC NULLS LAST, p.cand_id) AS rk
-            FROM lsh_cand p
-            JOIN embeddings x ON x.vec_id = p.query_id
-            JOIN embeddings y ON y.vec_id = p.cand_id
-        ) WHERE rk <= 5
-    ),
+    WITH {cosine_topk_sql('exact', 5)}, {lsh_ranked_sql('lsh')},
     g AS (
         SELECT a.query_id, a.rk,
-               coalesce(CAST(pow(2, 6 - e.exact_rank) AS BIGINT) - 1, 0)
+               coalesce(CAST(pow(2, 6 - e.rk) AS BIGINT) - 1, 0)
                    AS gain
-        FROM annk a
+        FROM lsh a
         LEFT JOIN exact e ON e.query_id = a.query_id
                          AND e.cand_id = a.cand_id
+        WHERE a.rk <= 5
     ),
     terms AS (
         SELECT query_id, rk, gain,
@@ -3426,29 +3048,11 @@ def err_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both rankings are the published bounded pipelines
     (brute-force exact over the fixture-sized query set; LSH candidates
     bucket-joined); the metric is a per-query window over ≤5 rows."""
-    from ab_inbev_big_data_case_spark.llm.similarity import (
-        ann_lsh_search,
-        cosine_topk,
-    )
-
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(
-        q, e, "vec_id", "vec_id", "embedding", "embedding", 5
-    ).select("query_id", "cand_id", F.col("rank").alias("exact_rank"))
-    lsh = ann_lsh_search(
-        e, "vec_id", "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        n_planes=4, n_tables=4, min_cosine=-1.0, dim=64,
+    exact = _exact_topk(e, 5).select(
+        "query_id", "cand_id", F.col("rank").alias("exact_rank")
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc_nulls_last(), F.col("cand_id")
-    )
-    annk = (
-        lsh.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "cand_id", "rk")
-    )
+    annk = _lsh_topk(e, 5)
     gain = F.coalesce(
         (F.pow(F.lit(2.0), 6 - F.col("exact_rank"))).cast("long") - 1,
         F.lit(0).cast("long"),
@@ -3459,7 +3063,7 @@ def err_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     wprod = Window.partitionBy("query_id").orderBy("rk").rowsBetween(
         Window.unboundedPreceding, -1
     )
-    factor = F.expr(_ERR_CASE.replace("CASE rk", "CASE rk"))
+    factor = F.expr(_ERR_CASE)
     terms = g.select(
         "query_id",
         "rk",
@@ -3499,37 +3103,18 @@ _SIGN_ANN_SQL = f"""
         FROM embeddings, range(64) t(i)
         GROUP BY 1
     ),
-    q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT qid AS query_id, cand_id FROM (
-            SELECT q.qid, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.qid
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='q')} *
-                              {_NORM.format(x='c.embedding', tag='c')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.qid
-        ) WHERE rk <= 5
-    ),
+    {cosine_topk_sql('exact', 5)},
     hamk AS (
         SELECT query_id, cand_id FROM (
             SELECT p.vec_id AS query_id, c.vec_id AS cand_id,
                    row_number() OVER (
                        PARTITION BY p.vec_id
                        ORDER BY bit_count(xor(p.sig, c.sig)), c.vec_id) AS rk
-            FROM packed p JOIN packed c ON c.vec_id != p.vec_id
-            WHERE p.vec_id % 50 = 0 AND p.vec_id < 500
+            FROM (SELECT * FROM packed WHERE {AUDIT_QUERY_SQL}) p
+            JOIN packed c ON c.vec_id != p.vec_id
         ) WHERE rk <= 5
     )
-    SELECT e.query_id,
-           count(*) AS n_exact,
-           count(h.cand_id) AS n_hits,
-           round(count(h.cand_id) * 1.0 / count(*), 4) AS recall_r
-    FROM exact e
-    LEFT JOIN hamk h ON h.query_id = e.query_id AND h.cand_id = e.cand_id
-    GROUP BY e.query_id
+    {recall_at_k_sql('exact', 'hamk')}
 """
 
 
@@ -3548,8 +3133,8 @@ def sign_hamming_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships its measured recall (same discipline as ``ann_recall_eval``).
 
     Exactness: packing compares doubles to 0 identically in both engines;
-    Hamming distance is integer; the exact side is the published rounded
-    brute ranking. Recall is a ratio of integer counts rounded to 4.
+    Hamming distance is integer; the exact side is the audit's brute
+    ranking. Recall is a ratio of integer counts rounded to 4.
 
     Scale shape: packing is one in-row codegen'd fold (no shuffle);
     ranking joins the broadcast bounded query set against the packed
@@ -3562,7 +3147,7 @@ def sign_hamming_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "0L, (acc, el) -> acc + el)"
     )
     packed = e.select("vec_id", pack.alias("sig"))
-    qp = packed.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
+    qp = packed.filter(audit_query(F.col("vec_id")))
     pairs = packed.crossJoin(
         F.broadcast(
             qp.select(
@@ -3576,65 +3161,20 @@ def sign_hamming_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamk = (
         pairs.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 5)
-        .select("query_id", F.col("vec_id").alias("cand_id"), F.lit(1).alias("hit"))
+        .select("query_id", F.col("vec_id").alias("cand_id"))
     )
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
-    return (
-        exact.select("query_id", "cand_id")
-        .join(hamk, ["query_id", "cand_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_exact"),
-            F.count("hit").alias("n_hits"),
-            F.round(F.count("hit") / F.count("*"), 4).alias("recall_r"),
-        )
-    )
+    return recall_at_k(_exact_topk(e, 5), hamk)
 
 
 # ------------------------------------------------ MRR retrieval metric
 
 _MRR_SQL = f"""
-    WITH {_BUCKET_SQL},
-    q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT qid AS query_id, cand_id FROM (
-            SELECT q.qid, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.qid
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='q')} *
-                              {_NORM.format(x='c.embedding', tag='c')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.qid
-        ) WHERE rk <= 5
-    ),
-    qb AS (SELECT vec_id AS query_id, tbl, bucket FROM buckets
-           WHERE vec_id % 50 = 0 AND vec_id < 500),
-    lsh_cand AS (
-        SELECT DISTINCT qb.query_id, cb.vec_id AS cand_id
-        FROM qb JOIN buckets cb USING (tbl, bucket)
-        WHERE cb.vec_id != qb.query_id
-    ),
-    annk AS (
-        SELECT query_id, cand_id, rk FROM (
-            SELECT p.query_id, p.cand_id,
-                   row_number() OVER (
-                       PARTITION BY p.query_id
-                       ORDER BY round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                             ({_NORM.format(x='x.embedding', tag='c')} *
-                              {_NORM.format(x='y.embedding', tag='d')}), 3)
-                             DESC NULLS LAST, p.cand_id) AS rk
-            FROM lsh_cand p
-            JOIN embeddings x ON x.vec_id = p.query_id
-            JOIN embeddings y ON y.vec_id = p.cand_id
-        ) WHERE rk <= 5
-    ),
+    WITH {cosine_topk_sql('exact', 5)}, {lsh_ranked_sql('lsh')},
     firsthit AS (
         SELECT a.query_id, min(a.rk)::INT AS first_hit_rank
-        FROM annk a
+        FROM lsh a
         JOIN exact e ON e.query_id = a.query_id AND e.cand_id = a.cand_id
+        WHERE a.rk <= 5
         GROUP BY 1
     )
     SELECT eq.query_id,
@@ -3657,34 +3197,11 @@ def mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus MRR; per-query rows keep the audit row-diffable like its three
     siblings.
 
-    Exactness: ranks are integers from the shared rounded-cosine
-    tiebroken ranking; the reciprocal is one rounded division.
-
     Scale shape: identical to ``ndcg_eval`` — bounded query set, LSH
     bucket-mate candidates only, O(queries·5) metric rows."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(
-        q, e, "vec_id", "vec_id", "embedding", "embedding", 5
-    ).select("query_id", "cand_id")
-    lsh = ann_lsh_search(
-        e,
-        "vec_id",
-        "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        n_planes=4,
-        n_tables=4,
-        min_cosine=-1.0,
-        dim=64,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc_nulls_last(), F.col("cand_id")
-    )
-    annk = (
-        lsh.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "cand_id", "rk")
-    )
+    exact = _exact_topk(e, 5).select("query_id", "cand_id")
+    annk = _lsh_topk(e, 5)
     firsthit = (
         annk.join(exact, ["query_id", "cand_id"])
         .groupBy("query_id")
@@ -4022,27 +3539,11 @@ def postings_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MMR_LAMBDA = 0.7
 
 _MMR_SQL = f"""
-    WITH q AS (SELECT vec_id AS qid, embedding AS qv
-               FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 500),
-    c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings),
-    pairs AS (
-        SELECT qid AS query_id, cid AS cand_id,
-               round({_DOT.format(x='qv', y='cv')} /
-                     ({_NORM.format(x='qv', tag='q')} * {_NORM.format(x='cv', tag='c')}),
-                     3) AS rel
-        FROM q, c WHERE cid != qid
-    ),
-    top10 AS (
-        SELECT query_id, cand_id, rel FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY rel DESC NULLS LAST, cand_id) AS rank
-            FROM pairs
-        ) WHERE rank <= 10
-    ),
+    WITH {cosine_topk_sql('exact', 10)},
+    top10 AS (SELECT query_id, cand_id, cosine AS rel FROM exact),
     tv AS (
-        SELECT t.query_id, t.cand_id, t.rel, c.cv
-        FROM top10 t JOIN c ON c.cid = t.cand_id
+        SELECT t.query_id, t.cand_id, t.rel, c.embedding AS cv
+        FROM top10 t JOIN embeddings c ON c.vec_id = t.cand_id
     ),
     sims AS (
         SELECT a.query_id, a.cand_id AS ida, b.cand_id AS idb,
@@ -4116,10 +3617,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     3, MMR at 4) with cand_id tiebreaks, so the greedy trajectory —
     which feeds later rounds — is engine-deterministic at every step."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    top10 = cosine_topk(
-        q, e, "vec_id", "vec_id", "embedding", "embedding", 10
-    ).withColumnRenamed("cosine", "rel")
+    top10 = _exact_topk(e, 10).withColumnRenamed("cosine", "rel")
     cv = e.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
     tv = top10.join(cv, "cand_id").select("query_id", "cand_id", "rel", "cv")
     a = tv.select(
@@ -4470,39 +3968,9 @@ def prf_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- IVF index balance audit
 
-# Capped-nlist modulus (VERDICT r11 item 8): K = min(⌊√N⌋, cap) so
-# m = max(⌊√N⌋, ⌈N/cap⌉). cap=16 BINDS at every fixture SF (√N ≥ 24 even
-# at sf0.001), standing in for the FAISS-style 2¹⁶ ceiling that binds at
-# the 10¹¹-vector / 100 TB envelope — same regime, fixture-visible.
-_NLIST_CAP = 16
-_CAP_MOD_SQL = (
-    f"(SELECT greatest(1, CAST(floor(sqrt(count(*))) AS BIGINT),"
-    f" CAST(ceil(count(*) / {_NLIST_CAP}.0) AS BIGINT)) FROM embeddings)"
-)
-
-
 def _balance_regime_cte(suffix: str, mod_sql: str) -> str:
-    """Per-regime copy of the IVF assign + histogram-moment CTE chain
-    (same argmax/tie discipline as ``_IVF_ASSIGN_SQL``)."""
-    return f"""
-    cents{suffix} AS (
-        SELECT vec_id AS cell_id, embedding AS cv FROM embeddings
-        WHERE vec_id % {mod_sql} = 0
-    ),
-    scored{suffix} AS (
-        SELECT e.vec_id, c.cell_id,
-               round({_DOT.format(x='e.embedding', y='c.cv')} /
-                     ({_NORM.format(x='e.embedding', tag='a')} *
-                      {_NORM.format(x='c.cv', tag='b')}), 3) AS cos
-        FROM embeddings e CROSS JOIN cents{suffix} c
-    ),
-    assign{suffix} AS (
-        SELECT vec_id, cell_id FROM (
-            SELECT vec_id, cell_id, row_number() OVER (
-                PARTITION BY vec_id ORDER BY cos DESC NULLS LAST, cell_id) AS rn
-            FROM scored{suffix}
-        ) WHERE rn = 1
-    ),
+    """Per-regime IVF assignment plus its histogram moments."""
+    return f"""{_ivf_assign_sql(mod_sql, suffix)},
     cells{suffix} AS (SELECT cell_id, count(*) AS n FROM assign{suffix} GROUP BY 1),
     m{suffix} AS (
         SELECT count(*) AS n_cells,
@@ -4583,23 +4051,17 @@ def ivf_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    return regime_report(sqrt_centroid_modulus(e), "sqrt").unionByName(
+    n = e.count()
+    return regime_report(sqrt_centroid_modulus(n), "sqrt").unionByName(
         regime_report(
-            capped_centroid_modulus(e, _NLIST_CAP), f"capped{_NLIST_CAP}"
+            capped_centroid_modulus(n, _NLIST_CAP), f"capped{_NLIST_CAP}"
         )
     )
 
 
 # --------------------------------- capped-regime IVF search (r13 item 8)
 
-#: the √N-rule recall oracle with its centroid modulus swapped for the
-#: capped rule — everything else (queries, probes, tiebreaks, recall
-#: arithmetic) is byte-identical, so the two registered rows differ only
-#: in the regime under audit.
-_IVF_RECALL_CAPPED_SQL = _IVF_RECALL_SQL.replace(_SQRT_MOD_SQL, _CAP_MOD_SQL)
-
-
-@register("ivf_search_capped", oracle=_IVF_RECALL_CAPPED_SQL)
+@register("ivf_search_capped", oracle=_ivf_recall_sql(_CAP_MOD_SQL))
 def ivf_search_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the PRODUCTION-regime IVF search — K = min(⌊√N⌋, 16)
     centroids (the FAISS-style fixed nlist ceiling; 16 binds at every
@@ -4612,34 +4074,10 @@ def ivf_search_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expected shape vs the √N row: fewer, larger cells mean each probe
     covers more of the corpus, so capped recall is ≥ the √N regime's at
     equal n_probe while exp_probe_cost (the balance report) grows to
-    ~N/cap — this pair of rows IS the production tuning trade.
-
-    Same FP-independence contract: cosines quantize to 3 decimals with
-    cand_id tiebreaks before every argmax/top-k; recall is exact integer
-    arithmetic."""
+    ~N/cap — this pair of rows IS the production tuning trade."""
     e = table(spark, sf_dir, "embeddings")
-    _m = capped_centroid_modulus(e, _NLIST_CAP)
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
-    ivfk = ivf_search(
-        e,
-        "vec_id",
-        "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        centroid_filter=lambda vid, m=_m: vid % m == 0,
-        n_probe=2,
-        k=5,
-    ).select("query_id", "cand_id", F.lit(1).alias("hit"))
-    return (
-        exact.select("query_id", "cand_id")
-        .join(ivfk, ["query_id", "cand_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_exact"),
-            F.count("hit").alias("n_hits"),
-            F.round(F.count("hit") / F.count("*"), 4).alias("recall_r"),
-        )
-    )
+    m = capped_centroid_modulus(e.count(), _NLIST_CAP)
+    return recall_at_k(_exact_topk(e, 5), _ivf_topk(e, m, 5))
 
 
 # ----------------------------------- embedding geometry histogram
@@ -4771,7 +4209,7 @@ def cluster_purity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bounded spine, totals broadcast, integer counts cast
     last)."""
     e = table(spark, sf_dir, "embeddings")
-    _m = sqrt_centroid_modulus(e)
+    _m = sqrt_centroid_modulus(e.count())
     assign = ivf_assign(e, "vec_id", "embedding", lambda vid, m=_m: vid % m == 0)
     cont = (
         assign.join(e.select("vec_id", "label"), "vec_id")
@@ -4832,29 +4270,14 @@ def cluster_purity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KNN_SQL = f"""
-    WITH q AS (SELECT vec_id AS qid, embedding AS qv, label AS qlab
-               FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 500),
-    c AS (SELECT vec_id AS cid, embedding AS cv, label AS clab
-          FROM embeddings),
-    pairs AS (
-        SELECT qid, qlab, cid, clab,
-               round({_DOT.format(x='qv', y='cv')} /
-                     ({_NORM.format(x='qv', tag='q')} *
-                      {_NORM.format(x='cv', tag='c')}), 3) AS cos
-        FROM q, c WHERE cid != qid
-    ),
-    nn AS (
-        SELECT qid, qlab, clab FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY qid ORDER BY cos DESC NULLS LAST, cid) AS rn
-            FROM pairs
-        ) WHERE rn = 1
-    )
+    WITH {cosine_topk_sql('nn', 1)}
     SELECT count(*) AS n_queries,
-           sum(CASE WHEN qlab = clab THEN 1 ELSE 0 END)::BIGINT AS n_correct,
-           round(sum(CASE WHEN qlab = clab THEN 1 ELSE 0 END) * 1.0
+           sum(CASE WHEN q.label = c.label THEN 1 ELSE 0 END)::BIGINT AS n_correct,
+           round(sum(CASE WHEN q.label = c.label THEN 1 ELSE 0 END) * 1.0
                  / count(*), 4) AS accuracy_r
     FROM nn
+    JOIN embeddings q ON q.vec_id = nn.query_id
+    JOIN embeddings c ON c.vec_id = nn.cand_id
 """
 
 
@@ -4869,14 +4292,12 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the situation this audit exists to expose before anyone
     ships an index over such vectors.)
 
-    Scale shape: the exact ranking reuses ``cosine_topk``'s
-    quantize-before-rank plan on the deterministic query subset (the
-    published pattern: exact on the subset as the audit baseline, the
-    LSH/IVF paths as the full-corpus scale route); the accuracy is one
-    1-row aggregate over |Q| neighbor rows."""
+    Scale shape: the exact ranking is ``cosine_topk`` on the audit query
+    sample (the published pattern: exact on the subset as the audit
+    baseline, the LSH/IVF paths as the full-corpus scale route); the
+    accuracy is one 1-row aggregate over |Q| neighbor rows."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    nn1 = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 1)
+    nn1 = _exact_topk(e, 1)
     qlab = e.select(
         F.col("vec_id").alias("query_id"), F.col("label").alias("qlab")
     )
@@ -4898,25 +4319,12 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------- intrinsic dimension (TwoNN)
 
 _TWONN_SQL = f"""
-    WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-               WHERE vec_id % 50 = 0 AND vec_id < 500),
-    c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings),
-    pairs AS (
-        SELECT qid, cid,
-               round({_DOT.format(x='qv', y='cv')} /
-                     ({_NORM.format(x='qv', tag='q')} *
-                      {_NORM.format(x='cv', tag='c')}), 3) AS cos
-        FROM q, c WHERE cid != qid
-    ),
+    WITH {cosine_topk_sql('nn', 2)},
     nn2 AS (
-        SELECT qid,
-               max(CASE WHEN rn = 1 THEN 1.0 - cos END) AS d1,
-               max(CASE WHEN rn = 2 THEN 1.0 - cos END) AS d2
-        FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY qid ORDER BY cos DESC NULLS LAST, cid) AS rn
-            FROM pairs
-        ) WHERE rn <= 2
+        SELECT query_id AS qid,
+               max(CASE WHEN rk = 1 THEN 1.0 - cosine END) AS d1,
+               max(CASE WHEN rk = 2 THEN 1.0 - cosine END) AS d2
+        FROM nn
         GROUP BY 1
     ),
     mu AS (
@@ -4938,14 +4346,12 @@ def intrinsic_dimension_twonn(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ/projection compression is safe; d̂ near ambient says it isn't —
     read before ``pq_codes``/``random_projection_stats``.
 
-    Scale shape: reuses the exact quantized 2-NN ranking on the query
-    subset (the audit-baseline pattern); distances are 1 − cos on the
-    3-decimal grid, queries with a duplicate-grade nearest neighbor
-    (d₁ < 0.001 — ratio undefined) are excluded; the estimator is one
-    1-row aggregate over |Q| ratio rows."""
+    Scale shape: reuses the exact 2-NN ranking on the audit query sample;
+    distances are 1 − cos on the 3-decimal grid, queries with a
+    duplicate-grade nearest neighbor (d₁ < 0.001 — ratio undefined) are
+    excluded; the estimator is one 1-row aggregate over |Q| ratio rows."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    nn2 = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 2)
+    nn2 = _exact_topk(e, 2)
     wide = nn2.groupBy("query_id").agg(
         F.max(F.when(F.col("rank") == 1, 1.0 - F.col("cosine"))).alias("d1"),
         F.max(F.when(F.col("rank") == 2, 1.0 - F.col("cosine"))).alias("d2"),
@@ -5176,38 +4582,23 @@ _NEG_PER_Q = 3
 
 _CONTRASTIVE_SQL = f"""
     WITH n AS (SELECT count(*) AS n_vecs FROM embeddings),
-    q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings),
-    pairs AS (
-        SELECT qid, cid,
-               round({_DOT.format(x='qv', y='cv')} /
-                     ({_NORM.format(x='qv', tag='q')} *
-                      {_NORM.format(x='cv', tag='c')}), 3) AS cos
-        FROM q, c WHERE cid != qid
-    ),
-    top5 AS (
-        SELECT qid, cid, rn FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY qid ORDER BY cos DESC NULLS LAST, cid) AS rn
-            FROM pairs
-        ) WHERE rn <= 5
-    ),
+    {cosine_topk_sql('top5', 5)},
     pos AS (
-        SELECT qid, cid AS cand_id, 'positive' AS kind
-        FROM top5 WHERE rn = 1
+        SELECT query_id AS qid, cand_id, 'positive' AS kind
+        FROM top5 WHERE rk = 1
     ),
     rawneg AS (
-        SELECT q.qid,
-               (q.qid * 7919 + t.i * 104729) % n.n_vecs AS cand_id
-        FROM q CROSS JOIN n CROSS JOIN range(1, {_NEG_PER_Q} + 1) t(i)
+        SELECT q.vec_id AS qid,
+               (q.vec_id * 7919 + t.i * 104729) % n.n_vecs AS cand_id
+        FROM (SELECT vec_id FROM embeddings WHERE {AUDIT_QUERY_SQL}) q
+        CROSS JOIN n CROSS JOIN range(1, {_NEG_PER_Q} + 1) t(i)
     ),
     neg AS (
         SELECT DISTINCT r.qid, r.cand_id, 'negative' AS kind
         FROM rawneg r
         WHERE r.cand_id != r.qid
           AND NOT EXISTS (SELECT 1 FROM top5 t
-                          WHERE t.qid = r.qid AND t.cid = r.cand_id)
+                          WHERE t.query_id = r.qid AND t.cand_id = r.cand_id)
     )
     SELECT qid AS query_id, cand_id, kind FROM pos
     UNION ALL
@@ -5224,15 +4615,14 @@ def contrastive_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame
     contrastive losses (an unfiltered 'random' negative that's really a
     near-dup teaches the model to collapse).
 
-    Scale shape: positives reuse the exact quantized ranking on the
-    query subset; negative ids come from an affine hash mod N (no RNG
-    state, reproducible across runs/engines); the exclusion is a keyed
-    anti-join against the bounded top-5 set. Everything integer or
-    quantized before any selection."""
+    Scale shape: positives reuse the exact ranking on the audit query
+    sample; negative ids come from an affine hash mod N (no RNG state,
+    reproducible across runs/engines); the exclusion is a keyed
+    anti-join against the bounded top-5 set."""
     e = table(spark, sf_dir, "embeddings")
     n = e.agg(F.count("*").alias("n_vecs"))
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    top5 = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
+    q = e.filter(audit_query(F.col("vec_id")))
+    top5 = _exact_topk(e, 5)
     pos = top5.filter(F.col("rank") == 1).select(
         "query_id", "cand_id", F.lit("positive").alias("kind")
     )
@@ -5466,48 +4856,14 @@ def hll_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------- MAP@5 eval
 
 _MAP_SQL = f"""
-    WITH {_BUCKET_SQL},
-    q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT qid AS query_id, cand_id FROM (
-            SELECT q.qid, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.qid
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='q')} *
-                              {_NORM.format(x='c.embedding', tag='c')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.qid
-        ) WHERE rk <= 5
-    ),
-    qb AS (SELECT vec_id AS query_id, tbl, bucket FROM buckets
-           WHERE vec_id % 50 = 0 AND vec_id < 500),
-    cand AS (
-        SELECT DISTINCT qb.query_id, cb.vec_id AS cand_id
-        FROM qb JOIN buckets cb USING (tbl, bucket)
-        WHERE cb.vec_id != qb.query_id
-    ),
-    annk AS (
-        SELECT query_id, cand_id, rk FROM (
-            SELECT p.query_id, p.cand_id,
-                   row_number() OVER (
-                       PARTITION BY p.query_id
-                       ORDER BY round({_DOT.format(x='eq.embedding', y='ec.embedding')} /
-                             ({_NORM.format(x='eq.embedding', tag='q')} *
-                              {_NORM.format(x='ec.embedding', tag='c')}), 3)
-                             DESC NULLS LAST, p.cand_id) AS rk
-            FROM cand p
-            JOIN embeddings eq ON eq.vec_id = p.query_id
-            JOIN embeddings ec ON ec.vec_id = p.cand_id
-        ) WHERE rk <= 5
-    ),
+    WITH {cosine_topk_sql('exact', 5)}, {lsh_ranked_sql('lsh')},
     scored AS (
         SELECT a.query_id, a.rk,
                CASE WHEN e.cand_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-        FROM annk a
+        FROM lsh a
         LEFT JOIN exact e
           ON e.query_id = a.query_id AND e.cand_id = a.cand_id
+        WHERE a.rk <= 5
     ),
     cum AS (
         SELECT query_id, rk, hit,
@@ -5538,26 +4894,8 @@ def map_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, the exact side is the fixed-10-query brute baseline, and the
     cumulative-hit window runs over ≤5 rows per query."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
-    cand = ann_lsh_search(
-        e,
-        "vec_id",
-        "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        n_planes=4,
-        n_tables=4,
-        min_cosine=-1.0,
-        dim=64,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc_nulls_last(), F.col("cand_id")
-    )
-    annk = (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "cand_id", "rk")
-    )
+    exact = _exact_topk(e, 5)
+    annk = _lsh_topk(e, 5)
     scored = annk.join(
         exact.select("query_id", "cand_id", F.lit(1).alias("is_rel")),
         ["query_id", "cand_id"],
@@ -5699,55 +5037,17 @@ def phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ IVF n_probe sweep
 
 _NPROBE_SQL = f"""
-    WITH {_IVF_ASSIGN_SQL},
-    q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT query_id, cand_id FROM (
-            SELECT q.query_id, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='a')} *
-                              {_NORM.format(x='c.embedding', tag='b')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.query_id
-        ) WHERE rk <= 5
-    ),
-    probes AS (
-        SELECT query_id, cell_id, rn FROM (
-            SELECT q.query_id, c.cell_id, row_number() OVER (
-                PARTITION BY q.query_id ORDER BY
-                round({_DOT.format(x='q.qv', y='c.cv')} /
-                      ({_NORM.format(x='q.qv', tag='p')} *
-                       {_NORM.format(x='c.cv', tag='q')}), 3) DESC NULLS LAST,
-                c.cell_id) AS rn
-            FROM q CROSS JOIN cents c
-        ) WHERE rn <= 4
-    ),
+    WITH {cosine_topk_sql('exact', 5)}, {ivf_candidates_sql('cand', 4, _SQRT_MOD_SQL)},
     ps AS (SELECT * FROM (VALUES (1), (2), (4)) v(n_probe)),
-    cand AS (
-        SELECT DISTINCT ps.n_probe, p.query_id, a.vec_id AS cand_id
-        FROM probes p
-        JOIN ps ON p.rn <= ps.n_probe
-        JOIN assign a USING (cell_id)
-        WHERE a.vec_id != p.query_id
-    ),
     ranked AS (
-        SELECT n_probe, query_id, cand_id FROM (
-            SELECT cd.n_probe, cd.query_id, cd.cand_id,
-                   row_number() OVER (
-                       PARTITION BY cd.n_probe, cd.query_id
-                       ORDER BY round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                             ({_NORM.format(x='x.embedding', tag='x')} *
-                              {_NORM.format(x='y.embedding', tag='y')}), 3)
-                             DESC NULLS LAST, cd.cand_id) AS rk
-            FROM cand cd
-            JOIN embeddings x ON x.vec_id = cd.query_id
-            JOIN embeddings y ON y.vec_id = cd.cand_id
+        SELECT * FROM (
+            SELECT ps.n_probe, c.query_id, c.cand_id, row_number() OVER (
+                PARTITION BY ps.n_probe, c.query_id
+                ORDER BY c.cosine DESC NULLS LAST, c.cand_id) AS rk
+            FROM cand c JOIN ps ON c.probe_rank <= ps.n_probe
         ) WHERE rk <= 5
     ),
-    nq AS (SELECT count(*) AS n_queries FROM q)
+    nq AS (SELECT count(*) AS n_queries FROM embeddings WHERE {AUDIT_QUERY_SQL})
     SELECT ps.n_probe,
            nq.n_queries,
            count(r.cand_id)::BIGINT AS n_hits,
@@ -5769,35 +5069,33 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     to pick the candidate-volume/recall trade (``ivf_recall_eval`` is the
     single point this generalizes).
 
-    Scale shape: each sweep point is the published bucketed IVF path
-    (probe-list equi-join, never corpus²) over the fixed 10-query panel;
-    the three variants share the centroid scoring via the inner search's
-    broadcast and the final metric is exact integer hit counting."""
-    from ab_inbev_big_data_case_spark.llm.similarity import ivf_search
-
+    Scale shape: probe lists nest (the top-1 and top-2 cells are prefixes
+    of the top-4 list, as in any IVF index), so the sweep builds ONE
+    4-probe candidate set — one centroid assignment pass — and each sweep
+    point keeps the rows with ``probe_rank <= n_probe``, ranked per
+    (n_probe, query). The final metric is exact integer hit counting."""
     e = table(spark, sf_dir, "embeddings")
-    _m = sqrt_centroid_modulus(e)
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
-    nq = q.agg(F.count("*").alias("n_queries"))
-    runs = None
-    for p in (1, 2, 4):
-        r = ivf_search(
-            e,
-            "vec_id",
-            "embedding",
-            query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-            centroid_filter=lambda vid, m=_m: vid % m == 0,
-            n_probe=p,
-            k=5,
-        ).select(F.lit(p).alias("n_probe"), "query_id", "cand_id")
-        runs = r if runs is None else runs.unionAll(r)
+    m = sqrt_centroid_modulus(e.count())
+    exact = _exact_topk(e, 5)
+    nq = e.filter(audit_query(F.col("vec_id"))).agg(F.count("*").alias("n_queries"))
+    probes = F.broadcast(const_df(spark, [(1,), (2,), (4,)], "n_probe bigint"))
+    cand = ivf_candidates(
+        e, "vec_id", "embedding", audit_query,
+        centroid_filter=lambda vid: vid % m == 0, n_probe=4,
+    )
+    w = Window.partitionBy("n_probe", "query_id").orderBy(
+        F.col("cosine").desc(), F.col("cand_id")
+    )
+    runs = (
+        cand.crossJoin(probes)
+        .filter(F.col("probe_rank") <= F.col("n_probe"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .select("n_probe", "query_id", "cand_id")
+    )
     # every (n_probe, exact-row) pair must be counted, including misses —
     # key the left join on the full probe grid
-    grid = (
-        exact.select("query_id", "cand_id")
-        .crossJoin(F.broadcast(const_df(spark, [(1,), (2,), (4,)], "n_probe bigint")))
-    )
+    grid = exact.select("query_id", "cand_id").crossJoin(probes)
     joined = grid.join(
         runs.withColumn("hit", F.lit(1)),
         ["n_probe", "query_id", "cand_id"],
@@ -7619,58 +6917,8 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the exact-vs-IVF ranked CTE pair, shared by the RRF fusion and hubness
-# audits (the same query set / quantize / tiebreak contract as
-# ``ivf_recall_eval``)
-_RANKED_LISTS_CTES = f"""
-    {_IVF_ASSIGN_SQL},
-    q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 500),
-    exact AS (
-        SELECT query_id, cand_id, rk FROM (
-            SELECT q.query_id, c.vec_id AS cand_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY round({_DOT.format(x='q.qv', y='c.embedding')} /
-                             ({_NORM.format(x='q.qv', tag='a')} *
-                              {_NORM.format(x='c.embedding', tag='b')}), 3)
-                             DESC NULLS LAST, c.vec_id) AS rk
-            FROM q, embeddings c WHERE c.vec_id != q.query_id
-        ) WHERE rk <= 5
-    ),
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT q.query_id, c.cell_id, row_number() OVER (
-                PARTITION BY q.query_id ORDER BY
-                round({_DOT.format(x='q.qv', y='c.cv')} /
-                      ({_NORM.format(x='q.qv', tag='p')} *
-                       {_NORM.format(x='c.cv', tag='q')}), 3) DESC NULLS LAST,
-                c.cell_id) AS rn
-            FROM q CROSS JOIN cents c
-        ) WHERE rn <= 2
-    ),
-    icand AS (
-        SELECT DISTINCT p.query_id, a.vec_id AS cand_id
-        FROM probes p JOIN assign a USING (cell_id)
-        WHERE a.vec_id != p.query_id
-    ),
-    ivfk AS (
-        SELECT query_id, cand_id, rk FROM (
-            SELECT cd.query_id, cd.cand_id,
-                   row_number() OVER (
-                       PARTITION BY cd.query_id
-                       ORDER BY round({_DOT.format(x='x.embedding', y='y.embedding')} /
-                             ({_NORM.format(x='x.embedding', tag='x')} *
-                              {_NORM.format(x='y.embedding', tag='y')}), 3)
-                             DESC NULLS LAST, cd.cand_id) AS rk
-            FROM icand cd
-            JOIN embeddings x ON x.vec_id = cd.query_id
-            JOIN embeddings y ON y.vec_id = cd.cand_id
-        ) WHERE rk <= 5
-    )"""
-
-_RRF_SQL = f"""
-    WITH {_RANKED_LISTS_CTES}
+_RRF_FUSION_SQL = f"""
+    WITH {cosine_topk_sql('exact', 5)}, {_ivf_topk_sql('ivfk', 5, _SQRT_MOD_SQL)}
     SELECT query_id, cand_id, in_exact, in_ivf, rrf_r,
            row_number() OVER (
                PARTITION BY query_id ORDER BY rrf_r DESC, cand_id
@@ -7688,7 +6936,7 @@ _RRF_SQL = f"""
 """
 
 
-@register("rrf_fusion_eval", oracle=_RRF_SQL)
+@register("rrf_fusion_eval", oracle=_RRF_FUSION_SQL)
 def rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal Rank Fusion (Cormack, Clarke & Buettcher 2009, k=60) of
     the two published ANN rankings — exact brute cosine top-5 and IVF
@@ -7706,20 +6954,9 @@ def rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists (Q×5 rows each); the fusion is one full outer join on
     (query, cand) plus a per-query window over ≤ 10 rows."""
     e = table(spark, sf_dir, "embeddings")
-    _m = sqrt_centroid_modulus(e)
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5).select(
-        "query_id", "cand_id", F.col("rank").alias("rk_e")
-    )
-    ivfk = ivf_search(
-        e,
-        "vec_id",
-        "embedding",
-        query_filter=lambda vid: (vid % 50 == 0) & (vid < 500),
-        centroid_filter=lambda vid, m=_m: vid % m == 0,
-        n_probe=2,
-        k=5,
-    ).select("query_id", "cand_id", F.col("rank").alias("rk_i"))
+    m = sqrt_centroid_modulus(e.count())
+    exact = _exact_topk(e, 5).select("query_id", "cand_id", F.col("rank").alias("rk_e"))
+    ivfk = _ivf_topk(e, m, 5).select("query_id", "cand_id", F.col("rank").alias("rk_i"))
     fused = exact.join(ivfk, ["query_id", "cand_id"], "full").select(
         "query_id",
         "cand_id",
@@ -7738,7 +6975,7 @@ def rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _HUBNESS_SQL = f"""
-    WITH {_RANKED_LISTS_CTES}
+    WITH {cosine_topk_sql('exact', 5)}
     SELECT k_occ, count(*)::BIGINT AS n_cands
     FROM (SELECT cand_id, count(*)::BIGINT AS k_occ FROM exact GROUP BY 1)
     GROUP BY 1
@@ -7755,15 +6992,12 @@ def ann_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps pairing against the same hubs). A spike at high k after an
     embedding-model change is the regression this audit exists to catch.
 
-    Exactness: pure integer counting over the deterministic (quantized,
-    tie-broken) exact top-5 lists.
+    Exactness: pure integer counting over the exact top-5 lists.
 
     Scale shape: the input is the bounded Q×5 ranked list; two keyed
     aggregates. Nothing touches the corpus beyond the ranking the audit
     pair already computes."""
-    e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
-    exact = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5)
+    exact = _exact_topk(table(spark, sf_dir, "embeddings"), 5)
     return (
         exact.groupBy("cand_id")
         .agg(F.count("*").cast("long").alias("k_occ"))

@@ -28,7 +28,14 @@ from ab_inbev_big_data_case_spark.llm.dedup import (
     containment_pairs,
     shingle_set,
 )
-from ab_inbev_big_data_case_spark.llm.similarity import kmeans_rounds
+from ab_inbev_big_data_case_spark.llm.similarity import (
+    _DOT,
+    _NORM,
+    audit_query,
+    cosine_topk,
+    cosine_topk_sql,
+    kmeans_rounds,
+)
 from ab_inbev_big_data_case_spark.operators.graph import (
     connected_components,
     connected_components_sql,
@@ -399,9 +406,6 @@ def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------- k-means
 
-_KM_DOT = "(SELECT sum(a * b) FROM (SELECT unnest({x})::DOUBLE AS a, unnest({y})::DOUBLE AS b) z)"
-_KM_NORM = "sqrt((SELECT sum(a * a) FROM (SELECT unnest({x})::DOUBLE AS a) z{tag}))"
-
 _KM_ASSIGN = """
     {out} AS (
         SELECT vec_id, cell_id FROM (
@@ -422,9 +426,9 @@ _KM_ASSIGN = """
         FROM embeddings WHERE vec_id % 61 = 0
     ),
     {_KM_ASSIGN.format(out='a1', cents='c0',
-                       dot=_KM_DOT.format(x='e.embedding', y='c.cv'),
-                       vn=_KM_NORM.format(x='e.embedding', tag='v'),
-                       cn=_KM_NORM.format(x='c.cv', tag='c'))},
+                       dot=_DOT.format(x='e.embedding', y='c.cv'),
+                       vn=_NORM.format(x='e.embedding', tag='v'),
+                       cn=_NORM.format(x='c.cv', tag='c'))},
     coords AS (
         SELECT cell_id,
                unnest(list_transform(range(1, len(embedding) + 1),
@@ -437,9 +441,9 @@ _KM_ASSIGN = """
     ),
     c1 AS (SELECT cell_id, list(av ORDER BY i) AS cv FROM cm GROUP BY 1),
     {_KM_ASSIGN.format(out='a2', cents='c1',
-                       dot=_KM_DOT.format(x='e.embedding', y='c.cv'),
-                       vn=_KM_NORM.format(x='e.embedding', tag='v'),
-                       cn=_KM_NORM.format(x='c.cv', tag='c'))}
+                       dot=_DOT.format(x='e.embedding', y='c.cv'),
+                       vn=_NORM.format(x='e.embedding', tag='v'),
+                       cn=_NORM.format(x='c.cv', tag='c'))}
     SELECT g.cell_id, g.n_members,
            round(sqrt(list_sum(list_transform(c1.cv, x -> x * x))), 4)
                AS centroid_norm_r
@@ -2166,44 +2170,8 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- matryoshka truncation quality (vectors)
 
-_MAT_DOT = "(SELECT sum(a * b) FROM (SELECT unnest({x})::DOUBLE AS a, unnest({y})::DOUBLE AS b) z)"
-_MAT_NORM = "sqrt((SELECT sum(a * a) FROM (SELECT unnest({x})::DOUBLE AS a) z{tag}))"
-
 _MAT_SQL = f"""
-    WITH q AS (SELECT vec_id AS qid, embedding AS qv, embedding[1:32] AS qh
-               FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 500),
-    c AS (SELECT vec_id AS cid, embedding AS cv, embedding[1:32] AS ch
-          FROM embeddings),
-    pf AS (
-        SELECT qid AS query_id, cid AS cand_id,
-               round({_MAT_DOT.format(x='qv', y='cv')} /
-                     ({_MAT_NORM.format(x='qv', tag='q')}
-                      * {_MAT_NORM.format(x='cv', tag='c')}), 3) AS cosine
-        FROM q, c WHERE cid != qid
-    ),
-    tf AS (
-        SELECT query_id, cand_id FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY cosine DESC NULLS LAST, cand_id) AS rank
-            FROM pf
-        ) WHERE rank <= 5
-    ),
-    ph AS (
-        SELECT qid AS query_id, cid AS cand_id,
-               round({_MAT_DOT.format(x='qh', y='ch')} /
-                     ({_MAT_NORM.format(x='qh', tag='q')}
-                      * {_MAT_NORM.format(x='ch', tag='c')}), 3) AS cosine
-        FROM q, c WHERE cid != qid
-    ),
-    th AS (
-        SELECT query_id, cand_id FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY cosine DESC NULLS LAST, cand_id) AS rank
-            FROM ph
-        ) WHERE rank <= 5
-    )
+    WITH {cosine_topk_sql('tf', 5)}, {cosine_topk_sql('th', 5, vec='embedding[1:32]')}
     SELECT tf.query_id,
            count(th.cand_id) AS n_overlap,
            round(count(th.cand_id) / 5.0, 2) AS overlap_at5_r
@@ -2223,15 +2191,11 @@ def matryoshka_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two broadcast-query brute-force top-k passes (the
     declared exact baseline of the similarity family — the scale path is
     the LSH/IVF variants), then a LEFT join of two k-row-per-query sets
-    keyed on (query, candidate) and a bounded re-group. Cosines are
-    quantized to 3 decimals before ranking with a cand_id tie-break, so
-    both engines (and both dims) rank identically."""
-    from ab_inbev_big_data_case_spark.llm.similarity import cosine_topk
-
+    keyed on (query, candidate) and a bounded re-group."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
+    q = e.filter(audit_query(F.col("vec_id")))
     eh = e.select("vec_id", F.slice("embedding", 1, 32).alias("embedding"))
-    qh = eh.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500))
+    qh = eh.filter(audit_query(F.col("vec_id")))
     tf = cosine_topk(q, e, "vec_id", "vec_id", "embedding", "embedding", 5).select(
         "query_id", "cand_id"
     )

@@ -157,7 +157,7 @@ def test_interval_join_value_rounding_decimal_discipline(spark, sf_dir):
 # ---------------------------------- capped-nlist IVF regime (r11 item 8)
 
 
-def test_capped_centroid_modulus_arithmetic(spark):
+def test_capped_centroid_modulus_arithmetic():
     """m = max(⌊√N⌋, ⌈N/cap⌉): the cap must bind when √N > cap and be a
     no-op when √N ≤ cap."""
     from ab_inbev_big_data_case_spark.llm.similarity import (
@@ -165,10 +165,10 @@ def test_capped_centroid_modulus_arithmetic(spark):
         sqrt_centroid_modulus,
     )
 
-    df = spark.range(10_000)  # √N = 100
-    assert sqrt_centroid_modulus(df) == 100
-    assert capped_centroid_modulus(df, nlist_cap=16) == 625  # ceil(1e4/16)
-    assert capped_centroid_modulus(df, nlist_cap=65536) == 100  # cap idle
+    n = 10_000  # √N = 100
+    assert sqrt_centroid_modulus(n) == 100
+    assert capped_centroid_modulus(n, nlist_cap=16) == 625  # ceil(1e4/16)
+    assert capped_centroid_modulus(n, nlist_cap=65536) == 100  # cap idle
 
 
 def test_ivf_balance_report_regimes(spark, sf_dir):

@@ -61,9 +61,9 @@ CONSTRUCTION_ACTIONS = {
     "hll_rolling_distinct": 1,
     "hurst_rs_lite": 3,
     "intrinsic_dimension_twonn": 1,
-    "ivf_balance_report": 4,
+    "ivf_balance_report": 3,
     "ivf_cells": 2,
-    "ivf_nprobe_sweep": 5,
+    "ivf_nprobe_sweep": 3,
     "ivf_recall_eval": 3,
     "ivf_search": 2,
     "ivf_search_capped": 3,

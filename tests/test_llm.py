@@ -232,6 +232,47 @@ def test_ivf_search_recall_vs_brute_force(spark, sf_dir):
     assert recall >= 0.2
 
 
+def test_ivf_candidates_probe_prefix_matches_search(spark, sf_dir):
+    """Probe lists nest: the 4-probe candidates kept at probe_rank <= p and
+    ranked by (cosine desc, cand_id) are ivf_search's top-5 at n_probe=p —
+    the identity ivf_nprobe_sweep relies on to build one candidate set."""
+    from pyspark.sql import Window
+
+    from ab_inbev_big_data_case_spark.llm.similarity import (
+        audit_query,
+        ivf_candidates,
+        ivf_search,
+        sqrt_centroid_modulus,
+    )
+
+    e = table(spark, sf_dir, "embeddings")
+    m = sqrt_centroid_modulus(e.count())
+    cents = lambda vid: vid % m == 0  # noqa: E731
+    cand = ivf_candidates(e, "vec_id", "embedding", audit_query, cents, n_probe=4)
+    cand_rows = cand.collect()
+    assert {r["probe_rank"] for r in cand_rows} == {1, 2, 3, 4}
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
+    sizes = []
+    for p in (1, 2, 4):
+        kept = cand.filter(F.col("probe_rank") <= p)
+        sizes.append(kept.count())
+        got = {
+            tuple(r)
+            for r in kept.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 5)
+            .select("query_id", "cand_id", "cosine", "rank")
+            .collect()
+        }
+        want = {
+            tuple(r)
+            for r in ivf_search(
+                e, "vec_id", "embedding", audit_query, cents, n_probe=p, k=5
+            ).collect()
+        }
+        assert got == want, p
+    assert sizes[0] < sizes[1] < sizes[2] == len(cand_rows)
+
+
 def test_embedding_near_dup_keeps_canonicals(spark, sf_dir):
     """Kept set is a subset of ids, every dropped id has a kept (or smaller-
     id) partner with cosine >= threshold, and the smallest id survives."""

@@ -15,6 +15,9 @@ fails in CI, not in review):
 6. Every global running sum or rank goes through
    ``operators.relational.prefix_sums``: the equal-width key-bucket
    expression ``DIV ((hi - lo) DIV`` appears nowhere else.
+7. The retrieval audit's query sample and its exact / LSH / IVF ranked
+   lists are defined once, in ``llm/similarity.py``: no query module
+   spells them out again.
 """
 
 from __future__ import annotations
@@ -133,3 +136,27 @@ def test_key_buckets_only_in_prefix_sums():
         if (n := _count_code_occurrences(path, bucket_expr))
     }
     assert sites == {"operators/relational.py": 1}
+
+
+def test_retrieval_audit_only_in_similarity():
+    """``audit_query``/``AUDIT_QUERY_SQL``, ``cosine_topk_sql``,
+    ``lsh_ranked_sql`` and ``ivf_candidates_sql`` are the one definition of
+    the sample and of each ranked list; a query module that writes its own
+    is a second copy that can drift from its Spark twin."""
+    patterns = {
+        "query sample": r"%\s*50\s*==?\s*0[^\n]{0,40}<\s*500",
+        "LSH bucket-mate join": r"JOIN buckets cb USING \(tbl, bucket\)",
+        "IVF probe scoring": r"FROM q CROSS JOIN cents c",
+        "brute-force top-k window": (
+            r"row_number\(\)\s*OVER\s*\(\s*PARTITION BY[^()]*"
+            r"ORDER BY\s+round\(\{_\w*DOT\b"
+        ),
+    }
+    offenders = [
+        f"{_rel(path)}: {what}"
+        for path in _py_files()
+        if _rel(path).startswith("queries/")
+        for what, pattern in patterns.items()
+        if re.search(pattern, open(path, encoding="utf-8").read())
+    ]
+    assert offenders == []
