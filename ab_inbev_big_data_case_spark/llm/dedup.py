@@ -19,6 +19,17 @@ MinHash math: shingle hash h is reduced mod P=1e9+7; seed i applies the
 affine permutation ``(2i+1)·h + 104729·i mod P`` (odd multiplier, so it's a
 bijection on Z_P); the signature is the per-seed min. All arithmetic stays
 below 2^63 so Spark and DuckDB agree bit-for-bit.
+
+DuckDB twins (plain-text CTEs, the one SQL form of each chain every oracle
+uses): ``shingle_set_sql`` → ``sh(doc_id, shingle)``; ``MINHASH_SIG_SQL`` →
+``sig(doc_id, seed, minhash)`` (8 seeds); ``LSH_BANDS_SQL`` →
+``bands(doc_id, band, band_sig)`` (4 bands × 2 rows); ``KEPT_BANDS_SQL`` →
+``kept_bands``, the buckets of 2..``LSH_MAX_BUCKET_OCCUPANCY`` occupants;
+``lsh_pairs_sql`` → the candidate pairs of :func:`lsh_candidate_pairs`;
+``simhash_sig_sql`` → the 60-bit 3-shingle :func:`simhash`; and
+``simhash_band_pairs_sql`` → its four 15-bit bands ``sbands(doc_id, b, bv)``
+and band-sharing pairs ``scand(id1, id2)`` (Charikar 2002; Manku et al.
+2007).
 """
 
 from __future__ import annotations
@@ -32,8 +43,11 @@ from ab_inbev_big_data_case_spark.operators.partitioning import spread
 from ab_inbev_big_data_case_spark.functions.text import (
     HASH_MOD,
     shingles,
+    shingles_sql,
     token_hash64,
+    token_hash64_sql,
     token_hash_mod,
+    token_hash_mod_sql,
     tokens,
 )
 
@@ -45,7 +59,7 @@ from ab_inbev_big_data_case_spark.functions.text import (
 #: is Σocc² = quadratic). A band bucket with more than this many occupants
 #: is boilerplate pooling, not near-dup signal; dropping it bounds per-bucket
 #: pairs at occ*cap = linear. Mirrored in every consumer oracle via the
-#: kept_bands CTE (queries/llm.py ``_KEPT_BANDS_CTE``).
+#: kept_bands CTE (``KEPT_BANDS_SQL``).
 LSH_MAX_BUCKET_OCCUPANCY = 64
 
 
@@ -113,38 +127,18 @@ def minhash_signatures(
     )
 
 
-def lsh_band_buckets(
-    sig: DataFrame, id_col: str, rows_per_band: int = 2
+def lsh_band_buckets_wide(
+    wide_sig: DataFrame, id_col: str, n_hashes: int = 8, rows_per_band: int = 2
 ) -> DataFrame:
-    """Collapse a narrow (id, seed, minhash) signature into band buckets:
-    (id, band, band_sig).
+    """Band buckets (id, band, band_sig) straight from the wide signature —
+    pure projection + one stack, NO shuffle.
 
     band_sig packs the band's minhashes into one int64: position r in the
     band is weighted P^(rows_per_band-1-r), i.e. m0·P + m1 for the default
     rows_per_band=2 — injective since each minhash < P. rows_per_band > 2 is
     rejected: the leading weight P^2 ≈ 2^60 would overflow int64, and
     degrading the tail weights to 1 silently makes the sum order-insensitive
-    (false bucket collisions). Use more/narrower bands instead.
-    """
-    if rows_per_band > 2:
-        raise ValueError(
-            "rows_per_band > 2 cannot be packed injectively into int64 "
-            "(P^2 term overflows); use rows_per_band <= 2 with more bands"
-        )
-    sig = sig.withColumn("band", (F.col("seed") / rows_per_band).cast("long"))
-    weight = F.when(F.col("seed") % rows_per_band == 0, F.lit(HASH_MOD)).otherwise(F.lit(1))
-    return sig.groupBy(id_col, "band").agg(
-        F.sum(F.col("minhash") * weight).alias("band_sig")
-    )
-
-
-def lsh_band_buckets_wide(
-    wide_sig: DataFrame, id_col: str, n_hashes: int = 8, rows_per_band: int = 2
-) -> DataFrame:
-    """Band buckets straight from the wide signature — pure projection + one
-    stack, NO shuffle (the narrow path costs an extra groupBy). Same output
-    as :func:`lsh_band_buckets` on the equivalent narrow signature (and the
-    same rows_per_band <= 2 injectivity bound)."""
+    (false bucket collisions). Use more/narrower bands instead."""
     if rows_per_band > 2:
         raise ValueError(
             "rows_per_band > 2 cannot be packed injectively into int64 "
@@ -731,3 +725,98 @@ def dup_span_stats(
             "dup_token_ratio_r"
         ),
     )
+
+
+# ---------------------------------------------------------- DuckDB twins
+
+
+def shingle_set_sql(src: str = "documents") -> str:
+    """Twin of :func:`shingle_set` (n = 3): CTEs ``toksrc`` and
+    ``sh(doc_id, shingle)`` over ``src``, a relation with ``doc_id`` and
+    ``text``."""
+    return f"""
+    toksrc AS (SELECT doc_id, string_split(text, ' ') AS toks FROM {src}),
+    sh AS (
+        SELECT doc_id, unnest(list_distinct({shingles_sql("toks")})) AS shingle
+        FROM toksrc
+    )"""
+
+
+#: Twin of :func:`minhash_signatures` over ``sh``: CTEs ``hashed`` and
+#: ``sig(doc_id, seed, minhash)``, 8 seeds.
+MINHASH_SIG_SQL = f"""
+    hashed AS (SELECT doc_id, {token_hash_mod_sql("shingle")} AS h9 FROM sh),
+    sig AS (
+        SELECT doc_id, seed,
+               min(((2*seed + 1) * h9 + 104729 * seed) % {HASH_MOD}) AS minhash
+        FROM hashed CROSS JOIN range(8) t(seed)
+        GROUP BY 1, 2
+    )"""
+
+#: Twin of :func:`lsh_band_buckets_wide` (8 hashes, 2 rows per band) over
+#: ``sig``: CTE ``bands(doc_id, band, band_sig)``.
+LSH_BANDS_SQL = f"""
+    bands AS (
+        SELECT doc_id, seed // 2 AS band,
+               sum(minhash * (CASE WHEN seed % 2 = 0 THEN {HASH_MOD} ELSE 1 END)) AS band_sig
+        FROM sig GROUP BY 1, 2
+    )"""
+
+#: The occupancy cap of :func:`lsh_candidate_pairs` over ``bands``: CTEs
+#: ``bsize`` and ``kept_bands(doc_id, band, band_sig)``, the buckets with
+#: 2..``LSH_MAX_BUCKET_OCCUPANCY`` occupants.
+KEPT_BANDS_SQL = f"""
+    bsize AS (SELECT band, band_sig, count(*) AS n_occ FROM bands GROUP BY 1, 2),
+    kept_bands AS (
+        SELECT b.doc_id, b.band, b.band_sig
+        FROM bands b JOIN bsize z ON z.band = b.band AND z.band_sig = b.band_sig
+        WHERE z.n_occ BETWEEN 2 AND {LSH_MAX_BUCKET_OCCUPANCY}
+    )"""
+
+
+def lsh_pairs_sql(name: str, a: str = "id1", b: str = "id2") -> str:
+    """Twin of :func:`lsh_candidate_pairs` over ``kept_bands``: CTE
+    ``name(a, b)`` of the distinct doc pairs (a < b) sharing a kept band
+    bucket. Materialized, as the connected-components oracles read it once
+    per round."""
+    return f"""
+    {name} AS MATERIALIZED (
+        SELECT DISTINCT x.doc_id AS {a}, y.doc_id AS {b}
+        FROM kept_bands x JOIN kept_bands y
+          ON x.band = y.band AND x.band_sig = y.band_sig AND x.doc_id < y.doc_id
+    )"""
+
+
+def simhash_sig_sql(name: str = "sig") -> str:
+    """Twin of ``simhash(df, id, text, 60, shingle_n=3)`` over ``sh``: CTEs
+    ``sh_h``, ``votes`` and ``name(doc_id, s)`` (``ssig`` beside the MinHash
+    ``sig``)."""
+    return f"""
+    sh_h AS (SELECT doc_id, {token_hash64_sql("shingle")} AS h FROM sh),
+    votes AS (
+        SELECT doc_id, bit, sum(((h >> bit::INT) % 2) * 2 - 1) AS net_vote
+        FROM sh_h CROSS JOIN range(60) t(bit)
+        GROUP BY 1, 2
+    ),
+    {name} AS (
+        SELECT doc_id,
+               sum(CASE WHEN net_vote > 0
+                        THEN (1::BIGINT << bit::INT) ELSE 0 END)::BIGINT AS s
+        FROM votes GROUP BY 1
+    )"""
+
+
+def simhash_band_pairs_sql(sig: str = "sig") -> str:
+    """The SimHash band split over the signature CTE ``sig``: CTEs
+    ``sbands(doc_id, b, bv)`` — four 15-bit bands of the 60-bit signature —
+    and ``scand(id1, id2)``, the distinct doc pairs sharing a band value."""
+    return f"""
+    sbands AS (
+        SELECT doc_id, b, (s >> (15 * b)::INT) & 32767 AS bv
+        FROM {sig} CROSS JOIN range(4) t(b)
+    ),
+    scand AS (
+        SELECT DISTINCT x.doc_id AS id1, y.doc_id AS id2
+        FROM sbands x JOIN sbands y
+          ON x.b = y.b AND x.bv = y.bv AND x.doc_id < y.doc_id
+    )"""

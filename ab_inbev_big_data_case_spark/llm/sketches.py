@@ -26,7 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ab_inbev_big_data_case_spark.functions.text import token_hash64, tokens
+from ab_inbev_big_data_case_spark.functions.text import (
+    token_hash64,
+    token_hash64_sql,
+    tokens,
+)
 
 
 def _bucket(row: F.Column, item: F.Column, width: int) -> F.Column:
@@ -216,7 +220,7 @@ def hll_oracle_sql(item_expr: str, source_sql: str, p: int = 8) -> str:
     return f"""
     WITH items AS ({source_sql}),
     hashed AS (
-        SELECT ('0x' || substr(sha256({item_expr}), 1, 15))::BIGINT AS h
+        SELECT {token_hash64_sql(item_expr)} AS h
         FROM items
     ),
     regs AS (

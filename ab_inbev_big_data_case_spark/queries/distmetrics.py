@@ -631,39 +631,25 @@ def reliability_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # come from EXACTLY the pipelines being compared (no re-derived variant
 # that could drift).
 from ab_inbev_big_data_case_spark.llm.dedup import (  # noqa: E402
+    KEPT_BANDS_SQL,
+    LSH_BANDS_SQL,
     LSH_MAX_BUCKET_OCCUPANCY,
+    MINHASH_SIG_SQL,
     lsh_band_buckets_wide,
     lsh_candidate_pairs,
+    lsh_pairs_sql,
     minhash_signatures_wide,
     shingle_set,
+    shingle_set_sql,
+    simhash_band_pairs_sql,
+    simhash_sig_sql,
 )
-from ab_inbev_big_data_case_spark.queries.llm import (  # noqa: E402
-    _BANDS_CTE,
-    _KEPT_BANDS_CTE,
-    _SHINGLES_CTE,
-    _SIG_CTE,
-    _SIMHASH_SIG_CTE_RENAMED,
-    simhash_hamming_pairs,
-)
+from ab_inbev_big_data_case_spark.queries.llm import simhash_hamming_pairs  # noqa: E402
 
 _MCNEMAR_SQL = f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    mh AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    {_SIMHASH_SIG_CTE_RENAMED},
-    sbands AS (
-        SELECT doc_id, b, (s >> (15 * b)::INT) & 32767 AS bv
-        FROM ssig CROSS JOIN range(4) t(b)
-    ),
-    scand AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM sbands a JOIN sbands b
-          ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
-    ),
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("mh")},
+    {simhash_sig_sql("ssig")}, {simhash_band_pairs_sql("ssig")},
     sh_pairs AS (
         SELECT c.id1, c.id2
         FROM scand c
@@ -773,12 +759,12 @@ def mcnemar_dedup_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------- deterministic permutation test
 
-from ab_inbev_big_data_case_spark.functions.text import token_hash64  # noqa: E402
+from ab_inbev_big_data_case_spark.functions.text import (  # noqa: E402
+    token_hash64,
+    token_hash64_sql,
+)
 
 _PERM_R = 20
-
-#: DuckDB twin of token_hash64 (functions/text.py module doc)
-_PERM_H64 = "('0x' || substr(sha256({x}), 1, 15))::BIGINT"
 
 _PERM_SQL = f"""
     WITH base AS (
@@ -790,7 +776,7 @@ _PERM_SQL = f"""
     fan AS (
         SELECT b.r,
                CASE WHEN b.r = 0 THEN arm
-                    ELSE ({_PERM_H64.format(x="event_id::VARCHAR || ':' || b.r::VARCHAR")} % 2)
+                    ELSE ({token_hash64_sql("event_id::VARCHAR || ':' || b.r::VARCHAR")} % 2)
                END AS arm_r,
                v_u
         FROM (SELECT *, unnest(range(0, {_PERM_R + 1})) AS r FROM base) b

@@ -2,10 +2,6 @@
 operators"): dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard),
 similarity search (brute-force + LSH ANN + IVF ANN), text analysis,
 multimodal plumbing.
-
-Every hash-based oracle mirrors the engine's portable sha256 hash
-(``functions.text``): ``('0x' || substr(sha256(x),1,15))::BIGINT`` ≡
-``conv(substring(sha2(x,256),1,15),16,10)::long`` — verified bit-identical.
 """
 
 from __future__ import annotations
@@ -13,18 +9,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ab_inbev_big_data_case_spark.functions.text import shingles, token_hash64, tokens
+from ab_inbev_big_data_case_spark.functions.text import (
+    shingles,
+    shingles_sql,
+    token_hash64,
+    token_hash64_sql,
+    token_hash_mod_sql,
+    tokens,
+)
 from ab_inbev_big_data_case_spark.llm.dedup import (
+    KEPT_BANDS_SQL,
+    LSH_BANDS_SQL,
     LSH_MAX_BUCKET_OCCUPANCY,
+    MINHASH_SIG_SQL,
     chunk_dup_stats,
     exact_dedup_stats,
     lsh_band_buckets_wide,
     lsh_candidate_pairs,
+    lsh_pairs_sql,
     minhash_signatures,
     minhash_signatures_wide,
     ngram_jaccard_pairs,
     shingle_set,
+    shingle_set_sql,
     simhash,
+    simhash_band_pairs_sql,
+    simhash_sig_sql,
 )
 from ab_inbev_big_data_case_spark.llm.multimodal import (
     attach_binary_payload,
@@ -77,58 +87,6 @@ from ab_inbev_big_data_case_spark.operators.graph import (
 )
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
-# ---------------------------------------------------------------- SQL bits
-
-_H64 = "('0x' || substr(sha256({x}), 1, 15))::BIGINT"
-_H9 = f"({_H64} % 1000000007)"
-
-_SHINGLES_CTE = """
-    toksrc AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, len(toks) - 1),
-            i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-        ))) AS shingle
-        FROM toksrc
-    )
-"""
-
-_SIG_CTE = (
-    "hashed AS (SELECT doc_id, "
-    + _H9.format(x="shingle")
-    + """ AS h9 FROM sh),
-    sig AS (
-        SELECT doc_id, seed,
-               min(((2*seed + 1) * h9 + 104729 * seed) % 1000000007) AS minhash
-        FROM hashed CROSS JOIN range(8) t(seed)
-        GROUP BY 1, 2
-    )"""
-)
-
-_BANDS_CTE = """
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               sum(minhash * (CASE WHEN seed % 2 = 0 THEN 1000000007 ELSE 1 END)) AS band_sig
-        FROM sig GROUP BY 1, 2
-    )"""
-
-#: Production occupancy cap on the band buckets (r13, threaded through the
-#: FAMILY ROOT): a bucket with > 64 occupants is boilerplate pooling, not
-#: near-dup signal, and its occupancy² pair fan-out is the quadratic term
-#: the sf1->sf10 audit measured (101k -> 9.7M candidates, 95x for 10x docs;
-#: ``dup_clusters_cc`` rode it to 10.2x wall). Mirrors
-#: ``llm.dedup.LSH_MAX_BUCKET_OCCUPANCY`` = 64 — every oracle that consumes
-#: LSH candidates chains this after ``_BANDS_CTE`` and joins ``kept_bands``
-#: instead of ``bands``, exactly the flagship ``curation_pipeline_e2e``
-#: pattern.
-_KEPT_BANDS_CTE = f"""
-    bsize AS (SELECT band, band_sig, count(*) AS n_occ FROM bands GROUP BY 1, 2),
-    kept_bands AS (
-        SELECT b.doc_id, b.band, b.band_sig
-        FROM bands b JOIN bsize z ON z.band = b.band AND z.band_sig = b.band_sig
-        WHERE z.n_occ BETWEEN 2 AND {LSH_MAX_BUCKET_OCCUPANCY}
-    )"""
-
 # ------------------------------------------------------------------ dedup
 
 
@@ -151,7 +109,7 @@ def exact_dedup_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "minhash_signatures",
     oracle=f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}
     SELECT doc_id, seed, minhash FROM sig
     """,
 )
@@ -165,10 +123,9 @@ def minhash_signatures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "minhash_lsh_pairs",
     oracle=f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE}
-    SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-    FROM kept_bands a JOIN kept_bands b
-      ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("cand")}
+    SELECT id1, id2 FROM cand
     """,
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,13 +150,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "levenshtein_near_dup_pairs",
     oracle=f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    )
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("cand")}
     SELECT c.id1, c.id2,
            levenshtein(x.text, y.text)::BIGINT AS edit_distance,
            greatest(x.n_chars, y.n_chars)::BIGINT AS max_chars,
@@ -263,13 +215,11 @@ def levenshtein_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lsh_index_delta_pairs",
     oracle=f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE}
-    SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-           ((a.doc_id % 10 = 0)::INT + (b.doc_id % 10 = 0)::INT)::INT
-               AS n_new_sides
-    FROM kept_bands a JOIN kept_bands b
-      ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-    WHERE a.doc_id % 10 = 0 OR b.doc_id % 10 = 0
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("cand")}
+    SELECT id1, id2, ((id1 % 10 = 0)::INT + (id2 % 10 = 0)::INT)::INT AS n_new_sides
+    FROM cand
+    WHERE id1 % 10 = 0 OR id2 % 10 = 0
     """,
 )
 def lsh_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,7 +253,7 @@ def lsh_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ngram_jaccard_pairs",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
+    WITH {shingle_set_sql()},
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
     inter AS (
         SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
@@ -332,7 +282,7 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
         FROM documents
     ),
-    h AS (SELECT doc_id, {_H64.format(x='tok')} AS h FROM toks),
+    h AS (SELECT doc_id, {token_hash64_sql('tok')} AS h FROM toks),
     votes AS (
         SELECT doc_id, bit, sum(((h >> bit::INT) % 2) * 2 - 1) AS net_vote
         FROM h CROSS JOIN range(16) t(bit)
@@ -481,7 +431,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
     SELECT doc_id,
            list_sum(list_transform(range(1, len(toks) + 1),
-                    i -> i * ({_H9.format(x='toks[i]')})))::BIGINT AS fingerprint
+                    i -> i * ({token_hash_mod_sql('toks[i]')})))::BIGINT AS fingerprint
     FROM toksrc
     """,
 )
@@ -838,12 +788,8 @@ def multimodal_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "near_dup_dedup_corpus",
     oracle=f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-    ),
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("cand")},
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
     verified AS (
         SELECT c.id1, c.id2
@@ -1010,21 +956,24 @@ def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------- dataset split / export
 
 
+def _split():
+    """The deterministic 80/10/10 train/val/test split of ``doc_id``: the
+    portable hash of ``'split:<doc_id>'`` mod 100 (twin: ``_SPLIT_CASE``)."""
+    h = token_hash64(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
+    return F.when(h < 80, "train").when(h < 90, "val").otherwise("test")
+
+
+_SPLIT_H = f"""({token_hash64_sql("'split:' || doc_id")} % 100)"""
+_SPLIT_CASE = f"""CASE WHEN {_SPLIT_H} < 80 THEN 'train'
+                    WHEN {_SPLIT_H} < 90 THEN 'val' ELSE 'test' END"""
+
+
 @register(
     "train_val_test_split",
-    oracle="""
+    oracle=f"""
     SELECT split, count(*) AS n_docs,
            round(sum(n_chars) * 1.0 / count(*), 2) AS avg_chars
-    FROM (
-        SELECT doc_id, n_chars,
-               CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
-                    ELSE 'test' END AS split
-        FROM (
-            SELECT doc_id, n_chars,
-                   ('0x' || substr(sha256('split:' || doc_id), 1, 15))::BIGINT % 100 AS h
-            FROM documents
-        )
-    )
+    FROM (SELECT n_chars, {_SPLIT_CASE} AS split FROM documents)
     GROUP BY 1
     """,
 )
@@ -1035,19 +984,8 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, re-runs, and cluster sizes; a pure narrow map with no shuffle
     except the final per-split rollup."""
     d = table(spark, sf_dir, "documents")
-    h = (
-        F.conv(
-            F.substring(F.sha2(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 256), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    split = (
-        F.when(h < 80, F.lit("train")).when(h < 90, F.lit("val")).otherwise(F.lit("test"))
-    )
     return (
-        d.select(F.col("doc_id"), F.col("n_chars"), split.alias("split"))
+        d.select(F.col("doc_id"), F.col("n_chars"), _split().alias("split"))
         .groupBy("split")
         .agg(
             F.count("*").alias("n_docs"),
@@ -1061,15 +999,13 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "repetition_score",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            len(shl) AS n_shingles,
            len(list_distinct(shl)) AS n_distinct_shingles,
            round(1.0 - len(list_distinct(shl)) * 1.0 / len(shl), 4) AS rep_ratio
     FROM (
-        SELECT doc_id,
-               list_transform(range(1, len(toks) - 1),
-                              i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) AS shl
+        SELECT doc_id, {shingles_sql("toks")} AS shl
         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
     )
     WHERE len(shl) > 0
@@ -1096,7 +1032,7 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "benchmark_contamination",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
+    WITH {shingle_set_sql()},
     bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh WHERE doc_id % 97 != 0 GROUP BY 1),
     overlap AS (
@@ -1148,13 +1084,8 @@ def _lsh_cc_sql() -> str:
     """Oracle twin of ``_cc_labels``: the minhash_lsh_pairs CTEs as the
     edge list ``prs``, all documents as nodes, then the
     ``connected_components_sql`` chain (``cc_labels``, ``cc_unconverged``)."""
-    return f"""{_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    prs AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
+    return f"""{shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("prs", "src", "dst")},
     docs AS (SELECT doc_id AS v FROM documents),
     {connected_components_sql("docs", "prs", _CC_ROUNDS)}"""
 
@@ -1206,7 +1137,7 @@ def dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sequence_packing_bins",
-    oracle="""
+    oracle=f"""
     SELECT lang, bin, count(*) AS n_docs, sum(n_tokens)::BIGINT AS bin_tokens
     FROM (
         SELECT lang, n_tokens,
@@ -1220,7 +1151,7 @@ def dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM (
                 SELECT doc_id, lang,
                        len(string_split(text, ' ')) AS n_tokens,
-                       ('0x' || substr(sha256('pack:' || doc_id), 1, 15))::BIGINT AS h
+                       {token_hash64_sql("'pack:' || doc_id")} AS h
                 FROM documents
             )
         )
@@ -1236,13 +1167,7 @@ def sequence_packing_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash order makes the packing reproducible run-to-run, the per-
     partition cumsum means no global coordination."""
     d = table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.sha2(F.concat(F.lit("pack:"), F.col("doc_id").cast("string")), 256), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = token_hash64(F.concat(F.lit("pack:"), F.col("doc_id").cast("string")))
     base = d.select(
         "doc_id",
         "lang",
@@ -1266,11 +1191,11 @@ def sequence_packing_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_quota_sample",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, source FROM (
         SELECT doc_id, source, row_number() OVER (
             PARTITION BY source
-            ORDER BY ('0x' || substr(sha256('mix:' || doc_id), 1, 15))::BIGINT, doc_id
+            ORDER BY {token_hash64_sql("'mix:' || doc_id")}, doc_id
         ) AS rn
         FROM documents
     ) WHERE rn <= 10
@@ -1282,13 +1207,7 @@ def source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     or re-partitioning picks the same docs). One window shuffle on source;
     per-source top-k, so skewed sources cost their own partition only."""
     d = table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.sha2(F.concat(F.lit("mix:"), F.col("doc_id").cast("string")), 256), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = token_hash64(F.concat(F.lit("mix:"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         d.select("doc_id", "source", F.row_number().over(w).alias("rn"))
@@ -1299,10 +1218,10 @@ def source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stratified_lang_sample",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang FROM (
         SELECT doc_id, lang,
-               ('0x' || substr(sha256('strat:' || doc_id), 1, 15))::BIGINT % 100 AS h
+               {token_hash64_sql("'strat:' || doc_id")} % 100 AS h
         FROM documents
     )
     WHERE h < (CASE WHEN lang = 'en' THEN 30 WHEN lang = 'es' THEN 60 ELSE 90 END)
@@ -1315,16 +1234,7 @@ def stratified_lang_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is reproducible across engines, re-runs, and partitionings. Pure
     scan-level filter — no shuffle at any corpus size."""
     d = table(spark, sf_dir, "documents")
-    h = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("strat:"), F.col("doc_id").cast("string")), 256), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = token_hash64(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))) % 100
     rate = (
         F.when(F.col("lang") == "en", F.lit(30))
         .when(F.col("lang") == "es", F.lit(60))
@@ -1569,7 +1479,7 @@ def normalize_text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_bucket_mix",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
         SELECT tok, count(*) AS n
         FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
@@ -1596,7 +1506,7 @@ def normalize_text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT bucket,
            count(*) AS n_docs,
-           sum(CASE WHEN ('0x' || substr(sha256('qb' || doc_id), 1, 15))::BIGINT % 100
+           sum(CASE WHEN {token_hash64_sql("'qb' || doc_id")} % 100
                          < CASE bucket WHEN 'head' THEN 100
                                        WHEN 'middle' THEN 50 ELSE 10 END
                     THEN 1 ELSE 0 END)::BIGINT AS n_kept,
@@ -1758,11 +1668,11 @@ from ab_inbev_big_data_case_spark.llm.textstats import boilerplate_ngram_stats  
 
 @register(
     "cms_heavy_hitters",
-    oracle="""
+    oracle=f"""
     WITH occ AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
     hashed AS (
         SELECT r.rw,
-               ('0x' || substr(sha256(r.rw::VARCHAR || ':' || tok), 1, 15))::BIGINT % 512
+               {token_hash64_sql("r.rw::VARCHAR || ':' || tok")} % 512
                    AS bucket
         FROM occ, range(4) r(rw)
     ),
@@ -1770,7 +1680,7 @@ from ab_inbev_big_data_case_spark.llm.textstats import boilerplate_ngram_stats  
     exact AS (SELECT tok, count(*) AS exact_n FROM occ GROUP BY 1),
     probes AS (
         SELECT e.tok, r.rw,
-               ('0x' || substr(sha256(r.rw::VARCHAR || ':' || e.tok), 1, 15))::BIGINT % 512
+               {token_hash64_sql("r.rw::VARCHAR || ':' || e.tok")} % 512
                    AS bucket
         FROM exact e, range(4) r(rw)
     ),
@@ -1798,9 +1708,9 @@ def cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "weighted_reservoir_sample",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, n_chars,
-           round(ln((((('0x' || substr(sha256('wrs:' || doc_id), 1, 15))::BIGINT % 1000000)
+           round(ln(((({token_hash64_sql("'wrs:' || doc_id")} % 1000000)
                       + 0.5) / 1000000.0)) / n_chars, 9) AS key_r
     FROM documents
     ORDER BY key_r DESC, doc_id
@@ -1834,14 +1744,10 @@ def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "boilerplate_ngrams",
-    oracle="""
+    oracle=f"""
     WITH grams AS (
-        SELECT doc_id,
-               unnest(list_distinct(list_transform(range(1, len(toks) - 3),
-                   i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3],
-                                  toks[i+4])))) AS gram
+        SELECT doc_id, unnest(list_distinct({shingles_sql("toks", 5)})) AS gram
         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        WHERE len(toks) >= 5
     ),
     boiler AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 3)
     SELECT g.doc_id, count(*) AS n_grams, count(b.gram) AS n_boiler,
@@ -1948,11 +1854,10 @@ from ab_inbev_big_data_case_spark.llm.sketches import (  # noqa: E402
 #: Distinct 4-token shingles — the item space for the cardinality/membership
 #: sketches (the 31-token fixture vocabulary is too small to exercise them;
 #: the ~24k distinct shingles are not).
-_SHINGLE4_SQL = """
-        SELECT DISTINCT unnest(list_transform(range(1, len(toks) - 2),
-            i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3]))) AS item
+def _shingle4_sql(where: str = "") -> str:
+    return f"""
+        SELECT DISTINCT unnest({shingles_sql("toks", 4)}) AS item
         FROM (SELECT string_split(text, ' ') AS toks FROM documents {where})
-        WHERE len(toks) >= 4
 """
 
 
@@ -1973,8 +1878,8 @@ def _shingles4(spark: SparkSession, sf_dir: str, where=None):
 @register(
     "hll_distinct",
     oracle=f"""
-    WITH est AS ({hll_oracle_sql("item", _SHINGLE4_SQL.format(where=""), p=8)}),
-    exact AS (SELECT count(*) AS exact_n FROM ({_SHINGLE4_SQL.format(where="")}))
+    WITH est AS ({hll_oracle_sql("item", _shingle4_sql(), p=8)}),
+    exact AS (SELECT count(*) AS exact_n FROM ({_shingle4_sql()}))
     SELECT e.registers_hit, e.sum_q, e.hll_est, x.exact_n,
            round((e.hll_est - x.exact_n) / x.exact_n, 4) AS rel_err
     FROM est e CROSS JOIN exact x
@@ -2011,13 +1916,10 @@ _BLOOM_K, _BLOOM_WORDS, _BLOOM_BPW = 3, 4096, 60
 def _bloom_probe_sql() -> str:
     """DuckDB twin of bloom_build + bloom_probe + the accounting join."""
     m_bits = _BLOOM_WORDS * _BLOOM_BPW
-    probe = (
-        "('0x' || substr(sha256('bloom' || i || ':' || item), 1, 15))::BIGINT"
-        f" % {m_bits}"
-    )
+    probe = token_hash64_sql("'bloom' || i || ':' || item") + f" % {m_bits}"
     return f"""
-    WITH build AS ({_SHINGLE4_SQL.format(where="WHERE doc_id % 2 = 0")}),
-    cand AS ({_SHINGLE4_SQL.format(where="WHERE doc_id % 2 = 1")}),
+    WITH build AS ({_shingle4_sql("WHERE doc_id % 2 = 0")}),
+    cand AS ({_shingle4_sql("WHERE doc_id % 2 = 1")}),
     build_bits AS (
         SELECT DISTINCT ({probe}) // {_BLOOM_BPW} AS word_idx,
                1::BIGINT << (({probe}) % {_BLOOM_BPW}) AS mask
@@ -2093,15 +1995,11 @@ from ab_inbev_big_data_case_spark.llm.similarity import sparse_tfidf_topk  # noq
 
 @register(
     "sparse_cosine_topk",
-    oracle="""
+    oracle=f"""
     WITH grams AS (
         SELECT doc_id AS doc, gram, count(*) AS cnt FROM (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(toks) - 2),
-                       i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                                      toks[i+3]))) AS gram
+            SELECT doc_id, unnest({shingles_sql("toks", 4)}) AS gram
             FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-            WHERE len(toks) >= 4
         ) GROUP BY 1, 2
     ),
     idf AS (SELECT gram, 100000 // count(*) AS idfq FROM grams
@@ -2252,14 +2150,14 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hll_rolling_distinct",
-    oracle="""
+    oracle=f"""
     WITH items AS (
         SELECT DISTINCT ts::DATE AS day,
                'u' || user_id || ':' || ts::DATE AS item
         FROM events
     ),
     hashed AS (
-        SELECT day, ('0x' || substr(sha256(item), 1, 15))::BIGINT AS h
+        SELECT day, {token_hash64_sql("item")} AS h
         FROM items
     ),
     regs AS (
@@ -2357,46 +2255,14 @@ def hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
               >= len(string_split(text, ' ')) * 3
     ),
     exact AS (
-        SELECT doc_id, lang, toks FROM (
+        SELECT doc_id, lang, text, toks FROM (
             SELECT g.*, row_number() OVER (
                 PARTITION BY sha256(text) ORDER BY doc_id
             ) AS rn FROM gate g
         ) WHERE rn = 1
     ),
-    sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, len(toks) - 1),
-            i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-        ))) AS shingle
-        FROM exact
-    ),
-    hashed AS (SELECT doc_id, {_H9.format(x='shingle')} AS h9 FROM sh),
-    sig AS (
-        SELECT doc_id, seed,
-               min(((2*seed + 1) * h9 + 104729 * seed) % 1000000007) AS minhash
-        FROM hashed CROSS JOIN range(8) t(seed) GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               sum(minhash * (CASE WHEN seed % 2 = 0 THEN 1000000007 ELSE 1 END))
-                   AS band_sig
-        FROM sig GROUP BY 1, 2
-    ),
-    -- per-bucket occupancy cap (r12): a band bucket with > 64 occupants is
-    -- boilerplate pooling, not near-dup signal, and its occupancy^2 pair
-    -- fan-out is the quadratic term the sf10 audit measured (95x candidate
-    -- growth for 10x docs). Mirrors max_bucket_occupancy=64 in the engine.
-    bsize AS (SELECT band, band_sig, count(*) AS n_occ FROM bands GROUP BY 1, 2),
-    kept_bands AS (
-        SELECT b.doc_id, b.band, b.band_sig
-        FROM bands b JOIN bsize z ON z.band = b.band AND z.band_sig = b.band_sig
-        WHERE z.n_occ BETWEEN 2 AND {LSH_MAX_BUCKET_OCCUPANCY}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-    ),
+    {shingle_set_sql("exact")}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("cand")},
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
     verified AS (
         SELECT c.id2
@@ -2423,12 +2289,9 @@ def hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND e.doc_id % 97 != 0
           AND c.n_overlap * 2 <= z.n_sh
     )
-    SELECT CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
-                ELSE 'test' END AS split,
+    SELECT {_SPLIT_CASE} AS split,
            lang, count(*)::BIGINT AS n_docs, sum(n_toks)::BIGINT AS n_tokens
-    FROM (SELECT lang, n_toks,
-                 {_H64.format(x="'split:' || doc_id")} % 100 AS h
-          FROM clean)
+    FROM clean
     GROUP BY 1, 2
     """,
 )
@@ -2493,23 +2356,8 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(contam.withColumnRenamed("n_overlap", "__ov"), "doc_id", "left")
         .filter(F.coalesce(F.col("__ov"), F.lit(0)) * 2 <= F.col("n_sh"))
     )
-    h = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    split = (
-        F.when(h < 80, "train").when(h < 90, "val").otherwise("test")
-    )
     return (
-        clean.select(split.alias("split"), "lang", "n_toks")
+        clean.select(_split().alias("split"), "lang", "n_toks")
         .groupBy("split", "lang")
         .agg(F.count("*").alias("n_docs"), F.sum("n_toks").alias("n_tokens"))
     )
@@ -2610,21 +2458,12 @@ def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- split leakage audit
 
-_SPLIT_CASE = """CASE WHEN {h} < 80 THEN 'train' WHEN {h} < 90 THEN 'val'
-                      ELSE 'test' END"""
-
 _LEAKAGE_SQL = f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("cand")},
     sp AS (
         SELECT doc_id,
-               {_SPLIT_CASE.format(h=f"({_H64.format(x=chr(39) + 'split:' + chr(39) + ' || doc_id')} % 100)")}
-                   AS split
+               {_SPLIT_CASE} AS split
         FROM documents
     ),
     marked AS (
@@ -2659,24 +2498,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         max_bucket_occupancy=LSH_MAX_BUCKET_OCCUPANCY,
     )
-    h = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    sp = d.select(
-        "doc_id",
-        F.when(h < 80, "train").when(h < 90, "val").otherwise("test").alias(
-            "split"
-        ),
-    )
+    sp = d.select("doc_id", _split().alias("split"))
     s1 = sp.select(F.col("doc_id").alias("id1"), F.col("split").alias("sp1"))
     s2 = sp.select(F.col("doc_id").alias("id2"), F.col("split").alias("sp2"))
     marked = (
@@ -3223,45 +3045,11 @@ def mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------- SimHash banded near-dup pair search
 
-_SIMHASH_SIG_CTE = f"""
-    stoksrc AS (
-        SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-    ),
-    sfeat AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, len(toks) - 1),
-            i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-        ))) AS tok
-        FROM stoksrc
-    ),
-    sh_h AS (SELECT doc_id, {_H64.format(x='tok')} AS h FROM sfeat),
-    votes AS (
-        SELECT doc_id, bit, sum(((h >> bit::INT) % 2) * 2 - 1) AS net_vote
-        FROM sh_h CROSS JOIN range(60) t(bit)
-        GROUP BY 1, 2
-    ),
-    sig AS (
-        SELECT doc_id,
-               sum(CASE WHEN net_vote > 0
-                        THEN (1::BIGINT << bit::INT) ELSE 0 END)::BIGINT AS s
-        FROM votes GROUP BY 1
-    )
-"""
-
 _SIMHASH_PAIRS_SQL = f"""
-    WITH {_SIMHASH_SIG_CTE},
-    bands AS (
-        SELECT doc_id, b, (s >> (15 * b)::INT) & 32767 AS bv
-        FROM sig CROSS JOIN range(4) t(b)
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM bands a JOIN bands b
-          ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
-    )
+    WITH {shingle_set_sql()}, {simhash_sig_sql()}, {simhash_band_pairs_sql()}
     SELECT c.id1, c.id2,
            bit_count(xor(s1.s, s2.s))::BIGINT AS hamming_d
-    FROM cand c
+    FROM scand c
     JOIN sig s1 ON s1.doc_id = c.id1
     JOIN sig s2 ON s2.doc_id = c.id2
     WHERE bit_count(xor(s1.s, s2.s)) <= 3
@@ -3729,28 +3517,10 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- near-dup path agreement audit
 
-#: the SimHash sig CTE with its table renamed (the MinHash oracle
-#: stack already defines a CTE named "sig")
-_SIMHASH_SIG_CTE_RENAMED = _SIMHASH_SIG_CTE.replace("sig AS (", "ssig AS (")
-
 _AGREE_SQL = f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    mh AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    {_SIMHASH_SIG_CTE_RENAMED},
-    sbands AS (
-        SELECT doc_id, b, (s >> (15 * b)::INT) & 32767 AS bv
-        FROM ssig CROSS JOIN range(4) t(b)
-    ),
-    scand AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM sbands a JOIN sbands b
-          ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
-    ),
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("mh")},
+    {simhash_sig_sql("ssig")}, {simhash_band_pairs_sql("ssig")},
     sh_pairs AS (
         SELECT c.id1, c.id2
         FROM scand c
@@ -4736,12 +4506,6 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     (semi-join-pruned tf, broadcast query/stats, rounded-score
     ranking); the agreement joins two ≤10-row lists and the depth sum
     runs over a fixed 10-row spine with constant weights."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    lens = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    stats = lens.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-    dfreq = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    q = dfreq.orderBy(F.col("df").desc(), "term").offset(9).limit(3)
     bm_w = Window.orderBy(F.col("bm25_r").desc(), "doc_id")  # ≤10-row spine
     bm = (
         bm25_topk(spark, sf_dir)
@@ -5199,13 +4963,8 @@ def embedding_dim_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------- dedup pair transitivity audit
 
 _TRANSITIVITY_SQL = f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}, {_KEPT_BANDS_CTE},
-    e AS (
-        SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("e", "u", "v")},
     w AS (
         SELECT e1.u, e1.v AS mid, e2.v AS w
         FROM e e1 JOIN e e2 ON e2.u = e1.v
@@ -5646,8 +5405,7 @@ _KMV_M = 1 << 60  # token_hash64 codomain
 
 _KMV_SQL = f"""
     WITH h AS (
-        SELECT DISTINCT ('0x' || substr(sha256(o_custkey::VARCHAR), 1, 15))
-                            ::BIGINT AS h,
+        SELECT DISTINCT {token_hash64_sql("o_custkey::VARCHAR")} AS h,
                o_custkey
         FROM orders
     ),
@@ -5696,8 +5454,6 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed window rank. All deterministic — the portable sha-derived
     hash makes the sketch STATE itself oracle-checkable, not just the
     estimate."""
-    from ab_inbev_big_data_case_spark.functions.text import token_hash64
-
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     h = o.select(
@@ -5847,7 +5603,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # layout (the ivf_nprobe_sweep of the MinHash path). Band signatures are
 # order-pinned string folds, so any r works without overflow.
 _LSH_SWEEP_SQL = f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE},
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL},
     cfg AS (
         SELECT unnest([1, 2, 4, 8]) AS r
     ),
@@ -6539,7 +6295,7 @@ def cka_embedding_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # given cap actually costs in dropped candidate mass.
 
 _LSH_OCC_SQL = f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE},
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL},
     occ AS (SELECT band, band_sig, count(*) AS occ FROM bands GROUP BY 1, 2)
     SELECT sum((occ = 1)::INT)::BIGINT AS n_singleton,
            sum((occ >= 2)::INT)::BIGINT AS n_buckets,
@@ -6608,7 +6364,7 @@ def lsh_bucket_occupancy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CAP_SENS_SQL = f"""
-    WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE},
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL},
     occ AS (SELECT band, band_sig, count(*) AS occ FROM bands GROUP BY 1, 2),
     caps AS (SELECT unnest([2, 4, 8, 16, 64]) AS cap)
     SELECT c.cap,
@@ -6682,11 +6438,7 @@ def dedup_cap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SIMHASH_OCC_SQL = f"""
-    WITH {_SIMHASH_SIG_CTE},
-    sbands AS (
-        SELECT doc_id, b, (s >> (15 * b)::INT) & 32767 AS bv
-        FROM sig CROSS JOIN range(4) t(b)
-    ),
+    WITH {shingle_set_sql()}, {simhash_sig_sql()}, {simhash_band_pairs_sql()},
     occ AS (SELECT b, bv, count(*) AS occ FROM sbands GROUP BY 1, 2)
     SELECT sum((occ = 1)::INT)::BIGINT AS n_singleton,
            sum((occ >= 2)::INT)::BIGINT AS n_buckets,
@@ -6749,7 +6501,7 @@ def simhash_band_occupancy_report(spark: SparkSession, sf_dir: str) -> DataFrame
 # ------------------------------------------- per-document n-gram novelty
 
 _NOVELTY_SQL = f"""
-    WITH {_SHINGLES_CTE},
+    WITH {shingle_set_sql()},
     first AS (SELECT shingle, min(doc_id) AS first_doc FROM sh GROUP BY 1)
     SELECT s.doc_id,
            count(*)::BIGINT AS n_sh,
@@ -6804,9 +6556,8 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: fixed audit query for the lexical scorer — three corpus terms with
 #: distinct document frequencies so idf variation is fixture-visible
 _BM25_TERMS = ("spark", "join", "window")
-_BM25_K1, _BM25_B = 1.2, 0.75
 
-_BM25_SQL = f"""
+_BM25_DOC_SCORES_SQL = f"""
     WITH toks AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
     ),
@@ -6846,7 +6597,7 @@ _BM25_SQL = f"""
 """
 
 
-@register("bm25_doc_scores", oracle=_BM25_SQL)
+@register("bm25_doc_scores", oracle=_BM25_DOC_SCORES_SQL)
 def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 (Robertson–Spärck Jones; Lucene's +1 idf form) top-20
     documents for a fixed 3-term audit query — the LEXICAL retrieval path

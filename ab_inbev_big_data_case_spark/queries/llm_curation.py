@@ -20,13 +20,19 @@ from pyspark.sql import functions as F
 
 from ab_inbev_big_data_case_spark.functions.text import (
     shingles,
+    shingles_sql,
     token_hash64,
+    token_hash64_sql,
     tokens,
 )
 from ab_inbev_big_data_case_spark.llm.dedup import (
-    LSH_MAX_BUCKET_OCCUPANCY,
+    KEPT_BANDS_SQL,
+    LSH_BANDS_SQL,
+    MINHASH_SIG_SQL,
     containment_pairs,
+    lsh_pairs_sql,
     shingle_set,
+    shingle_set_sql,
 )
 from ab_inbev_big_data_case_spark.llm.similarity import (
     _DOT,
@@ -45,8 +51,6 @@ from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
-_H64 = "('0x' || substr(sha256({x}), 1, 15))::BIGINT"
-
 # DSIR hashed-feature space size (the paper uses 10k buckets for hashed
 # unigrams; collisions are part of the estimator, not an error)
 _DSIR_BUCKETS = 10_000
@@ -61,7 +65,7 @@ _DSIR_TARGET = ("src1", "src2", "src3")
         FROM documents
     ),
     bt AS (
-        SELECT doc_id, source, ({_H64.format(x='tok')} % {_DSIR_BUCKETS}) AS bkt
+        SELECT doc_id, source, ({token_hash64_sql('tok')} % {_DSIR_BUCKETS}) AS bkt
         FROM toks
     ),
     cnt AS (
@@ -119,14 +123,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bigram_lm_score",
-    oracle="""
+    oracle=f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    bg AS (
-        SELECT doc_id, unnest(list_transform(
-            range(1, len(toks)), i -> concat_ws(' ', toks[i], toks[i+1])
-        )) AS bigram
-        FROM t WHERE len(toks) >= 2
-    ),
+    bg AS (SELECT doc_id, unnest({shingles_sql("toks", 2)}) AS bigram FROM t),
     btab AS (SELECT bigram, count(*) AS n_big FROM bg GROUP BY 1),
     ptab AS (
         SELECT split_part(bigram, ' ', 1) AS pre, count(*) AS n_pre
@@ -182,14 +181,9 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "kneser_ney_bigram_score",
-    oracle="""
+    oracle=f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    bg AS (
-        SELECT doc_id, unnest(list_transform(
-            range(1, len(toks)), i -> concat_ws(' ', toks[i], toks[i+1])
-        )) AS bigram
-        FROM t WHERE len(toks) >= 2
-    ),
+    bg AS (SELECT doc_id, unnest({shingles_sql("toks", 2)}) AS bigram FROM t),
     btab AS (
         SELECT bigram, split_part(bigram, ' ', 1) AS pre,
                split_part(bigram, ' ', 2) AS w, count(*) AS n_big
@@ -345,18 +339,6 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHINGLES_CTE = """
-    toksrc AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, len(toks) - 1),
-            i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-        ))) AS shingle
-        FROM toksrc
-    )
-"""
-
-
 # doc-frequency cap for the containment self-join: shingles shared by more
 # docs than this are dropped before pairing (each contributes df² candidate
 # rows). Applied identically in Spark and the oracle, so results match.
@@ -366,7 +348,7 @@ _CONT_MAX_DF = 100
 @register(
     "containment_pairs",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
+    WITH {shingle_set_sql()},
     kept AS (
         SELECT sh.doc_id, sh.shingle FROM sh
         JOIN (SELECT shingle FROM sh GROUP BY 1
@@ -474,14 +456,9 @@ def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "backoff_lm_score",
-    oracle="""
+    oracle=f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    bg AS (
-        SELECT doc_id, unnest(list_transform(
-            range(1, len(toks)), i -> concat_ws(' ', toks[i], toks[i+1])
-        )) AS bigram
-        FROM t WHERE len(toks) >= 2
-    ),
+    bg AS (SELECT doc_id, unnest({shingles_sql("toks", 2)}) AS bigram FROM t),
     bx AS (
         SELECT doc_id, bigram,
                split_part(bigram, ' ', 1) AS pre,
@@ -1023,7 +1000,7 @@ _SPAN_CTE = f"""
     ),
     sph AS (
         SELECT s.doc_id, s.pos,
-               {_H64.format(x=f"array_to_string(list_slice(t.toks, s.pos + 1, s.pos + {_SPAN_N}), ' ')")}
+               {token_hash64_sql(f"array_to_string(list_slice(t.toks, s.pos + 1, s.pos + {_SPAN_N}), ' ')")}
                    AS h
         FROM sp s JOIN toksrc t ON t.doc_id = s.doc_id
     )
@@ -1105,7 +1082,7 @@ _N_SHARDS = 16
 
 _SHARD_SQL = f"""
     WITH a AS (
-        SELECT ({_H64.format(x="doc_id::VARCHAR")} % {_N_SHARDS}) AS shard_id,
+        SELECT ({token_hash64_sql("doc_id::VARCHAR")} % {_N_SHARDS}) AS shard_id,
                len(string_split(text, ' ')) AS n_toks
         FROM documents
     ),
@@ -1157,42 +1134,8 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------ MinHash estimator accuracy
 
 _MINHASH_ACC_SQL = f"""
-    WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS toks
-                    FROM documents),
-    sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, len(toks) - 1),
-            i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-        ))) AS shingle
-        FROM toksrc
-    ),
-    hashed AS (SELECT doc_id,
-               ({_H64.format(x='shingle')} % 1000000007) AS h9 FROM sh),
-    sig AS (
-        SELECT doc_id, seed,
-               min(((2*seed + 1) * h9 + 104729 * seed) % 1000000007)
-                   AS minhash
-        FROM hashed CROSS JOIN range(8) t(seed)
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               sum(minhash * (CASE WHEN seed % 2 = 0
-                              THEN 1000000007 ELSE 1 END)) AS band_sig
-        FROM sig GROUP BY 1, 2
-    ),
-    bsize AS (SELECT band, band_sig, count(*) AS n_occ FROM bands GROUP BY 1, 2),
-    kept_bands AS (
-        SELECT b.doc_id, b.band, b.band_sig
-        FROM bands b JOIN bsize z ON z.band = b.band AND z.band_sig = b.band_sig
-        WHERE z.n_occ BETWEEN 2 AND {LSH_MAX_BUCKET_OCCUPANCY}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM kept_bands a JOIN kept_bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
+    WITH {shingle_set_sql()}, {MINHASH_SIG_SQL}, {LSH_BANDS_SQL}, {KEPT_BANDS_SQL},
+    {lsh_pairs_sql("cand")},
     est AS (
         SELECT c.id1, c.id2,
                avg((sa.minhash = sb.minhash)::INT) AS est_j
@@ -1472,11 +1415,7 @@ _PMI_SQL = f"""
                string_split(bigram, ' ')[2] AS w2,
                count(*) AS n_xy
         FROM (
-            SELECT unnest(list_transform(
-                range(1, len(string_split(text, ' '))),
-                i -> concat_ws(' ', string_split(text, ' ')[i],
-                               string_split(text, ' ')[i+1])
-            )) AS bigram
+            SELECT unnest({shingles_sql("string_split(text, ' ')", 2)}) AS bigram
             FROM documents
         )
         GROUP BY 1, 2
@@ -1484,11 +1423,7 @@ _PMI_SQL = f"""
     ),
     tot AS (SELECT sum(n_xy) AS n FROM (
         SELECT count(*) AS n_xy FROM (
-            SELECT unnest(list_transform(
-                range(1, len(string_split(text, ' '))),
-                i -> concat_ws(' ', string_split(text, ' ')[i],
-                               string_split(text, ' ')[i+1])
-            )) AS bigram
+            SELECT unnest({shingles_sql("string_split(text, ' ')", 2)}) AS bigram
             FROM documents
         ) GROUP BY bigram
     ))
@@ -1566,13 +1501,7 @@ _HEAPS_CKPTS = 20
 _HEAPS_SQL = f"""
     WITH nd AS (SELECT count(*) AS n_docs FROM documents),
     toksrc0 AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-    toks AS (
-        SELECT doc_id, unnest(list_transform(
-            range(1, len(tk) - 1),
-            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])
-        )) AS w
-        FROM toksrc0
-    ),
+    toks AS (SELECT doc_id, unnest({shingles_sql("tk")}) AS w FROM toksrc0),
     tokck AS (
         SELECT least(doc_id * {_HEAPS_CKPTS} // n.n_docs + 1,
                      {_HEAPS_CKPTS}) AS ck,
@@ -1690,7 +1619,7 @@ _ESS_SQL = f"""
         FROM documents
     ),
     bt AS (
-        SELECT doc_id, source, ({_H64.format(x='tok')} % {_DSIR_BUCKETS}) AS bkt
+        SELECT doc_id, source, ({token_hash64_sql('tok')} % {_DSIR_BUCKETS}) AS bkt
         FROM toks
     ),
     cnt AS (
@@ -1769,7 +1698,7 @@ _HASHCOLL_SQL = f"""
         FROM documents
     ),
     b AS (
-        SELECT ({_H64.format(x='tok')} % {_DSIR_BUCKETS}) AS bkt, count(*) AS n
+        SELECT ({token_hash64_sql('tok')} % {_DSIR_BUCKETS}) AS bkt, count(*) AS n
         FROM toks GROUP BY 1
     )
     SELECT (SELECT count(*) FROM toks) AS n_terms,
@@ -1828,10 +1757,8 @@ _WIN_K = 4  # tokens per k-gram
 _WIN_W = 4  # k-gram hashes per winnowing window
 _POS_PACK = 1 << 20  # pos packs into the low 20 bits of the selection key
 
-#: 40-bit portable k-gram hash (narrower than token_hash64's 60 bits so the
-#: packed (hash, reversed-pos) selection key h·2^20 + (2^20−1−pos) stays
-#: inside int64)
-_H40 = "('0x' || substr(sha256({x}), 1, 10))::BIGINT"
+#: k-grams hash to the top 40 of token_hash64's 60 bits, so the packed
+#: (hash, reversed-pos) selection key h·2^20 + (2^20−1−pos) stays inside int64
 
 _WINNOW_SQL = f"""
     WITH toksrc AS (
@@ -1846,7 +1773,7 @@ _WINNOW_SQL = f"""
     ),
     kgh AS (
         SELECT doc_id, nk, pos,
-               {_H40.format(x=f"array_to_string(list_slice(toks, pos + 1, pos + {_WIN_K}), ' ')")}
+               ({token_hash64_sql(f"array_to_string(list_slice(toks, pos + 1, pos + {_WIN_K}), ' ')")} >> 20)
                    AS h
         FROM kg
     ),
@@ -1931,9 +1858,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "nk",
         "pos",
-        F.conv(F.substring(F.sha2("kgram", 256), 1, 10), 16, 10)
-        .cast("long")
-        .alias("h"),
+        F.shiftright(token_hash64(F.col("kgram")), 20).alias("h"),
     )
     wins = kgh.select(
         "doc_id",
@@ -1983,17 +1908,13 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------- bigram entropy rate
 
-_ENTRATE_SQL = """
+_ENTRATE_SQL = f"""
     WITH bg AS (
         SELECT string_split(bigram, ' ')[1] AS w1,
                string_split(bigram, ' ')[2] AS w2,
                count(*) AS n12
         FROM (
-            SELECT unnest(list_transform(
-                range(1, len(string_split(text, ' '))),
-                i -> concat_ws(' ', string_split(text, ' ')[i],
-                               string_split(text, ' ')[i+1])
-            )) AS bigram
+            SELECT unnest({shingles_sql("string_split(text, ' ')", 2)}) AS bigram
             FROM documents
         )
         GROUP BY 1, 2
@@ -2317,13 +2238,13 @@ def quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------- split conformal prediction
 
-_CONFORMAL_SQL = """
+_CONFORMAL_SQL = f"""
     WITH scored AS (
         SELECT doc_id,
                abs(n_chars
                    - 6 * (1 + len(text) - len(replace(text, ' ', ''))))
                    ::BIGINT AS score,
-               ('0x' || substr(sha256(doc_id::VARCHAR), 1, 15))::BIGINT % 2
+               {token_hash64_sql("doc_id::VARCHAR")} % 2
                    AS fold
         FROM documents
     ),
@@ -2478,10 +2399,10 @@ def loo_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "kfold_cv_mae",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT n_chars::BIGINT AS y,
-               ('0x' || substr(sha256(doc_id::VARCHAR), 1, 15))::BIGINT % 5
+               {token_hash64_sql("doc_id::VARCHAR")} % 5
                    AS fold
         FROM documents
     ),
@@ -2778,8 +2699,7 @@ def _dbscan_oracle_sql() -> str:
             SELECT c.*,
                    row_number() OVER (
                        PARTITION BY sx, sy
-                       ORDER BY ('0x' || substr(sha256('dbscan:'
-                                 || vec_id::VARCHAR), 1, 15))::BIGINT,
+                       ORDER BY {token_hash64_sql("'dbscan:' || vec_id::VARCHAR")},
                                 vec_id
                    ) AS rk
             FROM core c

@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.text import (
+    token_hash64,
+    token_hash64_sql,
+    token_hash_mod_sql,
+)
 from ab_inbev_big_data_case_spark.operators.relational import prefix_sums
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, load_tables, table
@@ -1096,8 +1101,7 @@ _BOOT_CASE = " ".join(
 _BOOT_SQL = f"""
     WITH reps AS (
         SELECT o_orderkey, o_totalprice, t.b,
-               (('0x' || substr(sha256('boot:' || o_orderkey || ':' || t.b),
-                               1, 15))::BIGINT % 1000000007) / 1000000007.0
+               {token_hash_mod_sql("'boot:' || o_orderkey || ':' || t.b")} / 1000000007.0
                    AS u
         FROM orders CROSS JOIN range({_BOOT_B}) t(b)
     ),
@@ -1151,23 +1155,14 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "u",
         (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(
-                            F.lit("boot:"),
-                            F.col("o_orderkey").cast("string"),
-                            F.lit(":"),
-                            F.col("b").cast("string"),
-                        ),
-                        256,
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            token_hash64(
+                F.concat(
+                    F.lit("boot:"),
+                    F.col("o_orderkey").cast("string"),
+                    F.lit(":"),
+                    F.col("b").cast("string"),
+                )
+            )
             % 1000000007
         )
         / 1000000007.0,
@@ -1220,7 +1215,7 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ CUPED variance reduction
 
-_CUPED_SQL = """
+_CUPED_SQL = f"""
     WITH spend AS (
         SELECT o_custkey AS cid,
                CAST(round(sum(CASE WHEN year(o_orderdate) = 1996
@@ -1233,7 +1228,7 @@ _CUPED_SQL = """
     ),
     armed AS (
         SELECT cid, y_c, x_c,
-               CASE WHEN (('0x' || substr(sha256('exp:' || cid), 1, 15))::BIGINT
+               CASE WHEN ({token_hash64_sql("'exp:' || cid")}
                           % 100) < 50 THEN 'treatment' ELSE 'control' END AS arm
         FROM spend
     ),
@@ -1321,18 +1316,7 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = o.groupBy(F.col("o_custkey").alias("cid")).agg(
         cents(1996).alias("y_c"), cents(1995).alias("x_c")
     )
-    h = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("exp:"), F.col("cid").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = token_hash64(F.concat(F.lit("exp:"), F.col("cid").cast("string"))) % 100
     armed = spend.withColumn(
         "arm", F.when(h < 50, "treatment").otherwise("control")
     )
@@ -1439,7 +1423,7 @@ def target_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ quantile treatment effect
 
-_QTE_SQL = """
+_QTE_SQL = f"""
     WITH spend AS (
         SELECT o_custkey AS cid,
                CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
@@ -1448,7 +1432,7 @@ _QTE_SQL = """
     ),
     armed AS (
         SELECT y_c,
-               CASE WHEN (('0x' || substr(sha256('exp:' || cid), 1, 15))::BIGINT
+               CASE WHEN ({token_hash64_sql("'exp:' || cid")}
                           % 100) < 50 THEN 'treatment' ELSE 'control' END AS arm
         FROM spend
     ),
@@ -1498,20 +1482,7 @@ def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y_c")
     )
-    h = (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(F.lit("exp:"), F.col("cid").cast("string")), 256
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = token_hash64(F.concat(F.lit("exp:"), F.col("cid").cast("string"))) % 100
     armed = spend.select(
         "y_c", F.when(h < 50, "treatment").otherwise("control").alias("arm")
     )
@@ -1549,11 +1520,10 @@ def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- group-sequential A/B monitor
 
-_GSM_SQL = """
+_GSM_SQL = f"""
     WITH base AS (
         SELECT date_trunc('week', o_orderdate)::TIMESTAMP AS wk,
-               CASE WHEN (('0x' || substr(sha256('exp:' || o_custkey), 1, 15))
-                          ::BIGINT % 100) < 50
+               CASE WHEN ({token_hash64_sql("'exp:' || o_custkey")} % 100) < 50
                     THEN 't' ELSE 'c' END AS arm,
                CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
                     AS BIGINT) AS y_c
@@ -1616,23 +1586,7 @@ def group_sequential_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine PARTITIONED by arm; every z computes from exact cumulative
     moments on identical double trees."""
     o = table(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1996)
-    h = (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(
-                        F.lit("exp:"), F.col("o_custkey").cast("string")
-                    ),
-                    256,
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = token_hash64(F.concat(F.lit("exp:"), F.col("o_custkey").cast("string"))) % 100
     base = o.select(
         F.date_trunc("week", "o_orderdate").alias("wk"),
         F.when(h < 50, "t").otherwise("c").alias("arm"),
@@ -5273,7 +5227,7 @@ def ols_influence_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # seed points, pair them into 8 candidate lines, and vote with the same
 # inlier margin. All votes for all candidates come out of ONE pass over the
 # spine against a broadcast 8-row model table.
-_RANSAC_SQL = """
+_RANSAC_SQL = f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
                count(*)::BIGINT AS x,
@@ -5287,8 +5241,7 @@ _RANSAC_SQL = """
     seeds AS (
         SELECT x, y_c,
                row_number() OVER (
-                   ORDER BY ('0x' || substr(sha256('ransac-' || d::VARCHAR),
-                                            1, 15))::BIGINT, d
+                   ORDER BY {token_hash64_sql("'ransac-' || d::VARCHAR")}, d
                ) AS rn
         FROM daily
         QUALIFY rn <= 16
@@ -5377,8 +5330,6 @@ def ransac_line_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side pass (8·N predicate evaluations, one 8-key combinable agg);
     the winner's refit is one more moment aggregate. Nothing scales worse
     than the spine itself."""
-    from ab_inbev_big_data_case_spark.functions.text import token_hash64
-
     o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.count("*").alias("x"),

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.text import token_hash64, token_hash64_sql
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
 
@@ -277,18 +278,11 @@ _LAP_LN1000 = 6.907755278982137
 
 
 def _u01_sql(tag: str) -> str:
-    return (
-        f"(1 + ('0x' || substr(sha256({tag}), 1, 15))::BIGINT"
-        f" % {_DP_UDEN - 2}) / {_DP_UDEN}.0"
-    )
+    return f"(1 + {token_hash64_sql(tag)} % {_DP_UDEN - 2}) / {_DP_UDEN}.0"
 
 
 def _u01_spark(tag) -> "F.Column":
-    return (
-        1
-        + F.conv(F.substring(F.sha2(tag, 256), 1, 15), 16, 10).cast("long")
-        % (_DP_UDEN - 2)
-    ) / float(_DP_UDEN)
+    return (1 + token_hash64(tag) % (_DP_UDEN - 2)) / float(_DP_UDEN)
 
 
 _DP_LAP_CASES = " ".join(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.text import token_hash64, token_hash64_sql
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
 
@@ -419,10 +420,10 @@ def unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "deterministic_sample",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS total_r
     FROM orders
-    WHERE ('0x' || substr(sha256(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100 < 10
+    WHERE {token_hash64_sql("o_orderkey::VARCHAR")} % 100 < 10
     """,
 )
 def deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,8 +432,6 @@ def deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     yields the SAME sample on any engine, any cluster, any day; it also
     pushes to the scan and composes with joins (sampling both sides by the
     same key keeps referential integrity)."""
-    from ab_inbev_big_data_case_spark.functions.text import token_hash64
-
     o = table(spark, sf_dir, "orders")
     return o.filter(
         token_hash64(F.col("o_orderkey").cast("string")) % 100 < 10

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import token_hash64
+from ..functions.text import token_hash64, token_hash64_sql
 from ..operators.graph import pagerank
 from ..operators.relational import build_scd2, profile
 from ..registry import register
@@ -583,14 +583,13 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CHECKSUM_SQL = """
+_CHECKSUM_SQL = f"""
     WITH h AS (
         SELECT date_trunc('month', o_orderdate)::TIMESTAMP AS month,
-               ('0x' || substr(sha256(
-                   o_orderkey::VARCHAR || '|' || o_custkey::VARCHAR || '|' ||
-                   o_orderstatus || '|' ||
-                   CAST(o_totalprice AS DECIMAL(18,2))::VARCHAR
-               ), 1, 15))::BIGINT AS rh
+               {token_hash64_sql(
+                   "o_orderkey::VARCHAR || '|' || o_custkey::VARCHAR || '|' || "
+                   "o_orderstatus || '|' || CAST(o_totalprice AS DECIMAL(18,2))::VARCHAR"
+               )} AS rh
         FROM orders
     )
     SELECT month, count(*) AS n_rows,

@@ -193,6 +193,62 @@ def test_shingles_short_docs(spark):
     assert got == {2: "a b c"}
 
 
+def test_hash_and_shingle_twins_match_across_engines(spark):
+    """``token_hash64`` (Spark), ``token_hash64_sql`` (DuckDB) and a
+    hashlib reference give the same int64, the ``>> 20`` narrowing is the
+    first 10 hex digits, and ``shingles``/``shingles_sql`` give the same
+    lists — empty below n tokens — for n = 3 and 4."""
+    import hashlib
+
+    import duckdb
+
+    from ab_inbev_big_data_case_spark.functions.text import (
+        shingles,
+        shingles_sql,
+        token_hash64,
+        token_hash64_sql,
+    )
+
+    strings = ["", "abc", "ünïcødé ✓ 東京", "x" * 5000, "0", "1234567890"]
+    ref = {
+        s: int(hashlib.sha256(s.encode("utf-8")).hexdigest()[:15], 16)
+        for s in strings
+    }
+    df = spark.createDataFrame([(s,) for s in strings], "s string")
+    got = {
+        r["s"]: (r["h"], r["h40"])
+        for r in df.select(
+            "s",
+            token_hash64(F.col("s")).alias("h"),
+            F.shiftright(token_hash64(F.col("s")), 20).alias("h40"),
+        ).collect()
+    }
+    con = duckdb.connect()
+    for s in strings:
+        h, h40 = con.execute(
+            f"SELECT {token_hash64_sql('s')}, ({token_hash64_sql('s')} >> 20)"
+            " FROM (SELECT $1::VARCHAR AS s)",
+            [s],
+        ).fetchone()
+        hexd = hashlib.sha256(s.encode("utf-8")).hexdigest()
+        assert got[s] == (ref[s], int(hexd[:10], 16)) == (h, h40), s
+
+    for n in (3, 4):
+        lists = [[f"t{i}" for i in range(k)] for k in (0, n - 1, n, 10)]
+        tdf = spark.createDataFrame(list(enumerate(lists)), "i int, toks array<string>")
+        spark_sh = {
+            r["i"]: r["sh"]
+            for r in tdf.select("i", shingles(F.col("toks"), n).alias("sh")).collect()
+        }
+        for i, toks in enumerate(lists):
+            (duck_sh,) = con.execute(
+                f"SELECT {shingles_sql('toks', n)} FROM (SELECT $1::VARCHAR[] AS toks)",
+                [toks],
+            ).fetchone()
+            want = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
+            assert spark_sh[i] == duck_sh == want, (n, len(toks))
+
+
 def test_ivf_assign_partitions_corpus(spark, sf_dir):
     """Every vector lands in exactly one cell, and cells are centroid ids."""
     from ab_inbev_big_data_case_spark.llm.similarity import ivf_assign

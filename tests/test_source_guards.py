@@ -18,6 +18,12 @@ fails in CI, not in review):
 7. The retrieval audit's query sample and its exact / LSH / IVF ranked
    lists are defined once, in ``llm/similarity.py``: no query module
    spells them out again.
+8. The portable hash and the n-token shingle rule are defined once per
+   engine, in ``functions/text.py``; the MinHash signature / band /
+   kept-band / candidate chain and the SimHash band split once per engine,
+   in ``llm/dedup.py``.
+9. No ``queries/`` module imports a private (underscore) name from another
+   ``queries/`` module, and none binds a module-level name twice.
 """
 
 from __future__ import annotations
@@ -159,4 +165,95 @@ def test_retrieval_audit_only_in_similarity():
         for what, pattern in patterns.items()
         if re.search(pattern, open(path, encoding="utf-8").read())
     ]
+    assert offenders == []
+
+
+def _offenders(patterns: dict[str, str], home: str) -> list[str]:
+    return [
+        f"{_rel(path)}: {what}"
+        for path in _py_files()
+        if _rel(path) != home
+        for what, pattern in patterns.items()
+        if re.search(pattern, open(path, encoding="utf-8").read())
+    ]
+
+
+def test_hash_and_shingles_only_in_text():
+    """``token_hash64``/``token_hash64_sql`` and ``shingles``/``shingles_sql``
+    are the one definition of the hash and of the shingle rule; a
+    hand-written copy bypasses the signature a production deployment
+    would swap the hash behind."""
+    patterns = {
+        "SQL portable hash": r"substr\(\s*sha256\(",
+        "Spark portable hash": r"F\.substring\(\s*F\.sha2\(|F\.conv\((?:[^()]|\([^()]*\))*F\.sha2\(",
+        "SQL shingle rule": r"concat_ws\(\s*' ',[^\n]{0,40}?\[i\]",
+    }
+    assert _offenders(patterns, "functions/text.py") == []
+
+
+def test_minhash_and_simhash_chains_only_in_dedup():
+    """``MINHASH_SIG_SQL``, ``KEPT_BANDS_SQL``, ``lsh_pairs_sql`` and
+    ``simhash_band_pairs_sql`` are the DuckDB twins of the ``llm/dedup.py``
+    operators; an oracle that re-types them can drift from the engine."""
+    patterns = {
+        "MinHash signature": r"min\(\(\(2\*seed \+ 1\)",
+        "LSH candidate join": r"kept_bands a JOIN kept_bands b",
+        "SimHash band split": r">> \(15 \* b\)",
+    }
+    assert _offenders(patterns, "llm/dedup.py") == []
+
+
+def _module_bindings(tree: ast.Module):
+    """(name, lineno) of every module-level binding, skipping a template
+    formatted in place (``X = X.format(...)``)."""
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            v = node.value
+            if (
+                isinstance(v, ast.Call)
+                and isinstance(v.func, ast.Attribute)
+                and v.func.attr == "format"
+                and isinstance(v.func.value, ast.Name)
+                and [ast.dump(t) for t in node.targets]
+                == [ast.dump(ast.Name(v.func.value.id, ast.Store()))]
+            ):
+                continue
+            for t in node.targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        yield n.id, node.lineno
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            yield node.target.id, node.lineno
+        elif isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            yield node.name, node.lineno
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                yield (a.asname or a.name).split(".")[0], node.lineno
+
+
+def test_query_modules_share_no_private_names():
+    """A ``queries/`` module neither imports another one's underscore names
+    (a shared rule belongs in an operator module, beside its Spark twin)
+    nor binds one module-level name twice (the second binding silently
+    changes what later references read)."""
+    offenders = []
+    for path in _py_files():
+        if not _rel(path).startswith("queries/"):
+            continue
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[-2:-1] == ["queries"]
+            ):
+                offenders += [
+                    f"{_rel(path)}:{node.lineno} imports {a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+        first: dict[str, int] = {}
+        for name, line in _module_bindings(tree):
+            if name in first:
+                offenders.append(f"{_rel(path)}:{line} rebinds {name} (line {first[name]})")
+            first.setdefault(name, line)
     assert offenders == []
