@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import money, money_sum, money_sum_sql
 from ab_inbev_big_data_case_spark.operators.relational import dedup_deterministic
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
@@ -23,11 +24,11 @@ from ab_inbev_big_data_case_spark.sources.readers import table
 
 @register(
     "groupby_agg",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2)::DOUBLE AS sum_qty,
-           round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2)::DOUBLE AS sum_base_price,
-           round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l_quantity')}::DOUBLE AS sum_qty,
+           {money_sum_sql('l_extendedprice')}::DOUBLE AS sum_base_price,
+           {money_sum_sql('l_extendedprice * (1 - l_discount)')}::DOUBLE
                AS sum_disc_price,
            round(avg(l_quantity), 4) AS avg_qty,
            round(avg(l_extendedprice), 4) AS avg_price,
@@ -46,21 +47,14 @@ def groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            # decimal accumulation: double sums differ across engines in the
-            # last ulp at 100k+ rows and round(x,2) then flips cents; decimal
-            # sums are exact and order-independent
-            F.round(F.sum(F.col("l_quantity").cast("decimal(18,6)")), 2)
+            # money sums (functions/money.py): a double sum differs across
+            # engines in the last ulp at 100k+ rows and round(x,2) flips cents
+            money_sum(F.col("l_quantity"))
             .cast("double").alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")), 2)
+            money_sum(F.col("l_extendedprice"))
             .cast("double").alias("sum_base_price"),
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(18,6)"
-                    )
-                ),
-                2,
-            ).cast("double").alias("sum_disc_price"),
+            money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            .cast("double").alias("sum_disc_price"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.min("l_quantity").alias("min_qty"),
@@ -147,9 +141,9 @@ def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cube_agg",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
-           round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)::DOUBLE AS sum_price,
+           {money_sum_sql('o_totalprice')}::DOUBLE AS sum_price,
            count(*) AS n_orders
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
@@ -158,7 +152,7 @@ def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+        money_sum(F.col("o_totalprice"))
         .cast("double").alias("sum_price"),
         F.count("*").alias("n_orders"),
     )
@@ -186,10 +180,10 @@ def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "filtered_agg",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           round(sum(CAST(CASE WHEN l_discount > 0.05 THEN l_extendedprice END
-                          AS DECIMAL(18,6))), 2)::DOUBLE AS hi_disc_rev,
+           {money_sum_sql('CASE WHEN l_discount > 0.05 THEN l_extendedprice END')}::DOUBLE
+               AS hi_disc_rev,
            count(*) FILTER (WHERE l_quantity > 25) AS n_bulk,
            round(avg(CASE WHEN l_tax > 0.04 THEN l_extendedprice END), 4) AS hi_tax_avg
     FROM lineitem
@@ -200,14 +194,8 @@ def filtered_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation (reference R6+R7 composition)."""
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
-        F.round(
-            F.sum(
-                F.when(F.col("l_discount") > 0.05, F.col("l_extendedprice")).cast(
-                    "decimal(18,6)"
-                )
-            ),
-            2,
-        ).cast("double").alias("hi_disc_rev"),
+        money_sum(F.when(F.col("l_discount") > 0.05, F.col("l_extendedprice")))
+        .cast("double").alias("hi_disc_rev"),
         F.count(F.when(F.col("l_quantity") > 25, F.lit(1))).alias("n_bulk"),
         F.round(F.avg(F.when(F.col("l_tax") > 0.04, F.col("l_extendedprice"))), 4).alias(
             "hi_tax_avg"
@@ -453,9 +441,9 @@ def dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "salted_agg",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2)::DOUBLE AS sum_price_r,
+           {money_sum_sql('l_extendedprice')}::DOUBLE AS sum_price_r,
            count(*) AS count_rows
     FROM lineitem
     GROUP BY l_returnflag
@@ -469,7 +457,7 @@ def salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ab_inbev_big_data_case_spark.operators.partitioning import salted_sum_count
 
     li = table(spark, sf_dir, "lineitem").withColumn(
-        "l_extendedprice", F.col("l_extendedprice").cast("decimal(18,6)")
+        "l_extendedprice", money(F.col("l_extendedprice"))
     )  # decimal: partial sums must merge order-independently
     out = salted_sum_count(li, ["l_returnflag"], "l_extendedprice", salt_buckets=16)
     return out.select(

@@ -25,14 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import cents, cents_sql
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
 
-_ALLOC_SQL = """
+_ALLOC_SQL = f"""
     WITH o AS (
         SELECT CAST(o_orderdate AS DATE) AS d0,
-               CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS rev_c
+               {cents_sql('o_totalprice')} AS rev_c
         FROM orders
     ),
     x AS (
@@ -58,9 +58,7 @@ def interval_allocation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("d0"),
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("rev_c"),
+        cents(F.col("o_totalprice")).alias("rev_c"),
     )
     x = o.select(
         "d0",

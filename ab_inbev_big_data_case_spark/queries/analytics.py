@@ -13,6 +13,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ab_inbev_big_data_case_spark.functions.money import (
+    cents,
+    cents_sql,
+    money,
+    money_sql,
+    money_sum,
+    money_sum_sql,
+)
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, load_tables
 from ab_inbev_big_data_case_spark.operators.lineage import cut
@@ -96,9 +104,9 @@ def not_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("supplier", "lineitem"), _NOT_IN_SUBQ)
 
 
-_TPCH_Q3 = """
+_TPCH_Q3 = f"""
     SELECT l.l_orderkey,
-           round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l.l_extendedprice * (1 - l.l_discount)')}::DOUBLE
                AS revenue,
            o.o_orderdate,
            o.o_orderpriority
@@ -120,9 +128,9 @@ def tpch_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("customer", "orders", "lineitem"), _TPCH_Q3)
 
 
-_TPCH_Q5 = """
+_TPCH_Q5 = f"""
     SELECT n.n_name,
-           round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l.l_extendedprice * (1 - l.l_discount)')}::DOUBLE
                AS revenue
     FROM customer c
     JOIN orders o   ON c.c_custkey = o.o_custkey
@@ -146,10 +154,10 @@ def tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CTE_PIPELINE = """
+_CTE_PIPELINE = f"""
     WITH cust_orders AS (
         SELECT o_custkey, count(*) AS n_orders,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS spend
+               {money_sum_sql('o_totalprice')} AS spend
         FROM orders GROUP BY o_custkey
     ),
     tiers AS (
@@ -175,8 +183,8 @@ def cte_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("orders",), _CTE_PIPELINE)
 
 
-_TPCH_Q6 = """
-    SELECT round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))), 2)::DOUBLE
+_TPCH_Q6 = f"""
+    SELECT {money_sum_sql('l_extendedprice * l_discount')}::DOUBLE
                AS promo_revenue,
            count(*) AS n_lines
     FROM lineitem
@@ -215,13 +223,13 @@ def tpch_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("orders", "lineitem"), _TPCH_Q12)
 
 
-_TPCH_Q18 = """
+_TPCH_Q18 = f"""
     SELECT o.o_orderkey, o.o_custkey,
-           round(sum(CAST(l.l_quantity AS DECIMAL(18,6))), 2)::DOUBLE AS total_qty
+           {money_sum_sql('l.l_quantity')}::DOUBLE AS total_qty
     FROM orders o
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderkey, o.o_custkey
-    HAVING sum(CAST(l.l_quantity AS DECIMAL(18,6))) > 250
+    HAVING sum({money_sql('l.l_quantity')}) > 250
 """
 
 
@@ -232,8 +240,8 @@ def tpch_q18_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("orders", "lineitem"), _TPCH_Q18)
 
 
-_TPCH_Q19 = """
-    SELECT round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+_TPCH_Q19 = f"""
+    SELECT {money_sum_sql('l.l_extendedprice * (1 - l.l_discount)')}::DOUBLE
                AS revenue,
            count(*) AS n_lines
     FROM lineitem l
@@ -270,10 +278,10 @@ def correlated_scalar_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("part", "lineitem"), _TPCH_Q2_CORR)
 
 
-_TPCH_Q7 = """
+_TPCH_Q7 = f"""
     SELECT n1.n_name AS cust_nation, n2.n_name AS supp_nation,
            year(l.l_shipdate) AS l_year,
-           round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l.l_extendedprice * (1 - l.l_discount)')}::DOUBLE
                AS volume
     FROM lineitem l
     JOIN orders o   ON o.o_orderkey = l.l_orderkey
@@ -298,9 +306,9 @@ def tpch_q7_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TPCH_Q10 = """
+_TPCH_Q10 = f"""
     SELECT c.c_custkey, c.c_name, n.n_name,
-           round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l.l_extendedprice * (1 - l.l_discount)')}::DOUBLE
                AS revenue,
            count(*) AS n_returned_lines
     FROM customer c
@@ -323,19 +331,19 @@ def tpch_q10_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TPCH_Q1 = """
+_TPCH_Q1 = f"""
     SELECT l_returnflag, l_linestatus,
-           round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2)::DOUBLE AS sum_qty,
-           round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2)::DOUBLE AS sum_base_price,
-           round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l_quantity')}::DOUBLE AS sum_qty,
+           {money_sum_sql('l_extendedprice')}::DOUBLE AS sum_base_price,
+           {money_sum_sql('l_extendedprice * (1 - l_discount)')}::DOUBLE
                AS sum_disc_price,
-           round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-                          AS DECIMAL(18,6))), 2)::DOUBLE AS sum_charge,
-           round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4)
+           {money_sum_sql('l_extendedprice * (1 - l_discount) * (1 + l_tax)')}::DOUBLE
+               AS sum_charge,
+           round(CAST(sum({money_sql('l_quantity')}) AS DOUBLE) / count(*), 4)
                AS avg_qty,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4)
+           round(CAST(sum({money_sql('l_extendedprice')}) AS DOUBLE) / count(*), 4)
                AS avg_price,
-           round(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4)
+           round(CAST(sum({money_sql('l_discount')}) AS DOUBLE) / count(*), 4)
                AS avg_disc,
            count(*) AS count_order
     FROM lineitem
@@ -348,17 +356,17 @@ _TPCH_Q1 = """
 def tpch_q1_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape (pricing summary report): the canonical scan-heavy
     aggregate — full lineitem pass, 4-group rollup, partial+final agg with
-    zero joins. Sums accumulate in DECIMAL(18,6) (exact) before the
-    round+double cast so both engines agree at any row count; averages divide
-    the exact decimal sum by count in double."""
+    zero joins. Sums are money sums (``functions/money.py``) so both engines
+    agree at any row count; averages divide the exact decimal sum by count
+    in double."""
     return _sql(spark, sf_dir, ("lineitem",), _TPCH_Q1)
 
 
-_TPCH_Q2 = """
+_TPCH_Q2 = f"""
     WITH ps AS (
         SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-               round(CAST(min(CAST(l_extendedprice AS DECIMAL(18,6))
-                              * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS DOUBLE), 2)
+               round(CAST(min({money_sql('l_extendedprice')}
+                              * (1 - {money_sql('l_discount')})) AS DOUBLE), 2)
                    AS ps_supplycost
         FROM lineitem
         GROUP BY 1, 2
@@ -397,11 +405,11 @@ def tpch_q2_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TPCH_Q14 = """
+_TPCH_Q14 = f"""
     SELECT round(100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
-                   THEN CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))
-                   ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) /
-               CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6)))
+                   THEN {money_sql('l.l_extendedprice * (1 - l.l_discount)')}
+                   ELSE {money_sql('0')} END) AS DOUBLE) /
+               CAST(sum({money_sql('l.l_extendedprice * (1 - l.l_discount)')})
                     AS DOUBLE), 4) AS promo_revenue_pct
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
@@ -417,8 +425,8 @@ def tpch_q14_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("lineitem", "part"), _TPCH_Q14)
 
 
-_TPCH_Q17 = """
-    SELECT round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0, 2)
+_TPCH_Q17 = f"""
+    SELECT round(CAST(sum({money_sql('l.l_extendedprice')}) AS DOUBLE) / 7.0, 2)
                AS avg_yearly
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
@@ -436,10 +444,10 @@ def tpch_q17_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("lineitem", "part"), _TPCH_Q17)
 
 
-_TPCH_Q22 = """
+_TPCH_Q22 = f"""
     SELECT c.c_nationkey AS cntry,
            count(*) AS numcust,
-           round(sum(CAST(c.c_acctbal AS DECIMAL(18,6))), 2)::DOUBLE AS totacctbal
+           {money_sum_sql('c.c_acctbal')}::DOUBLE AS totacctbal
     FROM customer c
     WHERE c.c_acctbal > (SELECT avg(c2.c_acctbal) FROM customer c2
                          WHERE c2.c_acctbal > 0.0)
@@ -460,7 +468,7 @@ def tpch_q22_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("customer", "orders"), _TPCH_Q22)
 
 
-_RECURSIVE_SPINE = """
+_RECURSIVE_SPINE = f"""
     WITH RECURSIVE months(ym) AS (
         SELECT 199501
         UNION ALL
@@ -469,7 +477,7 @@ _RECURSIVE_SPINE = """
     )
     SELECT m.ym,
            count(o.o_orderkey) AS n_orders,
-           round(coalesce(sum(CAST(o.o_totalprice AS DECIMAL(18,6))), 0), 2)::DOUBLE
+           round(coalesce(sum({money_sql('o.o_totalprice')}), 0), 2)::DOUBLE
                AS month_revenue
     FROM months m
     LEFT JOIN orders o
@@ -538,10 +546,10 @@ def tpch_q13_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("customer", "orders"), _TPCH_Q13)
 
 
-_TPCH_Q15 = """
+_TPCH_Q15 = f"""
     WITH revenue AS (
         SELECT l_suppkey AS supplier_no,
-               round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2)
+               {money_sum_sql('l_extendedprice * (1 - l_discount)')}
                    AS total_revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
@@ -637,10 +645,10 @@ def tpch_q4_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("orders", "lineitem"), _TPCH_Q4)
 
 
-_TPCH_Q8 = """
+_TPCH_Q8 = f"""
     WITH volumes AS (
         SELECT year(o.o_orderdate) AS o_year,
-               CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6)) AS volume,
+               {money_sql('l.l_extendedprice * (1 - l.l_discount)')} AS volume,
                s.s_nationkey AS supp_nation
         FROM lineitem l
         JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -653,7 +661,7 @@ _TPCH_Q8 = """
     )
     SELECT o_year,
            round(CAST(sum(CASE WHEN supp_nation = 1 THEN volume
-                               ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
+                               ELSE {money_sql('0')} END) AS DOUBLE)
                  / CAST(sum(volume) AS DOUBLE), 4) AS mkt_share
     FROM volumes
     GROUP BY o_year
@@ -674,11 +682,11 @@ def tpch_q8_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TPCH_Q9 = """
+_TPCH_Q9 = f"""
     SELECT n.n_name AS supp_nation, year(o.o_orderdate) AS o_year,
-           round(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                          - 0.6 * p.p_retailprice * l.l_quantity
-                          AS DECIMAL(18,6))), 2)::DOUBLE AS sum_profit
+           {money_sum_sql('l.l_extendedprice * (1 - l.l_discount)'
+                          ' - 0.6 * p.p_retailprice * l.l_quantity')}::DOUBLE
+               AS sum_profit
     FROM lineitem l
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
     JOIN part p     ON l.l_partkey = p.p_partkey
@@ -701,13 +709,13 @@ def tpch_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TPCH_Q11 = """
-    SELECT l_partkey, round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2)::DOUBLE
+_TPCH_Q11 = f"""
+    SELECT l_partkey, {money_sum_sql('l_extendedprice')}::DOUBLE
                AS part_value
     FROM lineitem
     GROUP BY l_partkey
-    HAVING CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) >
-           (SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) * 0.0006
+    HAVING CAST(sum({money_sql('l_extendedprice')}) AS DOUBLE) >
+           (SELECT CAST(sum({money_sql('l_extendedprice')}) AS DOUBLE) * 0.0006
             FROM lineitem)
 """
 
@@ -742,10 +750,10 @@ def tpch_q16_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("lineitem", "part", "supplier"), _TPCH_Q16)
 
 
-_TPCH_Q20 = """
+_TPCH_Q20 = f"""
     WITH part_ship AS (
         SELECT l.l_partkey, l.l_suppkey,
-               sum(CAST(l.l_quantity AS DECIMAL(18,6))) AS qty
+               sum({money_sql('l.l_quantity')}) AS qty
         FROM lineitem l
         JOIN part p ON p.p_partkey = l.l_partkey
         WHERE l.l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
@@ -776,11 +784,11 @@ def tpch_q20_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ("supplier", "lineitem", "part"), _TPCH_Q20)
 
 
-_GAPFILL = """
+_GAPFILL = f"""
     WITH agg AS (
         SELECT event_type, date_trunc('hour', ts)::TIMESTAMP AS bucket,
                count(*) AS n_events,
-               round(sum(CAST(value AS DECIMAL(18,6))), 2)::DOUBLE AS sum_value
+               {money_sum_sql('value')}::DOUBLE AS sum_value
         FROM events GROUP BY 1, 2
     ),
     bounds AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM agg),
@@ -825,7 +833,7 @@ def time_bucket_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
+            money_sum(F.col("value"))
             .cast("double")
             .alias("sum_value"),
         ),
@@ -1195,10 +1203,10 @@ def cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WMEDIAN_SQL = """
+_WMEDIAN_SQL = f"""
     WITH g AS (
         SELECT l_returnflag AS flag, l_quantity AS q,
-               sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS w
+               sum({money_sql('l_extendedprice')}) AS w
         FROM lineitem GROUP BY 1, 2
     ),
     t AS (SELECT flag, sum(w) AS tw FROM g GROUP BY 1),
@@ -1231,7 +1239,7 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = li.groupBy(
         F.col("l_returnflag").alias("flag"), F.col("l_quantity").alias("q")
-    ).agg(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).alias("w"))
+    ).agg(F.sum(money(F.col("l_extendedprice"))).alias("w"))
     t = g.groupBy("flag").agg(F.sum("w").alias("tw"))
     w = Window.partitionBy("flag").orderBy("q")
     c = g.withColumn("cw", F.sum("w").over(w))
@@ -1411,10 +1419,10 @@ def conversion_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q
 
 
-_GAPFILL_INTERP = """
+_GAPFILL_INTERP = f"""
     WITH agg AS (
         SELECT event_type, date_trunc('hour', ts)::TIMESTAMP AS bucket,
-               round(sum(CAST(value AS DECIMAL(18,6))), 2)::DOUBLE AS sum_value
+               {money_sum_sql('value')}::DOUBLE AS sum_value
         FROM events GROUP BY 1, 2
     ),
     bounds AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM agg),
@@ -1480,7 +1488,7 @@ def gapfill_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = cut(
         e.groupBy("event_type", F.date_trunc("hour", "ts").alias("bucket"))
         .agg(
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
+            money_sum(F.col("value"))
             .cast("double")
             .alias("sum_value")
         ),
@@ -1765,10 +1773,10 @@ def hilbert_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TIER_MIGRATION = """
+_TIER_MIGRATION = f"""
     WITH spend AS (
         SELECT o_custkey, year(o_orderdate) AS y,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS s
+               {money_sum_sql('o_totalprice')} AS s
         FROM orders WHERE year(o_orderdate) IN (1995, 1996)
         GROUP BY 1, 2
     ),
@@ -1810,7 +1818,7 @@ def tier_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = o.groupBy(
         "o_custkey", F.year("o_orderdate").alias("y")
     ).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2).alias(
+        money_sum(F.col("o_totalprice")).alias(
             "s"
         )
     )
@@ -1838,7 +1846,7 @@ def tier_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LTV_SQL = """
+_LTV_SQL = f"""
     WITH fs AS (
         SELECT o_custkey,
                min(date_trunc('month', o_orderdate))::TIMESTAMP AS cohort
@@ -1848,7 +1856,7 @@ _LTV_SQL = """
         SELECT f.cohort,
                datediff('month', f.cohort,
                         date_trunc('month', o.o_orderdate)) AS age,
-               CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o.o_totalprice')} * 100
                     AS BIGINT) AS rev_c
         FROM orders o JOIN fs f ON f.o_custkey = o.o_custkey
         GROUP BY 1, 2
@@ -1900,9 +1908,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             (
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2
-                )
+                money_sum(F.col("o_totalprice"))
                 * 100
             )
             .cast("long")
@@ -2012,7 +2018,7 @@ def lateral_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- position-based attribution (U)
 
-_UATTR_SQL = """
+_UATTR_SQL = f"""
     WITH fp AS (
         SELECT user_id, min(ts) AS first_purch_ts
         FROM events WHERE event_type = 'purchase'
@@ -2021,8 +2027,7 @@ _UATTR_SQL = """
     pv AS (
         SELECT user_id, v_c FROM (
             SELECT e.user_id,
-                   CAST(round(CAST(e.value AS DECIMAL(18,6)), 2) * 100
-                        AS BIGINT) AS v_c,
+                   {cents_sql('e.value')} AS v_c,
                    row_number() OVER (PARTITION BY e.user_id
                                       ORDER BY e.ts, e.event_id) AS rn
             FROM events e JOIN fp ON fp.user_id = e.user_id
@@ -2094,9 +2099,7 @@ def position_based_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select(
             "user_id",
-            (F.round(F.col("value").cast("decimal(18,6)"), 2) * 100)
-            .cast("long")
-            .alias("v_c"),
+            cents(F.col("value")).alias("v_c"),
         )
     )
     from pyspark.sql import Window
@@ -2141,11 +2144,11 @@ def position_based_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ off-policy bandit evaluation
 
-_IPS_SQL = """
+_IPS_SQL = f"""
     WITH logged AS (
         SELECT user_id % 2 AS arm_logged,
                dayofmonth(ts) % 2 AS arm_target,
-               CAST(round(CAST(value AS DECIMAL(18,6)), 2) * 100 AS BIGINT)
+               {cents_sql('value')}
                    AS r_c
         FROM events WHERE event_type = 'purchase'
     ),
@@ -2184,9 +2187,7 @@ def ips_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     logged = e.select(
         (F.col("user_id") % 2).alias("arm_logged"),
         (F.dayofmonth("ts") % 2).alias("arm_target"),
-        (F.round(F.col("value").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("r_c"),
+        cents(F.col("value")).alias("r_c"),
     )
     m = F.col("arm_target") == F.col("arm_logged")
     agg = logged.agg(
@@ -2609,7 +2610,7 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------- time-decay attribution (r11)
 
-_TDECAY_SQL = """
+_TDECAY_SQL = f"""
     WITH fp AS (
         SELECT user_id, min(ts) AS fpt
         FROM events WHERE event_type = 'purchase'
@@ -2618,8 +2619,7 @@ _TDECAY_SQL = """
     pv AS (
         SELECT user_id, v_c FROM (
             SELECT e.user_id,
-                   CAST(round(CAST(e.value AS DECIMAL(18,6)), 2) * 100
-                        AS BIGINT) AS v_c,
+                   {cents_sql('e.value')} AS v_c,
                    row_number() OVER (PARTITION BY e.user_id
                                       ORDER BY e.ts, e.event_id) AS rn
             FROM events e JOIN fp ON fp.user_id = e.user_id
@@ -2684,9 +2684,7 @@ def time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select(
             "user_id",
-            (F.round(F.col("value").cast("decimal(18,6)"), 2) * 100)
-            .cast("long")
-            .alias("v_c"),
+            cents(F.col("value")).alias("v_c"),
         )
     )
     ddays = (

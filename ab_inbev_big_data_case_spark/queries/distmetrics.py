@@ -44,6 +44,14 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import (
+    cents,
+    cents_sql,
+    money,
+    money_sql,
+    money_sum,
+    money_sum_sql,
+)
 from ab_inbev_big_data_case_spark.operators.relational import prefix_sums
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
@@ -56,16 +64,16 @@ def _custrev(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``gini_concentration`` and ``lorenz_curve_points``."""
     o = table(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("long")
         .alias("rev_c")
     )
 
 
-_GINI_SQL = """
+_GINI_SQL = f"""
     WITH prev AS (
         SELECT o_custkey,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS rev_c
         FROM orders GROUP BY 1
     ),
@@ -901,10 +909,10 @@ def permutation_test_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------- Lorenz curve deciles
 
-_LORENZ_SQL = """
+_LORENZ_SQL = f"""
     WITH prev AS (
         SELECT o_custkey,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS rev_c
         FROM orders GROUP BY 1
     ),
@@ -1147,14 +1155,14 @@ def negbin_overdispersion_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------- Wilcoxon signed-rank test
 
-_WILCOXON_SQL = """
+_WILCOXON_SQL = f"""
     WITH u AS (
         SELECT user_id,
                CAST(round(sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
-                                   THEN CAST(value AS DECIMAL(18,6)) END), 2)
+                                   THEN {money_sql('value')} END), 2)
                     * 100 AS BIGINT) AS pre_c,
                CAST(round(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                                   THEN CAST(value AS DECIMAL(18,6)) END), 2)
+                                   THEN {money_sql('value')} END), 2)
                     * 100 AS BIGINT) AS post_c
         FROM events WHERE event_type = 'purchase'
         GROUP BY 1
@@ -1204,17 +1212,14 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     split = F.lit("2024-01-16").cast("timestamp")
-    cents = lambda cond: (  # noqa: E731
-        F.round(
-            F.sum(F.when(cond, F.col("value").cast("decimal(18,6)"))), 2
-        )
-        * 100
+    period_cents = lambda cond: (  # noqa: E731
+        F.round(F.sum(F.when(cond, money(F.col("value")))), 2) * 100
     ).cast("long")
     u = (
         e.groupBy("user_id")
         .agg(
-            cents(F.col("ts") < split).alias("pre_c"),
-            cents(F.col("ts") >= split).alias("post_c"),
+            period_cents(F.col("ts") < split).alias("pre_c"),
+            period_cents(F.col("ts") >= split).alias("post_c"),
         )
         .filter(F.col("pre_c").isNotNull() & F.col("post_c").isNotNull())
     )
@@ -1262,11 +1267,10 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- Levene's test
 
-_LEVENE_SQL = """
+_LEVENE_SQL = f"""
     WITH v AS (
         SELECT c_mktsegment AS seg,
-               CAST(round(CAST(c_acctbal AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c
+               {cents_sql('c_acctbal')} AS x_c
         FROM customer
     ),
     cells AS (SELECT seg, x_c, count(*) AS c FROM v GROUP BY 1, 2),
@@ -1322,9 +1326,7 @@ def levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer")
     v = c.select(
         F.col("c_mktsegment").alias("seg"),
-        (F.round(F.col("c_acctbal").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
+        cents(F.col("c_acctbal")).alias("x_c"),
     )
     cells = v.groupBy("seg", "x_c").agg(F.count("*").alias("c"))
     wcum = (
@@ -1628,21 +1630,44 @@ def cmh_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------- energy distance between two samples
+# ------------------------------- F/O two-sample value spine (4 queries)
 
-_ENERGY_SQL = """
-    WITH v AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c,
+
+def _fo_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample value spine of fulfilled ('F') vs open ('O') orders: one
+    row per distinct order value in integer cents ``x_c``, with its count
+    in each sample (``cx`` for F, ``cy`` for O). Shared by the energy,
+    Wasserstein-1, QQ and Cramér-von Mises queries."""
+    o = table(spark, sf_dir, "orders").filter(
+        F.col("o_orderstatus").isin("F", "O")
+    )
+    v = o.select(
+        cents(F.col("o_totalprice")).alias("x_c"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("is_x"),
+    )
+    return v.groupBy("x_c").agg(
+        F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
+    )
+
+
+#: DuckDB twin of :func:`_fo_cells`: the ``v`` and ``cells`` CTEs, to
+#: follow a ``WITH``.
+_FO_CELLS_SQL = f"""
+    v AS (
+        SELECT {cents_sql('o_totalprice')} AS x_c,
                CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS is_x
         FROM orders WHERE o_orderstatus IN ('F', 'O')
     ),
     cells AS (
-        SELECT x_c,
-               sum(is_x)::BIGINT AS cx,
-               sum(1 - is_x)::BIGINT AS cy
+        SELECT x_c, sum(is_x)::BIGINT AS cx, sum(1 - is_x)::BIGINT AS cy
         FROM v GROUP BY 1
-    ),
+    )"""
+
+
+# ----------------------------------- energy distance between two samples
+
+_ENERGY_SQL = f"""
+    WITH {_FO_CELLS_SQL},
     walk AS (
         SELECT x_c, cx, cy,
                coalesce(sum(cx) OVER w, 0)::HUGEINT AS cxlt,
@@ -1695,18 +1720,7 @@ def energy_distance_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fact pass to the shared distinct-cents spine, the
     ``prefix_sums`` of four running quantities (counts and value-sums per
     sample) with their totals, one final aggregate."""
-    o = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus").isin("F", "O")
-    )
-    v = o.select(
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("is_x"),
-    )
-    cells = v.groupBy("x_c").agg(
-        F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
-    )
+    cells = _fo_cells(spark, sf_dir)
     d38 = "decimal(38,0)"
     cx, cy = F.col("cx").cast(d38), F.col("cy").cast(d38)
     xc = F.col("x_c").cast(d38)
@@ -1768,17 +1782,8 @@ def energy_distance_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------- Wasserstein-1 (earth mover) distance
 
-_W1_SQL = """
-    WITH v AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c,
-               CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS is_x
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-    ),
-    cells AS (
-        SELECT x_c, sum(is_x)::BIGINT AS cx, sum(1 - is_x)::BIGINT AS cy
-        FROM v GROUP BY 1
-    ),
+_W1_SQL = f"""
+    WITH {_FO_CELLS_SQL},
     walk AS (
         SELECT x_c,
                lead(x_c) OVER (ORDER BY x_c) AS x_next,
@@ -1821,18 +1826,7 @@ def wasserstein1_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one fact pass to the value spine, the ``prefix_sums`` of
     the two counts with their totals, one final aggregate."""
-    o = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus").isin("F", "O")
-    )
-    v = o.select(
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("is_x"),
-    )
-    cells = v.groupBy("x_c").agg(
-        F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
-    )
+    cells = _fo_cells(spark, sf_dir)
     d38 = "decimal(38,0)"
     cx, cy = F.col("cx").cast(d38), F.col("cy").cast(d38)
     ps = prefix_sums(cells, "x_c", [], {"cxle": cx, "cyle": cy})
@@ -1856,17 +1850,8 @@ def wasserstein1_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------- QQ plot decile points
 
-_QQ_SQL = """
-    WITH v AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c,
-               CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS is_x
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-    ),
-    cells AS (
-        SELECT x_c, sum(is_x)::BIGINT AS cx, sum(1 - is_x)::BIGINT AS cy
-        FROM v GROUP BY 1
-    ),
+_QQ_SQL = f"""
+    WITH {_FO_CELLS_SQL},
     walk AS (
         SELECT x_c,
                sum(cx) OVER w AS cxle, sum(cy) OVER w AS cyle
@@ -1905,18 +1890,7 @@ def qq_plot_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fact pass to the pivoted two-count value spine, the
     ``prefix_sums`` of both counts, a 9-row broadcast quantile grid
     joined against the spine with a min-aggregate — nothing per-row."""
-    o = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus").isin("F", "O")
-    )
-    v = o.select(
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("is_x"),
-    )
-    cells = v.groupBy("x_c").agg(
-        F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
-    )
+    cells = _fo_cells(spark, sf_dir)
     walk = prefix_sums(
         cells, "x_c", [], {"cxle": F.col("cx"), "cyle": F.col("cy")}
     ).select(
@@ -1949,17 +1923,8 @@ def qq_plot_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------- Cramér-von Mises two-sample
 
-_CVM_SQL = """
-    WITH v AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c,
-               CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS is_x
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-    ),
-    cells AS (
-        SELECT x_c, sum(is_x)::BIGINT AS cx, sum(1 - is_x)::BIGINT AS cy
-        FROM v GROUP BY 1
-    ),
+_CVM_SQL = f"""
+    WITH {_FO_CELLS_SQL},
     walk AS (
         SELECT x_c, cx, cy,
                sum(cx) OVER w AS cxle, sum(cy) OVER w AS cyle
@@ -1998,18 +1963,7 @@ def cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fact pass to the pivoted two-count value spine, the
     ``prefix_sums`` of both counts with their totals, one final
     aggregate."""
-    o = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus").isin("F", "O")
-    )
-    v = o.select(
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("is_x"),
-    )
-    cells = v.groupBy("x_c").agg(
-        F.sum("is_x").alias("cx"), F.sum(1 - F.col("is_x")).alias("cy")
-    )
+    cells = _fo_cells(spark, sf_dir)
     d38 = "decimal(38,0)"
     ps = prefix_sums(
         cells, "x_c", [], {"cxle": F.col("cx").cast(d38), "cyle": F.col("cy").cast(d38)}
@@ -2150,10 +2104,10 @@ def anderson_darling_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # calendar-bounded (#weeks_a x #weeks_b), so the exact median is a
 # bounded-spine sort. Even pair counts average the two middle values —
 # exact in decimal.
-_HL_SQL = """
+_HL_SQL = f"""
     WITH wk AS (
         SELECT date_trunc('week', o_orderdate) AS w,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS rev,
+               {money_sum_sql('o_totalprice')} AS rev,
                CASE WHEN o_orderdate < TIMESTAMP '1998-01-01' THEN 'a'
                     ELSE 'b' END AS grp
         FROM orders GROUP BY 1, 3
@@ -2195,7 +2149,7 @@ def hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("b")
         .alias("grp"),
     ).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2).alias("rev")
+        money_sum(F.col("o_totalprice")).alias("rev")
     )
     a = wk.filter(F.col("grp") == "a").select(F.col("rev").alias("rev_a"))
     b = wk.filter(F.col("grp") == "b").select(F.col("rev").alias("rev_b"))
@@ -2223,10 +2177,10 @@ def hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer log terms are single deterministic doubles (logs of exact
 # integer ratios) quantized to DECIMAL(38,12) before the fact-sized sums,
 # so neither engine's summation order can move the result.
-_THEIL_SQL = """
+_THEIL_SQL = f"""
     WITH cust AS (
         SELECT o_custkey,
-               (round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100)
+               ({money_sum_sql('o_totalprice')} * 100)
                    ::HUGEINT AS x
         FROM orders GROUP BY 1
     ),
@@ -2264,7 +2218,7 @@ def theil_atkinson_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     global rank; entropy indexes don't)."""
     o = table(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("decimal(38,0)")
         .alias("x")
     )
@@ -2411,7 +2365,7 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rank-threshold empirical λ_U between paired daily revenue series of the
 # AMERICA-region nations: with k = ceil(n/10) top days per series,
 # λ_U = |top(X) ∩ top(Y)| / k — exact integers end-to-end.
-_TAILDEP_SQL = """
+_TAILDEP_SQL = f"""
     WITH amer AS (
         SELECT n_nationkey, n_name FROM nation
         JOIN region ON n_regionkey = r_regionkey
@@ -2420,7 +2374,7 @@ _TAILDEP_SQL = """
     daily AS (
         SELECT c.c_nationkey AS nk,
                date_trunc('day', o.o_orderdate) AS day,
-               CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o.o_totalprice')} * 100
                     AS HUGEINT) AS cents
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
@@ -2491,7 +2445,7 @@ def tail_dependence_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", F.col("o_orderdate")).alias("day"),
         )
         .agg(
-            (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("o_totalprice")) * 100)
             .cast("decimal(38,0)")
             .alias("cents")
         )

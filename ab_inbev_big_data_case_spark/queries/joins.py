@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import money_sum, money_sum_sql
 from ab_inbev_big_data_case_spark.operators.joins import (
     asof_join,
     broadcast_dim,
@@ -23,9 +24,9 @@ from ab_inbev_big_data_case_spark.sources.readers import const_df, table
 
 @register(
     "join_inner",
-    oracle="""
+    oracle=f"""
     SELECT c.c_mktsegment, year(o.o_orderdate) AS o_year,
-           round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l.l_extendedprice * (1 - l.l_discount)')}::DOUBLE
                AS revenue,
            count(*) AS n_lines
     FROM lineitem l
@@ -45,14 +46,8 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment", F.year("o_orderdate").alias("o_year"))
         .agg(
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(18,6)"
-                    )
-                ),
-                2,
-            ).cast("double").alias("revenue"),
+            money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            .cast("double").alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -287,9 +282,9 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_salted_skew",
-    oracle="""
+    oracle=f"""
     SELECT s.s_name,
-           round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l.l_extendedprice * (1 - l.l_discount)')}::DOUBLE
                AS revenue,
            count(*) AS n_lines
     FROM lineitem l
@@ -315,10 +310,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = salted_skew_join(li, sup, "l_suppkey", salt_buckets=8)
     return joined.groupBy("s_name").agg(
-        F.round(
-            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")),
-            2,
-        )
+        money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         .cast("double")
         .alias("revenue"),
         F.count("*").alias("n_lines"),
@@ -327,10 +319,10 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bloom_join_prefilter",
-    oracle="""
+    oracle=f"""
     SELECT year(o.o_orderdate) AS o_year,
            count(*) AS n_lines,
-           round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))), 2)::DOUBLE AS gross
+           {money_sum_sql('l.l_extendedprice')}::DOUBLE AS gross
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
     WHERE o.o_totalprice > 400000
@@ -388,7 +380,7 @@ def bloom_join_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.count("*").alias("n_lines"),
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")), 2)
+            money_sum(F.col("l_extendedprice"))
             .cast("double")
             .alias("gross"),
         )

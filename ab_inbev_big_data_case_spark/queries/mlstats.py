@@ -17,6 +17,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import (
+    cents,
+    cents_sql,
+    money,
+    money_sql,
+    money_sum,
+    money_sum_sql,
+)
 from ab_inbev_big_data_case_spark.functions.text import (
     token_hash64,
     token_hash64_sql,
@@ -1112,12 +1120,12 @@ _BOOT_SQL = f"""
     ),
     rmeans AS (
         SELECT b,
-               round(round(sum(CAST(w * o_totalprice AS DECIMAL(18,6))), 2)
+               round({money_sum_sql('w * o_totalprice')}
                      / sum(w), 4) AS rmean
         FROM weighted GROUP BY b
     ),
     full_mean AS (
-        SELECT round(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)
+        SELECT round({money_sum_sql('o_totalprice')}
                      / count(*), 4) AS est
         FROM orders
     )
@@ -1144,9 +1152,9 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the replicate fan-out is a bounded 20× in-row explode
     (a cheap constant, not data-dependent); each replicate mean is one
     grouped decimal-exact weighted sum; the quantile/stddev pass runs
-    over the 20-row replicate spine. Weighted sums accumulate in
-    DECIMAL(18,6) (integer weights × money), so replicate means are
-    bit-identical across engines before the final double arithmetic."""
+    over the 20-row replicate spine. Weighted sums (integer weights ×
+    money) are money sums, so replicate means are bit-identical across
+    engines before the final double arithmetic."""
     o = table(spark, sf_dir, "orders")
     reps = o.select(
         "o_orderkey",
@@ -1173,12 +1181,7 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted = reps.select("b", "o_totalprice", w_expr.alias("w"))
     rmeans = weighted.groupBy("b").agg(
         F.round(
-            F.round(
-                F.sum(
-                    (F.col("w") * F.col("o_totalprice")).cast("decimal(18,6)")
-                ),
-                2,
-            )
+            money_sum(F.col("w") * F.col("o_totalprice"))
             / F.sum("w"),
             4,
         )
@@ -1187,7 +1190,7 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     full_mean = o.agg(
         F.round(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+            money_sum(F.col("o_totalprice"))
             / F.count("*"),
             4,
         )
@@ -1219,10 +1222,10 @@ _CUPED_SQL = f"""
     WITH spend AS (
         SELECT o_custkey AS cid,
                CAST(round(sum(CASE WHEN year(o_orderdate) = 1996
-                     THEN CAST(o_totalprice AS DECIMAL(18,6)) ELSE 0 END), 2)
+                     THEN {money_sql('o_totalprice')} ELSE 0 END), 2)
                      * 100 AS BIGINT) AS y_c,
                CAST(round(sum(CASE WHEN year(o_orderdate) = 1995
-                     THEN CAST(o_totalprice AS DECIMAL(18,6)) ELSE 0 END), 2)
+                     THEN {money_sql('o_totalprice')} ELSE 0 END), 2)
                      * 100 AS BIGINT) AS x_c
         FROM orders GROUP BY 1
     ),
@@ -1301,20 +1304,20 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     variances use the algebraic CUPED identity var(y*) = var(y) −
     2θcov + θ²var(x), so no per-row double sum exists anywhere."""
     o = table(spark, sf_dir, "orders")
-    cents = lambda yr: (
+    year_cents = lambda yr: (
         F.round(
             F.sum(
                 F.when(
                     F.year("o_orderdate") == yr,
-                    F.col("o_totalprice").cast("decimal(18,6)"),
-                ).otherwise(F.lit(0).cast("decimal(18,6)"))
+                    money(F.col("o_totalprice")),
+                ).otherwise(money(F.lit(0)))
             ),
             2,
         )
         * 100
     ).cast("long")
     spend = o.groupBy(F.col("o_custkey").alias("cid")).agg(
-        cents(1996).alias("y_c"), cents(1995).alias("x_c")
+        year_cents(1996).alias("y_c"), year_cents(1995).alias("x_c")
     )
     h = token_hash64(F.concat(F.lit("exp:"), F.col("cid").cast("string"))) % 100
     armed = spend.withColumn(
@@ -1426,7 +1429,7 @@ def target_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QTE_SQL = f"""
     WITH spend AS (
         SELECT o_custkey AS cid,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS y_c
         FROM orders GROUP BY 1
     ),
@@ -1476,7 +1479,7 @@ def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     spend = o.groupBy(F.col("o_custkey").alias("cid")).agg(
         (
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+            money_sum(F.col("o_totalprice"))
             * 100
         )
         .cast("long")
@@ -1525,8 +1528,7 @@ _GSM_SQL = f"""
         SELECT date_trunc('week', o_orderdate)::TIMESTAMP AS wk,
                CASE WHEN ({token_hash64_sql("'exp:' || o_custkey")} % 100) < 50
                     THEN 't' ELSE 'c' END AS arm,
-               CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS y_c
+               {cents_sql('o_totalprice')} AS y_c
         FROM orders WHERE year(o_orderdate) = 1996
     ),
     wkagg AS (
@@ -1590,9 +1592,7 @@ def group_sequential_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.select(
         F.date_trunc("week", "o_orderdate").alias("wk"),
         F.when(h < 50, "t").otherwise("c").alias("arm"),
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("y_c"),
+        cents(F.col("o_totalprice")).alias("y_c"),
     )
     yd = F.col("y_c").cast("decimal(38,0)")
     wkagg = base.groupBy("wk", "arm").agg(
@@ -1723,7 +1723,7 @@ _HILL_K = 200
 
 _HILL_SQL = f"""
     WITH spend AS (
-        SELECT CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+        SELECT CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS y_c
         FROM orders GROUP BY o_custkey
     ),
@@ -1764,7 +1764,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         (
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+            money_sum(F.col("o_totalprice"))
             * 100
         )
         .cast("long")
@@ -1809,7 +1809,7 @@ _NEYMAN_BUDGET = 1000
 _NEYMAN_SQL = f"""
     WITH spend AS (
         SELECT c.c_mktsegment AS stratum,
-               CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o.o_totalprice')} * 100
                     AS BIGINT) AS y_c
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
         GROUP BY c.c_mktsegment, o.o_custkey
@@ -1856,9 +1856,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_mktsegment").alias("stratum"), "o_custkey")
         .agg(
             (
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2
-                )
+                money_sum(F.col("o_totalprice"))
                 * 100
             )
             .cast("long")
@@ -1897,15 +1895,15 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ two-way ANOVA
 
-_ANOVA_SQL = """
+_ANOVA_SQL = f"""
     WITH cells AS (
         SELECT c.c_mktsegment AS a, o.o_orderpriority AS b,
                count(*) AS n,
-               sum(CAST(round(CAST(o.o_totalprice AS DECIMAL(18,6)), 2) * 100
+               sum(CAST(round({money_sql('o.o_totalprice')}, 2) * 100
                         AS DECIMAL(38,0))) AS sy,
-               sum(CAST(round(CAST(o.o_totalprice AS DECIMAL(18,6)), 2) * 100
+               sum(CAST(round({money_sql('o.o_totalprice')}, 2) * 100
                         AS DECIMAL(38,0))
-                   * CAST(round(CAST(o.o_totalprice AS DECIMAL(18,6)), 2) * 100
+                   * CAST(round({money_sql('o.o_totalprice')}, 2) * 100
                           AS DECIMAL(38,0))) AS syy
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
         GROUP BY 1, 2
@@ -1962,7 +1960,7 @@ def anova_two_way(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact moments on identical double trees."""
     o = table(spark, sf_dir, "orders")
     c = load_tables(spark, sf_dir, ("customer",))["customer"]
-    y = (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100).cast(
+    y = (F.round(money(F.col("o_totalprice")), 2) * 100).cast(
         "decimal(38,0)"
     )
     cells = (
@@ -2129,10 +2127,10 @@ def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- caliper covariate matching
 
-_CALIPER_SQL = """
+_CALIPER_SQL = f"""
     WITH pre AS (
         SELECT user_id,
-               CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('value')} * 100
                     AS BIGINT) AS spend_c
         FROM events
         WHERE event_type = 'purchase' AND ts < TIMESTAMP '2024-01-16'
@@ -2182,7 +2180,7 @@ def caliper_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
         .agg(
-            (F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("value")) * 100)
             .cast("long")
             .alias("spend_c")
         )
@@ -2221,11 +2219,11 @@ def caliper_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- covariate balance (SMD)
 
-_SMD_SQL = """
+_SMD_SQL = f"""
     WITH pre AS (
         SELECT user_id,
                CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END AS treat,
-               CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('value')} * 100
                     AS BIGINT) AS spend_c,
                count(*) AS n_purch
         FROM events
@@ -2284,7 +2282,7 @@ def covariate_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", (F.col("user_id") % 2 == 1).cast("int").alias("treat"))
         .agg(
-            (F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("value")) * 100)
             .cast("long")
             .alias("spend_c"),
             F.count("*").alias("n_purch"),
@@ -2432,10 +2430,10 @@ def market_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- Simpson's-paradox slope audit
 
-_SIMPSON_SQL = """
+_SIMPSON_SQL = f"""
     WITH v AS (
         SELECT n.n_name AS nation,
-               CAST(round(CAST(l.l_discount AS DECIMAL(18,6)) * 100, 0)
+               CAST(round({money_sql('l.l_discount')} * 100, 0)
                     AS BIGINT) AS x,
                CAST(l.l_quantity AS BIGINT) AS y
         FROM lineitem l
@@ -2490,7 +2488,7 @@ def simpson_slope_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .select(
             F.col("n_name").alias("nation"),
-            F.round(F.col("l_discount").cast("decimal(18,6)") * 100, 0)
+            F.round(money(F.col("l_discount")) * 100, 0)
             .cast("long")
             .alias("x"),
             F.col("l_quantity").cast("long").alias("y"),
@@ -2530,7 +2528,7 @@ _ATT_SQL = f"""
     WITH matched AS ({_CALIPER_SQL}),
     post AS (
         SELECT user_id,
-               CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('value')} * 100
                     AS BIGINT) AS post_c
         FROM events
         WHERE event_type = 'purchase' AND ts >= TIMESTAMP '2024-01-16'
@@ -2570,7 +2568,7 @@ def matched_att_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
         .agg(
-            (F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("value")) * 100)
             .cast("long")
             .alias("post_c")
         )
@@ -2862,7 +2860,7 @@ def sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- ridge regression sweep
 
-_RIDGE_SQL = """
+_RIDGE_SQL = f"""
     WITH m AS (
         SELECT
             sum(q * q)::DECIMAL(38,0) AS sxx,
@@ -2872,12 +2870,9 @@ _RIDGE_SQL = """
             sum(d * p)::DECIMAL(38,0) AS syz,
             count(*) AS n
         FROM (
-            SELECT CAST(round(CAST(l_quantity AS DECIMAL(18,6)), 2) * 100
-                        AS BIGINT) AS q,
-                   CAST(round(CAST(l_discount AS DECIMAL(18,6)), 2) * 100
-                        AS BIGINT) AS d,
-                   CAST(round(CAST(l_extendedprice AS DECIMAL(18,6)), 2) * 100
-                        AS BIGINT) AS p
+            SELECT {cents_sql('l_quantity')} AS q,
+                   {cents_sql('l_discount')} AS d,
+                   {cents_sql('l_extendedprice')} AS p
             FROM lineitem
         )
     ),
@@ -2921,13 +2916,10 @@ def ridge_regression_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     At p features this is the p²-state Gram aggregate (cf. the dim² Gram
     collect in llm/similarity.py) — driver-side solve stays O(p³)."""
     li = table(spark, sf_dir, "lineitem")
-    cents = lambda c: (  # noqa: E731
-        F.round(F.col(c).cast("decimal(18,6)"), 2) * 100
-    ).cast("long")
     base = li.select(
-        cents("l_quantity").alias("q"),
-        cents("l_discount").alias("d"),
-        cents("l_extendedprice").alias("p"),
+        cents(F.col("l_quantity")).alias("q"),
+        cents(F.col("l_discount")).alias("d"),
+        cents(F.col("l_extendedprice")).alias("p"),
     )
     d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     m = base.select(
@@ -3075,10 +3067,9 @@ def sssp_bounded_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- WoE / IV feature binning
 
-_WOE_SQL = """
+_WOE_SQL = f"""
     WITH v AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c,
+        SELECT {cents_sql('o_totalprice')} AS x_c,
                CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS bad
         FROM orders
     ),
@@ -3133,9 +3124,7 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact longs."""
     o = table(spark, sf_dir, "orders")
     v = o.select(
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
+        cents(F.col("o_totalprice")).alias("x_c"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("bad"),
     )
     cells = v.groupBy("x_c").agg(F.count("*").alias("c"), F.sum("bad").alias("cb"))
@@ -3166,10 +3155,9 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- Kruskal-Wallis rank test
 
-_KW_SQL = """
+_KW_SQL = f"""
     WITH v AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c,
+        SELECT {cents_sql('o_totalprice')} AS x_c,
                o_orderpriority AS grp
         FROM orders
     ),
@@ -3229,9 +3217,7 @@ def kruskal_wallis_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum Σ(c³−c) is one 1-row aggregate of the same spine."""
     o = table(spark, sf_dir, "orders")
     v = o.select(
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
+        cents(F.col("o_totalprice")).alias("x_c"),
         F.col("o_orderpriority").alias("grp"),
     )
     cells_gv = v.groupBy("x_c", "grp").agg(F.count("*").alias("cg"))
@@ -3378,8 +3364,7 @@ _QREG_VALUES = ", ".join(f"({b})" for b in _QREG_SLOPES)
 
 _QREG_SQL = f"""
     WITH li AS (
-        SELECT CAST(round(CAST(l_extendedprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS y_c,
+        SELECT {cents_sql('l_extendedprice')} AS y_c,
                l_quantity::BIGINT AS x
         FROM lineitem
     ),
@@ -3418,9 +3403,7 @@ def quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy sum; the argmin join runs on the 42-row panel."""
     li = table(spark, sf_dir, "lineitem")
     v = li.select(
-        (F.round(F.col("l_extendedprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("y_c"),
+        cents(F.col("l_extendedprice")).alias("y_c"),
         F.col("l_quantity").cast("long").alias("x"),
     )
     grid = const_df(
@@ -3444,14 +3427,13 @@ def quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ Chow structural break
 
-_CHOW_SQL = """
+_CHOW_SQL = f"""
     WITH v AS (
         SELECT CASE WHEN o_orderdate < TIMESTAMP '1998-01-01'
                     THEN 0 ELSE 1 END AS seg,
                datediff('day', TIMESTAMP '1995-01-01', o_orderdate)::BIGINT
                    AS x,
-               CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS y
+               {cents_sql('o_totalprice')} AS y
         FROM orders
     ),
     m AS (
@@ -3524,9 +3506,7 @@ def chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("timestamp"))
         .cast("long")
         .alias("x"),
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("y"),
+        cents(F.col("o_totalprice")).alias("y"),
     )
     x_d, y_d = F.col("x").cast(d38), F.col("y").cast(d38)
     m = v.groupBy("seg").agg(
@@ -3699,10 +3679,9 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------- Mood's median test
 
-_MOOD_SQL = """
+_MOOD_SQL = f"""
     WITH v AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c,
+        SELECT {cents_sql('o_totalprice')} AS x_c,
                o_orderpriority AS grp
         FROM orders
     ),
@@ -3759,9 +3738,7 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast."""
     o = table(spark, sf_dir, "orders")
     v = o.select(
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
+        cents(F.col("o_totalprice")).alias("x_c"),
         F.col("o_orderpriority").alias("grp"),
     )
     spine = v.groupBy("x_c").agg(F.count("*").alias("c"))
@@ -3945,8 +3922,7 @@ _JT_U2 = ",\n".join(
 
 _JT_SQL = f"""
     WITH v AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS x_c,
+        SELECT {cents_sql('o_totalprice')} AS x_c,
                CAST(substr(o_orderpriority, 1, 1) AS INT) - 1 AS gi
         FROM orders
     ),
@@ -3992,9 +3968,7 @@ def jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-row explode."""
     o = table(spark, sf_dir, "orders")
     v = o.select(
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("x_c"),
+        cents(F.col("o_totalprice")).alias("x_c"),
         (F.substring("o_orderpriority", 1, 1).cast("int") - 1).alias("gi"),
     )
     cells = v.groupBy("x_c").agg(
@@ -4539,10 +4513,10 @@ def nb_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # iterations (Hunter 2004): p_i <- W_i / SUM_j n_ij/(p_i+p_j), normalized
 # to sum 1 and rounded to 8 per iteration (the pagerank_nations float
 # discipline: neighbor sums are <=24 rounded terms).
-_BT_SQL = """
+_BT_SQL = f"""
     WITH wk AS (
         SELECT c.c_nationkey AS nat, date_trunc('week', o.o_orderdate) AS w,
-               sum(CAST(o.o_totalprice AS DECIMAL(18,6))) AS rev
+               sum({money_sql('o.o_totalprice')}) AS rev
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY 1, 2
     ),
@@ -4613,7 +4587,7 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("nat"),
             F.date_trunc("week", "o_orderdate").alias("w"),
         )
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,6)")).alias("rev"))
+        .agg(F.sum(money(F.col("o_totalprice"))).alias("rev"))
     )
     a, b = wk.alias("a"), wk.alias("b")
     duels = cut(  # bounded ≤600-row duel dim, reused 3×
@@ -4667,12 +4641,12 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2024-01-16 boundary: per relative week r, the treated-control purchase-
 # value gap net of the r = −1 baseline gap — the parallel-trends picture
 # (pre-period coefficients ≈ 0) behind the single DiD number.
-_EVENT_STUDY_SQL = """
+_EVENT_STUDY_SQL = f"""
     WITH p AS (
         SELECT (user_id % 2 = 1)::INT AS treat,
                CAST(floor(date_diff('day', DATE '2024-01-16', ts::DATE) / 7.0)
                     AS BIGINT) AS r,
-               CAST(value AS DECIMAL(18,6)) AS v
+               {money_sql('value')} AS v
         FROM events WHERE event_type = 'purchase'
     ),
     cell AS (
@@ -4701,7 +4675,7 @@ def event_study_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pre-boundary coefficients near zero are the parallel-trends evidence
     the scalar DiD assumes; post-boundary ones trace the effect's shape.
 
-    Exactness: purchase values sum as DECIMAL(18,6) (order-independent);
+    Exactness: purchase values are money sums (order-independent);
     per-cell means and the gap-of-gaps are double arithmetic on those
     exact scalars. One conditional aggregate over the fact scan + a
     treated×control self-join on the ≤6-row week spine."""
@@ -4714,7 +4688,7 @@ def event_study_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("r"),
-        F.col("value").cast("decimal(18,6)").alias("v"),
+        money(F.col("value")).alias("v"),
     )
     cell = p.groupBy("r", "treat").agg(
         F.sum("v").alias("sv"), F.count("*").alias("n")
@@ -4827,14 +4801,14 @@ def rdd_local_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stratified form — the augmentation terms vanish — so this is the
 # degenerate-but-exact member of that family, next to ips_offpolicy_eval
 # (the weighting half) and matched_att_estimate (the matching half).
-_STRAT_ATE_SQL = """
+_STRAT_ATE_SQL = f"""
     WITH u AS (
         SELECT user_id,
                (user_id % 2 = 1)::INT AS treat,
                count(*) AS n_events,
                sum(CASE WHEN event_type = 'purchase'
-                        THEN CAST(value AS DECIMAL(18,6))
-                        ELSE CAST(0 AS DECIMAL(18,6)) END) AS y
+                        THEN {money_sql('value')}
+                        ELSE {money_sql('0')} END) AS y
         FROM events GROUP BY 1
     ),
     s AS (
@@ -4843,9 +4817,9 @@ _STRAT_ATE_SQL = """
     cell AS (
         SELECT stratum,
                sum(treat) AS n1, sum(1 - treat) AS n0,
-               sum(CASE WHEN treat = 1 THEN y ELSE CAST(0 AS DECIMAL(18,6)) END)
+               sum(CASE WHEN treat = 1 THEN y ELSE {money_sql('0')} END)
                    AS s1,
-               sum(CASE WHEN treat = 0 THEN y ELSE CAST(0 AS DECIMAL(18,6)) END)
+               sum(CASE WHEN treat = 0 THEN y ELSE {money_sql('0')} END)
                    AS s0
         FROM s GROUP BY 1
     ),
@@ -4882,7 +4856,7 @@ def stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     — reported next to the naive difference so the covariate adjustment
     is visible. Strata missing a treatment arm drop (counted).
 
-    Exactness: user outcomes sum as DECIMAL(18,6); per-stratum means and
+    Exactness: user outcomes are money sums; per-stratum means and
     the weighted combination are double arithmetic on exact scalars. One
     user-keyed aggregate, one bounded-strata aggregate, no windows."""
     e = table(spark, sf_dir, "events")
@@ -4891,15 +4865,15 @@ def stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.col("value").cast("decimal(18,6)"),
-            ).otherwise(F.lit(0).cast("decimal(18,6)"))
+                money(F.col("value")),
+            ).otherwise(money(F.lit(0)))
         ).alias("y"),
     ).select(
         (F.col("user_id") % 2 == 1).cast("int").alias("treat"),
         F.least(F.expr("n_events div 5"), F.lit(8)).alias("stratum"),
         "y",
     )
-    zero = F.lit(0).cast("decimal(18,6)")
+    zero = money(F.lit(0))
     cell = u.groupBy("stratum").agg(
         F.sum("treat").alias("n1"),
         F.sum(1 - F.col("treat")).alias("n0"),
@@ -5058,10 +5032,10 @@ def abtest_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- regression influence / Cook's D (r11)
 
-_COOKSD_SQL = """
+_COOKSD_SQL = f"""
     WITH d AS (
         SELECT date_trunc('day', o_orderdate)::TIMESTAMP AS day,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS HUGEINT) AS y
         FROM orders GROUP BY 1
     ),
@@ -5136,7 +5110,7 @@ def ols_influence_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back, per-row scalar math, TakeOrderedAndProject."""
     o = table(spark, sf_dir, "orders")
     d = o.groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("day")).agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("decimal(38,0)")
         .alias("y")
     )
@@ -5231,8 +5205,7 @@ _RANSAC_SQL = f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
                count(*)::BIGINT AS x,
-               sum(CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                        AS BIGINT))::BIGINT AS y_c
+               sum({cents_sql('o_totalprice')})::BIGINT AS y_c
         FROM orders GROUP BY 1
     ),
     tot AS (
@@ -5334,8 +5307,7 @@ def ransac_line_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.count("*").alias("x"),
         F.sum(
-            (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-            .cast("long")
+            cents(F.col("o_totalprice"))
         ).alias("y_c"),
     )
     tot = daily.agg(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import money_sum, money_sum_sql
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
 
@@ -137,11 +138,11 @@ def spearman_corr_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KENDALL_SQL = """
+_KENDALL_SQL = f"""
     WITH nat AS (
         SELECT c.c_nationkey AS nk,
                count(DISTINCT c.c_custkey) AS n_cust,
-               CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o.o_totalprice')} * 100
                     AS BIGINT) AS rev_c
         FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
         GROUP BY 1
@@ -187,7 +188,7 @@ def kendall_tau_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count_distinct("c_custkey").alias("n_cust"),
             (
-                F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100
+                money_sum(F.col("o_totalprice")) * 100
             )
             .cast("long")
             .alias("rev_c"),

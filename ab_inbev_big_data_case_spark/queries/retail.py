@@ -26,7 +26,7 @@ Scale posture:
   — no driver iteration, no growing state; ties break deterministically
   (count desc, label asc) in both engines.
 
-Float discipline: revenue accumulates as DECIMAL(18,6) and is fixed to
+Float discipline: revenue is a ``functions/money.py`` sum, fixed to
 integer CENTS before any ranking or share arithmetic; the A/B/C class test
 multiplies in DECIMAL(38,0) (cum·100 ≤ total·80) so no float boundary
 exists anywhere. Cosines are computed from exact integer counts and
@@ -38,6 +38,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import (
+    money,
+    money_sql,
+    money_sum,
+    money_sum_sql,
+)
 from ab_inbev_big_data_case_spark.operators.relational import prefix_sums
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
@@ -45,11 +51,11 @@ from ab_inbev_big_data_case_spark.operators.graph import basket_pairs, basket_pa
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
 #: per-part revenue in exact integer cents (shared by the ABC oracle)
-_PART_REV_SQL = """
+_PART_REV_SQL = f"""
     prev AS (
         SELECT l_partkey,
-               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-                                   AS DECIMAL(18,6))), 2) * 100 AS BIGINT)
+               CAST({money_sum_sql('l_extendedprice * (1 - l_discount)')} * 100
+                    AS BIGINT)
                    AS rev_c
         FROM lineitem GROUP BY 1
     )
@@ -96,14 +102,7 @@ def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     prev = li.groupBy("l_partkey").agg(
         (
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(18,6)"
-                    )
-                ),
-                2,
-            )
+            money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             * 100
         )
         .cast("long")
@@ -552,12 +551,12 @@ def recsys_coverage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LEADERBOARD_SQL = """
+_LEADERBOARD_SQL = f"""
     WITH mrev AS (
         SELECT date_trunc('month', o.o_orderdate)::TIMESTAMP AS month,
                l.l_partkey,
-               CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                                   AS DECIMAL(18,6))), 2) * 100 AS BIGINT)
+               CAST({money_sum_sql('l.l_extendedprice * (1 - l.l_discount)')} * 100
+                    AS BIGINT)
                    AS rev_c
         FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
         GROUP BY 1, 2
@@ -603,18 +602,7 @@ def leaderboard_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_partkey",
         )
         .agg(
-            (
-                F.round(
-                    F.sum(
-                        (
-                            F.col("l_extendedprice")
-                            * (1 - F.col("l_discount"))
-                        ).cast("decimal(18,6)")
-                    ),
-                    2,
-                )
-                * 100
-            )
+            (money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100)
             .cast("long")
             .alias("rev_c")
         )
@@ -933,11 +921,11 @@ def newsvendor_quantile_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- Laspeyres price index
 
-_LASPEYRES_SQL = """
+_LASPEYRES_SQL = f"""
     WITH pm AS (
         SELECT l_partkey AS part,
                CAST(date_trunc('month', l_shipdate) AS DATE) AS mth,
-               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('l_extendedprice')} * 100
                     AS BIGINT) AS ext_c,
                CAST(sum(l_quantity) AS BIGINT) AS qty
         FROM lineitem GROUP BY 1, 2
@@ -976,7 +964,7 @@ def laspeyres_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("part"),
         F.date_trunc("month", "l_shipdate").cast("date").alias("mth"),
     ).agg(
-        (F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("l_extendedprice")) * 100)
         .cast("long")
         .alias("ext_c"),
         F.sum("l_quantity").cast("long").alias("qty"),
@@ -1011,10 +999,10 @@ def laspeyres_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ hierarchical share rollup
 
-_HIER_SHARE_SQL = """
+_HIER_SHARE_SQL = f"""
     WITH rev AS (
         SELECT r.r_name AS region, n.n_name AS nation,
-               CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o.o_totalprice')} * 100
                     AS BIGINT) AS rev_c
         FROM orders o
         JOIN customer c ON c.c_custkey = o.o_custkey
@@ -1053,7 +1041,7 @@ def hierarchical_share_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
-            (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("o_totalprice")) * 100)
             .cast("long")
             .alias("rev_c")
         )
@@ -1079,11 +1067,11 @@ def hierarchical_share_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------- holiday lift
 
-_HOLIDAY_SQL = """
+_HOLIDAY_SQL = f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
                dayofweek(CAST(o_orderdate AS DATE)) + 1 AS dow,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS rev_c
         FROM orders GROUP BY 1, 2
     ),
@@ -1130,7 +1118,7 @@ def holiday_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("o_orderdate").alias("d"),
         F.dayofweek(F.to_date("o_orderdate")).alias("dow"),
     ).agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("long")
         .alias("rev_c")
     )
@@ -1160,11 +1148,11 @@ def holiday_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------- price jump events
 
-_PRICE_JUMP_SQL = """
+_PRICE_JUMP_SQL = f"""
     WITH pm AS (
         SELECT l_partkey AS part,
                CAST(date_trunc('month', l_shipdate) AS DATE) AS mth,
-               (CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2)
+               (CAST({money_sum_sql('l_extendedprice')}
                      * 100 AS BIGINT) * 1000)
                  // CAST(sum(l_quantity) AS BIGINT) AS price_milli
         FROM lineitem GROUP BY 1, 2
@@ -1205,7 +1193,7 @@ def price_jump_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("month", "l_shipdate").cast("date").alias("mth"),
         )
         .agg(
-            (F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("l_extendedprice")) * 100)
             .cast("long")
             .alias("ext_c"),
             F.sum("l_quantity").cast("long").alias("qty"),
@@ -1238,11 +1226,11 @@ def price_jump_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ gains chart deciles
 
-_GAINS_SQL = """
+_GAINS_SQL = f"""
     WITH u AS (
         SELECT user_id,
                CAST(round(sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
-                                   THEN CAST(value AS DECIMAL(18,6)) END), 2)
+                                   THEN {money_sql('value')} END), 2)
                     * 100 AS BIGINT) AS score_c,
                max(CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END)
                    AS buyer
@@ -1303,7 +1291,7 @@ def gains_chart_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum(
                         F.when(
                             F.col("ts") < split,
-                            F.col("value").cast("decimal(18,6)"),
+                            money(F.col("value")),
                         )
                     ),
                     2,
@@ -1357,11 +1345,11 @@ def gains_chart_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------------- Qini uplift curve
 
-_QINI_SQL = """
+_QINI_SQL = f"""
     WITH u AS (
         SELECT user_id, user_id % 2 AS arm,
                CAST(round(sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
-                                   THEN CAST(value AS DECIMAL(18,6)) END), 2)
+                                   THEN {money_sql('value')} END), 2)
                     * 100 AS BIGINT) AS score_c,
                max(CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END)
                    AS buyer
@@ -1425,7 +1413,7 @@ def qini_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum(
                         F.when(
                             F.col("ts") < split,
-                            F.col("value").cast("decimal(18,6)"),
+                            money(F.col("value")),
                         )
                     ),
                     2,
@@ -1593,10 +1581,10 @@ def bullwhip_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CURRENT month's basket, Fisher is the geometric mean of the two. All
 # sums are exact integers; the two divisions and the sqrt are the only
 # float ops, identical in both engines.
-_PAASCHE_SQL = """
+_PAASCHE_SQL = f"""
     WITH pm AS (
         SELECT l_partkey AS part, date_trunc('month', l_shipdate)::DATE AS mth,
-               (round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2) * 100)
+               ({money_sum_sql('l_extendedprice')} * 100)
                    ::BIGINT AS ext_c,
                sum(l_quantity)::BIGINT AS qty
         FROM lineitem GROUP BY 1, 2
@@ -1650,7 +1638,7 @@ def paasche_fisher_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("part"),
         F.date_trunc("month", "l_shipdate").cast("date").alias("mth"),
     ).agg(
-        (F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("l_extendedprice")) * 100)
         .cast("long")
         .alias("ext_c"),
         F.sum("l_quantity").cast("long").alias("qty"),
@@ -1691,10 +1679,10 @@ def paasche_fisher_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nation revenue shares. Shares are exact-cent ratios; each share² is
 # quantized to DECIMAL(38,16) before the 25-term sum so the total is
 # independent of either engine's float summation order.
-_HHI_SQL = """
+_HHI_SQL = f"""
     WITH nat AS (
         SELECT year(o.o_orderdate) AS yr, c.c_nationkey AS nat,
-               (round(sum(CAST(o.o_totalprice AS DECIMAL(18,6))), 2) * 100)
+               ({money_sum_sql('o.o_totalprice')} * 100)
                    ::HUGEINT AS cents
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY 1, 2
@@ -1733,7 +1721,7 @@ def herfindahl_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("nat"),
         )
         .agg(
-            (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("o_totalprice")) * 100)
             .cast("decimal(38,0)")
             .alias("cents")
         )

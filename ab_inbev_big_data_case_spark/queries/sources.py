@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import money_sum, money_sum_sql
 from ..registry import register
 from ..sources.readers import read_csv, read_json, table
 
@@ -69,10 +70,10 @@ _ORDERS_CSV_SCHEMA = (
     "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE"
 )
 
-_CSV_SCAN_SQL = """
+_CSV_SCAN_SQL = f"""
     SELECT o_orderstatus,
            count(*) AS n_orders,
-           round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)::DOUBLE AS total_price,
+           {money_sum_sql('o_totalprice')}::DOUBLE AS total_price,
            min(o_orderkey) AS min_key,
            max(o_orderkey) AS max_key
     FROM orders
@@ -92,7 +93,7 @@ def csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = read_csv(spark, path, schema=_ORDERS_CSV_SCHEMA, header=True)
     return c.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+        money_sum(F.col("o_totalprice"))
         .cast("double")
         .alias("total_price"),
         F.min("o_orderkey").alias("min_key"),
@@ -170,10 +171,10 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_XML_SCAN_SQL = """
+_XML_SCAN_SQL = f"""
     SELECT n_nationkey, n_name, n_regionkey,
            count(*) AS n_suppliers,
-           round(sum(CAST(s_acctbal AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('s_acctbal')}::DOUBLE
                AS total_bal
     FROM supplier JOIN nation ON s_nationkey = n_nationkey
     GROUP BY 1, 2, 3
@@ -203,7 +204,7 @@ def xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_nationkey", "n_name", "n_regionkey")
         .agg(
             F.count("*").alias("n_suppliers"),
-            F.round(F.sum(F.col("s_acctbal").cast("decimal(18,6)")), 2)
+            money_sum(F.col("s_acctbal"))
             .cast("double")
             .alias("total_bal"),
         )

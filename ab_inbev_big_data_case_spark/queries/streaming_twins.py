@@ -12,6 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import (
+    cents,
+    cents_sql,
+    money,
+    money_sql,
+)
 from ab_inbev_big_data_case_spark.operators.relational import dedup_deterministic
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
@@ -216,13 +222,13 @@ def sessionize_lag_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "interval_join_purchase_click",
-    oracle="""
+    oracle=f"""
     SELECT p.event_id AS purchase_id,
            c.event_id AS click_id,
            p.user_id AS user_id,
            p.ts AS purchase_ts,
            c.ts AS click_ts,
-           round(CAST(p.value AS DECIMAL(18,6)), 2)::DOUBLE AS purchase_value_r
+           round({money_sql('p.value')}, 2)::DOUBLE AS purchase_value_r
     FROM events p JOIN events c
       ON c.user_id = p.user_id
      AND p.event_type = 'purchase' AND c.event_type = 'click'
@@ -263,7 +269,7 @@ def interval_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("ts").alias("purchase_ts"),
         F.col("r_ts").alias("click_ts"),
-        F.round(F.col("value").cast("decimal(18,6)"), 2)
+        F.round(money(F.col("value")), 2)
         .cast("double")
         .alias("purchase_value_r"),
     )
@@ -271,11 +277,11 @@ def interval_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "interval_join_unmatched_purchases",
-    oracle="""
+    oracle=f"""
     SELECT p.event_id AS purchase_id,
            p.user_id AS user_id,
            p.ts AS purchase_ts,
-           round(CAST(p.value AS DECIMAL(18,6)), 2)::DOUBLE AS purchase_value_r
+           round({money_sql('p.value')}, 2)::DOUBLE AS purchase_value_r
     FROM events p
     WHERE p.event_type = 'purchase'
       AND NOT EXISTS (
@@ -324,7 +330,7 @@ def interval_join_unmatched_purchases(spark: SparkSession, sf_dir: str) -> DataF
         F.col("event_id").alias("purchase_id"),
         "user_id",
         F.col("ts").alias("purchase_ts"),
-        F.round(F.col("value").cast("decimal(18,6)"), 2)
+        F.round(money(F.col("value")), 2)
         .cast("double")
         .alias("purchase_value_r"),
     )
@@ -332,12 +338,11 @@ def interval_join_unmatched_purchases(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "chained_window_daily_peak",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
         SELECT time_bucket(INTERVAL '1 hour', ts) AS h,
                event_type,
-               sum(CAST(round(CAST(value AS DECIMAL(18,6)), 2) * 100
-                        AS BIGINT))::BIGINT AS cents
+               sum({cents_sql('value')})::BIGINT AS cents
         FROM events
         GROUP BY 1, 2
     )
@@ -372,7 +377,5 @@ def chained_window_daily_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = table(spark, sf_dir, "events")
-    cents = F.sum(
-        (F.round(F.col("value").cast("decimal(18,6)"), 2) * 100).cast("long")
-    ).cast("long")
-    return chained_tumbling_peak(e, "ts", ["event_type"], cents)
+    hourly_cents = F.sum(cents(F.col("value"))).cast("long")
+    return chained_tumbling_peak(e, "ts", ["event_type"], hourly_cents)

@@ -17,50 +17,64 @@ windows here are therefore the documented bounded-spine exception (see
 exactly as it does at sf0.001. Per-key series (``seasonal_naive_mape``) keep
 the window PARTITIONED so the same plan scales with key cardinality.
 
-Float discipline: daily revenue is summed as DECIMAL(18,6) and rounded to 2
-before any double arithmetic (the ``mom_revenue_growth`` pattern), so the
-spine the two engines difference/correlate is bit-identical; downstream
-ratios round at 6.
+Float discipline: daily revenue is a ``functions/money.py`` sum (exact, then
+rounded to 2 before any double arithmetic), so the spine the two engines
+difference/correlate is bit-identical; downstream ratios round at 6.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import (
+    cents,
+    cents_sql,
+    money_sum,
+    money_sum_sql,
+)
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import const_df, table
 from ab_inbev_big_data_case_spark.operators.lineage import cut
 
-#: ANSI daily-revenue spine shared by every oracle in this module
-#: (matches :func:`_daily_revenue` column-for-column).
-_DAILY_SQL = """
-        SELECT date_trunc('day', o_orderdate)::TIMESTAMP AS day,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)::DOUBLE
+
+def _daily_sql(key: str | None = None) -> str:
+    """ANSI daily-revenue spine shared by every oracle in this module
+    (matches :func:`_daily_revenue` column-for-column); ``key`` is the
+    series key's select item (``"o_orderpriority AS prio"``), grouped
+    before the day."""
+    head, groups = (f"{key}, ", "1, 2") if key else ("", "1")
+    return f"""
+        SELECT {head}date_trunc('day', o_orderdate)::TIMESTAMP AS day,
+               {money_sum_sql('o_totalprice')}::DOUBLE
                    AS rev
-        FROM orders GROUP BY 1
+        FROM orders GROUP BY {groups}
 """
+
 
 _ACF_MAX_LAG = 7
 
 
-def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact → spine collapse: one aggregate shuffle keyed on day, money
-    summed decimal-exact then rounded to 2 (stable across engines)."""
+def _daily_revenue(
+    spark: SparkSession, sf_dir: str, key: Column | None = None
+) -> DataFrame:
+    """Fact → spine collapse: one aggregate shuffle keyed on (``key``,)
+    day, revenue a money sum (stable across engines)."""
     o = table(spark, sf_dir, "orders")
+    keys = [] if key is None else [key]
     return o.groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).alias("day")
+        *keys, F.date_trunc("day", F.col("o_orderdate")).alias("day")
     ).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+        money_sum(F.col("o_totalprice"))
         .cast("double")
         .alias("rev")
     )
 
 
 _ACF_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     m AS (SELECT avg(rev) AS mu FROM d),
     s AS (SELECT sum((rev - m.mu) * (rev - m.mu)) AS ss
           FROM d CROSS JOIN m),
@@ -131,14 +145,8 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("kv.lag_k", "kv.acf_r")
 
 
-_SEASONAL_NAIVE_SQL = """
-    WITH d AS (
-        SELECT o_orderpriority AS prio,
-               date_trunc('day', o_orderdate)::TIMESTAMP AS day,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)::DOUBLE
-                   AS rev
-        FROM orders GROUP BY 1, 2
-    ),
+_SEASONAL_NAIVE_SQL = f"""
+    WITH d AS ({_daily_sql("o_orderpriority AS prio")}),
     f AS (
         SELECT prio, rev,
                lag(rev, 7) OVER (PARTITION BY prio ORDER BY day) AS fc
@@ -166,15 +174,7 @@ def seasonal_naive_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
     task is one series, and adding keys adds parallelism, not depth. The
     error aggregate rides the same partitioning (avg/count skip the 7
     NULL-forecast head rows identically in both engines)."""
-    o = table(spark, sf_dir, "orders")
-    d = o.groupBy(
-        F.col("o_orderpriority").alias("prio"),
-        F.date_trunc("day", F.col("o_orderdate")).alias("day"),
-    ).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
-        .cast("double")
-        .alias("rev")
-    )
+    d = _daily_revenue(spark, sf_dir, F.col("o_orderpriority").alias("prio"))
     w = Window.partitionBy("prio").orderBy("day")
     f = d.select("prio", "rev", F.lag("rev", 7).over(w).alias("fc"))
     err = F.col("rev") - F.col("fc")
@@ -191,7 +191,7 @@ def seasonal_naive_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CUSUM_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     m AS (SELECT avg(rev) AS mu, count(*) AS n_days FROM d),
     c AS (
         SELECT day,
@@ -240,7 +240,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DOW_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     m AS (SELECT avg(rev) AS mu FROM d),
     g AS (
         SELECT isodow(day)::BIGINT AS dow,
@@ -284,14 +284,8 @@ def dow_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAKS_SQL = """
-    WITH d AS (
-        SELECT o_orderpriority AS prio,
-               date_trunc('day', o_orderdate)::TIMESTAMP AS day,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)::DOUBLE
-                   AS rev
-        FROM orders GROUP BY 1, 2
-    ),
+_STREAKS_SQL = f"""
+    WITH d AS ({_daily_sql("o_orderpriority AS prio")}),
     m AS (SELECT prio, avg(rev) AS mu FROM d GROUP BY 1),
     r AS (
         SELECT d.prio, d.day, d.rev, m.mu,
@@ -335,15 +329,7 @@ def revenue_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-1 filter with a deterministic (len DESC, start) tiebreak. No
     self-join — the rn-difference replaces the quadratic
     island-by-neighbor-join formulation."""
-    o = table(spark, sf_dir, "orders")
-    d = o.groupBy(
-        F.col("o_orderpriority").alias("prio"),
-        F.date_trunc("day", F.col("o_orderdate")).alias("day"),
-    ).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
-        .cast("double")
-        .alias("rev")
-    )
+    d = _daily_revenue(spark, sf_dir, F.col("o_orderpriority").alias("prio"))
     m = d.groupBy("prio").agg(F.avg("rev").alias("mu"))
     wall = Window.partitionBy("prio").orderBy("day")
     r = d.join(m, "prio").withColumn("rn", F.row_number().over(wall))
@@ -370,14 +356,8 @@ def revenue_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLING_MEDIAN_SQL = """
-    WITH d AS (
-        SELECT o_orderpriority AS prio,
-               date_trunc('day', o_orderdate)::TIMESTAMP AS day,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)::DOUBLE
-                   AS rev
-        FROM orders GROUP BY 1, 2
-    )
+_ROLLING_MEDIAN_SQL = f"""
+    WITH d AS ({_daily_sql("o_orderpriority AS prio")})
     SELECT prio, day, rev,
            round(quantile_cont(rev, 0.5) OVER (
                PARTITION BY prio ORDER BY day
@@ -398,15 +378,7 @@ def rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     The window is PARTITIONED by the series key with a 7-row frame, so
     per-task state is one series' trailing buffer — constant memory per
     key at any scale."""
-    o = table(spark, sf_dir, "orders")
-    d = o.groupBy(
-        F.col("o_orderpriority").alias("prio"),
-        F.date_trunc("day", F.col("o_orderdate")).alias("day"),
-    ).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
-        .cast("double")
-        .alias("rev")
-    )
+    d = _daily_revenue(spark, sf_dir, F.col("o_orderpriority").alias("prio"))
     w = (
         Window.partitionBy("prio")
         .orderBy("day")
@@ -472,7 +444,7 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DECOMP_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     t AS (
         SELECT day, rev,
                CASE WHEN count(rev) OVER w = 7
@@ -546,7 +518,7 @@ def ts_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SEAS_ANOM_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     t AS (
         SELECT day, rev,
                CASE WHEN count(rev) OVER w = 7
@@ -714,7 +686,7 @@ def error_rate_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MK_TS_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     idx AS (
         SELECT row_number() OVER (ORDER BY day) AS i, day, rev FROM d
     ),
@@ -823,7 +795,7 @@ _CCF_MAX_LAG = 7
 _CCF_SQL = f"""
     WITH d AS (
         SELECT date_trunc('day', o_orderdate)::TIMESTAMP AS day,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)::DOUBLE
+               {money_sum_sql('o_totalprice')}::DOUBLE
                    AS rev,
                count(*)::DOUBLE AS n_ord
         FROM orders GROUP BY 1
@@ -877,7 +849,7 @@ def ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-offset semantics to disagree on."""
     o = table(spark, sf_dir, "orders")
     d = o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+        money_sum(F.col("o_totalprice"))
         .cast("double")
         .alias("rev"),
         F.count("*").cast("double").alias("n_ord"),
@@ -931,10 +903,10 @@ def ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------- SAX motif mining
 
-_SAX_SQL = """
+_SAX_SQL = f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS x
         FROM orders GROUP BY 1
     ),
@@ -994,7 +966,7 @@ def sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowlist); motif counting is a ≤64-key aggregate."""
     o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("long")
         .alias("x")
     )
@@ -1111,10 +1083,10 @@ def interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------- Wald–Wolfowitz runs test
 
-_RUNS_SQL = """
+_RUNS_SQL = f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS x
         FROM orders GROUP BY 1
     ),
@@ -1171,7 +1143,7 @@ def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows)."""
     o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("long")
         .alias("x")
     )
@@ -1233,7 +1205,7 @@ def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------- PACF via Durbin–Levinson
 
 _PACF_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     m AS (SELECT avg(rev) AS mu FROM d),
     s AS (SELECT sum((rev - m.mu) * (rev - m.mu)) AS ss
           FROM d CROSS JOIN m),
@@ -1322,7 +1294,7 @@ def pacf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------- forecast method bakeoff
 
 _BAKEOFF_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     idx AS (
         SELECT day, rev,
                row_number() OVER (ORDER BY day) AS i,
@@ -1445,7 +1417,7 @@ def forecast_method_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------ max drawdown
 
 _DRAWDOWN_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c AS (
         SELECT day, rev,
                max(rev) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
@@ -1517,7 +1489,7 @@ def max_drawdown_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- SPC control chart
 
 _SPC_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     m AS (
         SELECT count(*) AS n, sum(rev) AS s, sum(rev * rev) AS q
         FROM d
@@ -1615,10 +1587,10 @@ def spc_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- matrix profile (daily)
 
-_MATRIX_PROFILE_SQL = """
+_MATRIX_PROFILE_SQL = f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS x
         FROM orders GROUP BY 1
     ),
@@ -1687,7 +1659,7 @@ def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one daily aggregation."""
     o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("long")
         .alias("x")
     )
@@ -1814,10 +1786,10 @@ def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ Granger causality (lag 1)
 
-_GRANGER_SQL = """
+_GRANGER_SQL = f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS x,
                count(*)::BIGINT AS y
         FROM orders GROUP BY 1
@@ -1881,7 +1853,7 @@ def granger_f_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     then scalar arithmetic on a 1-row panel."""
     o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("long")
         .alias("x"),
         F.count("*").alias("y"),
@@ -1973,8 +1945,7 @@ def _dtw_sql() -> str:
     WITH dow AS (
         SELECT dayofweek(CAST(o.o_orderdate AS DATE)) + 1 AS dw,
                c.c_nationkey AS nat,
-               CAST(round(CAST(o.o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS v
+               {cents_sql('o.o_totalprice')} AS v
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         WHERE c.c_nationkey IN (0, 1)
     ),
@@ -2021,9 +1992,7 @@ def dtw_weekly_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.dayofweek(F.to_date("o_orderdate")).alias("dw"),
             F.col("c_nationkey").alias("nat"),
-            (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-            .cast("long")
-            .alias("v"),
+            cents(F.col("o_totalprice")).alias("v"),
         )
     )
     row = dow.agg(
@@ -2069,7 +2038,7 @@ _HURST_SCALES_SQL = ", ".join(f"({s})" for s in _HURST_SCALES)
 _HURST_SQL = f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS x
         FROM orders GROUP BY 1
     ),
@@ -2143,7 +2112,7 @@ def hurst_rs_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel."""
     o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("long")
         .alias("x")
     )
@@ -2221,7 +2190,7 @@ def hurst_rs_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PGRAM_K = 8  # bounded frequency grid: periods N/1 .. N/8
 
 _PGRAM_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     idx AS (
         SELECT rev, row_number() OVER (ORDER BY day) - 1 AS t,
                count(*) OVER () AS n, avg(rev) OVER () AS mu
@@ -2291,7 +2260,7 @@ def periodogram_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BOLLINGER_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c AS (
         SELECT day, rev,
                CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS HUGEINT) AS cents
@@ -2385,7 +2354,7 @@ def bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and lrv·4n³·10⁴ = (4Γ0 + 2Σ_{k=1..3}(4−k)Γ_k)·… — both engines divide
 # the same exact integers once.
 _NW_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c AS (
         SELECT day, CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS HUGEINT) AS c
         FROM d
@@ -2485,7 +2454,7 @@ def newey_west_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (ties → earliest day) — the float residual is computed only for the
 # report.
 _ESD_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c0 AS (
         SELECT day, CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS HUGEINT) AS c
         FROM d
@@ -2714,7 +2683,7 @@ def seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 # method-of-moments Gumbel parameters, and 1/5/10-year return levels.
 _EULER_GAMMA = 0.57721566490153286
 _GUMBEL_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     blocks AS (
         SELECT date_trunc('month', day) AS mon,
                max(CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS HUGEINT)) AS mx_c
@@ -2807,7 +2776,7 @@ _PH_DELTA = 0.005   # drift allowance (in units of the series mean)
 _PH_LAMBDA = 2.0    # alarm threshold
 
 _PH_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c AS (
         SELECT day, CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS HUGEINT) AS cents
         FROM d
@@ -2926,7 +2895,7 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------- binary-segmentation changepoints (r11)
 
 _BINSEG_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c AS (
         SELECT day, CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS HUGEINT) AS cents
         FROM d
@@ -3093,7 +3062,7 @@ def binary_segmentation_changepoints(spark: SparkSession, sf_dir: str) -> DataFr
 # ------------------------------------------- sample entropy (r11)
 
 _SAMPEN_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c AS (
         SELECT day, CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS HUGEINT) AS x
         FROM d
@@ -3237,7 +3206,7 @@ def sample_entropy_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------ ADF unit-root test (lag 1)
 
 _ADF_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c AS (
         SELECT day, CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
         FROM d
@@ -3383,7 +3352,7 @@ def adf_stationarity_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------- permutation entropy (order 3)
 
 _PERMENT_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     c AS (
         SELECT day, CAST(CAST(rev AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
         FROM d
@@ -3490,7 +3459,7 @@ def permutation_entropy_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------- Theil–Sen robust trend (r13)
 
 _THEIL_SEN_SQL = f"""
-    WITH d AS ({_DAILY_SQL}),
+    WITH d AS ({_daily_sql()}),
     pts AS (
         SELECT date_diff('day', (SELECT min(day) FROM d), day)::BIGINT AS x,
                CAST(round(rev * 100, 0) AS BIGINT) AS y

@@ -16,6 +16,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import (
+    cents,
+    cents_sql,
+    money,
+    money_sum,
+    money_sum_sql,
+)
 from ..functions.text import token_hash64, token_hash64_sql
 from ..operators.graph import pagerank
 from ..operators.relational import build_scd2, profile
@@ -271,10 +278,10 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ivm_join_merge",
-    oracle="""
+    oracle=f"""
     SELECT year(o.o_orderdate) AS o_year,
            count(*) AS n_lines,
-           round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))), 2)::DOUBLE
+           {money_sum_sql('l.l_extendedprice')}::DOUBLE
                AS gross
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY 1
@@ -312,7 +319,7 @@ def ivm_join_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.year("o_orderdate").alias("o_year"))
             .agg(
                 F.count("*").alias("pn"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).alias("ps"),
+                F.sum(money(F.col("l_extendedprice"))).alias("ps"),
             )
         )
 
@@ -769,11 +776,11 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- price-volume-mix bridge
 
-_PVM_SQL = """
+_PVM_SQL = f"""
     WITH yr AS (
         SELECT l_partkey,
                year(l_shipdate) AS y,
-               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2)
+               CAST({money_sum_sql('l_extendedprice')}
                     * 100 AS BIGINT) AS rev_c,
                CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS BIGINT)
                    AS qty_c
@@ -828,7 +835,7 @@ def price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", F.year("l_shipdate").alias("y")
     ).agg(
         (
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")), 2)
+            money_sum(F.col("l_extendedprice"))
             * 100
         )
         .cast("long")
@@ -1116,11 +1123,10 @@ def cross_table_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # -------------------------------------------- duplicate payment audit
 
-_DUP_PAY_SQL = """
+_DUP_PAY_SQL = f"""
     WITH o AS (
         SELECT o_orderkey, o_custkey,
-               CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS amt_c,
+               {cents_sql('o_totalprice')} AS amt_c,
                CAST(o_orderdate AS DATE) AS d
         FROM orders
     )
@@ -1154,9 +1160,7 @@ def duplicate_payment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("amt_c"),
+        cents(F.col("o_totalprice")).alias("amt_c"),
         F.to_date("o_orderdate").alias("d"),
     )
     a = o.select(
@@ -1186,10 +1190,9 @@ def duplicate_payment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- last-digit uniformity
 
-_LASTDIGIT_SQL = """
+_LASTDIGIT_SQL = f"""
     WITH d AS (
-        SELECT CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) % 10 AS digit
+        SELECT {cents_sql('o_totalprice')} % 10 AS digit
         FROM orders
     ),
     c AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
@@ -1214,8 +1217,7 @@ def last_digit_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     d = o.select(
         (
-            (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-            .cast("long")
+            cents(F.col("o_totalprice"))
             % 10
         ).alias("digit")
     )
@@ -1233,7 +1235,7 @@ def last_digit_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------- ACID transaction log (delta-lite)
 
-_DELTALITE_SQL = """
+_DELTALITE_SQL = f"""
     WITH base AS (
         SELECT * FROM orders WHERE o_orderkey % 7 <> 0
     ),
@@ -1250,13 +1252,13 @@ _DELTALITE_SQL = """
     ),
     v0 AS (
         SELECT 0 AS version, o_orderpriority, count(*) AS n,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS cents
         FROM base GROUP BY o_orderpriority
     ),
     v1 AS (
         SELECT 1 AS version, o_orderpriority, count(*) AS n,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+               CAST({money_sum_sql('o_totalprice')} * 100
                     AS BIGINT) AS cents
         FROM merged GROUP BY o_orderpriority
     )
@@ -1302,7 +1304,7 @@ def deltalite_merge_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     def agg(df: DataFrame, version: int) -> DataFrame:
         return df.groupBy("o_orderpriority").agg(
             F.count("*").alias("n"),
-            (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("o_totalprice")) * 100)
             .cast("long")
             .alias("cents"),
         ).select(F.lit(version).alias("version"), "o_orderpriority", "n", "cents")
@@ -1310,7 +1312,7 @@ def deltalite_merge_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg(t.snapshot(version=0), 0).unionByName(agg(t.snapshot(), 1))
 
 
-_DELTALITE_CDF_SQL = """
+_DELTALITE_CDF_SQL = f"""
     WITH base AS (
         SELECT * FROM orders WHERE o_orderkey % 7 <> 0
     ),
@@ -1350,7 +1352,7 @@ _DELTALITE_CDF_SQL = """
            OR b.o_orderdate IS DISTINCT FROM f.o_orderdate
     )
     SELECT _change_type, count(*) AS n,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+           CAST({money_sum_sql('o_totalprice')} * 100
                 AS BIGINT) AS cents
     FROM changes GROUP BY 1
 """
@@ -1390,18 +1392,18 @@ def deltalite_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.delete_where("o_orderkey % 19 = 0")
     return t.change_data_feed(0).groupBy("_change_type").agg(
         F.count("*").alias("n"),
-        (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+        (money_sum(F.col("o_totalprice")) * 100)
         .cast("long")
         .alias("cents"),
     )
 
 
-_DELTALITE_OPT_SQL = """
+_DELTALITE_OPT_SQL = f"""
     WITH base AS (
         SELECT * FROM orders WHERE o_orderkey % 5 <> 0
     )
     SELECT o_orderpriority, count(*) AS n,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) * 100
+           CAST({money_sum_sql('o_totalprice')} * 100
                 AS BIGINT) AS cents,
            1 AS compacted,
            1 AS clustered_disjoint
@@ -1461,7 +1463,7 @@ def deltalite_optimize_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n"),
-            (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2) * 100)
+            (money_sum(F.col("o_totalprice")) * 100)
             .cast("long")
             .alias("cents"),
         )
@@ -1475,11 +1477,10 @@ def deltalite_optimize_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_BITEMPORAL_SQL = """
+_BITEMPORAL_SQL = f"""
     WITH base AS (
         SELECT o_orderkey AS k, o_orderpriority AS grp,
-               CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) * 100
-                    AS BIGINT) AS v_c,
+               {cents_sql('o_totalprice')} AS v_c,
                o_orderdate AS valid_from,
                o_orderdate AS tx_time
         FROM orders
@@ -1532,9 +1533,7 @@ def bitemporal_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderpriority").alias("grp"),
-        (F.round(F.col("o_totalprice").cast("decimal(18,6)"), 2) * 100)
-        .cast("long")
-        .alias("v_c"),
+        cents(F.col("o_totalprice")).alias("v_c"),
         F.col("o_orderdate").alias("valid_from"),
         F.col("o_orderdate").alias("tx_time"),
     )

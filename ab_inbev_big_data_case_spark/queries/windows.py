@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ab_inbev_big_data_case_spark.functions.money import money_sum, money_sum_sql
 from ab_inbev_big_data_case_spark.registry import register
 from ab_inbev_big_data_case_spark.sources.readers import table
 
@@ -338,10 +339,10 @@ def ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mom_revenue_growth",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT date_trunc('month', o_orderdate)::TIMESTAMP AS month,
-               round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)::DOUBLE
+               {money_sum_sql('o_totalprice')}::DOUBLE
                    AS revenue
         FROM orders GROUP BY 1
     )
@@ -361,7 +362,7 @@ def mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = o.groupBy(
         F.date_trunc("month", F.col("o_orderdate")).alias("month")
     ).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+        money_sum(F.col("o_totalprice"))
         .cast("double")
         .alias("revenue")
     )

@@ -24,13 +24,18 @@ fails in CI, not in review):
    in ``llm/dedup.py``.
 9. No ``queries/`` module imports a private (underscore) name from another
    ``queries/`` module, and none binds a module-level name twice.
+10. The money rule (``DECIMAL(18,6)``, then round to 2 or integer cents) is
+    defined once per engine, in ``functions/money.py``: no other module
+    casts to ``decimal(18,6)`` in Spark or in SQL.
 """
 
 from __future__ import annotations
 
 import ast
+import io
 import os
 import re
+import tokenize
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -257,3 +262,46 @@ def test_query_modules_share_no_private_names():
                 offenders.append(f"{_rel(path)}:{line} rebinds {name} (line {first[name]})")
             first.setdefault(name, line)
     assert offenders == []
+
+
+def _code_strings(path: str):
+    """Every string literal in ``path`` except docstrings and other
+    bare-string statements (prose is not code)."""
+    src = open(path, encoding="utf-8").read()
+    prose = {
+        (n.value.lineno, n.value.col_offset)
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+    }
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.STRING and tok.start not in prose:
+            yield tok.string
+
+
+#: file -> allowed DECIMAL(18,6) casts that are not money.
+MONEY_TYPE_ALLOWED = {
+    # markov_attribution_removal quantizes its 6-place removal-effect
+    # RATIO to DECIMAL(18,6) (SQL ``::DECIMAL(18,6)`` and Spark cast) so
+    # the normalizing sum is exact; it is not a money amount
+    "queries/analytics.py": 2,
+}
+
+
+def test_money_rule_only_in_functions():
+    """``money``/``money_sql``, ``money_sum``/``money_sum_sql`` and
+    ``cents``/``cents_sql`` are the one definition of the money type and
+    its rounding; a hand-written ``decimal(18,6)`` cast elsewhere is a copy
+    that a change to the rule would miss."""
+    casts = re.compile(
+        r"""^[rRuU]?(["'])decimal\(18,\s*6\)\1$"""  # Spark type literal
+        r"|\bAS\s+DECIMAL\(18,\s*6\)|::\s*DECIMAL\(18,\s*6\)",  # SQL casts
+        re.I,
+    )
+    sites = {}
+    for path in _py_files():
+        if _rel(path) == "functions/money.py":
+            continue
+        n = sum(len(casts.findall(s)) for s in _code_strings(path))
+        if n:
+            sites[_rel(path)] = n
+    assert sites == MONEY_TYPE_ALLOWED
